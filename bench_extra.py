@@ -22,21 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q01_pricing_summary",
-    "q04_cust_nation_stats",
-    "q08_token_topk",
-    "q10_interval_overlap_counts",
-    "q12_micro_macro",
-    "q14_exact_dedup",
-    "q15_minhash",
-    "q16_ngram_jaccard",
-    "q17_textstats",
-    "q21_cluster_metrics",
-    "q24_cosine_topk",
-    "q25_cc_chains",
-    "q53_flagship_linkage",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main():

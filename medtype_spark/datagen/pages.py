@@ -252,13 +252,6 @@ def synth_pages(
     return pages, gold
 
 
-def lexicon_df(spark: SparkSession, n_entities: int, n_families: int = 7,
-               family_zipf: float | None = None) -> DataFrame:
-    """Alias dimension as a Spark DataFrame (broadcast-sized)."""
-    return spark.createDataFrame(
-        build_lexicon(n_entities, n_families, family_zipf=family_zipf))
-
-
 def entity_types_df(spark: SparkSession, n_entities: int, n_families: int = 7,
                     family_zipf: float | None = None) -> DataFrame:
     lex = build_lexicon(n_entities, n_families, family_zipf=family_zipf)

@@ -35,8 +35,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
@@ -55,7 +53,6 @@ COARSE_TYPES = [
 N_FEATURES = 1024
 SEED = 1234  # medtype-trainer/medtype.py:430
 THRESHOLD = 0.5  # server/helper.py:73
-CONTEXT_LEN = 120  # server/helper.py:71
 
 
 def load_checkpoint(path: str | None = None) -> dict[str, np.ndarray]:
@@ -126,14 +123,6 @@ def _featurize_counts(texts: pd.Series) -> np.ndarray:
     return out
 
 
-def _featurize(texts: pd.Series) -> np.ndarray:
-    """L2-normalized trigram features (for cosine consumers)."""
-    out = _featurize_counts(texts)
-    norms = np.linalg.norm(out, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return out / norms
-
-
 @pandas_udf(ArrayType(StringType()))
 def stub_type_scorer_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     """mention+context string → predicted coarse-type set (array).
@@ -151,29 +140,3 @@ def stub_type_scorer_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         probs = 1.0 / (1.0 + np.exp(-logits / 1000.0))
         mask = probs > THRESHOLD
         yield pd.Series([list(labels[m]) for m in mask])
-
-
-def context_window(text: Column, start: Column, end: Column,
-                   k: int = CONTEXT_LEN) -> Column:
-    """±k//2-char context window around a mention span, JVM-side.
-
-    Char-grain analogue of the reference's token windows
-    (.../server/__init__.py:489-492: prev/next k//2 tokens).
-    """
-    half = k // 2
-    left = F.substring(text, F.greatest(start - half + 1, F.lit(1)), F.least(start, F.lit(half)))
-    mention = F.substring(text, start + 1, end - start)
-    right = F.substring(text, end + 1, F.lit(half))
-    return F.concat_ws(" ", left, mention, right)
-
-
-def predict_types(
-    mentions: DataFrame,
-    text_col: str = "text",
-    start_col: str = "start_offset",
-    end_col: str = "end_offset",
-    out_col: str = "pred_type",
-) -> DataFrame:
-    """Score each mention row in its context window (batched)."""
-    ctx = context_window(F.col(text_col), F.col(start_col), F.col(end_col))
-    return mentions.withColumn(out_col, stub_type_scorer_udf(ctx))

@@ -20,7 +20,7 @@ from functools import lru_cache
 from importlib import resources
 from itertools import chain
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -63,7 +63,3 @@ def coarse_type_col(labels: Column) -> Column:
     """array<string> fine labels → sorted distinct coarse group names."""
     m = _map_literal(load_type_remap(), "string")
     return F.array_sort(F.array_distinct(F.transform(labels, lambda x: m[x])))
-
-
-def remap_types(df: DataFrame, labels_col: str, out_col: str = "label_ids") -> DataFrame:
-    return df.withColumn(out_col, remap_type_col(F.col(labels_col)))

@@ -45,17 +45,3 @@ def size_histogram(
     return events.groupBy(bucket.alias("bucket_lo")).agg(
         F.count(F.lit(1)).alias("n")
     )
-
-
-def active_clients(
-    events: DataFrame,
-    client_col: str = "user_id",
-    ts_col: str = "ts",
-    window: str = "3 minutes",
-) -> DataFrame:
-    """Active clients per tumbling window (the 3-min window at
-    __init__.py:651-654)."""
-    return events.groupBy(F.window(ts_col, window).alias("w")).agg(
-        F.count_distinct(client_col).alias("n_active"),
-        F.count(F.lit(1)).alias("n_events"),
-    ).select(F.col("w.start").alias("window_start"), "n_active", "n_events")

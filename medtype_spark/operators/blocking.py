@@ -26,8 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from medtype_spark.functions.text import clean_text_udf
-
 
 def blocking_key(col):
     """Normalized-surface-form blocking key: lower, trim, collapse
@@ -37,12 +35,6 @@ def blocking_key(col):
     out = F.regexp_replace(out, r"[^a-z0-9 ]", "")
     out = F.regexp_replace(out, r"\s+", " ")
     return out
-
-
-def with_blocking_key(mentions: DataFrame, mention_col: str = "mention",
-                      out_col: str = "block_key") -> DataFrame:
-    cleaned = clean_text_udf(F.col(mention_col))
-    return mentions.withColumn(out_col, blocking_key(cleaned))
 
 
 def block_pairs(

@@ -1,11 +1,10 @@
 """Ranked-selection operators (the reference's positional patterns).
 
-W1: top-1 candidate per mention — ``cands[0]`` after best-first sort
-    (eval_models.py:59; annotation.py:80-84, parse-time sort :108).
-W2: first candidate satisfying a predicate, else fall back to rank-0 —
-    the ``filter_on_cat`` oracle join (eval_models.py:3-13).
 W3: is_first mention of an entity in document order (start, -end)
-    (document.py:64-70, order key document.py:23).
+    (document.py:64-70, order key document.py:23); plus a generic
+    top-k.  W1 (top-1 per key) is q03's row_number window and W2
+    (first candidate satisfying a predicate) is
+    ``operators.lookups.first_on_category`` (q35).
 
 All are window functions — per-key partial ordering, no global sort.
 """
@@ -14,37 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def top1_candidate(
-    mentions: DataFrame,
-    cand_col: str = "candidates",
-    out_col: str = "top_candidate",
-) -> DataFrame:
-    """W1: element 0 of the best-first candidate list (array-local —
-    no shuffle at all)."""
-    return mentions.withColumn(
-        out_col,
-        F.when(F.size(cand_col) > 0, F.col(cand_col)[0]),
-    )
-
-
-def first_satisfying(
-    mentions: DataFrame,
-    predicate,
-    cand_col: str = "candidates",
-    out_col: str = "selected",
-) -> DataFrame:
-    """W2: first candidate (in rank order) satisfying ``predicate``
-    (element-level lambda), else candidate 0
-    (eval_models.py:3-13 fallback semantics)."""
-    filtered = F.filter(F.col(cand_col), predicate)
-    return mentions.withColumn(
-        out_col,
-        F.when(F.size(filtered) > 0, filtered[0]).otherwise(
-            F.when(F.size(cand_col) > 0, F.col(cand_col)[0])
-        ),
-    )
 
 
 def mark_first_mention(

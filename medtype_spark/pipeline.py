@@ -1,18 +1,25 @@
 """The flagship record-linkage pipeline, end-to-end.
 
-``pages(url, warc_ts, html, text, lang)``
-  → byte-identical text extraction (vectorized Arrow UDF)
-  → mention detection + candidate generation (mapInPandas dictionary
-    linker)
-  → blocking keys (normalized surface head token) + semantic-type
-    prediction (batched pandas-UDF scorer) + type-filtered candidates
-    (the MedType filter, .../server/__init__.py:524-544)
-  → skew-aware salted within-block pair generation
-  → Jaro-Winkler pairwise scoring with type-agreement pruning
-  → hash-free transitive clustering via alternating-star connected
-    components (iterative self-joins, checkpointed lineage)
-  → cluster table (mention_key, entity_cluster) + pairwise-F1 eval vs
-    gold (the acceptance metric).
+Three stage functions, composed in order by ``run_linkage`` and by
+the resumable ``plans.checkpoints.run_linkage_checkpointed``:
+
+1. ``scan_mentions``: ``pages(url, warc_ts, html, text, lang)`` →
+   one row per detected mention with its candidates, normalized
+   surface form, blocking key (the form's head token) and predicted
+   semantic types.  The dictionary and stub scorers run in ONE fused
+   Python hop (``operators.mentions.fused_mention_scan``); the
+   batched-transformer scorer needs mention offsets against page text,
+   so it chains extraction → ``detect_mentions`` →
+   ``batched_type_predictions``.
+2. ``form_edges``: distinct surface forms per block (the form *units*)
+   → skew-aware salted within-block pairs → Jaro-Winkler (optionally
+   blended with alias-embedding cosine) → edges at or above the
+   threshold whose predicted type sets agree (the MedType filter,
+   .../server/__init__.py:524-544).
+3. ``form_clusters``: alternating-star connected components over the
+   form graph, projected back onto mentions as (mention_key,
+   entity_cluster); the pairwise-F1 eval vs gold (``evaluate_linkage``)
+   is the acceptance metric.
 
 This restates the reference's serving dataflow (SURVEY.md §3.1) as one
 declarative Spark plan per stage; every process boundary of the
@@ -22,22 +29,23 @@ ZMQ ventilator/worker/sink design collapses into a shuffle.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import StringType
 from pyspark.storagelevel import StorageLevel
 
-from medtype_spark.datagen.pages import build_lexicon
 from medtype_spark.metrics.clustering import pairwise
 from medtype_spark.operators.blocking import block_pairs, blocking_key
 from medtype_spark.operators.cc import connected_components
-from medtype_spark.operators.mentions import detect_mentions
-from medtype_spark.operators.pairs import jaro_winkler_udf
+from medtype_spark.operators.mentions import (
+    detect_mentions,
+    fused_mention_scan,
+    normalize_form_py,
+)
+from medtype_spark.operators.pairs import score_pairs
 from medtype_spark.operators.typefilter import filter_candidates
 
-
-# --- stage 1: byte-identical text extraction ---------------------------
 
 @pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
@@ -57,34 +65,172 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     return pages.withColumn("extracted_text", extract_text_udf(F.col("html")))
 
 
-# --- stage 2/3 helpers -------------------------------------------------
+# --- stage 1: mention scan ---------------------------------------------
 
-def make_dict_type_scorer(spark: SparkSession, mapping: dict[str, list[str]]):
-    """Batched pandas-UDF type scorer backed by a broadcast dictionary.
+def scan_mentions(
+    pages: DataFrame,
+    lexicon: pd.DataFrame,
+    type_scorer: str = "dict",
+    matcher: str = "trie",
+) -> DataFrame:
+    """Mentions with (mention_key, norm_form, block_key, pred_type).
 
-    Same contract as the transformer scorer stub
-    (functions/scoring.py) — normalized mention → coarse-type set —
-    but "trained to convergence": it looks types up from the alias
-    dimension, standing in for a model with the reference's reported
-    95% type accuracy (Readme.md:74).
+    ``type_scorer``: "dict" (alias → type lookup, the default) and
+    "stub" (deterministic md5 linear head) score inside the fused
+    single-hop scan; "batched" is the MedType-style batched
+    transformer path: token-window assembly (P4),
+    length-sorted padded batches (W5), a REAL learned 2-layer
+    checkpoint loaded once per worker (S12, tools/train_type_model.py),
+    sigmoid threshold + type decode (P8/P9).
+
+    ``matcher`` (fused scan only): "trie" (regex automaton, the general
+    path) or "set" (broadcast hash-set gazetteer, token-boundary
+    contract — the shape for 10^5+-alias lexicons where the automaton
+    compile per fresh worker dominates; see
+    operators/mentions.py:iter_set_matches).
     """
-    b = spark.sparkContext.broadcast(mapping)
+    if type_scorer == "dict":
+        # keyed by the scan's own normalizer, so each detected alias's
+        # norm_form finds its types
+        a2t: dict[str, set] = {}
+        for alias, etype in zip(lexicon["alias"], lexicon["type"]):
+            a2t.setdefault(normalize_form_py(alias), set()).add(etype)
+        return fused_mention_scan(
+            pages, lexicon, {k: sorted(v) for k, v in a2t.items()}, matcher=matcher
+        )
+    if type_scorer == "stub":
+        return fused_mention_scan(pages, lexicon, None, matcher=matcher)
+    if type_scorer != "batched":
+        raise ValueError(type_scorer)
+    from medtype_spark.operators.batching import batched_type_predictions
 
-    @pandas_udf(ArrayType(StringType()))
-    def dict_type_scorer(keys: pd.Series) -> pd.Series:
-        m = b.value
-        return keys.map(lambda k: m.get(k, []))
+    extracted = extract_pages(pages)
+    mentions = (
+        detect_mentions(extracted, lexicon, text_col="extracted_text")
+        .withColumn(
+            "mention_key",
+            F.concat_ws("#", F.col("url"), F.col("start_offset").cast("string")),
+        )
+        .withColumn("norm_form", blocking_key(F.col("mention")))
+        .withColumn("block_key", F.split(F.col("norm_form"), " ")[0])
+    )
+    preds = batched_type_predictions(mentions, extracted)
+    return mentions.join(preds, "mention_key", "left").withColumn(
+        "pred_type",
+        F.coalesce(F.col("pred_type"), F.array().cast("array<string>")),
+    )
 
-    return dict_type_scorer
+
+# --- stage 2: form edges -----------------------------------------------
+
+def form_units(mentions: DataFrame) -> DataFrame:
+    """One row per (block_key, norm_form) with the union of its
+    mentions' predicted types.
+
+    The union is deterministic (unlike first()), and for contextual
+    scorers it only widens type agreement — a pair is pruned only when
+    NO instance contexts of the two forms share a type.  explode +
+    collect_set, NOT collect_list-of-arrays: collect_set partially
+    aggregates map-side (≤24 types per form per map partition cross
+    the shuffle), where collect_list would move every mention's array
+    into the form's single reducer — a hot surface form (15% of a
+    corpus) becomes a straggler task.  explode_outer keeps all-empty
+    forms alive (collect_set skips the null → empty set).
+    """
+    return (
+        mentions.select(
+            "block_key", "norm_form", F.explode_outer("pred_type").alias("_ty")
+        )
+        .groupBy("block_key", "norm_form")
+        .agg(F.array_sort(F.collect_set("_ty")).alias("pred_type"))
+    )
 
 
-def normalized_form(col: Column) -> Column:
-    return blocking_key(col)
+def form_edges(
+    mentions: DataFrame,
+    score_threshold: float = 0.92,
+    hot_threshold: int = 10000,
+    target_cell: int = 2000,
+    alias_embeddings: DataFrame | None = None,
+    jw_weight: float = 0.5,
+    persisted: list | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(units, edges): the form units and the form graph's (src, dst)
+    edges.
+
+    Pairs are scored over DISTINCT normalized surface forms per block,
+    not mention instances: the score is a pure function of the form and
+    same-form mentions are trivially linked, so the within-block
+    quadratic runs over the form *vocabulary* (Zipf — sublinear in
+    corpus size).  An edge needs score ≥ ``score_threshold`` and type
+    agreement: pairs whose predicted type sets are both non-empty and
+    disjoint are pruned (MedType's filter semantics: an empty
+    prediction never prunes, __init__.py:530-536).
+
+    ``alias_embeddings``: optional broadcast-sized dimension
+    (norm_form, embedding: array<double>) — when given, pair scores
+    blend Jaro-Winkler with alias-embedding cosine (the north star's
+    "Jaro-Winkler + alias-embedding pairwise scores within salted
+    blocks"); forms without an embedding fall back to pure JW.
+    ``jw_weight`` sets the blend.  ``persisted`` collects the frames
+    ``block_pairs`` caches, for the caller to release.
+    """
+    units = form_units(mentions)
+    extra = ["pred_type"]
+    a_vec = b_vec = None
+    if alias_embeddings is not None:
+        emb = alias_embeddings.select(
+            F.col("norm_form"), F.col("embedding").alias("alias_vec")
+        )
+        units = units.join(F.broadcast(emb), "norm_form", "left")
+        extra.append("alias_vec")
+        a_vec, b_vec = "a_alias_vec", "b_alias_vec"
+
+    pairs = block_pairs(
+        units,
+        key_col="block_key",
+        id_col="norm_form",
+        hot_threshold=hot_threshold,
+        target_cell=target_cell,
+        extra_cols=extra,
+        persist_registry=persisted,
+    )
+    scored = score_pairs(pairs, "a_norm_form", "b_norm_form", a_vec, b_vec, jw_weight)
+    agree = (
+        (F.size("a_pred_type") == 0)
+        | (F.size("b_pred_type") == 0)
+        | (F.size(F.array_intersect("a_pred_type", "b_pred_type")) > 0)
+    )
+    edges = scored.where((F.col("score") >= F.lit(score_threshold)) & agree).select(
+        F.col("a_norm_form").alias("src"), F.col("b_norm_form").alias("dst")
+    )
+    return units, edges
 
 
-def head_token(col: Column) -> Column:
-    """Blocking key: first token of the normalized surface form."""
-    return F.split(col, " ")[0]
+# --- stage 3: clusters -------------------------------------------------
+
+def form_clusters(
+    mentions: DataFrame,
+    units: DataFrame,
+    edges: DataFrame,
+    small_graph_threshold: int | None = 1_000_000,
+    stats: dict | None = None,
+) -> DataFrame:
+    """(mention_key, entity_cluster): connected components of the form
+    graph (every unit a vertex; label = min norm_form), projected back
+    onto mentions.  ``small_graph_threshold`` / ``stats`` pass through
+    to connected_components (stats records which CC path executed)."""
+    components = connected_components(
+        edges,
+        vertices=units.select(F.col("norm_form").alias("node")),
+        small_graph_threshold=small_graph_threshold,
+        stats=stats,
+    )
+    return (
+        mentions.select("mention_key", "norm_form")
+        .join(components.withColumnRenamed("node", "norm_form"), "norm_form")
+        .select("mention_key", F.col("component").alias("entity_cluster"))
+    )
 
 
 # --- the full pipeline -------------------------------------------------
@@ -96,11 +242,8 @@ def run_linkage(
     score_threshold: float = 0.92,
     hot_threshold: int = 10000,
     target_cell: int = 2000,
-    require_type_agreement: bool = True,
     cleanup: bool = False,
-    pair_grain: str = "form",
     type_scorer: str = "dict",
-    fused: bool = True,
     with_candidate_filter: bool = False,
     alias_embeddings: DataFrame | None = None,
     jw_weight: float = 0.5,
@@ -108,216 +251,46 @@ def run_linkage(
     cc_stats: dict | None = None,
     matcher: str = "trie",
 ) -> dict[str, DataFrame]:
-    """Run the flagship pipeline; returns the per-stage DataFrames.
+    """Run the flagship: ``scan_mentions`` → ``form_edges`` →
+    ``form_clusters``.
 
-    ``pair_grain``:
-    - "form" (default): score pairs of DISTINCT normalized surface
-      forms per block, cluster forms, then project clusters back onto
-      mentions.  Same mention clusters as mention-grain (the score is
-      a pure function of the normalized form, and same-form mentions
-      are trivially JW=1.0-linked) at a tiny fraction of the cost: the
-      within-block quadratic runs over the form *vocabulary* (Zipf —
-      sublinear in corpus size), not mention instances.  This is the
-      only shape that survives 10^12 documents.
-    - "mention": literal mention-instance pair scoring (the naive
-      quadratic; kept for parity testing).
+    Returns ``mentions`` (persisted), ``edges`` (the form graph,
+    persisted), ``clusters`` (mention_key, entity_cluster) and
+    ``persisted_frames``.  ``type_scorer``/``matcher`` go to
+    ``scan_mentions``; ``score_threshold``, ``hot_threshold``,
+    ``target_cell``, ``alias_embeddings`` and ``jw_weight`` to
+    ``form_edges``; ``cc_small_graph_threshold``/``cc_stats`` to
+    ``form_clusters``.
 
-    ``type_scorer``: "dict" (broadcast alias→type lookup, the default),
-    "stub" (deterministic md5 linear head), or "batched" — the
-    MedType-style batched transformer path: token-window assembly (P4),
-    length-sorted padded batches (W5), a REAL learned 2-layer
-    checkpoint loaded once per worker (S12, tools/train_type_model.py),
-    sigmoid threshold + type decode (P8/P9).  "batched" implies
-    ``fused=False`` (windows need mention offsets against page text).
+    ``with_candidate_filter`` adds the MedType candidate filter (J8):
+    per-mention ``filtered_candidates`` against ``entity_types``, for
+    downstream consumers (serving output, error analysis).  The
+    clustering itself consumes pred_type through the type-agreement
+    prune, so J8 is opt-in: running it unconditionally added two
+    mention-grain shuffles whose output nothing on the hot path read.
 
-    ``alias_embeddings``: optional broadcast-sized dimension
-    (norm_form, embedding: array<double>) — when given (form grain
-    only), pair scores blend Jaro-Winkler with alias-embedding cosine
-    (the north star's "Jaro-Winkler + alias-embedding pairwise scores
-    within salted blocks"); forms without an embedding fall back to
-    pure JW.  ``jw_weight`` sets the blend.
-
-    ``matcher``: "trie" (regex automaton, the general path) or "set"
-    (broadcast hash-set gazetteer, token-boundary contract — the shape
-    for 10^5+-alias lexicons where the automaton compile per fresh
-    worker dominates; see operators/mentions.py:iter_set_matches).
-    ``cc_small_graph_threshold`` / ``cc_stats`` pass through to
-    connected_components (stats records which CC path executed).
+    ``cleanup=True`` materializes the cluster table and releases every
+    cached intermediate.  With ``cleanup=False`` the caller owns the
+    caches listed in ``persisted_frames``: consume the result (e.g.
+    evaluate + checkpoint a downstream row), then unpersist them —
+    folding eval into the final job saves a whole materialization of
+    the mention-grain cluster table when only an aggregate is needed.
     """
-    spark = pages.sparkSession
-
-    alias2types: dict[str, set] = {}
-    for _, row in lexicon.iterrows():
-        key = "".join(
-            ch for ch in row["alias"].lower() if ch.isalnum() or ch == " "
-        )
-        key = " ".join(key.split())
-        alias2types.setdefault(key, set()).add(row["type"])
-    a2t_sorted = {k: sorted(v) for k, v in alias2types.items()}
-
-    if type_scorer == "batched":
-        # the batched-transformer seam needs mention offsets joined
-        # back to page text, which the fused single-hop scan folds away
-        fused = False
-    if fused:
-        # single-python-hop scan (extract + detect + normalize + score)
-        from medtype_spark.operators.mentions import fused_mention_scan
-
-        extracted = pages
-        mentions = fused_mention_scan(
-            pages, lexicon, a2t_sorted if type_scorer == "dict" else None,
-            matcher=matcher,
-        )
-    else:
-        extracted = extract_pages(pages)
-        mentions = detect_mentions(extracted, lexicon, text_col="extracted_text")
-        mentions = mentions.withColumn(
-            "mention_key",
-            F.concat_ws("#", F.col("url"), F.col("start_offset").cast("string")),
-        )
-        mentions = mentions.withColumn("norm_form", normalized_form(F.col("mention")))
-        mentions = mentions.withColumn("block_key", head_token(F.col("norm_form")))
-
-        # semantic-type prediction (batched pandas UDF)
-        if type_scorer == "dict":
-            scorer = make_dict_type_scorer(spark, a2t_sorted)
-            mentions = mentions.withColumn("pred_type", scorer(F.col("norm_form")))
-        elif type_scorer == "stub":
-            from medtype_spark.functions.scoring import stub_type_scorer_udf
-
-            mentions = mentions.withColumn(
-                "pred_type", stub_type_scorer_udf(F.col("norm_form"))
-            )
-        elif type_scorer == "batched":
-            # MedType-style batched transformer scoring through the
-            # full serving seam: P4 window assembly → W5 length-sorted
-            # padded batches → S12 learned-checkpoint forward pass →
-            # P8/P9 threshold + type decode, joined back per mention
-            from medtype_spark.operators.batching import batched_type_predictions
-
-            preds = batched_type_predictions(mentions, extracted)
-            mentions = mentions.join(preds, "mention_key", "left").withColumn(
-                "pred_type",
-                F.coalesce(F.col("pred_type"), F.array().cast("array<string>")),
-            )
-        else:
-            raise ValueError(type_scorer)
-
-    # The MedType candidate filter (J8) produces per-mention filtered
-    # candidate lists for downstream consumers (serving output, error
-    # analysis).  The flagship's own clustering consumes pred_type via
-    # the pair-level type-agreement prune instead (the north star's
-    # "type-filtered blocking"), so J8 is opt-in here: unconditionally
-    # running it added two mention-grain shuffles whose output nothing
-    # on the hot path read.
+    mentions = scan_mentions(pages, lexicon, type_scorer, matcher)
     if with_candidate_filter:
         mentions = filter_candidates(mentions, entity_types)
-    # mention table feeds pair generation (3 consumers), CC vertices,
-    # and the returned stage output — persist so the page-scan +
-    # mapInPandas + UDF lineage executes exactly once
+    # mentions feed pair generation, CC vertices, the projection and
+    # the returned stage output — persist so the page-scan lineage
+    # executes exactly once
     mentions = mentions.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # salted within-block pairs + Jaro-Winkler scoring
     persisted: list[DataFrame] = [mentions]
-    if pair_grain == "form":
-        # pred_type at form grain is the UNION over the form's mention
-        # instances: deterministic (unlike first()), and for contextual
-        # scorers a union only widens type agreement — a pair is pruned
-        # only when NO instance contexts of the two forms share a type.
-        # explode + collect_set, NOT collect_list-of-arrays: collect_set
-        # partially aggregates map-side (≤24 types per form per map
-        # partition cross the shuffle), where collect_list would move
-        # every mention's array into the form's single reducer — a hot
-        # surface form (15% of a corpus) becomes a straggler task.
-        # explode_outer keeps all-empty forms alive (collect_set skips
-        # the null → empty set).
-        units = (
-            mentions.select(
-                "block_key", "norm_form",
-                F.explode_outer("pred_type").alias("_ty"),
-            )
-            .groupBy("block_key", "norm_form")
-            .agg(F.array_sort(F.collect_set("_ty")).alias("pred_type"))
-        )
-        id_col = "norm_form"
-        extra = ["pred_type"]
-        if alias_embeddings is not None:
-            emb = alias_embeddings.select(
-                F.col("norm_form"), F.col("embedding").alias("alias_vec")
-            )
-            units = units.join(F.broadcast(emb), "norm_form", "left")
-            extra = ["pred_type", "alias_vec"]
-    elif pair_grain == "mention":
-        units = mentions
-        id_col = "mention_key"
-        extra = ["norm_form", "pred_type"]
-    else:
-        raise ValueError(pair_grain)
-
-    pairs = block_pairs(
-        units,
-        key_col="block_key",
-        id_col=id_col,
-        hot_threshold=hot_threshold,
-        target_cell=target_cell,
-        extra_cols=extra,
-        persist_registry=persisted,
+    units, edges = form_edges(
+        mentions, score_threshold, hot_threshold, target_cell,
+        alias_embeddings, jw_weight, persisted,
     )
-    a_form, b_form = "a_norm_form", "b_norm_form"
-    if alias_embeddings is not None and pair_grain == "form":
-        from medtype_spark.operators.pairs import score_pairs
-
-        scored = score_pairs(
-            pairs, a_text=a_form, b_text=b_form,
-            a_vec="a_alias_vec", b_vec="b_alias_vec", jw_weight=jw_weight,
-        )
-    else:
-        scored = pairs.withColumn(
-            "score", F.round(jaro_winkler_udf(F.col(a_form), F.col(b_form)), 3)
-        )
-    edge_cond = F.col("score") >= F.lit(score_threshold)
-    if require_type_agreement:
-        # type-filtered blocking: prune pairs whose predicted type sets
-        # are both non-empty and disjoint (MedType's filter semantics:
-        # an empty prediction never prunes, __init__.py:530-536)
-        agree = (
-            (F.size("a_pred_type") == 0)
-            | (F.size("b_pred_type") == 0)
-            | (F.size(F.array_intersect("a_pred_type", "b_pred_type")) > 0)
-        )
-        edge_cond = edge_cond & agree
-
-    if pair_grain == "form":
-        form_edges = scored.where(edge_cond).select(
-            F.col(a_form).alias("src"), F.col(b_form).alias("dst")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(form_edges)
-        form_clusters = connected_components(
-            form_edges,
-            vertices=units.select(F.col("norm_form").alias("node")),
-            small_graph_threshold=cc_small_graph_threshold,
-            stats=cc_stats,
-        )
-        clusters = (
-            mentions.select("mention_key", "norm_form")
-            .join(
-                form_clusters.withColumnRenamed("node", "norm_form"),
-                "norm_form",
-            )
-            .select("mention_key", F.col("component").alias("entity_cluster"))
-        )
-        edges = form_edges
-    else:
-        edges = scored.where(edge_cond).select(
-            F.col("a_mention_key").alias("src"), F.col("b_mention_key").alias("dst")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(edges)
-        clusters = connected_components(
-            edges,
-            vertices=mentions.select(F.col("mention_key").alias("node")),
-            small_graph_threshold=cc_small_graph_threshold,
-            stats=cc_stats,
-        ).select(F.col("node").alias("mention_key"), F.col("component").alias("entity_cluster"))
+    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    persisted.append(edges)
+    clusters = form_clusters(mentions, units, edges, cc_small_graph_threshold, cc_stats)
 
     if cleanup:
         # materialize the product, then release every cached
@@ -328,16 +301,9 @@ def run_linkage(
             df.unpersist()
 
     return {
-        "pages": extracted,
         "mentions": mentions,
-        "pairs": scored,
         "edges": edges,
         "clusters": clusters,
-        # with cleanup=False the caller owns the caches: consume the
-        # result (e.g. evaluate + checkpoint a downstream row), then
-        # unpersist these.  Folding eval into the final job this way
-        # saves a whole materialization of the mention-grain cluster
-        # table when only a derived aggregate is needed.
         "persisted_frames": [] if cleanup else persisted,
     }
 

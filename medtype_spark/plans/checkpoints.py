@@ -153,62 +153,57 @@ def run_linkage_checkpointed(
     lexicon,
     entity_types: DataFrame,
     workdir: str,
-    **linkage_kwargs,
+    *,
+    score_threshold: float = 0.92,
+    hot_threshold: int = 10000,
+    target_cell: int = 2000,
+    type_scorer: str = "dict",
+    matcher: str = "trie",
 ) -> DataFrame:
-    """Flagship pipeline split into resumable stages.
+    """Flagship pipeline split into resumable stages; same clusters as
+    ``pipeline.run_linkage`` with the same settings.
 
-    Stage graph: mentions → edges → clusters.  Kill the job at any
-    point; re-running skips every stage whose manifest committed.
+    Stage graph: 010_mentions (``scan_mentions``) → 020_edges
+    (``form_edges``) → 030_clusters (``form_clusters``).  Each stage
+    runs only its own stage function over its upstream's parquet and
+    releases whatever it cached.  Kill the job at any point; re-running
+    skips every stage whose manifest committed.  ``entity_types`` is
+    unused (the candidate filter's output is not a stage product); it
+    keeps the argument order of ``run_linkage``.
     """
-    from medtype_spark.operators.cc import connected_components
-    from medtype_spark.pipeline import run_linkage
-
-    ck = StageCheckpointer(spark, workdir)
-
-    def build_mentions():
-        # run the front half only (mentions table materialization)
-        res = run_linkage(pages, lexicon, entity_types, **linkage_kwargs)
-        return res["mentions"].drop("candidates", "filtered_candidates")
-
-    mentions = ck.stage("010_mentions", build_mentions, params=linkage_kwargs)
-
-    def build_edges():
-        from pyspark.sql import functions as F
-
-        from medtype_spark.operators.blocking import block_pairs
-        from medtype_spark.operators.pairs import jaro_winkler_udf
-
-        pairs = block_pairs(
-            mentions, key_col="block_key", id_col="mention_key",
-            extra_cols=["norm_form", "pred_type"],
-            hot_threshold=linkage_kwargs.get("hot_threshold", 10000),
-            target_cell=linkage_kwargs.get("target_cell", 2000),
-        )
-        scored = pairs.withColumn(
-            "score",
-            F.round(jaro_winkler_udf(F.col("a_norm_form"), F.col("b_norm_form")), 3),
-        )
-        agree = (
-            (F.size("a_pred_type") == 0) | (F.size("b_pred_type") == 0)
-            | (F.size(F.array_intersect("a_pred_type", "b_pred_type")) > 0)
-        )
-        thr = linkage_kwargs.get("score_threshold", 0.92)
-        return scored.where((F.col("score") >= thr) & agree).select(
-            F.col("a_mention_key").alias("src"), F.col("b_mention_key").alias("dst")
-        )
-
-    edges = ck.stage(
-        "020_edges", build_edges, upstream=["010_mentions"], params=linkage_kwargs
+    from medtype_spark.pipeline import (
+        form_clusters,
+        form_edges,
+        form_units,
+        scan_mentions,
     )
 
-    def build_clusters():
-        from pyspark.sql import functions as F
+    params = {
+        "score_threshold": score_threshold, "hot_threshold": hot_threshold,
+        "target_cell": target_cell, "type_scorer": type_scorer,
+        "matcher": matcher,
+    }
+    ck = StageCheckpointer(spark, workdir)
 
-        return connected_components(
-            edges, vertices=mentions.select(F.col("mention_key").alias("node"))
-        ).select(F.col("node").alias("mention_key"), F.col("component").alias("entity_cluster"))
+    mentions = ck.stage(
+        "010_mentions",
+        lambda: scan_mentions(pages, lexicon, type_scorer, matcher).drop("candidates"),
+        params=params,
+    )
+
+    cached: list[DataFrame] = []
+    edges = ck.stage(
+        "020_edges",
+        lambda: form_edges(
+            mentions, score_threshold, hot_threshold, target_cell, persisted=cached
+        )[1],
+        upstream=["010_mentions"], params=params,
+    )
+    for df in cached:
+        df.unpersist()
 
     return ck.stage(
-        "030_clusters", build_clusters,
-        upstream=["010_mentions", "020_edges"], params=linkage_kwargs,
+        "030_clusters",
+        lambda: form_clusters(mentions, form_units(mentions), edges),
+        upstream=["010_mentions", "020_edges"], params=params,
     )

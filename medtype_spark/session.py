@@ -109,17 +109,6 @@ def get_spark(
     return spark
 
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver's parquet tables from an sf directory."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}
-
-
 def fan_out(df, min_partitions: int | None = None):
     """Widen a too-coarse scan for CPU-heavy downstream map work.
 

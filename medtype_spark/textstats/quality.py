@@ -35,10 +35,6 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(F.trim(col), r"\s+"), lambda t: t != "")
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
 def bpe_token_count(col: Column) -> Column:
     """Count of BPE-ish regex tokens (JVM regexp_count)."""
     return F.regexp_count(col, F.lit(BPE_TOKEN_RE))

@@ -111,18 +111,23 @@ def test_kill_and_restart_midway(spark, tmp_path):
     assert m["rows"] == 2 and len(m["partitions"]) >= 1
 
 
-def test_checkpointed_flagship_resume(spark, tmp_path):
+def _flagship_fixture(spark):
+    """(pages, gold, lexicon, entity_types) of an 80-page corpus."""
     from medtype_spark.datagen.pages import (
         build_lexicon,
         entity_types_df,
         synth_pages,
     )
+
+    pages, gold = synth_pages(spark, 80, n_entities=20, seed=11)
+    return pages, gold, build_lexicon(20), entity_types_df(spark, 20)
+
+
+def test_checkpointed_flagship_resume(spark, tmp_path):
     from medtype_spark.pipeline import evaluate_linkage
     from medtype_spark.plans.checkpoints import run_linkage_checkpointed
 
-    pages, gold = synth_pages(spark, 80, n_entities=20, seed=11)
-    lex = build_lexicon(20)
-    et = entity_types_df(spark, 20)
+    pages, gold, lex, et = _flagship_fixture(spark)
     wd = str(tmp_path / "wd")
 
     clusters = run_linkage_checkpointed(spark, pages, lex, et, wd)
@@ -137,3 +142,43 @@ def test_checkpointed_flagship_resume(spark, tmp_path):
     c1 = {(r["mention_key"], r["entity_cluster"]) for r in clusters.collect()}
     c2 = {(r["mention_key"], r["entity_cluster"]) for r in clusters2.collect()}
     assert c1 == c2
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_checkpointed_matches_run_linkage(spark, tmp_path):
+    """The checkpointed runner composes run_linkage's stage functions,
+    so it returns the very same (mention_key, entity_cluster) rows —
+    form-grain labels included, not just the same partition."""
+    from medtype_spark.pipeline import run_linkage
+    from medtype_spark.plans.checkpoints import run_linkage_checkpointed
+
+    pages, _, lex, et = _flagship_fixture(spark)
+    ck = run_linkage_checkpointed(spark, pages, lex, et, str(tmp_path / "wd"))
+    got = {(r["mention_key"], r["entity_cluster"]) for r in ck.collect()}
+    res = run_linkage(pages, lex, et, cleanup=True)
+    want = {(r["mention_key"], r["entity_cluster"]) for r in res["clusters"].collect()}
+    assert got == want and len(got) > 0
+
+
+def test_no_cached_rdds_left_behind(spark, tmp_path):
+    """The checkpointed runner releases every cache it makes, and
+    run_linkage(cleanup=True) keeps only its product: the cluster
+    table's own local checkpoint."""
+    from medtype_spark.pipeline import run_linkage
+    from medtype_spark.plans.checkpoints import run_linkage_checkpointed
+
+    pages, _, lex, et = _flagship_fixture(spark)
+    # compare sets of new ids: unreachable RDDs of earlier tests may be
+    # garbage-collected (and so leave the registry) meanwhile
+    before = _persistent_rdd_ids(spark)
+    run_linkage_checkpointed(spark, pages, lex, et, str(tmp_path / "wd")).collect()
+    assert _persistent_rdd_ids(spark) - before == set()
+
+    before = _persistent_rdd_ids(spark)
+    res = run_linkage(pages, lex, et, cleanup=True)
+    res["clusters"].collect()
+    product = res["clusters"]._jdf.queryExecution().analyzed().rdd().id()
+    assert _persistent_rdd_ids(spark) - before == {product}

@@ -125,6 +125,31 @@ def test_alias_embedding_blend_links_dissimilar_strings(spark):
     assert len(set(blended.values())) == 1  # embedding agreement links
 
 
+def test_non_ascii_alias_gets_its_type(spark):
+    """The alias → types map is keyed by the fused scan's normalizer,
+    so an alias whose normalized form drops a non-ASCII character
+    ("café x" → "caf x") still gets its type (and the type prune still
+    applies to it)."""
+    import pandas as pd
+
+    text = "intro café x end"
+    html = f"<html><body><p>{text}</p></body></html>".encode()
+    pages = spark.createDataFrame(
+        [("u1", None, html, text, "en")],
+        "url:string, warc_ts:timestamp, html:binary, text:string, lang:string",
+    )
+    lex = pd.DataFrame([("café x", "E1", 1.0, "Anatomy")],
+                       columns=["alias", "eid", "score", "type"])
+    etypes = spark.createDataFrame([("E1", ["Anatomy"])], "eid:string, types:array<string>")
+    result = run_linkage(pages, lex, etypes)
+    rows = result["mentions"].select("mention", "norm_form", "pred_type").collect()
+    for df in result["persisted_frames"]:
+        df.unpersist()
+    assert [(r["mention"], r["norm_form"], r["pred_type"]) for r in rows] == [
+        ("café x", "caf x", ["Anatomy"])
+    ]
+
+
 def test_partitioning_invariance(spark, corpus):
     """Same clusters regardless of parallelism — the determinism
     prerequisite for the two-cluster-size scaling acceptance."""

@@ -1,4 +1,4 @@
-"""Blocking-key generation and skew-aware within-block pair generation.
+"""Skew-aware within-block pair generation.
 
 The analogue of the reference's candidate generation: QuickUMLS blocks
 the UMLS lexicon by n-gram similarity before scoring
@@ -27,32 +27,19 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
-def blocking_key(col):
-    """Normalized-surface-form blocking key: lower, trim, collapse
-    whitespace, strip non-alnum.  (Type-filtered refinement is applied
-    separately by the J8 type filter — see operators/typefilter.py.)"""
-    out = F.lower(F.trim(col))
-    out = F.regexp_replace(out, r"[^a-z0-9 ]", "")
-    out = F.regexp_replace(out, r"\s+", " ")
-    return out
-
-
 def block_pairs(
     df: DataFrame,
     key_col: str = "block_key",
     id_col: str = "mention_key",
     hot_threshold: int = 10000,
     target_cell: int = 2000,
-    max_block: int | None = None,
     extra_cols: list[str] | None = None,
     persist_registry: list | None = None,
 ) -> DataFrame:
     """All unordered within-block pairs, salted for hot keys.
 
     Returns DataFrame(key_col, a_<id>, b_<id> [, a_/b_ extra cols]) with
-    ``a < b`` canonical order.  Blocks larger than ``max_block`` (if
-    set) are dropped entirely (the reference analogously refuses
-    unbounded candidate lists — QuickUMLS thresholds at 0.6 similarity).
+    ``a < b`` canonical order.
     """
     extra_cols = extra_cols or []
     cols = [key_col, id_col, *extra_cols]
@@ -69,10 +56,7 @@ def block_pairs(
     if persist_registry is not None:
         persist_registry.append(base)
 
-    counts = base.groupBy(key_col).agg(F.count(F.lit(1)).alias("_bsize"))
-    if max_block is not None:
-        counts = counts.where(F.col("_bsize") <= max_block)
-    counts = counts.withColumn(
+    counts = base.groupBy(key_col).agg(F.count(F.lit(1)).alias("_bsize")).withColumn(
         "_ncells",
         F.when(F.col("_bsize") > hot_threshold,
                F.ceil(F.col("_bsize") / F.lit(target_cell)).cast("int"))

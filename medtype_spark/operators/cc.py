@@ -26,6 +26,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Round cap of the distributed path (O(log² n) rounds converge far
+# below it), and rounds run per convergence fingerprint: each round's
+# dominant cost on short graphs is fixed job/stage overhead, so
+# checking every 2nd round halves the job count at the price of at most
+# one redundant (idempotent) round after the fixpoint.
+MAX_ITER = 50
+CHECK_EVERY = 2
+
 
 def _fingerprint(edges: DataFrame) -> tuple:
     # decimal(38,0) sum: overflow-safe under ANSI mode (Spark 4 default)
@@ -111,8 +119,6 @@ def connected_components(
     dst: str = "dst",
     vertices: DataFrame | None = None,
     vertex_col: str = "node",
-    max_iter: int = 50,
-    check_every: int = 2,
     small_graph_threshold: int | None = 1_000_000,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -212,11 +218,7 @@ def connected_components(
     e = e.localCheckpoint()
 
     # Convergence is detected by an edge-set fingerprint, one cheap
-    # aggregate job.  ``check_every`` batches rounds per fingerprint:
-    # each round's dominant cost on short graphs is fixed job/stage
-    # overhead, so checking every 2nd round halves the job count at the
-    # price of at most one redundant (idempotent) round after the
-    # fixpoint — a large win when CC runs inside a benchmarked pipeline.
+    # aggregate job per CHECK_EVERY rounds.
     # distributed rounds consume all_nodes only after convergence, but
     # pin it now so the final join never recomputes upstream python
     # lineage that the iteration already paid for
@@ -226,8 +228,8 @@ def connected_components(
         stats["path"] = "distributed"
     prev_fp = None
     rounds = 0
-    while rounds < max_iter:
-        for _ in range(min(check_every, max_iter - rounds)):
+    while rounds < MAX_ITER:
+        for _ in range(min(CHECK_EVERY, MAX_ITER - rounds)):
             # lazy checkpoint: the fingerprint aggregate materializes
             # the batch, so the batch costs one job total
             e = _small_star(_large_star(e)).localCheckpoint(eager=False)

@@ -61,7 +61,7 @@ def build_alias_pattern(aliases) -> re.Pattern:
     return re.compile(rf"(?<![0-9A-Za-z])({core})(?![0-9A-Za-z])")
 
 
-MENTION_SCHEMA = T.StructType([
+FUSED_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("start_offset", T.LongType()),
     T.StructField("end_offset", T.LongType()),
@@ -70,55 +70,6 @@ MENTION_SCHEMA = T.StructType([
         T.StructField("eid", T.StringType()),
         T.StructField("score", T.DoubleType()),
     ]))),
-])
-
-
-def detect_mentions(
-    pages: DataFrame,
-    lexicon: pd.DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """Scan page text for known alias surface forms.
-
-    ``lexicon``: pandas DataFrame (alias, eid, score[, ...]) —
-    broadcast via task closure (dimension-sized, like umls2type at
-    .../server/__init__.py:66-69).
-    """
-    spark = pages.sparkSession
-    lex_b = spark.sparkContext.broadcast(
-        lexicon[["alias", "eid", "score"]].values.tolist()
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = lex_b.value
-        alias_map: dict[str, list[tuple[str, float]]] = {}
-        for alias, eid, score in rows:
-            alias_map.setdefault(alias, []).append((eid, float(score)))
-        for cands in alias_map.values():
-            cands.sort(key=lambda c: (-c[1], c[0]))
-        pattern = build_alias_pattern(alias_map)
-        for pdf in batches:
-            out = []
-            for url, text in zip(pdf[url_col], pdf[text_col]):
-                if text is None:
-                    continue
-                for m in pattern.finditer(text):
-                    surface = m.group(1)
-                    cands = [
-                        {"eid": e, "score": round(s, 3)}
-                        for e, s in alias_map[surface]
-                    ]
-                    out.append((url, m.start(1), m.end(1), surface, cands))
-            yield pd.DataFrame(
-                out,
-                columns=["url", "start_offset", "end_offset", "mention", "candidates"],
-            )
-
-    return pages.select(url_col, text_col).mapInPandas(scan, schema=MENTION_SCHEMA)
-
-
-FUSED_SCHEMA = T.StructType(MENTION_SCHEMA.fields + [
     T.StructField("mention_key", T.StringType()),
     T.StructField("norm_form", T.StringType()),
     T.StructField("block_key", T.StringType()),
@@ -129,14 +80,17 @@ _NORM_RE = re.compile(r"[^a-z0-9 ]")
 _WS_RE = re.compile(r"\s+")
 
 # THE extraction regex — single definition shared by the fused scan and
-# pipeline.extract_text_udf so both paths extract byte-identically
-# (re.S: a <p>…</p> spanning newlines must match on both paths).
+# pipeline.extract_text_udf, so the batched scorer's context text is the
+# text the scan's offsets index (re.S: a <p>…</p> spanning newlines
+# must match on both).
 EXTRACT_RE = re.compile(r"<p>(.*?)</p>", re.S)
 
 
 def normalize_form_py(s: str) -> str:
-    """Python twin of operators.blocking.blocking_key (kept in sync;
-    differential-tested in tests/test_pipeline.py)."""
+    """THE surface-form normalizer: lower, strip, drop every character
+    outside [a-z0-9 ], collapse whitespace, strip again.  The fused scan
+    derives ``norm_form``/``block_key`` with it for every type scorer,
+    and the dict scorer keys its alias → types map by it."""
     out = _NORM_RE.sub("", s.lower().strip())
     return _WS_RE.sub(" ", out).strip()
 
@@ -191,14 +145,15 @@ def fused_mention_scan(
     normalized/blocking keys + predicted types, in a SINGLE
     mapInPandas.
 
-    Rationale: the modular pipeline chains three Python runners
-    (extract UDF → detect mapInPandas → scorer UDF); every hop is an
-    Arrow socket round-trip per batch.  Fusing them into one runner
-    cuts worker count and serialization 3× — on this sandbox the
-    chained version spends >90% CPU in kernel/syscall time at
-    local[32], and at cluster scale the saved serialization is real
-    money.  ``alias2types=None`` switches to the deterministic stub
-    transformer scorer (functions/scoring.py).
+    Rationale: extraction, span detection and scoring as separate
+    Python runners (extract UDF → detect mapInPandas → scorer UDF)
+    cost an Arrow socket round-trip per batch per hop.  One runner cuts
+    worker count and serialization 3× — the chained version spent >90%
+    CPU in kernel/syscall time at local[32], and at cluster scale the
+    saved serialization is real money.  ``alias2types=None`` switches
+    to the deterministic stub transformer scorer
+    (functions/scoring.py); a scorer that types mentions afterwards
+    passes ``{}`` and replaces ``pred_type``.
     """
     spark = pages.sparkSession
     lex_b = spark.sparkContext.broadcast(

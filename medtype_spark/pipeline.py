@@ -6,11 +6,12 @@ the resumable ``plans.checkpoints.run_linkage_checkpointed``:
 1. ``scan_mentions``: ``pages(url, warc_ts, html, text, lang)`` →
    one row per detected mention with its candidates, normalized
    surface form, blocking key (the form's head token) and predicted
-   semantic types.  The dictionary and stub scorers run in ONE fused
-   Python hop (``operators.mentions.fused_mention_scan``); the
+   semantic types, from ONE fused Python hop
+   (``operators.mentions.fused_mention_scan``) for every scorer.  The
+   dictionary and stub scorers type mentions inside that hop; the
    batched-transformer scorer needs mention offsets against page text,
-   so it chains extraction → ``detect_mentions`` →
-   ``batched_type_predictions``.
+   so it overlays ``batched_type_predictions`` over the extracted text
+   (``extract_pages``) onto the scan's mentions.
 2. ``form_edges``: distinct surface forms per block (the form *units*)
    → skew-aware salted within-block pairs → Jaro-Winkler (optionally
    blended with alias-embedding cosine) → edges at or above the
@@ -36,13 +37,9 @@ from pyspark.sql.types import StringType
 from pyspark.storagelevel import StorageLevel
 
 from medtype_spark.metrics.clustering import pairwise
-from medtype_spark.operators.blocking import block_pairs, blocking_key
+from medtype_spark.operators.blocking import block_pairs
 from medtype_spark.operators.cc import connected_components
-from medtype_spark.operators.mentions import (
-    detect_mentions,
-    fused_mention_scan,
-    normalize_form_py,
-)
+from medtype_spark.operators.mentions import fused_mention_scan, normalize_form_py
 from medtype_spark.operators.pairs import score_pairs
 from medtype_spark.operators.typefilter import filter_candidates
 
@@ -75,19 +72,22 @@ def scan_mentions(
 ) -> DataFrame:
     """Mentions with (mention_key, norm_form, block_key, pred_type).
 
+    Every scorer reads the same single-hop fused scan
+    (``operators.mentions.fused_mention_scan``), so spans, candidates
+    and the normalized form and blocking key come from one normalizer.
     ``type_scorer``: "dict" (alias → type lookup, the default) and
-    "stub" (deterministic md5 linear head) score inside the fused
-    single-hop scan; "batched" is the MedType-style batched
-    transformer path: token-window assembly (P4),
-    length-sorted padded batches (W5), a REAL learned 2-layer
-    checkpoint loaded once per worker (S12, tools/train_type_model.py),
-    sigmoid threshold + type decode (P8/P9).
+    "stub" (deterministic md5 linear head) score inside the scan;
+    "batched" is the MedType-style batched transformer, overlaid on
+    the scan's mentions: token-window assembly (P4) over the extracted
+    page text, length-sorted padded batches (W5), a REAL learned
+    2-layer checkpoint loaded once per worker (S12,
+    tools/train_type_model.py), sigmoid threshold + type decode
+    (P8/P9).
 
-    ``matcher`` (fused scan only): "trie" (regex automaton, the general
-    path) or "set" (broadcast hash-set gazetteer, token-boundary
-    contract — the shape for 10^5+-alias lexicons where the automaton
-    compile per fresh worker dominates; see
-    operators/mentions.py:iter_set_matches).
+    ``matcher``: "trie" (regex automaton, the general path) or "set"
+    (broadcast hash-set gazetteer, token-boundary contract — the shape
+    for 10^5+-alias lexicons where the automaton compile per fresh
+    worker dominates; see operators/mentions.py:iter_set_matches).
     """
     if type_scorer == "dict":
         # keyed by the scan's own normalizer, so each detected alias's
@@ -95,27 +95,20 @@ def scan_mentions(
         a2t: dict[str, set] = {}
         for alias, etype in zip(lexicon["alias"], lexicon["type"]):
             a2t.setdefault(normalize_form_py(alias), set()).add(etype)
-        return fused_mention_scan(
-            pages, lexicon, {k: sorted(v) for k, v in a2t.items()}, matcher=matcher
-        )
-    if type_scorer == "stub":
-        return fused_mention_scan(pages, lexicon, None, matcher=matcher)
-    if type_scorer != "batched":
+        alias2types = {k: sorted(v) for k, v in a2t.items()}
+    elif type_scorer == "stub":
+        alias2types = None
+    elif type_scorer == "batched":
+        alias2types = {}
+    else:
         raise ValueError(type_scorer)
+    mentions = fused_mention_scan(pages, lexicon, alias2types, matcher=matcher)
+    if type_scorer != "batched":
+        return mentions
     from medtype_spark.operators.batching import batched_type_predictions
 
-    extracted = extract_pages(pages)
-    mentions = (
-        detect_mentions(extracted, lexicon, text_col="extracted_text")
-        .withColumn(
-            "mention_key",
-            F.concat_ws("#", F.col("url"), F.col("start_offset").cast("string")),
-        )
-        .withColumn("norm_form", blocking_key(F.col("mention")))
-        .withColumn("block_key", F.split(F.col("norm_form"), " ")[0])
-    )
-    preds = batched_type_predictions(mentions, extracted)
-    return mentions.join(preds, "mention_key", "left").withColumn(
+    preds = batched_type_predictions(mentions, extract_pages(pages))
+    return mentions.drop("pred_type").join(preds, "mention_key", "left").withColumn(
         "pred_type",
         F.coalesce(F.col("pred_type"), F.array().cast("array<string>")),
     )

@@ -7,9 +7,9 @@ generator (entity_linkers.py:25-46).  Two strategies:
   side is broadcast (queries are few); scoring is JVM-side zip_with /
   aggregate, ranking is a window per query.  Correct baseline and the
   within-block scorer.
-- ``lsh_topk`` / ``lsh_cosine_pairs``: random-hyperplane LSH — bucket
-  on sign bits of H seeded projections, candidate join within buckets,
-  exact re-rank.  The scale path: candidates per query ∝ bucket size,
+- ``lsh_cosine_pairs``: random-hyperplane LSH — bucket on sign bits
+  of H seeded projections, candidate join within buckets, exact
+  re-rank.  The scale path: candidates per vector ∝ bucket size,
   not corpus size.
 
 Plane components are md5-derived integers baked into the plan as
@@ -22,8 +22,7 @@ with the corpus at fixed n_planes, so within-bucket pair generation is
 routed through ``operators.blocking.block_pairs`` — buckets beyond
 ``hot_threshold`` members are salted onto a 2-D cell grid exactly like
 hot blocking keys, so no task ever materializes a whole bucket's
-quadratic.  ``auto_planes`` additionally scales the bucket count with
-the corpus (one cheap count() pre-pass).
+quadratic.
 """
 
 from __future__ import annotations
@@ -131,8 +130,6 @@ def lsh_cosine_pairs(
     seed: int = 42,
     hot_threshold: int = 5000,
     target_cell: int = 1000,
-    auto_planes: bool = False,
-    target_bucket: int = 2000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS at corpus scale: bucketed
     self-join (never all-pairs).
@@ -143,31 +140,16 @@ def lsh_cosine_pairs(
     tables = higher recall at linear candidate cost.  Returns
     (a, b, cosine) with a < b.
 
-    Scale guards (fixed bucket counts are a hidden quadratic — bucket
+    Scale guard (fixed bucket counts are a hidden quadratic — bucket
     population is corpus/2^n_planes, so within-bucket pairs grow with
-    the SQUARE of corpus size):
-
-    - within-bucket pair generation goes through ``block_pairs`` with
-      the (table, bucket) pair as the blocking key: buckets larger
-      than ``hot_threshold`` are salted onto a 2-D cell grid (~
-      ``target_cell``-member cells), so the shuffle key spreads a hot
-      bucket across cells and no task sees a whole bucket — the exact
-      mechanism (and property test) used for hot blocking keys;
-    - ``auto_planes=True`` additionally derives n_planes from a
-      count() pre-pass so the EXPECTED bucket size tracks
-      ``target_bucket``: n_planes = max(n_planes,
-      ceil(log2(n / target_bucket))).  Off by default so the bucket
-      structure (and the q61 oracle) stays a pure function of the
-      arguments.
+    the SQUARE of corpus size): within-bucket pair generation goes
+    through ``block_pairs`` with the (table, bucket) pair as the
+    blocking key: buckets larger than ``hot_threshold`` are salted onto
+    a 2-D cell grid (~``target_cell``-member cells), so the shuffle key
+    spreads a hot bucket across cells and no task sees a whole bucket —
+    the exact mechanism (and property test) used for hot blocking keys.
     """
-    import math
-
     from medtype_spark.operators.blocking import block_pairs
-
-    if auto_planes:
-        n = corpus.count()
-        if n > target_bucket:
-            n_planes = max(n_planes, math.ceil(math.log2(n / target_bucket)))
 
     per_table = []
     for t in range(n_tables):
@@ -201,38 +183,6 @@ def lsh_cosine_pairs(
     return cands.select(
         "a", "b", cosine_sim(F.col("_va"), F.col("_vb")).alias("cosine")
     ).where(F.col("cosine") >= min_cosine)
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: bucket join on hyperplane sign bits, exact
-    re-rank within buckets.  Recall < 1 by design; rank semantics match
-    brute_force_topk within the candidate set."""
-    c = corpus.withColumn("_bucket", _hyperplane_bits(F.col(vec_col), dim, n_planes, seed))
-    q = queries.select(
-        F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qvec")
-    ).withColumn("_bucket", _hyperplane_bits(F.col("_qvec"), dim, n_planes, seed))
-    joined = c.join(F.broadcast(q), "_bucket").where(F.col(id_col) != F.col("_qid"))
-    scored = joined.select(
-        F.col("_qid").alias("query_id"),
-        F.col(id_col),
-        cosine_sim(F.col("_qvec"), F.col(vec_col)).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "cosine")
-    )
 
 
 # ----------------------------------------------------------------------

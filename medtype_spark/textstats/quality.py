@@ -192,7 +192,6 @@ GOPHER_NGRAM_RULES = [
 ]
 
 
-@lru_cache(maxsize=32)
 def _rep_run_stats(toks_sql: str, n: int):
     """(top_mass, dup_mass) of the doc's word n-grams, ROW-LOCALLY.
 

@@ -82,14 +82,6 @@ def test_salted_hot_key_pairs_are_distributed(spark):
     assert max(r["n"] for r in per_part) < 0.5 * total
 
 
-def test_max_block_drops_oversized(spark):
-    rows = [("big", f"m{i}") for i in range(30)] + [("ok", "a"), ("ok", "b")]
-    df = spark.createDataFrame(rows, ["block_key", "mention_key"])
-    out = block_pairs(df, max_block=10)
-    got = _got_pairs(out)
-    assert got == {("ok", "a", "b")}
-
-
 def test_extra_cols_carried_and_swapped(spark):
     rows = [("k", "id2", "v2"), ("k", "id1", "v1")]
     df = spark.createDataFrame(rows, ["block_key", "mention_key", "payload"])

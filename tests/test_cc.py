@@ -51,7 +51,7 @@ def _check(spark, edges, nodes=None):
 
 def test_long_chain(spark):
     # path graph: naive min-propagation needs O(n) rounds; the
-    # alternating algorithm must converge well under max_iter=50
+    # alternating algorithm must converge well under MAX_ITER=50
     n = 200
     edges = [(f"n{i:04d}", f"n{i+1:04d}") for i in range(n - 1)]
     _check(spark, edges)

@@ -42,9 +42,10 @@ def test_extraction_byte_identical(spark, corpus):
 
 
 def test_extraction_multiline_both_paths(spark):
-    """A <p>…</p> spanning newlines must extract identically on the
-    modular (extract_text_udf) and fused (fused_mention_scan) paths —
-    guards the shared EXTRACT_RE (re.S) against flag drift."""
+    """A <p>…</p> spanning newlines must extract identically for the
+    batched scorer's context text (extract_text_udf) and the fused scan
+    whose offsets index it — guards the shared EXTRACT_RE (re.S)
+    against flag drift."""
     from medtype_spark.operators.mentions import fused_mention_scan
     from medtype_spark.pipeline import extract_pages
 
@@ -55,7 +56,7 @@ def test_extraction_multiline_both_paths(spark):
         "url:string, warc_ts:timestamp, html:binary, text:string, lang:string",
     )
     got = extract_pages(pages).select("extracted_text").collect()[0][0]
-    assert got == text  # modular path sees across the newline
+    assert got == text  # context text spans the newline
 
     lex = build_lexicon(5)
     fused = fused_mention_scan(pages, lex, {})
@@ -65,10 +66,9 @@ def test_extraction_multiline_both_paths(spark):
 
 def test_gold_mentions_recovered(spark, corpus):
     pages, gold, lex, _ = corpus
-    from medtype_spark.operators.mentions import detect_mentions
-    from medtype_spark.pipeline import extract_pages
+    from medtype_spark.operators.mentions import fused_mention_scan
 
-    mentions = detect_mentions(extract_pages(pages), lex, text_col="extracted_text")
+    mentions = fused_mention_scan(pages, lex, {})
     # every planted span must be detected exactly
     g = gold.select("url", "start_offset", "end_offset", "mention")
     m = mentions.select("url", "start_offset", "end_offset", "mention")
@@ -148,6 +148,38 @@ def test_non_ascii_alias_gets_its_type(spark):
     assert [(r["mention"], r["norm_form"], r["pred_type"]) for r in rows] == [
         ("café x", "caf x", ["Anatomy"])
     ]
+
+
+def test_batched_scorer_shares_the_scan_normalizer(spark):
+    """Every type scorer reads the fused scan's norm_form/block_key, so
+    an alias ending in punctuation ("vitamin c +", "a -") normalizes
+    without a trailing space under "batched" exactly as under "dict"."""
+    import pandas as pd
+
+    text = "took vitamin c + daily and a - note"
+    html = f"<html><body><p>{text}</p></body></html>".encode()
+    pages = spark.createDataFrame(
+        [("u1", None, html, text, "en")],
+        "url:string, warc_ts:timestamp, html:binary, text:string, lang:string",
+    )
+    lex = pd.DataFrame(
+        [("vitamin c +", "E1", 1.0, "Organic Chemical"), ("a -", "E2", 1.0, "Anatomy")],
+        columns=["alias", "eid", "score", "type"],
+    )
+    etypes = spark.createDataFrame(
+        [("E1", ["Organic Chemical"]), ("E2", ["Anatomy"])], "eid:string, types:array<string>"
+    )
+
+    def forms(type_scorer):
+        result = run_linkage(pages, lex, etypes, type_scorer=type_scorer)
+        rows = result["mentions"].select("mention_key", "norm_form", "block_key").collect()
+        for df in result["persisted_frames"]:
+            df.unpersist()
+        return sorted(tuple(r) for r in rows)
+
+    want = [("u1#27", "a", "a"), ("u1#5", "vitamin c", "vitamin")]
+    assert forms("dict") == want
+    assert forms("batched") == want
 
 
 def test_partitioning_invariance(spark, corpus):

@@ -177,3 +177,46 @@ def test_repetition_random_corpus_differential(spark):
                 assert got == pytest.approx(v, abs=1e-9), (i, k, t)
             else:
                 assert got == v, (i, k, t)
+
+
+_RESTART_SCRIPT = """
+import json
+from medtype_spark.session import get_spark
+from medtype_spark.textstats import quality as q
+
+def build(spark):
+    df = spark.createDataFrame(
+        [(1, TEXT), (2, "short... text\\n- bullet #")], "doc_id int, text string")
+    return [sorted(map(list, f(df).collect()))
+            for f in (q.quality_features, q.gopher_quality)]
+
+spark = get_spark("column-cache-restart", master="local[1]")
+before = build(spark)
+spark.stop()
+spark = get_spark("column-cache-restart", master="local[1]")
+after = build(spark)
+spark.stop()
+hits = [q._quality_cols.cache_info().hits, q._gopher_quality_cols.cache_info().hits]
+print(json.dumps({"same": before == after, "hits": hits}))
+"""
+
+
+def test_cached_columns_survive_context_restart():
+    """Cached Column builders (``_quality_cols``/``_gopher_quality_cols``)
+    wrap JVM objects; after ``spark.stop()`` and a fresh ``get_spark()``
+    the cached builders are reused and yield the same rows.  Runs in its
+    own process so the shared test session is not stopped."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", f"TEXT = {PASSING!r}\n" + _RESTART_SCRIPT],
+        cwd=root, capture_output=True, text=True, timeout=600,
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got == {"same": True, "hits": [1, 1]}

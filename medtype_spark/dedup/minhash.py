@@ -159,37 +159,6 @@ def lsh_candidate_pairs(
     )
 
 
-def capped_candidate_pairs(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    df_cap: int = 50,
-) -> DataFrame:
-    """Candidate pairs from a document-frequency-capped shingle
-    self-join: shingles appearing in more than ``df_cap`` documents are
-    excluded from candidate *generation* (they are stop-phrases that
-    turn the self-join into a hot-key quadratic — the exact bomb LSH
-    banding exists to avoid), so per-shingle work is bounded by
-    df_cap².  Jaccard *verification* downstream still uses ALL
-    shingles, so scores stay exact; only pairs that share nothing but
-    ultra-common shingles are missed — by construction those have
-    intersection made of stop-phrases and near-zero Jaccard in any
-    realistically sized corpus.  SQL-expressible, so the oracle can
-    reproduce it exactly (unlike the minhash-LSH path, which is
-    checked separately via the md5 hash family)."""
-    dfreq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    rare = shingles.join(
-        dfreq.where(F.col("_df") <= df_cap).select("shingle"), "shingle"
-    )
-    a = rare.select(F.col(id_col).alias("a"), "shingle")
-    b = rare.select(F.col(id_col).alias("b"), "shingle")
-    return (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates()
-    )
-
-
 def capped_jaccard_pairs(
     shingles: DataFrame,
     id_col: str = "doc_id",
@@ -207,12 +176,14 @@ def capped_jaccard_pairs(
     pairs against full posting lists (the quadratic×fan-out stage that
     dominates a generate-then-verify plan).
     """
-    from pyspark.storagelevel import StorageLevel
-
     dfreq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
+    # ``rare`` feeds the sizes and both self-join sides.  A lazy local
+    # checkpoint computes it once without registering it in the
+    # session's CacheManager, where a persist would outlive the query
+    # and be reused by the next call's identical plan.
     rare = shingles.join(
         dfreq.where(F.col("_df") <= df_cap).select("shingle"), "shingle"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
 
     sizes = rare.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = rare.select(F.col(id_col).alias("a"), "shingle")
@@ -263,42 +234,34 @@ def jaccard_pairs(
 
 
 def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              n: int = 2, hash_family: str = "xxhash64") -> DataFrame:
+              n: int = 2) -> DataFrame:
     """64-bit SimHash over word n-grams, JVM-side bit arithmetic.
 
     For each of 64 bit positions, sum +1/-1 votes of hash(shingle)
     bits weighted by shingle frequency; the sign vector packs into a
     long.  Near-dups differ in few bits (hamming distance ≤ k).
 
-    ``hash_family``: "xxhash64" (production: one cheap 64-bit hash) or
-    "md5" (oracle-portable: bit b = bit b%4 of md5 hex digit b//4,
-    identical arithmetic in DuckDB — used by q50 so the full SimHash
-    is driver-hash-checked; same plan shape, just a pricier hash).
+    The shingle hash is md5: bit b = bit b%4 of md5 hex digit b//4,
+    identical arithmetic in DuckDB, so q50's oracle reproduces the full
+    SimHash bit-for-bit.
     """
     sh = df.select(
         F.col(id_col), F.explode(word_shingles(text_col, n)).alias("shingle")
     )
-    if hash_family == "xxhash64":
-        sh = sh.withColumn("h", F.xxhash64("shingle"))
+    # parse each hex digit ONCE into an int array; the 64 bit probes
+    # are then cheap shifts on array elements (16 instr calls per
+    # shingle instead of 64)
+    sh = sh.withColumn("h", F.md5("shingle")).withColumn(
+        "dg",
+        F.expr(
+            "transform(sequence(1, 16), "
+            "k -> instr('0123456789abcdef', substr(h, k, 1)) - 1)"
+        ),
+    )
 
-        def bit(b):
-            return F.expr(f"(h >> {b}) & 1") == 1
-    elif hash_family == "md5":
-        # parse each hex digit ONCE into an int array; the 64 bit
-        # probes are then cheap shifts on array elements (16 instr
-        # calls per shingle instead of 64)
-        sh = sh.withColumn("h", F.md5("shingle")).withColumn(
-            "dg",
-            F.expr(
-                "transform(sequence(1, 16), "
-                "k -> instr('0123456789abcdef', substr(h, k, 1)) - 1)"
-            ),
-        )
+    def bit(b):
+        return F.expr(f"(shiftright(dg[{b // 4}], {b % 4}) & 1) = 1")
 
-        def bit(b):
-            return F.expr(f"(shiftright(dg[{b // 4}], {b % 4}) & 1) = 1")
-    else:
-        raise ValueError(hash_family)
     # 64 vote sums as 64 aggregate columns in ONE groupBy — the old
     # explode(sequence(0,63)) multiplied shuffle rows ×64; this keeps
     # one row per doc and lets partial aggregation combine map-side.

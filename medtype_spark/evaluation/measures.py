@@ -39,6 +39,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from medtype_spark.metrics.clustering import prf_row
+
 
 class MeasureSpec(NamedTuple):
     key: tuple
@@ -122,24 +124,6 @@ def _apply_filter(ann: DataFrame, filt: str | None) -> DataFrame:
     return ann.where(F.col(filt)) if filt else ann
 
 
-def _prf_row(p_num, p_den, r_num, r_den):
-    """evaluate.py:272-279 derivation with zero-denominator → 0."""
-    p = F.when(F.col("p_den") == 0, F.lit(0.0)).otherwise(F.col("p_num") / F.col("p_den"))
-    r = F.when(F.col("r_den") == 0, F.lit(0.0)).otherwise(F.col("r_num") / F.col("r_den"))
-    return (
-        p_num.crossJoin(p_den).crossJoin(r_num).crossJoin(r_den)
-        .withColumn("precision", p)
-        .withColumn("recall", r)
-        .withColumn(
-            "fscore",
-            F.when((F.col("precision") + F.col("recall")) == 0, F.lit(0.0)).otherwise(
-                2 * F.col("precision") * F.col("recall")
-                / (F.col("precision") + F.col("recall"))
-            ),
-        )
-    )
-
-
 # --- agg: sets ----------------------------------------------------------
 
 def _eval_sets(gold: DataFrame, system: DataFrame, spec: MeasureSpec) -> DataFrame:
@@ -166,9 +150,7 @@ def _eval_sets(gold: DataFrame, system: DataFrame, spec: MeasureSpec) -> DataFra
     p_den = s.agg(F.count(F.lit(1)).cast("double").alias("p_den"))
     r_num = tp.select(F.col("p_num").alias("r_num"))
     r_den = g.agg(F.count(F.lit(1)).cast("double").alias("r_den"))
-    return _prf_row(tp, p_den, r_num, r_den).select(
-        "p_num", "p_den", "r_num", "r_den", "precision", "recall", "fscore"
-    )
+    return prf_row(tp.crossJoin(p_den).crossJoin(r_num).crossJoin(r_den))
 
 
 # --- agg: overlap-XY ----------------------------------------------------
@@ -244,9 +226,7 @@ def _eval_overlap(gold: DataFrame, system: DataFrame, spec: MeasureSpec) -> Data
     p_den = s.agg(F.count(F.lit(1)).cast("double").alias("p_den"))
     rtp = gold_cov.agg(F.coalesce(F.sum("overlap"), F.lit(0.0)).alias("r_num"))
     r_den = g.agg(F.count(F.lit(1)).cast("double").alias("r_den"))
-    return _prf_row(ptp, p_den, rtp, r_den).select(
-        "p_num", "p_den", "r_num", "r_den", "precision", "recall", "fscore"
-    )
+    return prf_row(ptp.crossJoin(p_den).crossJoin(rtp).crossJoin(r_den))
 
 
 # --- agg: clustering ----------------------------------------------------

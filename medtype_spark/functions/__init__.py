@@ -5,5 +5,4 @@ from medtype_spark.functions.text import (  # noqa: F401
     collapse_char_pandas,
     collapse_char_py,
     normalise_link_col,
-    simple_tokens,
 )

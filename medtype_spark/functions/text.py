@@ -115,8 +115,3 @@ def normalise_link_col(col: Column) -> Column:
     for p in _WIKI_PREFIXES:
         out = F.regexp_replace(out, "^" + re.escape(p), "")
     return F.regexp_replace(out, " ", "_")
-
-
-def simple_tokens(col: Column) -> Column:
-    """Whitespace tokenization into a trimmed array (no empty tokens)."""
-    return F.filter(F.split(F.trim(col), r"\s+"), lambda t: t != "")

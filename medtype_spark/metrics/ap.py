@@ -2,14 +2,14 @@
 
 The reference computes sklearn ``average_precision_score`` over
 flattened multi-label logits (medtype-trainer/medtype.py:236-252, call
-at :251).  Restated with window functions: rank by score descending
+at :251).  Restated as one global ranking: rank by score descending
 (deterministic tie-break), AP = Σ_k precision@k · rel_k / n_pos — the
 same step-interpolation sklearn uses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -18,44 +18,27 @@ def average_precision(
     score_col: str = "score",
     label_col: str = "label",
     tiebreak_col: str | None = None,
-    group_by: list[str] | None = None,
 ) -> DataFrame:
-    """AP per group (or overall when group_by is None).
+    """One-row AP over the whole frame.
 
     ``label_col`` is 0/1.  Ties broken by ``tiebreak_col`` for
-    engine-reproducible ranking.
+    engine-reproducible ranking.  The global ranking needs no
+    single-task Window.orderBy: range repartition + partition offsets
+    (operators/ranks.py).
     """
-    group_by = group_by or []
+    from medtype_spark.operators.ranks import with_global_rank
+
     order = [F.desc(score_col)]
     if tiebreak_col:
         order.append(F.asc(tiebreak_col))
 
-    if group_by:
-        # per-group windows are already partition-parallel
-        w = Window.partitionBy(*group_by).orderBy(*order)
-        ranked = scored.select(
-            *group_by,
-            F.col(label_col).cast("double").alias("_rel"),
-            F.row_number().over(w).alias("_k"),
-            F.sum(F.col(label_col).cast("double")).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ).alias("_tp_at_k"),
-        )
-    else:
-        # global ranking WITHOUT a single-task Window.orderBy: range
-        # repartition + partition offsets (operators/ranks.py)
-        from medtype_spark.operators.ranks import with_global_rank
-
-        base = scored.withColumn("_rel", F.col(label_col).cast("double"))
-        ranked = with_global_rank(
-            base, order, rank_col="_k", cum_cols={"_rel": "_tp_at_k"}
-        ).select("_rel", "_k", "_tp_at_k")
+    base = scored.withColumn("_rel", F.col(label_col).cast("double"))
+    ranked = with_global_rank(
+        base, order, rank_col="_k", cum_cols={"_rel": "_tp_at_k"}
+    ).select("_rel", "_k", "_tp_at_k")
     contrib = (F.col("_tp_at_k") / F.col("_k")) * F.col("_rel")
-    agg_cols = [
+    return ranked.agg(
         (F.coalesce(F.sum(contrib) / F.sum("_rel"), F.lit(0.0))).alias("average_precision"),
         F.sum("_rel").cast("long").alias("n_pos"),
         F.count(F.lit(1)).alias("n"),
-    ]
-    if group_by:
-        return ranked.groupBy(*group_by).agg(*agg_cols)
-    return ranked.agg(*agg_cols)
+    )

@@ -37,44 +37,31 @@ def contingency_prf(
     gold: DataFrame,
     system: DataFrame,
     keys: list[str],
-    group_by: list[str] | None = None,
     gold_multi_col: str | None = None,
 ) -> DataFrame:
-    """tp/fp/fn (+P/R/F) between gold and system over exact key match.
+    """One row of tp/fp/fn (+P/R/F) between gold and system over exact
+    key match.
 
     ``keys`` are the match columns (e.g. docid,start,end,eid).  If
     ``gold_multi_col`` names a |-delimited multi-id column it is
     exploded with existential (match-any, count-once) semantics per
-    annotation.py:326-342.  ``group_by`` adds per-group rows (A3).
+    annotation.py:326-342.
     """
-    group_by = group_by or []
-
-    g = gold
+    g = gold.withColumn("_gid", F.monotonically_increasing_id())
     if gold_multi_col is not None:
-        g = (
-            gold.withColumn("_gid", F.monotonically_increasing_id())
-            .withColumn(gold_multi_col, F.explode(F.split(F.col(gold_multi_col), r"\|")))
-        )
-    else:
-        g = gold.withColumn("_gid", F.monotonically_increasing_id())
+        g = g.withColumn(gold_multi_col, F.explode(F.split(F.col(gold_multi_col), r"\|")))
 
-    s = system.dropDuplicates(keys + group_by)
+    s = system.dropDuplicates(keys)
 
-    hit = g.join(s.select(*keys, *[c for c in group_by if c not in keys]), keys, "left_semi")
+    hit = g.join(s.select(*keys), keys, "left_semi")
     # count each gold row once even if several of its split ids matched
-    tp = hit.select("_gid", *group_by).dropDuplicates(["_gid"])
+    tp = hit.select("_gid").dropDuplicates(["_gid"])
 
-    gold_n = gold.groupBy(*group_by).agg(F.count(F.lit(1)).alias("n_gold")) if group_by else gold.agg(F.count(F.lit(1)).alias("n_gold"))
-    sys_n = s.groupBy(*group_by).agg(F.count(F.lit(1)).alias("n_sys")) if group_by else s.agg(F.count(F.lit(1)).alias("n_sys"))
-    tp_n = tp.groupBy(*group_by).agg(F.count(F.lit(1)).alias("tp")) if group_by else tp.agg(F.count(F.lit(1)).alias("tp"))
+    gold_n = gold.agg(F.count(F.lit(1)).alias("n_gold"))
+    sys_n = s.agg(F.count(F.lit(1)).alias("n_sys"))
+    tp_n = tp.agg(F.count(F.lit(1)).alias("tp"))
 
-    if group_by:
-        base = gold_n.join(sys_n, group_by, "full_outer").join(tp_n, group_by, "full_outer")
-    else:
-        base = gold_n.crossJoin(sys_n).crossJoin(tp_n)
-
-    counts = base.select(
-        *group_by,
+    counts = gold_n.crossJoin(sys_n).crossJoin(tp_n).select(
         F.coalesce(F.col("tp"), F.lit(0)).alias("tp"),
         (F.coalesce(F.col("n_sys"), F.lit(0)) - F.coalesce(F.col("tp"), F.lit(0))).alias("fp"),
         (F.coalesce(F.col("n_gold"), F.lit(0)) - F.coalesce(F.col("tp"), F.lit(0))).alias("fn"),
@@ -82,7 +69,7 @@ def contingency_prf(
     return counts.select("*", *prf_cols())
 
 
-def micro_macro(per_group: DataFrame, group_cols: list[str]) -> DataFrame:
+def micro_macro(per_group: DataFrame) -> DataFrame:
     """Collapse a per-group contingency table into micro + macro rows.
 
     micro: sum tp/fp/fn then derive P/R/F (evaluate.py:131-134).

@@ -10,12 +10,13 @@ DataFrame plans:
 - paired bootstrap (:73-90): per trial, resample documents with
   replacement; count sign agreements.
 - percentile bootstrap CI (:251-281): percentiles of the trial
-  distribution at 90/95/99.
+  distribution at 90/95/99, as exact order statistics.
 
 The reference uses a joblib-parallel RNG; here every random choice is
-a pure function of (seed, trial, doc) via xxhash64, so results are
+a pure function of (seed, trial, doc) via md5, so results are
 identical across partitionings and cluster sizes — rand(seed) in Spark
-is partition-order-dependent and therefore NOT used.
+is partition-order-dependent and therefore NOT used — and the DuckDB
+oracle replays every trial (q68).
 
 Input frame: one row per document with the two systems' contingency
 counts: (docid, tp1, fp1, fn1, tp2, fp2, fn2).
@@ -29,21 +30,17 @@ from pyspark.sql import functions as F
 N_TRIALS = 2500  # significance.py:27
 
 
-def _u01(*cols):
-    """Deterministic uniform [0,1) from hashed columns."""
-    return (F.pmod(F.xxhash64(*cols), F.lit(1_000_000)) / F.lit(1_000_000.0))
-
-
 def _md5_int(*cols):
     """First 8 hex chars of md5(colon-joined cols) as a BIGINT — the
-    engine-portable twin of _u01's xxhash64 (DuckDB has no xxhash64;
-    this is the same md5 recipe as functions.scoring.md5_bucket, so
-    the driver oracle replays every trial's randomness exactly)."""
+    same md5 recipe as functions.scoring.md5_bucket, portable to DuckDB
+    (which has no xxhash64), so the driver oracle replays every trial's
+    randomness exactly."""
     s = F.concat_ws(":", *[c.cast("string") for c in cols])
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
-def _u01_md5(*cols):
+def _u01(*cols):
+    """Deterministic uniform [0,1) from hashed columns."""
     return F.pmod(_md5_int(*cols), F.lit(1_000_000)) / F.lit(1_000_000.0)
 
 
@@ -70,7 +67,6 @@ def permutation_test(
     per_doc: DataFrame,
     n_trials: int = N_TRIALS,
     seed: int = 42,
-    hash_mode: str = "xxhash",
 ) -> DataFrame:
     """R1: two-sided paired permutation p-value (significance.py:52-70).
 
@@ -85,8 +81,7 @@ def permutation_test(
     trials = per_doc.crossJoin(
         per_doc.sparkSession.range(n_trials).select(F.col("id").alias("trial"))
     )
-    u01 = _u01_md5 if hash_mode == "md5" else _u01
-    swap = u01(F.lit(seed), F.col("trial"), F.col("docid")) < 0.5
+    swap = _u01(F.lit(seed), F.col("trial"), F.col("docid")) < 0.5
     swapped = trials.select(
         "trial",
         F.when(swap, F.col("tp2")).otherwise(F.col("tp1")).alias("tp1"),
@@ -112,7 +107,6 @@ def bootstrap_diffs(
     per_doc: DataFrame,
     n_trials: int = N_TRIALS,
     seed: int = 42,
-    hash_mode: str = "xxhash",
 ) -> DataFrame:
     """R2: per-trial score differences under document resampling with
     replacement (significance.py:73-90).  Returns (trial, diff)."""
@@ -128,48 +122,25 @@ def bootstrap_diffs(
     slots = spark.range(n_trials).select(F.col("id").alias("trial")).crossJoin(
         spark.range(n_docs).select(F.col("id").alias("slot"))
     )
-    hash_int = _md5_int if hash_mode == "md5" else F.xxhash64
     picks = slots.select(
         "trial",
         F.pmod(
-            hash_int(F.lit(seed), F.col("trial"), F.col("slot")), F.lit(n_docs)
+            _md5_int(F.lit(seed), F.col("trial"), F.col("slot")), F.lit(n_docs)
         ).alias("_idx"),
     )
     resampled = picks.join(docs, "_idx")
     return _prf_diff(resampled, ["trial"])
 
 
-def percentile_ci(diffs: DataFrame, levels=(90, 95, 99)) -> DataFrame:
-    """R3: percentile bootstrap CIs (significance.py:251-281)."""
-    rows = []
-    for lv in levels:
-        lo = (100 - lv) / 200.0
-        hi = 1 - lo
-        rows.append(
-            diffs.agg(
-                F.lit(lv).alias("level"),
-                F.percentile_approx("diff", lo, 10000).alias("lo"),
-                F.percentile_approx("diff", hi, 10000).alias("hi"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
-
-
 def percentile_ci_exact(
     diffs: DataFrame, n_trials: int, levels=(90, 95, 99)
 ) -> DataFrame:
-    """R3, engine-portable variant: CIs as exact ORDER STATISTICS of
-    the trial distribution (diff at ranks ceil(α·n) / ceil((1-α)·n),
-    1-based, ties broken by trial id) — pure selection, no
-    interpolation, so the picked doubles are bit-identical in any
-    engine that sorts the same values.  ``percentile_ci`` (above) stays
-    the production path (percentile_approx sketches scale better than
-    a full sort); this variant backs the driver-checked fixture.  The
+    """R3: CIs as exact ORDER STATISTICS of the trial distribution
+    (diff at ranks ceil(α·n) / ceil((1-α)·n), 1-based, ties broken by
+    trial id) — pure selection, no interpolation, so the picked doubles
+    are bit-identical in any engine that sorts the same values.  The
     rank comes from the partition-parallel global ranker — no
-    single-task global window even here."""
+    single-task global window."""
     import math
 
     from medtype_spark.operators.ranks import with_global_rank

@@ -115,11 +115,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     vertices: DataFrame | None = None,
-    vertex_col: str = "node",
-    small_graph_threshold: int | None = 1_000_000,
+    small_graph_threshold: int = 1_000_000,
     stats: dict | None = None,
 ) -> DataFrame:
     """Label each node with the minimum node id of its component.
@@ -127,8 +124,8 @@ def connected_components(
     Parameters
     ----------
     edges : DataFrame with columns ``src``, ``dst`` (any orderable type).
-    vertices : optional DataFrame of all nodes (``vertex_col``); isolated
-        nodes (no edges) get their own id as component label.
+    vertices : optional DataFrame of all nodes (column ``node``);
+        isolated nodes (no edges) get their own id as component label.
     small_graph_threshold : adaptive execution cutover — a deduplicated
         edge set at or below this size is solved by a driver-side
         union-find (one collect + one createDataFrame) instead of
@@ -137,16 +134,15 @@ def connected_components(
         graph (the flagship's form graph is ~10³-10⁶ edges even at
         10¹²-document corpus scale, because it is Zipf-vocabulary-sized)
         that overhead IS the runtime.  Labels are identical on both
-        paths (min node id per component — parity-tested); pass None
-        to force the distributed algorithm.
+        paths (min node id per component — parity-tested); 0 sends
+        every non-empty edge set to the distributed algorithm.
     stats : optional dict, filled in place with execution evidence:
         ``path`` ("empty" | "small" | "distributed"), ``n_edges``
-        (small path: exact count from the complete probe), ``rounds``
-        (distributed path: alternating-star rounds executed).
+        (empty/small path: exact count from the complete probe),
+        ``rounds`` (distributed path: alternating-star rounds executed).
 
     Returns DataFrame(node, component).
     """
-    spark = edges.sparkSession
     # lazy: the small-graph path consumes the edge set exactly once —
     # the probe fetch is its ONLY action over this lineage (the
     # returned plan is built from the collected probe rows plus
@@ -154,63 +150,49 @@ def connected_components(
     # checkpoint here would cost a whole extra materialization job;
     # the distributed path checkpoints before iterating (below).
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
 
-    def _vertices_self_labeled():
-        return vertices.select(F.col(vertex_col).alias("node")).distinct().select(
-            "node", F.col("node").alias("component")
-        )
-
-    if small_graph_threshold is not None:
-        # one job decides AND fetches: limit(t+1).toPandas() returning
-        # ≤ t rows proves the edge set is complete (≤ t edges total),
-        # so the separate count() job disappears from the common path
-        probe = e.limit(small_graph_threshold + 1).select("u", "v").toPandas()
-        if stats is not None and len(probe) <= small_graph_threshold:
+    # one job decides AND fetches: limit(t+1).toPandas() returning
+    # ≤ t rows proves the edge set is complete (≤ t edges total),
+    # so the separate count() job disappears from the common path
+    probe = e.limit(small_graph_threshold + 1).select("u", "v").toPandas()
+    if len(probe) <= small_graph_threshold:
+        if stats is not None:
             stats["path"] = "empty" if len(probe) == 0 else "small"
             stats["n_edges"] = len(probe)
         if len(probe) == 0:
             if vertices is None:
-                return spark.createDataFrame([], T.StructType([
+                return e.sparkSession.createDataFrame([], T.StructType([
                     T.StructField("node", e.schema["u"].dataType),
                     T.StructField("component", e.schema["u"].dataType),
                 ]))
-            return _vertices_self_labeled()
-        if len(probe) <= small_graph_threshold:
-            # the probe IS the complete edge set, so union-find labels
-            # cover every edge-touched node; only isolated vertices
-            # (in ``vertices`` but untouched by any edge) are added,
-            # self-labeled, via a broadcast anti-join — the edge
-            # lineage is not consumed again
-            labels = _driver_union_find_pdf(probe, e)
-            if vertices is None:
-                return labels
-            iso = (
-                vertices.select(F.col(vertex_col).alias("node")).distinct()
-                .join(F.broadcast(labels.select("node")), "node", "left_anti")
-                .select("node", F.col("node").alias("component"))
+            return vertices.select("node").distinct().select(
+                "node", F.col("node").alias("component")
             )
-            return labels.unionByName(iso)
-    elif e.isEmpty():
-        if stats is not None:
-            stats["path"] = "empty"
-            stats["n_edges"] = 0
+        # the probe IS the complete edge set, so union-find labels
+        # cover every edge-touched node; only isolated vertices (in
+        # ``vertices`` but untouched by any edge) are added,
+        # self-labeled, via a broadcast anti-join — the edge lineage
+        # is not consumed again
+        labels = _driver_union_find_pdf(probe, e)
         if vertices is None:
-            return spark.createDataFrame([], T.StructType([
-                T.StructField("node", e.schema["u"].dataType),
-                T.StructField("component", e.schema["u"].dataType),
-            ]))
-        return _vertices_self_labeled()
+            return labels
+        iso = (
+            vertices.select("node").distinct()
+            .join(F.broadcast(labels.select("node")), "node", "left_anti")
+            .select("node", F.col("node").alias("component"))
+        )
+        return labels.unionByName(iso)
 
-    all_nodes = e.select(F.col("u").alias(vertex_col)).union(
-        e.select(F.col("v").alias(vertex_col))
+    all_nodes = e.select(F.col("u").alias("node")).union(
+        e.select(F.col("v").alias("node"))
     )
     if vertices is not None:
-        all_nodes = all_nodes.union(vertices.select(F.col(vertex_col)))
+        all_nodes = all_nodes.union(vertices.select("node"))
     all_nodes = all_nodes.distinct()
 
     # distributed path: pin the deduplicated edge set so each
@@ -247,7 +229,6 @@ def connected_components(
         F.col("u").alias("node"), "component"
     )
     return (
-        all_nodes.select(F.col(vertex_col).alias("node"))
-        .join(labels, "node", "left")
+        all_nodes.join(labels, "node", "left")
         .select("node", F.coalesce("component", "node").alias("component"))
     )

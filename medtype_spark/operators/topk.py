@@ -6,7 +6,8 @@ W3: is_first mention of an entity in document order (start, -end)
     (first candidate satisfying a predicate) is
     ``operators.lookups.first_on_category`` (q35).
 
-All are window functions — per-key partial ordering, no global sort.
+The first-mention mark is a window function — per-key partial
+ordering, no global sort; top-k is a sort+limit.
 """
 
 from __future__ import annotations
@@ -30,13 +31,7 @@ def mark_first_mention(
     return annotations.withColumn(out_col, F.row_number().over(w) == 1)
 
 
-def topk_by(df: DataFrame, order: list[Column], k: int,
-            partition_by: list[str] | None = None) -> DataFrame:
-    """Generic top-k: windowed when partitioned, global sort+limit
-    otherwise (Spark's TakeOrderedAndProject avoids a full sort)."""
-    if partition_by:
-        w = Window.partitionBy(*partition_by).orderBy(*order)
-        return df.withColumn("_rn", F.row_number().over(w)).where(
-            F.col("_rn") <= k
-        ).drop("_rn")
+def topk_by(df: DataFrame, order: list[Column], k: int) -> DataFrame:
+    """Global top-k: sort+limit (Spark's TakeOrderedAndProject avoids a
+    full sort)."""
     return df.orderBy(*order).limit(k)

@@ -12,63 +12,17 @@ Order of surviving candidates is preserved (candidate lists are
 best-first; top-candidate selection downstream relies on it).
 
 Implementation: posexplode → **broadcast** join against the entity→types
-dimension (analogue of ``umls2type``; 57k entities in the reference ⇒
-a few MB, always broadcastable) → re-assemble with ``sort_array`` on
-the carried position.  No Python; entirely whole-stage-codegen-able
-except the shuffle back to mention grain.
+dimension, passed as a DataFrame (analogue of ``umls2type``; 57k
+entities in the reference ⇒ a few MB, always broadcastable, and never
+inlined into the plan as a literal) → re-assemble with ``array_sort``
+on the carried position.  No Python; entirely whole-stage-codegen-able
+except the shuffles back to mention grain.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def filter_candidates_map(
-    mentions: DataFrame,
-    entity_types: dict[str, list[str]],
-    cand_col: str = "candidates",
-    pred_col: str = "pred_type",
-    out_col: str = "filtered_candidates",
-    eid_col: str = "eid",
-) -> DataFrame:
-    """Shuffle-free J8: the entity→types dimension as a ``create_map``
-    literal + higher-order ``filter`` over the candidate array.
-
-    Same three-branch semantics as ``filter_candidates`` (empty
-    prediction keeps all; empty survivor set falls back; order
-    preserved — trivially, since ``filter`` never reorders), but zero
-    exchanges: the whole operation is one whole-stage-codegen
-    projection.  Use for dimensions small enough to inline in the plan
-    (≲ a few thousand entities); the join-based variant is the general
-    path (57k-entity UMLS scale, where a map literal would bloat every
-    task's plan).
-    """
-    from itertools import chain
-
-    pairs = chain.from_iterable(
-        (F.lit(k), F.array(*[F.lit(t) for t in sorted(v)]))
-        for k, v in sorted(entity_types.items())
-    )
-    m = F.create_map(*pairs)
-
-    kept = F.filter(
-        F.col(cand_col),
-        lambda c: F.size(
-            F.array_intersect(
-                F.coalesce(m[c[eid_col]], F.array().cast("array<string>")),
-                F.col(pred_col),
-            )
-        )
-        > 0,
-    )
-    out = (
-        F.when(F.size(F.coalesce(F.col(pred_col), F.array().cast("array<string>"))) == 0,
-               F.col(cand_col))
-        .when(F.size(kept) == 0, F.col(cand_col))
-        .otherwise(kept)
-    )
-    return mentions.withColumn(out_col, out)
 
 
 def filter_candidates(

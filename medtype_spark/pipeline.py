@@ -206,7 +206,7 @@ def form_clusters(
     mentions: DataFrame,
     units: DataFrame,
     edges: DataFrame,
-    small_graph_threshold: int | None = 1_000_000,
+    small_graph_threshold: int = 1_000_000,
     stats: dict | None = None,
 ) -> DataFrame:
     """(mention_key, entity_cluster): connected components of the form
@@ -240,7 +240,7 @@ def run_linkage(
     with_candidate_filter: bool = False,
     alias_embeddings: DataFrame | None = None,
     jw_weight: float = 0.5,
-    cc_small_graph_threshold: int | None = 1_000_000,
+    cc_small_graph_threshold: int = 1_000_000,
     cc_stats: dict | None = None,
     matcher: str = "trie",
 ) -> dict[str, DataFrame]:

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from medtype_spark.dedup.exact import exact_dedup
 from medtype_spark.dedup.minhash import (
-    capped_candidate_pairs,
     doc_shingles,
     lsh_candidate_pairs,
     simhash64,
@@ -304,7 +303,7 @@ def q12_micro_macro(spark, sf_dir):
         .where((F.col("tp") + F.col("fp") > 0) | (F.col("tp") + F.col("fn") > 0))
         .select("*", *prf_cols())
     )
-    out = micro_macro(per_group, ["l_linestatus"])
+    out = micro_macro(per_group)
     return out.select(
         "agg_mode", "tp", "fp", "fn",
         _r6(F.col("precision")).alias("precision"),
@@ -716,15 +715,11 @@ def q29_multi_id_match(spark, sf_dir):
 # ----------------------------------------------------------------------
 
 def q50_simhash(spark, sf_dir):
-    """SimHash with the md5 hash family: bit votes, sign packing and
-    all — reproduced bit-for-bit by the DuckDB oracle (the production
-    default stays xxhash64; the plan shape is identical)."""
+    """SimHash over md5-hashed word bigrams: bit votes, sign packing
+    and all — reproduced bit-for-bit by the DuckDB oracle."""
     from medtype_spark.session import fan_out
 
-    return simhash64(
-        fan_out(_t(spark, sf_dir, "documents")), "text", "doc_id",
-        hash_family="md5",
-    )
+    return simhash64(fan_out(_t(spark, sf_dir, "documents")), "text", "doc_id")
 
 
 def q52_stub_type_scorer(spark, sf_dir):
@@ -1458,11 +1453,9 @@ def q68_significance(spark, sf_dir):
     """R1+R2+R3 driver row: paired permutation p-value, bootstrap
     resampling, and exact-order-statistic percentile CIs over a
     deterministic per-doc contingency fixture (modular arithmetic on
-    doc_id).  Trial randomness is md5-derived (hash_mode='md5'), so
-    the DuckDB oracle replays every swap and resample decision
-    bit-for-bit; fscore arithmetic is the same IEEE expression in both
-    engines.  Production keeps xxhash64 + percentile_approx
-    (significance.py) — this fixture pins the trial machinery."""
+    doc_id).  Trial randomness is md5-derived, so the DuckDB oracle
+    replays every swap and resample decision bit-for-bit; fscore
+    arithmetic is the same IEEE expression in both engines."""
     from medtype_spark.metrics.significance import (
         bootstrap_diffs,
         percentile_ci_exact,
@@ -1481,8 +1474,8 @@ def q68_significance(spark, sf_dir):
             ((d + 2) % 4).alias("fn2"),
         )
     )
-    perm = permutation_test(per_doc, n_trials=n_trials, seed=42, hash_mode="md5")
-    boots = bootstrap_diffs(per_doc, n_trials=n_trials, seed=42, hash_mode="md5")
+    perm = permutation_test(per_doc, n_trials=n_trials, seed=42)
+    boots = bootstrap_diffs(per_doc, n_trials=n_trials, seed=42)
     ci = percentile_ci_exact(boots, n_trials)
     return ci.crossJoin(perm).select(
         "level",

@@ -52,7 +52,7 @@ def semantic_dedup(
     metric: str = "cosine",
     hot_threshold: int = 10000,
     target_cell: int = 2000,
-    small_graph_threshold: int | None = 100_000,
+    small_graph_threshold: int = 100_000,
 ) -> DataFrame:
     """Returns DataFrame(id, cell, canonical_id, group_size,
     is_canonical): every input row labeled with its semantic-duplicate

@@ -38,8 +38,9 @@ def _check(spark, edges, nodes=None):
     want = _uf_oracle(edges, all_nodes)
     # both execution paths must agree with the oracle AND each other:
     # the driver-side union-find (small_graph cutover) and the
-    # distributed alternating-star rounds (threshold=None forces it)
-    for threshold in (1_000_000, None):
+    # distributed alternating-star rounds (threshold=0 forces them for
+    # any non-empty edge set)
+    for threshold in (1_000_000, 0):
         got = {
             r["node"]: r["component"]
             for r in connected_components(
@@ -80,3 +81,26 @@ def test_random_graph_vs_union_find(spark):
 
 def test_empty_edges(spark):
     _check(spark, [], nodes={"a", "b"})
+
+
+def test_stats_report_the_path_taken(spark):
+    edf = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "b"), ("c", "c")], ["src", "dst"]
+    )
+    vdf = spark.createDataFrame([("a",), ("z",)], ["node"])
+    runs = {
+        "empty": (edf.limit(0), 0),
+        "small": (edf, 1_000_000),
+        "distributed": (edf, 0),
+    }
+    for path, (edges, threshold) in runs.items():
+        stats: dict = {}
+        connected_components(
+            edges, vertices=vdf, small_graph_threshold=threshold, stats=stats
+        )
+        assert stats["path"] == path, stats
+        if path == "distributed":
+            assert stats["rounds"] >= 1 and "n_edges" not in stats, stats
+        else:
+            # duplicates and self-loops are not counted
+            assert stats["n_edges"] == (0 if path == "empty" else 2), stats

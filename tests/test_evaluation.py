@@ -245,7 +245,7 @@ def test_windowed_request_stats_stream(spark, tmp_path):
 def test_permutation_and_bootstrap(spark):
     from medtype_spark.metrics.significance import (
         bootstrap_diffs,
-        percentile_ci,
+        percentile_ci_exact,
         permutation_test,
     )
 
@@ -259,14 +259,14 @@ def test_permutation_and_bootstrap(spark):
     assert res["p_value"] < 0.05  # significant
 
     diffs = bootstrap_diffs(df, n_trials=100)
-    ci = {r["level"]: (r["lo"], r["hi"]) for r in percentile_ci(diffs).collect()}
+    ci = {r["level"]: (r["lo"], r["hi"]) for r in percentile_ci_exact(diffs, 100).collect()}
     lo, hi = ci[95]
     assert lo <= res["base_diff"] <= hi or lo > 0  # a positive-effect CI
 
 
 def test_significance_md5_mode_and_exact_ci(spark):
-    """md5 hash_mode is partition-invariant (the q68 oracle property)
-    and percentile_ci_exact returns true order statistics of the
+    """md5 trial hashing is partition-invariant (the q68 oracle
+    property) and percentile_ci_exact returns true order statistics of the
     bootstrap trial distribution."""
     import math
 
@@ -282,13 +282,11 @@ def test_significance_md5_mode_and_exact_ci(spark):
         rows, "docid:long, tp1:long, fp1:long, fn1:long, tp2:long, fp2:long, fn2:long"
     )
     n_trials = 120
-    p1 = permutation_test(df, n_trials=n_trials, hash_mode="md5").collect()[0]
-    p2 = permutation_test(
-        df.repartition(7), n_trials=n_trials, hash_mode="md5"
-    ).collect()[0]
+    p1 = permutation_test(df, n_trials=n_trials).collect()[0]
+    p2 = permutation_test(df.repartition(7), n_trials=n_trials).collect()[0]
     assert (p1["base_diff"], p1["p_value"]) == (p2["base_diff"], p2["p_value"])
 
-    diffs = bootstrap_diffs(df, n_trials=n_trials, hash_mode="md5")
+    diffs = bootstrap_diffs(df, n_trials=n_trials)
     trial_diffs = sorted(
         (r["diff"], r["trial"]) for r in diffs.collect()
     )

@@ -232,3 +232,42 @@ def test_minhash_local_equals_exploded(spark):
     b = {r["doc_id"]: r["sig"] for r in
          minhash_signatures_local(df, "text", "doc_id", n=3, num_hashes=8).collect()}
     assert a == b
+
+
+_JACCARD_CACHE_SCRIPT = """
+import json
+from medtype_spark.dedup.minhash import capped_jaccard_pairs, doc_shingles
+from medtype_spark.session import get_spark
+
+spark = get_spark("jaccard-cache", master="local[1]")
+docs = spark.createDataFrame(
+    [(i, " ".join(f"w{(i + k) % 60}" for k in range(10))) for i in range(200)],
+    "doc_id long, text string")
+pairs = capped_jaccard_pairs(doc_shingles(docs, "text", "doc_id", n=3),
+                             "doc_id", df_cap=50, min_jaccard=0.1)
+n = len(pairs.collect())
+empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+spark.stop()
+print(json.dumps({"pairs": n, "cache_empty": empty}))
+"""
+
+
+def test_capped_jaccard_leaves_no_cached_frame():
+    """capped_jaccard_pairs computes its df-capped shingle frame once
+    without registering it in the session's CacheManager: nothing stays
+    cached after the result is collected.  Runs in its own process so
+    the shared test session's caches do not count."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _JACCARD_CACHE_SCRIPT],
+        cwd=root, capture_output=True, text=True, timeout=600,
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["pairs"] > 0 and got["cache_empty"], got

@@ -9,10 +9,7 @@ from pyspark.sql import types as T
 
 import pytest
 
-from medtype_spark.operators.typefilter import (
-    filter_candidates,
-    filter_candidates_map,
-)
+from medtype_spark.operators.typefilter import filter_candidates
 
 SCHEMA = T.StructType([
     T.StructField("mention_id", T.StringType()),
@@ -32,38 +29,14 @@ ETYPES = [
 ]
 
 
-def _run(spark, rows, variant="join"):
+def _run(spark, rows):
     mentions = spark.createDataFrame(rows, SCHEMA)
-    if variant == "join":
-        etypes = spark.createDataFrame(ETYPES, ["eid", "types"])
-        out = filter_candidates(mentions, etypes)
-    else:
-        # shuffle-free map-literal variant — identical semantics
-        out = filter_candidates_map(mentions, dict(ETYPES))
+    etypes = spark.createDataFrame(ETYPES, ["eid", "types"])
+    out = filter_candidates(mentions, etypes)
     return {
         r["mention_id"]: [c["eid"] for c in r["filtered_candidates"]]
         for r in out.collect()
     }
-
-
-def test_map_variant_parity(spark):
-    rows = [
-        ("m_empty_pred", [("E1", 0.9), ("E9", 0.8)], []),
-        ("m_filtered", [("E2", 0.9), ("E1", 0.8), ("E3", 0.7)], ["Anatomy"]),
-        ("m_fallback", [("E2", 0.9), ("E9", 0.5)], ["Anatomy"]),
-        ("m_unknown_dropped", [("E9", 0.95), ("E1", 0.5)], ["Anatomy"]),
-        ("m_order", [("E3", 0.9), ("E1", 0.85), ("E3", 0.2)], ["Anatomy"]),
-    ]
-    assert _run(spark, rows, "join") == _run(spark, rows, "map")
-
-
-def test_map_variant_is_shuffle_free(spark):
-    mentions = spark.createDataFrame(
-        [("m", [("E1", 0.9)], ["Anatomy"])], SCHEMA
-    )
-    out = filter_candidates_map(mentions, dict(ETYPES))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # one codegen projection, no shuffle
 
 
 def test_all_branches(spark):

@@ -15,9 +15,12 @@ scale).
 Each round is two (groupBy + join) stages — no collect_list of
 neighborhoods, so hub nodes with millions of neighbors never
 materialize a row-local adjacency list.  Lineage is truncated with
-``localCheckpoint`` every round; convergence is detected by an
-order-insensitive edge-set fingerprint (count + sum of xxhash64),
-which costs one cheap aggregate instead of a full sort/compare.
+``localCheckpoint`` every round.  The loop stops at the first round
+whose edges form a star forest (every ``u`` has exactly one ``v`` and
+no ``v`` is also a ``u``): a star forest is a fixpoint of both star
+steps and its centres are the component minima, so no later round
+could change a label.  One aggregate per round tests this and also
+materializes the round.
 """
 
 from __future__ import annotations
@@ -26,22 +29,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Round cap of the distributed path (O(log² n) rounds converge far
-# below it), and rounds run per convergence fingerprint: each round's
-# dominant cost on short graphs is fixed job/stage overhead, so
-# checking every 2nd round halves the job count at the price of at most
-# one redundant (idempotent) round after the fixpoint.
+# Round cap of the distributed path: the alternating algorithm reaches
+# a star forest in O(log² n) rounds, far below it.
 MAX_ITER = 50
-CHECK_EVERY = 2
 
 
-def _fingerprint(edges: DataFrame) -> tuple:
-    # decimal(38,0) sum: overflow-safe under ANSI mode (Spark 4 default)
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when every ``u`` has exactly one ``v`` and no ``v`` is also
+    a ``u`` (``edges`` is distinct, as ``_small_star`` returns it)."""
+    per_node = (
+        edges.select(F.inline(F.array(
+            F.struct(F.col("u").alias("node"), F.lit(1).alias("is_u")),
+            F.struct(F.col("v").alias("node"), F.lit(0).alias("is_u")),
+        )))
+        .groupBy("node")
+        .agg(F.sum("is_u").alias("out_degree"),
+             (F.min("is_u") != F.max("is_u")).alias("both"))
+    )
+    row = per_node.agg(
+        F.max("out_degree").alias("max_out"),
+        F.count(F.when(F.col("both"), 1)).alias("n_both"),
     ).collect()[0]
-    return (row["n"], row["h"])
+    # an aggregate over an empty frame yields NULL: no edges, out-degree 0
+    return (row["max_out"] or 0) <= 1 and row["n_both"] == 0
 
 
 def _driver_union_find_pdf(pdf, e: DataFrame) -> DataFrame:
@@ -199,29 +209,22 @@ def connected_components(
     # alternating-star round starts from materialized lineage
     e = e.localCheckpoint()
 
-    # Convergence is detected by an edge-set fingerprint, one cheap
-    # aggregate job per CHECK_EVERY rounds.
     # distributed rounds consume all_nodes only after convergence, but
     # pin it now so the final join never recomputes upstream python
     # lineage that the iteration already paid for
     all_nodes = all_nodes.localCheckpoint(eager=False)
 
-    if stats is not None:
-        stats["path"] = "distributed"
-    prev_fp = None
     rounds = 0
     while rounds < MAX_ITER:
-        for _ in range(min(CHECK_EVERY, MAX_ITER - rounds)):
-            # lazy checkpoint: the fingerprint aggregate materializes
-            # the batch, so the batch costs one job total
-            e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-            rounds += 1
-        fp = _fingerprint(e)
-        if stats is not None:
-            stats["rounds"] = rounds
-        if fp == prev_fp:
+        # lazy checkpoint: the star-forest aggregate materializes the
+        # round, so each round costs one job total
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        rounds += 1
+        if _is_star_forest(e):
             break
-        prev_fp = fp
+    if stats is not None:
+        stats["path"] = "distributed"
+        stats["rounds"] = rounds
 
     # Converged: every edge points node → component-min (stars).  A node
     # may still appear as the root only; fill with self-label.

@@ -90,7 +90,7 @@ class StageCheckpointer:
 
         # One pass collects the per-partition lineage table AND an
         # order-insensitive content digest (sum of xxhash64 over whole
-        # rows, like cc.py's edge fingerprint) — so identical row count
+        # rows) — so identical row count
         # + schema with different DATA still invalidates downstream.
         from pyspark.sql.types import MapType
 

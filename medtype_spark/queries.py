@@ -745,14 +745,15 @@ def q53_flagship_linkage(spark, sf_dir):
     from medtype_spark.datagen.pages import build_lexicon, entity_types_df, synth_pages
     from medtype_spark.pipeline import evaluate_linkage, run_linkage
 
-    # partitions=1 (r6, was 4): python tasks fork a fresh worker each
-    # (session pins worker.reuse=false for the sandbox), so scan-stage
-    # task count IS the fixed cost at this 2000-page fixture size —
-    # fork+Arrow setup dwarfs the ~0.3s of actual python work, and the
-    # A/B (median-of-5, same session) reads 4.43s @ 4 parts vs 2.80s
-    # @ 1 part for the whole query.  Results are partition-invariant
-    # (tested).  Real corpora get their partitioning from the input
-    # layout, not this fixture constant.
+    # partitions=1 (r6, was 4): each python task pays worker and Arrow
+    # setup — a fresh fork per task above 8 local threads, where
+    # get_spark turns worker reuse off — so scan-stage task count IS
+    # the fixed cost at this 2000-page fixture size.  That setup dwarfs
+    # the ~0.3s of actual python work; the r6 A/B (median-of-5, same
+    # session, worker reuse off) read 4.43s @ 4 parts vs 2.80s @ 1 part
+    # for the whole query.  Results are partition-invariant (tested).
+    # Real corpora get their partitioning from the input layout, not
+    # this fixture constant.
     pages, gold = synth_pages(spark, 2000, n_entities=60, seed=42, partitions=1)
     lex = build_lexicon(60)
     etypes = entity_types_df(spark, 60)

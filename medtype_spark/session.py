@@ -101,6 +101,14 @@ def get_spark(
         # arrow channel — significant under this sandbox's syscall
         # emulation, harmless elsewhere.
         .config("spark.buffer.size", str(4 * 1024 * 1024))
+        # One flagship op uses more distinct generated classes than the
+        # default LRU of 100 holds, so every op evicted each class
+        # before its next use and Janino recompiled it.  Compiles per
+        # benchmark op (ops 3-5 of one driver, local[4], 4-core host):
+        # zipf_skew_4k 158 -> 0-10, uniform_10k 56-67 -> 0-8.  A static
+        # conf: it only takes effect when set before the first session
+        # in the JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     spark = builder.getOrCreate()
     # Warm the collation/codegen path once, uncontended, so the first

@@ -180,13 +180,11 @@ def windowed_stats_fixture_run(spark, window: str = "10 minutes",
     # MICRO-BATCH (offset/commit/state files each), so the session's
     # scale-default (e.g. 32) costs 4×32 store commit cycles for a
     # ~10-row, 3-user fixture.  2 partitions is the data-appropriate
-    # number here (env-overridable); the conf is restored in the
-    # finally, and the batch arms of q40 plan after restoration.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_FIXTURE_PARTITIONS", "2"),
-    )
+    # number here.  It is set on a child session (same SparkContext,
+    # its own SQL conf and temp views), so the caller's session never
+    # sees it.
+    stream_spark = spark.newSession()
+    stream_spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
         src = os.path.join(tmp, "src")
         os.makedirs(src)
@@ -203,7 +201,7 @@ def windowed_stats_fixture_run(spark, window: str = "10 minutes",
             os.utime(p, (t0 - 600 + i * 60, t0 - 600 + i * 60))
 
         stream = (
-            spark.readStream
+            stream_spark.readStream
             .schema("user_id long, ts timestamp, value double")
             .option("maxFilesPerTrigger", 1)
             .json(src)
@@ -219,12 +217,11 @@ def windowed_stats_fixture_run(spark, window: str = "10 minutes",
         )
         q.awaitTermination(300)
         rows = [(r["window_start"], r["user_id"], r["n_requests"],
-                 r["avg_msg_size"]) for r in spark.table(name).collect()]
+                 r["avg_msg_size"]) for r in stream_spark.table(name).collect()]
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         shutil.rmtree(tmp, ignore_errors=True)
         try:
-            spark.catalog.dropTempView(name)
+            stream_spark.catalog.dropTempView(name)
         except Exception:
             pass
     return spark.createDataFrame(

@@ -217,3 +217,55 @@ def test_flagship_f1_batched_scorer(spark, corpus):
         if lex_types.get(r["mention"]) not in (r["pred_type"] or [])
     ]
     assert len(bad) <= 0.02 * mentions.count(), bad[:5]
+
+
+_CODEGEN_CACHE_SCRIPT = """
+import json
+from medtype_spark.datagen.pages import build_lexicon, entity_types_df, synth_pages
+from medtype_spark.pipeline import evaluate_linkage, run_linkage
+from medtype_spark.session import get_spark
+
+spark = get_spark("codegen-cache", master="local[2]")
+ents, fams, zipf = 200, 50, 0.6
+pages, gold = synth_pages(spark, 300, n_entities=ents, seed=7, n_families=fams,
+                          family_zipf=zipf, partitions=2, mentions_per_page=8,
+                          mention_zipf=1.05)
+pages, gold = pages.localCheckpoint(), gold.localCheckpoint()
+lex = build_lexicon(ents, fams, family_zipf=zipf)
+etypes = entity_types_df(spark, ents, fams, family_zipf=zipf)
+timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+compiles = []
+for _ in range(3):
+    before = timer.getCount()
+    result = run_linkage(pages, lex, etypes, cleanup=True, type_scorer="stub",
+                         matcher="set", hot_threshold=48, target_cell=24,
+                         cc_small_graph_threshold=0)
+    evaluate_linkage(result["clusters"], gold).collect()
+    compiles.append(timer.getCount() - before)
+spark.stop()
+print(json.dumps({"compiles": compiles}))
+"""
+
+
+def test_generated_classes_stay_cached_across_ops():
+    """A warm flagship op (the zipf_skew_4k settings, distributed CC,
+    plus evaluation) reuses the generated classes of the ops before it
+    instead of recompiling them.  One op uses more distinct classes
+    than Spark's default codegen cache of 100 holds, so this needs the
+    cache size get_spark sets.  Runs in its own process: the setting
+    is static and must precede the JVM's first session."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _CODEGEN_CACHE_SCRIPT],
+        cwd=root, capture_output=True, text=True, timeout=900,
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    compiles = json.loads(proc.stdout.strip().splitlines()[-1])["compiles"]
+    # the first op must compile more classes than the default cache holds
+    assert compiles[0] > 100 and compiles[2] <= 10, compiles

@@ -1,13 +1,12 @@
 """Python-worker daemon with heavy imports preloaded.
 
-With ``spark.python.worker.reuse=false`` (required on this runtime —
-reused workers hit a multi-second drain stall when a python-lineage
-plan feeds a cache/checkpoint writer), EVERY task forks a fresh worker
-from the pyspark daemon, and each fork then imports pandas + pyarrow +
-numpy from scratch (~1-2 s under syscall emulation).  Importing them in
-the daemon BEFORE it starts forking lets every worker inherit the
-loaded modules copy-on-write — the import cost is paid once per
-executor instead of once per task.
+Every Python worker forks from the pyspark daemon — once per task when
+``get_spark`` turns worker reuse off (above 8 local threads, where
+reused workers stall draining into a cache/checkpoint writer), once
+per reused worker otherwise — and would import pandas + pyarrow +
+numpy from scratch (~1-2 s under syscall emulation).  Importing them
+in the daemon BEFORE it starts forking lets every worker inherit the
+loaded modules copy-on-write: the cost is paid once per executor.
 
 Standard public Spark mechanism: ``spark.python.daemon.module`` names a
 module that runs ``pyspark.daemon.manager()`` after its own imports.

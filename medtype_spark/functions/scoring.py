@@ -94,10 +94,11 @@ def _load_stub_weights() -> np.ndarray:
     of its (feature, class) coordinate — reproducible in SQL, and
     integer so dot products are float-exact in any summation order.
 
-    Cached in a module global: with worker.reuse=false each task is a
-    fresh fork, but the daemon preload (medtype_spark.daemon) builds
-    the cache once in the daemon process and every fork inherits it
-    copy-on-write — 24k md5 calls per executor, not per task.
+    Cached in a module global, built once per process: the daemon
+    preload (medtype_spark.daemon) builds it in the daemon, so every
+    forked worker inherits it copy-on-write, and a reused worker
+    (``get_spark`` turns reuse on at ≤ 8 local threads) keeps it
+    across tasks — 24k md5 calls per executor, not per task.
     """
     global _STUB_W_CACHE
     if _STUB_W_CACHE is None:
@@ -123,20 +124,27 @@ def _featurize_counts(texts: pd.Series) -> np.ndarray:
     return out
 
 
+def stub_types(texts: pd.Series) -> list[list[str]]:
+    """The stub model: each text → its predicted coarse types.  Integer
+    counts × integer weights make sigmoid(logit) > 0.5 ⟺ dot > 0
+    float-EXACT, so predictions are engine-portable and batch-invariant;
+    rows are featurized 4096 at a time to bound the dense matrix."""
+    w = _load_stub_weights()
+    labels = np.array(COARSE_TYPES, dtype=object)
+    out: list[list[str]] = []
+    for i in range(0, len(texts), 4096):
+        logits = _featurize_counts(texts.iloc[i : i + 4096]) @ w
+        probs = 1.0 / (1.0 + np.exp(-logits / 1000.0))
+        out.extend(list(labels[m]) for m in probs > THRESHOLD)
+    return out
+
+
 @pandas_udf(ArrayType(StringType()))
 def stub_type_scorer_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     """mention+context string → predicted coarse-type set (array).
 
-    Deterministic hash-feature linear "model"; weights built once per
-    worker and reused across Arrow batches (the checkpoint-load slot).
+    Deterministic hash-feature linear "model" (``stub_types``); weights
+    built once per worker and reused across Arrow batches.
     """
-    w = _load_stub_weights()
-    labels = np.array(COARSE_TYPES, dtype=object)
     for texts in batches:
-        # raw integer counts × integer weights: the threshold test
-        # sigmoid(logit) > 0.5 ⟺ dot > 0 is float-EXACT (all values
-        # integers < 2^53), so predictions are engine-portable
-        logits = _featurize_counts(texts) @ w
-        probs = 1.0 / (1.0 + np.exp(-logits / 1000.0))
-        mask = probs > THRESHOLD
-        yield pd.Series([list(labels[m]) for m in mask])
+        yield pd.Series(stub_types(texts))

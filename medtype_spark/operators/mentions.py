@@ -4,13 +4,17 @@ The Spark-native analogue of the reference's pluggable entity linkers
 (medtype-as-service/server/medtype_serving/server/entity_linkers.py:5-21
 contract: text → {(start,end): [[eid,score],...]}); closest to the
 cTakes dictionary-lookup linker (entity_linkers.py:74-107) but executed
-as an Arrow-batched ``mapInPandas`` flatMap with the alias dictionary
-broadcast once per executor — no external service, no per-row Python
-over Spark rows.
+as an Arrow-batched ``mapInPandas`` flatMap — no external service, no
+per-row Python over Spark rows.
+
+Every matched span is a lexicon alias, so its candidates, normalized
+form, blocking key and (dict or stub) predicted types depend on the
+alias alone.  ``alias_table`` computes them once per call on the
+driver and the table is broadcast; the Python scan only extracts text,
+finds spans and looks each one up.
 
 Candidate lists are emitted best-first with scores rounded to 3 dp
-(entity_linkers.py:44), and de-duplicated per (span, eid) like the
-cTakes set-dedup (entity_linkers.py:88-98).
+(entity_linkers.py:44), one entry per lexicon (alias, eid) row.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from medtype_spark.functions.scoring import stub_types
 
 def build_alias_pattern(aliases) -> re.Pattern:
     """Compile an alias lexicon into a trie-structured regex.
@@ -57,7 +63,8 @@ def build_alias_pattern(aliases) -> re.Pattern:
         return f"(?:{body})?" if terminal else body
 
     parts = [re.escape(ch) + emit(sub) for ch, sub in sorted(trie.items()) if ch != ""]
-    core = "|".join(parts)
+    # an empty lexicon must match nothing, not the empty string
+    core = "|".join(parts) or "(?!)"
     return re.compile(rf"(?<![0-9A-Za-z])({core})(?![0-9A-Za-z])")
 
 
@@ -133,109 +140,81 @@ def iter_set_matches(text: str, alias_map, max_n: int):
         i += 1
 
 
+def alias_table(
+    lexicon: pd.DataFrame, alias2types: dict[str, list[str]] | None
+) -> dict[str, tuple[str, str, list[str], list[dict]]]:
+    """alias → (norm_form, block_key, pred_type, candidates), every
+    mention field that depends on the alias alone.
+
+    Candidates come best-first (ties broken by eid) with scores rounded
+    to 3 dp; ``block_key`` is the form's head token; ``pred_type`` is
+    ``alias2types[norm_form]`` (default ``[]``), or with
+    ``alias2types=None`` the stub model, run once per distinct form.
+    """
+    cands: dict[str, list[tuple[str, float]]] = {}
+    for alias, eid, score in zip(lexicon["alias"], lexicon["eid"], lexicon["score"]):
+        cands.setdefault(alias, []).append((eid, float(score)))
+    norms = {alias: normalize_form_py(alias) for alias in cands}
+    forms = sorted(set(norms.values()))
+    if alias2types is None:
+        types = dict(zip(forms, stub_types(pd.Series(forms, dtype=object))))
+    else:
+        types = {form: alias2types.get(form, []) for form in forms}
+    return {
+        alias: (
+            norms[alias], norms[alias].split(" ", 1)[0], types[norms[alias]],
+            [{"eid": e, "score": round(s, 3)} for e, s in sorted(cs, key=lambda c: (-c[1], c[0]))],
+        )
+        for alias, cs in cands.items()
+    }
+
+
 def fused_mention_scan(
     pages: DataFrame,
     lexicon: pd.DataFrame,
     alias2types: dict[str, list[str]] | None,
-    url_col: str = "url",
-    html_col: str = "html",
     matcher: str = "trie",
 ) -> DataFrame:
-    """One-hop scan: html → extracted text → mentions + candidates +
-    normalized/blocking keys + predicted types, in a SINGLE
-    mapInPandas.
+    """One-hop scan: html → extracted text → mention spans, each with
+    its alias's ``alias_table`` entry, in a SINGLE mapInPandas (chained
+    extract/detect hops would cost an Arrow round-trip per batch each).
 
-    Rationale: extraction, span detection and scoring as separate
-    Python runners (extract UDF → detect mapInPandas → scorer UDF)
-    cost an Arrow socket round-trip per batch per hop.  One runner cuts
-    worker count and serialization 3× — the chained version spent >90%
-    CPU in kernel/syscall time at local[32], and at cluster scale the
-    saved serialization is real money.  ``alias2types=None`` switches
-    to the deterministic stub transformer scorer
-    (functions/scoring.py); a scorer that types mentions afterwards
-    passes ``{}`` and replaces ``pred_type``.
+    The table is built once on the driver and broadcast; each task
+    builds only its matcher (``build_alias_pattern`` over the aliases,
+    or ``iter_set_matches`` for ``matcher="set"``).  A scorer that
+    types mentions afterwards passes ``alias2types={}`` and replaces
+    ``pred_type``.
     """
-    spark = pages.sparkSession
-    lex_b = spark.sparkContext.broadcast(
-        (lexicon[["alias", "eid", "score"]].values.tolist(), alias2types)
-    )
+    table_b = pages.sparkSession.sparkContext.broadcast(alias_table(lexicon, alias2types))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        rows, a2t = lex_b.value
-        alias_map: dict[str, list[tuple[str, float]]] = {}
-        for alias, eid, score in rows:
-            alias_map.setdefault(alias, []).append((eid, float(score)))
-        for cands in alias_map.values():
-            cands.sort(key=lambda c: (-c[1], c[0]))
+        table = table_b.value
         if matcher == "set":
-            max_n = max((len(a.split(" ")) for a in alias_map), default=1)
+            max_n = max((len(a.split(" ")) for a in table), default=1)
 
             def find_spans(text):
-                return iter_set_matches(text, alias_map, max_n)
+                return iter_set_matches(text, table, max_n)
         else:
-            pattern = build_alias_pattern(alias_map)
+            pattern = build_alias_pattern(table)
 
             def find_spans(text):
                 for m in pattern.finditer(text):
                     yield m.start(1), m.end(1), m.group(1)
-        extract_re = EXTRACT_RE
-        norm_cache: dict[str, tuple[str, str, list[str]]] = {}
-
-        if a2t is None:
-            from medtype_spark.functions.scoring import (
-                COARSE_TYPES,
-                THRESHOLD,
-                _featurize_counts,
-                _load_stub_weights,
-            )
-
-            w = _load_stub_weights()
-            labels = np.array(COARSE_TYPES, dtype=object)
-
-            def types_of(norms: list[str]) -> list[list[str]]:
-                # integer counts × integer weights: exact, portable
-                logits = _featurize_counts(pd.Series(norms)) @ w
-                probs = 1.0 / (1.0 + np.exp(-logits / 1000.0))
-                return [list(labels[m]) for m in probs > THRESHOLD]
-        else:
-
-            def types_of(norms: list[str]) -> list[list[str]]:
-                return [a2t.get(n, []) for n in norms]
 
         for pdf in batches:
             out = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
+            for url, html in zip(pdf["url"], pdf["html"]):
                 if html is None:
                     continue
                 decoded = bytes(html).decode("utf-8", "replace")
-                m0 = extract_re.search(decoded)
+                m0 = EXTRACT_RE.search(decoded)
                 text = m0.group(1) if m0 else ""
                 for start, end, surface in find_spans(text):
-                    cached = norm_cache.get(surface)
-                    if cached is None:
-                        norm = normalize_form_py(surface)
-                        head = norm.split(" ", 1)[0] if norm else ""
-                        ptypes = types_of([norm])[0]
-                        cached = (norm, head, ptypes)
-                        norm_cache[surface] = cached
-                    norm, head, ptypes = cached
-                    cands = [
-                        {"eid": e, "score": round(s, 3)}
-                        for e, s in alias_map[surface]
-                    ]
+                    norm, head, ptypes, cands = table[surface]
                     out.append((
                         url, start, end, surface, cands,
                         f"{url}#{start}", norm, head, ptypes,
                     ))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "url", "start_offset", "end_offset", "mention",
-                    "candidates", "mention_key", "norm_form", "block_key",
-                    "pred_type",
-                ],
-            )
+            yield pd.DataFrame(out, columns=FUSED_SCHEMA.fieldNames())
 
-    return pages.select(url_col, html_col).mapInPandas(scan, schema=FUSED_SCHEMA)
+    return pages.select("url", "html").mapInPandas(scan, schema=FUSED_SCHEMA)

@@ -7,10 +7,10 @@ the resumable ``plans.checkpoints.run_linkage_checkpointed``:
    one row per detected mention with its candidates, normalized
    surface form, blocking key (the form's head token) and predicted
    semantic types, from ONE fused Python hop
-   (``operators.mentions.fused_mention_scan``) for every scorer.  The
-   dictionary and stub scorers type mentions inside that hop; the
-   batched-transformer scorer needs mention offsets against page text,
-   so it overlays ``batched_type_predictions`` over the extracted text
+   (``operators.mentions.fused_mention_scan``) that only finds spans;
+   every alias-only field, dict/stub types included, comes from an
+   alias table built once per run on the driver.  The batched scorer
+   overlays ``batched_type_predictions`` over the extracted text
    (``extract_pages``) onto the scan's mentions.
 2. ``form_edges``: distinct surface forms per block (the form *units*)
    → skew-aware salted within-block pairs → Jaro-Winkler (optionally
@@ -76,7 +76,7 @@ def scan_mentions(
     (``operators.mentions.fused_mention_scan``), so spans, candidates
     and the normalized form and blocking key come from one normalizer.
     ``type_scorer``: "dict" (alias → type lookup, the default) and
-    "stub" (deterministic md5 linear head) score inside the scan;
+    "stub" (deterministic md5 linear head) type the scan's alias table;
     "batched" is the MedType-style batched transformer, overlaid on
     the scan's mentions: token-window assembly (P4) over the extracted
     page text, length-sorted padded batches (W5), a REAL learned
@@ -241,19 +241,19 @@ def run_linkage(
     alias_embeddings: DataFrame | None = None,
     jw_weight: float = 0.5,
     cc_small_graph_threshold: int = 1_000_000,
-    cc_stats: dict | None = None,
     matcher: str = "trie",
-) -> dict[str, DataFrame]:
+) -> dict:
     """Run the flagship: ``scan_mentions`` → ``form_edges`` →
     ``form_clusters``.
 
     Returns ``mentions`` (persisted), ``edges`` (the form graph,
-    persisted), ``clusters`` (mention_key, entity_cluster) and
-    ``persisted_frames``.  ``type_scorer``/``matcher`` go to
+    persisted), ``clusters`` (mention_key, entity_cluster),
+    ``persisted_frames`` and ``report``, what the run did as data:
+    ``report["cc"]`` is connected_components' stats (which CC path ran,
+    with its edge count or rounds).  ``type_scorer``/``matcher`` go to
     ``scan_mentions``; ``score_threshold``, ``hot_threshold``,
     ``target_cell``, ``alias_embeddings`` and ``jw_weight`` to
-    ``form_edges``; ``cc_small_graph_threshold``/``cc_stats`` to
-    ``form_clusters``.
+    ``form_edges``; ``cc_small_graph_threshold`` to ``form_clusters``.
 
     ``with_candidate_filter`` adds the MedType candidate filter (J8):
     per-mention ``filtered_candidates`` against ``entity_types``, for
@@ -283,6 +283,7 @@ def run_linkage(
     )
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     persisted.append(edges)
+    cc_stats: dict = {}
     clusters = form_clusters(mentions, units, edges, cc_small_graph_threshold, cc_stats)
 
     if cleanup:
@@ -298,6 +299,7 @@ def run_linkage(
         "edges": edges,
         "clusters": clusters,
         "persisted_frames": [] if cleanup else persisted,
+        "report": {"cc": cc_stats},
     }
 
 

@@ -135,3 +135,100 @@ def test_set_matcher_parity_through_fused_scan(spark):
     assert len(trie_rows) == len(set_rows) > 0
     for a, b in zip(trie_rows, set_rows):
         assert a == b
+
+
+def _pages(spark, text):
+    html = f"<html><body><p>{text}</p></body></html>".encode()
+    return spark.createDataFrame(
+        [("u1", None, html, text, "en")],
+        "url:string, warc_ts:timestamp, html:binary, text:string, lang:string",
+    )
+
+
+def test_empty_lexicon_matches_nothing(spark):
+    """An empty lexicon detects no mention with either matcher (the
+    trie pattern of no aliases must not match the empty string)."""
+    import pandas as pd
+
+    from medtype_spark.operators.mentions import fused_mention_scan
+
+    assert _matches(build_alias_pattern([]), "a, b. c") == []
+    lex = pd.DataFrame(columns=["alias", "eid", "score", "type"])
+    pages = _pages(spark, "a, b. c")
+    for matcher in ("trie", "set"):
+        assert fused_mention_scan(pages, lex, {}, matcher=matcher).count() == 0, matcher
+
+
+def _tiny_lexicon():
+    """Two aliases ("Corp  A", "corp a") share the normalized form
+    "corp a"; "Corp  A" has a score tie between two eids, and no score
+    is already rounded to 3 dp."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        [
+            ("Corp  A", "E2", 0.91249, "Anatomy"),
+            ("Corp  A", "E1", 0.91249, "Devices"),
+            ("corp a", "E3", 0.50012, "Finding"),
+            ("corp a", "E1", 0.87661, "Anatomy"),
+            ("zeta", "E9", 1.0, "Objects"),
+        ],
+        columns=["alias", "eid", "score", "type"],
+    )
+
+
+def test_alias_table_candidates_and_keys():
+    """Candidates best-first with ties broken by eid and scores rounded
+    to 3 dp; block_key is the normalized form's head token."""
+    from medtype_spark.operators.mentions import alias_table
+
+    table = alias_table(_tiny_lexicon(), {})
+    assert table["Corp  A"][3] == [{"eid": "E1", "score": 0.912}, {"eid": "E2", "score": 0.912}]
+    assert table["corp a"][3] == [{"eid": "E1", "score": 0.877}, {"eid": "E3", "score": 0.5}]
+    assert {alias: entry[:2] for alias, entry in table.items()} == {
+        "Corp  A": ("corp a", "corp"),
+        "corp a": ("corp a", "corp"),
+        "zeta": ("zeta", "zeta"),
+    }
+
+
+def test_alias_only_fields_through_the_scan(spark):
+    """Each mention carries its alias's table entry.  The stub scorer's
+    pred_type is stub_types of the normalized form, which is what q52's
+    UDF predicts for the same string; the dict scorer's pred_type is
+    the union of the types of every alias sharing the form."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from medtype_spark.functions.scoring import stub_type_scorer_udf, stub_types
+    from medtype_spark.operators.mentions import alias_table
+    from medtype_spark.pipeline import scan_mentions
+
+    lex = _tiny_lexicon()
+    pages = _pages(spark, "see Corp  A and corp a then zeta end")
+    table = alias_table(lex, None)
+
+    stub_rows = scan_mentions(pages, lex, "stub", matcher="set").collect()
+    assert sorted(r["mention"] for r in stub_rows) == ["Corp  A", "corp a", "zeta"]
+    forms = sorted({r["norm_form"] for r in stub_rows})
+    udf_types = {
+        row["text"]: row["t"]
+        for row in spark.createDataFrame([(f,) for f in forms], "text string")
+        .select("text", stub_type_scorer_udf(F.col("text")).alias("t"))
+        .collect()
+    }
+    for r in stub_rows:
+        norm, head, ptypes, cands = table[r["mention"]]
+        assert (r["norm_form"], r["block_key"]) == (norm, head)
+        assert [c.asDict() for c in r["candidates"]] == cands
+        assert r["pred_type"] == ptypes == stub_types(pd.Series([norm]))[0]
+        assert r["pred_type"] == udf_types[norm]
+
+    dict_types = {
+        r["mention"]: r["pred_type"] for r in scan_mentions(pages, lex, "dict").collect()
+    }
+    assert dict_types == {
+        "Corp  A": ["Anatomy", "Devices", "Finding"],
+        "corp a": ["Anatomy", "Devices", "Finding"],
+        "zeta": ["Objects"],
+    }

@@ -81,6 +81,8 @@ def test_flagship_f1(spark, corpus):
     result = run_linkage(pages, lex, etypes, hot_threshold=50, target_cell=25)
     row = evaluate_linkage(result["clusters"], gold).collect()[0]
     assert row["fscore"] >= 0.99, dict(row.asDict())
+    # the form graph is far below the default small-graph threshold
+    assert result["report"]["cc"]["path"] == "small"
 
 
 def test_alias_embedding_blend_links_dissimilar_strings(spark):

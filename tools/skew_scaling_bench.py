@@ -19,8 +19,8 @@ executed paths:
   (evidence: per-block unit counts reported in the artifact);
 - **distributed CC**: `cc_small_graph_threshold` is set below the edge
   count, so the alternating-star iteration executes (evidence:
-  `cc_stats.path == "distributed"` + round count from the operator's
-  stats hook, reported in the artifact);
+  `report["cc"]["path"] == "distributed"` + round count from
+  `run_linkage`'s returned report, reported in the artifact);
 - **matcher**: the broadcast hash-set gazetteer (`matcher="set"`), the
   lexicon shape that survives 10^5+ aliases — the trie automaton costs
   ~8 s compile per fresh worker at this size (measured; see
@@ -83,16 +83,14 @@ times = []
 cc_stats = {}
 n_cluster_rows = None
 for rep in range(repeats + WARMUPS):
-    stats = {}
     t0 = time.perf_counter()
     result = run_linkage(pages, lex, etypes, cleanup=True, type_scorer="stub",
                          matcher="set", hot_threshold=HOT_THRESHOLD,
                          target_cell=TARGET_CELL,
-                         cc_small_graph_threshold=CC_THRESHOLD,
-                         cc_stats=stats)
+                         cc_small_graph_threshold=CC_THRESHOLD)
     n_cluster_rows = result["clusters"].count()
     dt = time.perf_counter() - t0
-    cc_stats = stats
+    cc_stats = result["report"]["cc"]
     if rep >= WARMUPS:
         times.append(dt)
 
@@ -111,11 +109,11 @@ if collect_evidence:
                   F.max("count").alias("max_block_units"),
                   F.sum((F.col("count") > HOT_THRESHOLD).cast("long"))
                   .alias("n_salted_blocks")).collect()[0])
-    stats2 = {}
     res = run_linkage(pages, lex, etypes, cleanup=True, type_scorer="stub",
                       matcher="set", hot_threshold=HOT_THRESHOLD,
                       target_cell=TARGET_CELL,
-                      cc_small_graph_threshold=CC_THRESHOLD, cc_stats=stats2)
+                      cc_small_graph_threshold=CC_THRESHOLD)
+    stats2 = res["report"]["cc"]
     n_edges = res["edges"].count()
     n_forms = units.select("norm_form").distinct().count()
     top_alias_share = (mentions.groupBy("mention")

@@ -40,9 +40,9 @@ def dedup_corpus_lines(
     text_col: str,
     id_col: str,
     min_len: int = 20,
-    delim: str = "\n",
 ) -> DataFrame:
-    """Remove corpus-wide duplicate lines from ``text_col``.
+    """Remove corpus-wide duplicate lines (newline-separated) from
+    ``text_col``.
 
     Returns one row per input row: (id_col, text_dedup, n_lines,
     n_dup_lines_removed).  A line is removed when an identical line
@@ -51,7 +51,7 @@ def dedup_corpus_lines(
     """
     lines = df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), delim, -1)).alias("line_no", "ln"),
+        F.posexplode(F.split(F.col(text_col), "\n", -1)).alias("line_no", "ln"),
     )
     short = lines.where(F.length("ln") < min_len).withColumn("keep", F.lit(True))
     w = Window.partitionBy(F.md5(F.col("ln"))).orderBy(id_col, "line_no")
@@ -66,7 +66,7 @@ def dedup_corpus_lines(
     kept = F.filter(F.col("_ls"), lambda x: x["keep"])
     return assembled.select(
         F.col(id_col),
-        F.concat_ws(delim, F.transform(kept, lambda x: x["ln"])).alias("text_dedup"),
+        F.concat_ws("\n", F.transform(kept, lambda x: x["ln"])).alias("text_dedup"),
         F.size("_ls").alias("n_lines"),
         (F.size("_ls") - F.size(kept)).alias("n_dup_lines_removed"),
     )

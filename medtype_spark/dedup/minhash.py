@@ -209,21 +209,21 @@ def capped_jaccard_pairs(
 def jaccard_pairs(
     shingles: DataFrame,
     candidates: DataFrame,
-    id_col: str = "doc_id",
     min_jaccard: float = 0.0,
 ) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs: |A∩B| / |A∪B|."""
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = shingles.select(F.col(id_col).alias("a"), "shingle")
-    sb = shingles.select(F.col(id_col).alias("b"), "shingle")
+    """Exact n-gram Jaccard for candidate (a, b) doc_id pairs:
+    |A∩B| / |A∪B|."""
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sa = shingles.select(F.col("doc_id").alias("a"), "shingle")
+    sb = shingles.select(F.col("doc_id").alias("b"), "shingle")
     inter = (
         candidates.join(sa, "a").join(sb, ["b", "shingle"])
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     out = (
-        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("n_a")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("n_b")), "b")
+        inter.join(sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a")), "a")
+        .join(sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b")), "b")
         .select(
             "a",
             "b",
@@ -233,9 +233,8 @@ def jaccard_pairs(
     return out.where(F.col("jaccard") >= min_jaccard)
 
 
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              n: int = 2) -> DataFrame:
-    """64-bit SimHash over word n-grams, JVM-side bit arithmetic.
+def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """64-bit SimHash over word 2-grams, JVM-side bit arithmetic.
 
     For each of 64 bit positions, sum +1/-1 votes of hash(shingle)
     bits weighted by shingle frequency; the sign vector packs into a
@@ -246,7 +245,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     SimHash bit-for-bit.
     """
     sh = df.select(
-        F.col(id_col), F.explode(word_shingles(text_col, n)).alias("shingle")
+        F.col(id_col), F.explode(word_shingles(text_col, 2)).alias("shingle")
     )
     # parse each hex digit ONCE into an int array; the 64 bit probes
     # are then cheap shifts on array elements (16 instr calls per

@@ -31,34 +31,29 @@ from medtype_spark.operators.cc import connected_components
 
 def near_dup_clusters(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
     min_jaccard: float = 0.8,
 ) -> DataFrame:
-    """(id, neardup_group, group_size): every document labeled with its
-    near-duplicate group's canonical (minimum) id."""
-    sh = doc_shingles(docs, text_col, id_col, n=n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    """(doc_id, neardup_group, group_size): every (doc_id, text)
+    document labeled with its near-duplicate group's canonical
+    (minimum) id, over word 3-gram shingles."""
+    sh = doc_shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
     # (r6) signatures row-locally (array_min over the doc's shingle
     # array — no explode/groupBy/exchange; bit-identical to the
     # exploded form, pytest-asserted).  ``sh`` stays persisted for the
     # Jaccard verification, its other consumer.
-    sig = minhash_signatures_local(docs, text_col, id_col, n=n,
-                                   num_hashes=num_hashes)
-    cands = lsh_candidate_pairs(sig, id_col, bands=bands)
-    verified = jaccard_pairs(sh, cands, id_col, min_jaccard=min_jaccard)
+    sig = minhash_signatures_local(docs, num_hashes=num_hashes)
+    cands = lsh_candidate_pairs(sig, bands=bands)
+    verified = jaccard_pairs(sh, cands, min_jaccard=min_jaccard)
 
     comp = connected_components(
         verified.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        vertices=docs.select(F.col(id_col).alias("node")),
+        vertices=docs.select(F.col("doc_id").alias("node")),
     )
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("group_size"))
     out = comp.join(sizes, "component").select(
-        F.col("node").alias(id_col),
+        F.col("node").alias("doc_id"),
         F.col("component").alias("neardup_group"),
         "group_size",
     )

@@ -114,23 +114,18 @@ ERROR_LABELS = [
 ]
 
 
-def classify_errors(
-    gold: DataFrame,
-    system: DataFrame,
-    keys: list[str] | None = None,
-) -> DataFrame:
+def classify_errors(gold: DataFrame, system: DataFrame) -> DataFrame:
     """J14: label each (docid,start,end) span pair per analyze.py:16-31.
 
     NIL ids begin with 'NIL' (annotation.py Candidate docstring).
     Returns (docid, start, end, gold_eid, sys_eid, label).
     """
-    keys = keys or ["docid", "start", "end"]
+    keys = ["docid", "start", "end"]
     g = gold.select(*keys, F.col("candidates")[0]["eid"].alias("gold_eid"))
     s = system.select(*keys, F.col("candidates")[0]["eid"].alias("sys_eid"))
     j = g.join(s, keys, "full_outer")
     is_g_nil = F.col("gold_eid").isNull() | F.col("gold_eid").startswith("NIL")
     is_s_nil = F.col("sys_eid").isNull() | F.col("sys_eid").startswith("NIL")
-    in_g = F.lit(True)
     label = (
         F.when(F.col("sys_eid").isNull() & F.col("gold_eid").isNotNull(), "missing")
         .when(F.col("gold_eid").isNull() & F.col("sys_eid").isNotNull(), "extra")

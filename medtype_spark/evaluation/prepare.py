@@ -23,23 +23,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def select_alternatives(
-    gold: DataFrame,
-    system: DataFrame,
-    key_field: str = "eid",
-) -> DataFrame:
-    """Return gold with multi-candidate rows reduced to one candidate.
+def select_alternatives(gold: DataFrame, system: DataFrame) -> DataFrame:
+    """Return gold with multi-candidate rows reduced to one candidate,
+    matching candidates on ``eid``.
 
     Inputs use the annotation frame schema
     (docid, start, end, candidates:array<struct<eid,score,type>>).
     """
     span_keys = system.select(
         "docid", "start", "end",
-        F.col("candidates")[0][key_field].alias("_skey"),
+        F.col("candidates")[0]["eid"].alias("_skey"),
     ).where(F.col("_skey").isNotNull()).dropDuplicates(["docid", "start", "end"])
 
     doc_keys = system.select(
-        "docid", F.col("candidates")[0][key_field].alias("_dkey")
+        "docid", F.col("candidates")[0]["eid"].alias("_dkey")
     ).where(F.col("_dkey").isNotNull()).dropDuplicates()
 
     coll_keys = doc_keys.select(F.col("_dkey").alias("_ckey")).dropDuplicates()
@@ -51,7 +48,7 @@ def select_alternatives(
     exploded = multi.select(
         "_rid", "docid", "start", "end",
         F.posexplode("candidates").alias("_pos", "_cand"),
-    ).withColumn("_key", F.col("_cand")[key_field])
+    ).withColumn("_key", F.col("_cand")["eid"])
 
     # 1. span-level: first gold candidate equal to the system top at
     #    this exact span

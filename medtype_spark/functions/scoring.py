@@ -55,20 +55,20 @@ SEED = 1234  # medtype-trainer/medtype.py:430
 THRESHOLD = 0.5  # server/helper.py:73
 
 
-def load_checkpoint(path: str | None = None) -> dict[str, np.ndarray]:
+def load_checkpoint() -> dict[str, np.ndarray]:
     """S12: model checkpoint load (.../server/__init__.py:73-83's
-    load-weights slot).  Reads a .npz of real LEARNED weights (see
-    tools/train_type_model.py) — a 2-layer relu net over the same
-    token-id bag features the batched scorer builds, so the stub and
-    the learned model are drop-in alternatives behind one contract.
+    load-weights slot).  Reads config/type_model.npz, real LEARNED
+    weights (see tools/train_type_model.py) — a 2-layer relu net over
+    the same token-id bag features the batched scorer builds, so the
+    stub and the learned model are drop-in alternatives behind one
+    contract.
     """
     import os
 
-    if path is None:
-        path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "..", "config",
-            "type_model.npz",
-        )
+    path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "..", "config",
+        "type_model.npz",
+    )
     with np.load(path) as z:
         return {k: z[k].astype(np.float64) for k in z.files}
 

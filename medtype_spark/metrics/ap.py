@@ -15,24 +15,22 @@ from pyspark.sql import functions as F
 
 def average_precision(
     scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "label",
     tiebreak_col: str | None = None,
 ) -> DataFrame:
-    """One-row AP over the whole frame.
+    """One-row AP over the whole frame, ranked by ``score``.
 
-    ``label_col`` is 0/1.  Ties broken by ``tiebreak_col`` for
+    ``label`` is 0/1.  Ties broken by ``tiebreak_col`` for
     engine-reproducible ranking.  The global ranking needs no
     single-task Window.orderBy: range repartition + partition offsets
     (operators/ranks.py).
     """
     from medtype_spark.operators.ranks import with_global_rank
 
-    order = [F.desc(score_col)]
+    order = [F.desc("score")]
     if tiebreak_col:
         order.append(F.asc(tiebreak_col))
 
-    base = scored.withColumn("_rel", F.col(label_col).cast("double"))
+    base = scored.withColumn("_rel", F.col("label").cast("double"))
     ranked = with_global_rank(
         base, order, rank_col="_k", cum_cols={"_rel": "_tp_at_k"}
     ).select("_rel", "_k", "_tp_at_k")

@@ -23,7 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from medtype_spark.metrics.clustering import prf_row
+from medtype_spark.metrics.clustering import _normalize, prf_row
 
 
 def _hungarian_max(cost: np.ndarray) -> float:
@@ -98,11 +98,10 @@ def _solve_component(pdf):
 def ceaf(
     true: DataFrame,
     pred: DataFrame,
-    mention: str = "mention",
-    cluster: str = "cluster",
     similarity: str = "overlap",
 ) -> DataFrame:
-    """Returns 1-row (p_num,p_den,r_num,r_den,precision,recall,fscore).
+    """Returns 1-row (p_num,p_den,r_num,r_den,precision,recall,fscore)
+    between two (mention, cluster) tables.
 
     per coref_metrics.py:443-449: num = max-assignment similarity;
     p_den = Σ_p sim(p,p); r_den = Σ_t sim(t,t).
@@ -118,8 +117,8 @@ def ceaf(
     """
     from medtype_spark.operators.cc import connected_components
 
-    t = true.select(F.col(mention).alias("m"), F.col(cluster).alias("c")).dropDuplicates()
-    p = pred.select(F.col(mention).alias("m"), F.col(cluster).alias("c")).dropDuplicates()
+    t = _normalize(true)
+    p = _normalize(pred)
 
     t_sz = t.groupBy("c").agg(F.count(F.lit(1)).alias("n_t")).withColumnRenamed("c", "tc")
     p_sz = p.groupBy("c").agg(F.count(F.lit(1)).alias("n_p")).withColumnRenamed("c", "pc")
@@ -169,9 +168,9 @@ def ceaf(
     return prf_row(row)
 
 
-def mention_ceaf(true, pred, **kw):
-    return ceaf(true, pred, similarity="overlap", **kw)
+def mention_ceaf(true, pred):
+    return ceaf(true, pred, similarity="overlap")
 
 
-def entity_ceaf(true, pred, **kw):
-    return ceaf(true, pred, similarity="dice", **kw)
+def entity_ceaf(true, pred):
+    return ceaf(true, pred, similarity="dice")

@@ -32,14 +32,12 @@ from functools import lru_cache
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from medtype_spark.metrics.matrix import prf
+
 
 def _tri(c):
     """n choose 2 as a Column expression."""
     return (c * (c - F.lit(1))) / F.lit(2)
-
-
-def _safe_div(num, den):
-    return F.when(den == 0, F.lit(0.0)).otherwise(num / den)
 
 
 @lru_cache(maxsize=1)
@@ -47,9 +45,7 @@ def _prf_row_cols() -> tuple:
     """precision/recall/fscore Columns over fixed names, built once
     (r6): Column trees are immutable and reusable; rebuilding them per
     call cost py4j round-trips on every metric invocation."""
-    p = _safe_div(F.col("p_num"), F.col("p_den"))
-    r = _safe_div(F.col("r_num"), F.col("r_den"))
-    f = F.when((p + r) == 0, F.lit(0.0)).otherwise(2 * p * r / (p + r))
+    p, r, f = prf(F.col("p_num"), F.col("p_den"), F.col("r_num"), F.col("r_den"))
     return (p.alias("precision"), r.alias("recall"), f.alias("fscore"))
 
 
@@ -58,8 +54,9 @@ def prf_row(df: DataFrame) -> DataFrame:
     return df.select("*", *_prf_row_cols())
 
 
-def _normalize(df: DataFrame, mention: str, cluster: str) -> DataFrame:
-    return df.select(F.col(mention).alias("m"), F.col(cluster).alias("c")).dropDuplicates()
+def _normalize(df: DataFrame) -> DataFrame:
+    """(mention, cluster) → distinct (m, c)."""
+    return df.select(F.col("mention").alias("m"), F.col("cluster").alias("c")).dropDuplicates()
 
 
 def _contingency(true: DataFrame, pred: DataFrame):
@@ -74,20 +71,15 @@ def _contingency(true: DataFrame, pred: DataFrame):
     return inter, t_sizes, p_sizes
 
 
-def pairwise(
-    true: DataFrame,
-    pred: DataFrame,
-    mention: str = "mention",
-    cluster: str = "cluster",
-) -> DataFrame:
+def pairwise(true: DataFrame, pred: DataFrame) -> DataFrame:
     """Pairwise linkage P/R/F over co-clustered mention pairs.
 
     Returns a single-row DataFrame
     (p_num, p_den, r_num, r_den, precision, recall, fscore) — num is
     shared between P and R per coref_metrics.py:605-611.
     """
-    t = _normalize(true, mention, cluster)
-    p = _normalize(pred, mention, cluster)
+    t = _normalize(true)
+    p = _normalize(pred)
     inter, t_sizes, p_sizes = _contingency(t, p)
 
     # (r6 note) A union-tagged single-aggregation assembly was tried
@@ -112,15 +104,10 @@ def pairwise(
     return prf_row(row)
 
 
-def b_cubed(
-    true: DataFrame,
-    pred: DataFrame,
-    mention: str = "mention",
-    cluster: str = "cluster",
-) -> DataFrame:
+def b_cubed(true: DataFrame, pred: DataFrame) -> DataFrame:
     """Bagga & Baldwin (1998) B³, per coref_metrics.py:503-523."""
-    t = _normalize(true, mention, cluster)
-    p = _normalize(pred, mention, cluster)
+    t = _normalize(true)
+    p = _normalize(pred)
     inter, t_sizes, p_sizes = _contingency(t, p)
 
     p_num = (
@@ -140,15 +127,10 @@ def b_cubed(
     return prf_row(row)
 
 
-def muc(
-    true: DataFrame,
-    pred: DataFrame,
-    mention: str = "mention",
-    cluster: str = "cluster",
-) -> DataFrame:
+def muc(true: DataFrame, pred: DataFrame) -> DataFrame:
     """Vilain et al. (1995) MUC, per coref_metrics.py:640-660."""
-    t = _normalize(true, mention, cluster)
-    p = _normalize(pred, mention, cluster)
+    t = _normalize(true)
+    p = _normalize(pred)
 
     def vilain(a: DataFrame, b: DataFrame):
         """num/den of _vilain(A, B_mapping) as 1-row DF (num, den)."""
@@ -170,12 +152,7 @@ def muc(
     return prf_row(prow.crossJoin(rrow))
 
 
-def cluster_metrics_bundle(
-    true: DataFrame,
-    pred: DataFrame,
-    mention: str = "mention",
-    cluster: str = "cluster",
-) -> DataFrame:
+def cluster_metrics_bundle(true: DataFrame, pred: DataFrame) -> DataFrame:
     """All four clustering metrics — pairwise, B³, MUC, BLANC-negative —
     from ONE shared contingency table (r6 optimization).
 
@@ -198,8 +175,8 @@ def cluster_metrics_bundle(
     Returns 4 rows (metric, p_num, p_den, r_num, r_den, precision,
     recall, fscore); metric ∈ pairwise|bcubed|muc|blanc_neg.
     """
-    t = _normalize(true, mention, cluster)
-    p = _normalize(pred, mention, cluster).withColumnRenamed("c", "pc")
+    t = _normalize(true)
+    p = _normalize(pred).withColumnRenamed("c", "pc")
     full = t.join(p, "m", "full_outer")
     cnt = (
         full.groupBy("c", "pc")
@@ -321,12 +298,7 @@ def _bundle_explode_col():
     ).alias("_r")
 
 
-def pairwise_negative(
-    true: DataFrame,
-    pred: DataFrame,
-    mention: str = "mention",
-    cluster: str = "cluster",
-) -> DataFrame:
+def pairwise_negative(true: DataFrame, pred: DataFrame) -> DataFrame:
     """BLANC negative-pair agreement (coref_metrics.py:574-598).
 
     Computed purely from marginals — no pair materialization:
@@ -335,8 +307,8 @@ def pairwise_negative(
     disagreements; p_den = C(|pred|,2) − pred_pairs; r_den symmetric.
     (Verified against the reference doctest in tests.)
     """
-    t = _normalize(true, mention, cluster)
-    p = _normalize(pred, mention, cluster)
+    t = _normalize(true)
+    p = _normalize(pred)
     pm = p.withColumnRenamed("c", "pc")
     common = t.join(pm, "m")
 

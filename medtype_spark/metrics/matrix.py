@@ -22,14 +22,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _safe_div(num, den):
-    return F.when(den == 0, F.lit(0.0)).otherwise(num / den)
-
-
-def prf_cols(tp="tp", fp="fp", fn="fn"):
-    p = _safe_div(F.col(tp), F.col(tp) + F.col(fp))
-    r = _safe_div(F.col(tp), F.col(tp) + F.col(fn))
+def prf(p_num, p_den, r_num, r_den):
+    """(precision, recall, fscore) Columns from numerator/denominator
+    Columns; a zero denominator, or P + R = 0, gives 0.0
+    (evaluate.py:272-279).  The one P/R/F expression of the package."""
+    p = F.when(p_den == 0, F.lit(0.0)).otherwise(p_num / p_den)
+    r = F.when(r_den == 0, F.lit(0.0)).otherwise(r_num / r_den)
     f = F.when((p + r) == 0, F.lit(0.0)).otherwise(2 * p * r / (p + r))
+    return p, r, f
+
+
+def prf_cols():
+    """precision/recall/fscore Columns over (tp, fp, fn)."""
+    tp = F.col("tp")
+    p, r, f = prf(tp, tp + F.col("fp"), tp, tp + F.col("fn"))
     return p.alias("precision"), r.alias("recall"), f.alias("fscore")
 
 

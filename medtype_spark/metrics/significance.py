@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from medtype_spark.metrics.matrix import prf
+
 N_TRIALS = 2500  # significance.py:27
 
 
@@ -52,9 +54,7 @@ def _prf_diff(df: DataFrame, group: list[str]) -> DataFrame:
     )
 
     def fscore(tp, fp, fn):
-        p = F.when(tp + fp == 0, 0.0).otherwise(tp / (tp + fp))
-        r = F.when(tp + fn == 0, 0.0).otherwise(tp / (tp + fn))
-        return F.when(p + r == 0, 0.0).otherwise(2 * p * r / (p + r))
+        return prf(tp, tp + fp, tp, tp + fn)[2]
 
     return agg.select(
         *group,
@@ -132,10 +132,8 @@ def bootstrap_diffs(
     return _prf_diff(resampled, ["trial"])
 
 
-def percentile_ci_exact(
-    diffs: DataFrame, n_trials: int, levels=(90, 95, 99)
-) -> DataFrame:
-    """R3: CIs as exact ORDER STATISTICS of the trial distribution
+def percentile_ci_exact(diffs: DataFrame, n_trials: int) -> DataFrame:
+    """R3: 90/95/99% CIs as exact ORDER STATISTICS of the trial distribution
     (diff at ranks ceil(α·n) / ceil((1-α)·n), 1-based, ties broken by
     trial id) — pure selection, no interpolation, so the picked doubles
     are bit-identical in any engine that sorts the same values.  The
@@ -147,7 +145,7 @@ def percentile_ci_exact(
 
     ranked = with_global_rank(diffs, [F.asc("diff"), F.asc("trial")], rank_col="_r")
     rows = []
-    for lv in levels:
+    for lv in (90, 95, 99):
         alpha = (100 - lv) / 200.0
         lo_r = max(1, math.ceil(alpha * n_trials))
         hi_r = max(1, math.ceil((1 - alpha) * n_trials))

@@ -19,29 +19,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def request_stats(
-    events: DataFrame,
-    client_col: str = "user_id",
-    size_col: str = "value",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-client request statistics (ServerStatistic._update_*)."""
-    return events.groupBy(client_col).agg(
+def request_stats(events: DataFrame) -> DataFrame:
+    """Per-client request statistics (ServerStatistic._update_*) over
+    an event log (user_id, value = message size, ts)."""
+    return events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_requests"),
-        F.round(F.avg(size_col), 6).alias("avg_msg_size"),
-        F.min(ts_col).alias("first_seen"),
-        F.max(ts_col).alias("last_seen"),
+        F.round(F.avg("value"), 6).alias("avg_msg_size"),
+        F.min("ts").alias("first_seen"),
+        F.max("ts").alias("last_seen"),
     )
 
 
-def size_histogram(
-    events: DataFrame,
-    size_col: str = "value",
-    bucket_width: float = 50.0,
-) -> DataFrame:
-    """Message-size histogram with fixed-width buckets (the exact
-    version of CappedHistogram; no eviction needed distributed)."""
-    bucket = (F.floor(F.col(size_col) / F.lit(bucket_width)) * F.lit(bucket_width))
+def size_histogram(events: DataFrame) -> DataFrame:
+    """Message-size histogram of ``value`` with 50-wide buckets (the
+    exact version of CappedHistogram; no eviction needed distributed)."""
+    bucket = (F.floor(F.col("value") / F.lit(50.0)) * F.lit(50.0))
     return events.groupBy(bucket.alias("bucket_lo")).agg(
         F.count(F.lit(1)).alias("n")
     )

@@ -101,13 +101,13 @@ def _fake_pixels(payload: bytes, n: int = 256) -> np.ndarray:
     ])
 
 
-def extract_media_features(media: DataFrame, out_col: str = "features") -> DataFrame:
-    """Fixed-width feature vector per payload (the embed step of a
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """Fixed-width ``features`` vector per payload (the embed step of a
     training-data pipeline).  Arrow-batched; payload bytes never leave
     the worker as anything but the feature vector."""
     schema = T.StructType(
         [f for f in media.schema.fields if f.name != "payload"]
-        + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
+        + [T.StructField("features", T.ArrayType(T.DoubleType()))]
     )
 
     def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -118,7 +118,7 @@ def extract_media_features(media: DataFrame, out_col: str = "features") -> DataF
                 for p in pdf["payload"]
             ]
             out = pdf.drop(columns=["payload"]).copy()
-            out[out_col] = feats
+            out["features"] = feats
             yield out
 
     return media.mapInPandas(run, schema=schema)

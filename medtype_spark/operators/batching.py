@@ -55,49 +55,41 @@ WINDOW_SCHEMA = T.StructType([
 
 
 def assemble_window(text: str, start: int, end: int,
-                    context_len: int = CONTEXT_LEN,
-                    max_len: int = MAX_LEN) -> tuple[list[int], int, int] | None:
-    """One window, reference arithmetic (__init__.py:489-498 +
-    dataloader.py:38-46 truncation; None when untruncatable)."""
+                    context_len: int = CONTEXT_LEN) -> tuple[list[int], int, int] | None:
+    """One window of at most ``MAX_LEN`` tokens, reference arithmetic
+    (__init__.py:489-498 + dataloader.py:38-46 truncation; None when
+    untruncatable)."""
     half = context_len // 2
     mention = _tok_ids(text[start:end])
     prev = _tok_ids(text[:start])[-half:]
     nxt = _tok_ids(text[end:])[:half]
-    if len(prev) + len(mention) + len(nxt) > max_len - 4:
-        left_len = (max_len - len(mention) - 4) // 2
+    if len(prev) + len(mention) + len(nxt) > MAX_LEN - 4:
+        left_len = (MAX_LEN - len(mention) - 4) // 2
         if left_len < 0:
             return None
         prev = prev[-left_len:] if left_len else []
         nxt = nxt[:left_len]
     toks = [CLS] + prev + [MEN_START] + mention + [MEN_END] + nxt + [SEP]
-    if len(toks) > max_len:
+    if len(toks) > MAX_LEN:
         return None
     return toks, len(prev) + 1, len(toks)
 
 
-def assemble_token_windows(
-    mentions: DataFrame,
-    text_col: str = "text",
-    start_col: str = "start_offset",
-    end_col: str = "end_offset",
-    context_len: int = CONTEXT_LEN,
-    max_len: int = MAX_LEN,
-    out_col: str = "window",
-) -> DataFrame:
-    """Append ``out_col`` struct(toks, men_pos, tok_len); rows whose
-    window can't fit max_len get a null (reference returns None)."""
+def assemble_token_windows(mentions: DataFrame, text_col: str = "text") -> DataFrame:
+    """Append ``window`` struct(toks, men_pos, tok_len) for each
+    (start_offset, end_offset) span of ``text_col``; rows whose window
+    can't fit MAX_LEN get a null (reference returns None)."""
 
     @F.pandas_udf(WINDOW_SCHEMA)
     def _assemble(texts: pd.Series, starts: pd.Series, ends: pd.Series) -> pd.DataFrame:
         rows = [
-            assemble_window(t or "", int(s), int(e), context_len, max_len)
-            or (None, None, None)
+            assemble_window(t or "", int(s), int(e)) or (None, None, None)
             for t, s, e in zip(texts, starts, ends)
         ]
         return pd.DataFrame(rows, columns=["toks", "men_pos", "tok_len"])
 
     return mentions.withColumn(
-        out_col, _assemble(F.col(text_col), F.col(start_col), F.col(end_col))
+        "window", _assemble(F.col(text_col), F.col("start_offset"), F.col("end_offset"))
     )
 
 
@@ -110,21 +102,17 @@ BATCH_SCHEMA = T.StructType([
 ])
 
 
-def length_sorted_batches(
-    windows: DataFrame,
-    key_col: str = "mention_key",
-    window_col: str = "window",
-    batch_size: int = 32,
-) -> DataFrame:
-    """collate_fn (dataloader.py:59-67): descending-length sort, chunk,
-    pad to the batch max.  The sort is partition-local
-    (sortWithinPartitions — no global shuffle-to-one-task); padding
-    waste only needs neighbours of similar length, not a total order."""
+def length_sorted_batches(windows: DataFrame, batch_size: int = 32) -> DataFrame:
+    """collate_fn (dataloader.py:59-67) over (mention_key, window):
+    descending-length sort, chunk, pad to the batch max.  The sort is
+    partition-local (sortWithinPartitions — no global
+    shuffle-to-one-task); padding waste only needs neighbours of
+    similar length, not a total order."""
     flat = windows.select(
-        F.col(key_col).cast("string").alias("_key"),
-        F.col(window_col)["toks"].alias("_toks"),
-        F.col(window_col)["men_pos"].alias("_men_pos"),
-        F.col(window_col)["tok_len"].alias("_tok_len"),
+        F.col("mention_key").cast("string").alias("_key"),
+        F.col("window")["toks"].alias("_toks"),
+        F.col("window")["men_pos"].alias("_men_pos"),
+        F.col("window")["tok_len"].alias("_tok_len"),
     ).where(F.col("_toks").isNotNull())
     flat = flat.sortWithinPartitions(F.desc("_tok_len"))
 
@@ -208,16 +196,12 @@ def _two_bag_features(pad, mask, men_pos_col, n_feat: int) -> np.ndarray:
     return np.concatenate([window, mention], axis=1)
 
 
-def score_batches(
-    batches: DataFrame,
-    out_col: str = "probs",
-    checkpoint: str | bool | None = None,
-) -> DataFrame:
-    """Batched scoring over padded token matrices — the slot where the
-    transformer forward pass goes (__init__.py:506-522).
+def score_batches(batches: DataFrame, checkpoint: bool = False) -> DataFrame:
+    """Batched scoring over padded token matrices into ``probs`` — the
+    slot where the transformer forward pass goes (__init__.py:506-522).
 
-    ``checkpoint=None``: the deterministic md5 stub (integer weights,
-    oracle-portable).  ``checkpoint=True`` or a path: load REAL learned
+    ``checkpoint=False``: the deterministic md5 stub (integer weights,
+    oracle-portable).  ``checkpoint=True``: load the REAL learned
     weights via functions.scoring.load_checkpoint (S12) and run the
     2-layer relu forward pass — same batch contract, same mask
     semantics, one materialization per worker process.
@@ -225,12 +209,12 @@ def score_batches(
     from medtype_spark.functions.scoring import _load_stub_weights, load_checkpoint
 
     out_schema = T.StructType(batches.schema.fields + [
-        T.StructField(out_col, T.ArrayType(T.ArrayType(T.DoubleType())))
+        T.StructField("probs", T.ArrayType(T.ArrayType(T.DoubleType())))
     ])
 
     def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         if checkpoint:
-            model = load_checkpoint(None if checkpoint is True else checkpoint)
+            model = load_checkpoint()
             w1, b1, w2, b2 = model["w1"], model["b1"], model["w2"], model["b2"]
             n_feat = w1.shape[0] // 2  # [window bag ‖ mention bag]
 
@@ -260,50 +244,37 @@ def score_batches(
                 )
             ]
             pdf = pdf.copy()
-            pdf[out_col] = probs_col
+            pdf["probs"] = probs_col
             yield pdf
 
     return batches.mapInPandas(run, schema=out_schema)
 
 
-def batched_type_predictions(
-    mentions: DataFrame,
-    pages: DataFrame,
-    key_col: str = "mention_key",
-    url_col: str = "url",
-    text_col: str = "extracted_text",
-    start_col: str = "start_offset",
-    end_col: str = "end_offset",
-    batch_size: int = 32,
-    checkpoint: str | bool = True,
-    threshold: float = 0.5,
-    out_col: str = "pred_type",
-) -> DataFrame:
+def batched_type_predictions(mentions: DataFrame, pages: DataFrame) -> DataFrame:
     """The full serving scorer path, P4 → W5 → S12 → P8/P9: join
-    mention spans back to their page text, assemble token windows,
-    length-sorted padded batches, batched forward pass with the loaded
-    checkpoint, then explode back to one (mention_key, pred_type) row
-    per mention.  Output is partition-invariant (per-mention), ready to
-    join onto the mention table."""
+    mention spans back to their page's ``extracted_text``, assemble
+    token windows, length-sorted padded batches of 32, batched forward
+    pass with the loaded checkpoint, then explode back to one
+    (mention_key, pred_type) row per mention, keeping the types scored
+    above 0.5 (server/helper.py:73).  Output is partition-invariant
+    (per-mention), ready to join onto the mention table."""
     from medtype_spark.functions.scoring import COARSE_TYPES
 
-    spans = mentions.select(key_col, url_col, start_col, end_col).join(
-        pages.select(url_col, text_col), url_col
+    spans = mentions.select("mention_key", "url", "start_offset", "end_offset").join(
+        pages.select("url", "extracted_text"), "url"
     )
-    win = assemble_token_windows(
-        spans, text_col=text_col, start_col=start_col, end_col=end_col
-    )
-    batches = length_sorted_batches(win, key_col=key_col, batch_size=batch_size)
-    scored = score_batches(batches, checkpoint=checkpoint)
+    win = assemble_token_windows(spans, text_col="extracted_text")
+    batches = length_sorted_batches(win, batch_size=32)
+    scored = score_batches(batches, checkpoint=True)
     labels = F.array(*[F.lit(t) for t in COARSE_TYPES])
     per = scored.select(F.explode(F.arrays_zip("keys", "probs")).alias("z"))
     return per.select(
-        F.col("z.keys").alias(key_col),
+        F.col("z.keys").alias("mention_key"),
         F.filter(
             F.zip_with(
                 labels, F.col("z.probs"),
-                lambda lab, p: F.when(p > threshold, lab),
+                lambda lab, p: F.when(p > 0.5, lab),
             ),
             lambda x: x.isNotNull(),
-        ).alias(out_col),
+        ).alias("pred_type"),
     )

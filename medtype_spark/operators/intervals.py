@@ -24,23 +24,17 @@ def interval_join(
     left: DataFrame,
     right: DataFrame,
     band_key: str = "docid",
-    start: str = "start",
-    end: str = "end",
-    suffix: str = "_r",
-    how: str = "inner",
 ) -> DataFrame:
-    """Pairs of rows with the same band key whose [start,end] intervals
-    overlap (inclusive bounds, reference compare_spans
-    annotation.py:65-73)."""
+    """Inner join of the rows with the same band key whose [start,end]
+    intervals overlap (inclusive bounds, reference compare_spans
+    annotation.py:65-73).  Every right column but the band key gets
+    the suffix ``_r``."""
     r = right
     for c in right.columns:
         if c != band_key:
-            r = r.withColumnRenamed(c, f"{c}{suffix}")
-    cond = (
-        (F.col(f"{start}{suffix}") <= F.col(end))
-        & (F.col(f"{end}{suffix}") >= F.col(start))
-    )
-    return left.join(r, on=band_key, how=how).where(cond)
+            r = r.withColumnRenamed(c, f"{c}_r")
+    cond = (F.col("start_r") <= F.col("end")) & (F.col("end_r") >= F.col("start"))
+    return left.join(r, on=band_key).where(cond)
 
 
 def overlap_fraction(start, end, start_r, end_r):
@@ -53,38 +47,27 @@ def overlap_fraction(start, end, start_r, end_r):
     return F.greatest(covered, F.lit(0)) / length
 
 
-def overlap_score_max(
-    matched: DataFrame,
-    ref_keys: list[str],
-    start: str = "start",
-    end: str = "end",
-    suffix: str = "_r",
-) -> DataFrame:
-    """J7 'max' mode: best single overlap fraction per reference span."""
-    frac = overlap_fraction(start, end, f"{start}{suffix}", f"{end}{suffix}")
+def overlap_score_max(matched: DataFrame, ref_keys: list[str]) -> DataFrame:
+    """J7 'max' mode: best single overlap fraction per reference span
+    of an ``interval_join`` output."""
+    frac = overlap_fraction("start", "end", "start_r", "end_r")
     return matched.groupBy(*ref_keys).agg(F.max(frac).alias("overlap"))
 
 
-def overlap_score_sum(
-    matched: DataFrame,
-    ref_keys: list[str],
-    start: str = "start",
-    end: str = "end",
-    suffix: str = "_r",
-) -> DataFrame:
-    """J7 'sum' mode: union-coalesced covered length / ref length.
+def overlap_score_sum(matched: DataFrame, ref_keys: list[str]) -> DataFrame:
+    """J7 'sum' mode: union-coalesced covered length / ref length, per
+    reference span of an ``interval_join`` output.
 
     Island detection with a running max over intervals sorted by start
     (window within the ref span) — the declarative equivalent of the
     reference's open/close offset sweep (annotation.py:484-505).
     """
-    s_r, e_r = f"{start}{suffix}", f"{end}{suffix}"
     clipped = matched.select(
         *ref_keys,
-        F.col(start),
-        F.col(end),
-        F.greatest(F.col(s_r), F.col(start)).alias("cs"),
-        F.least(F.col(e_r), F.col(end)).alias("ce"),
+        F.col("start"),
+        F.col("end"),
+        F.greatest(F.col("start_r"), F.col("start")).alias("cs"),
+        F.least(F.col("end_r"), F.col("end")).alias("ce"),
     ).where(F.col("ce") >= F.col("cs"))
 
     w = (
@@ -104,7 +87,7 @@ def overlap_score_sum(
         with_prev.withColumn("contrib", contrib)
         .groupBy(*ref_keys)
         .agg(
-            (F.sum("contrib") / (F.first(F.col(end)) - F.first(F.col(start)) + 1)).alias(
+            (F.sum("contrib") / (F.first(F.col("end")) - F.first(F.col("start")) + 1)).alias(
                 "overlap"
             )
         )

@@ -22,14 +22,13 @@ def weighted_match_score(
     gold: DataFrame,
     system: DataFrame,
     keys: list[str],
-    gold_type: str = "type",
-    sys_type: str = "type",
     weights: DataFrame | None = None,
 ) -> DataFrame:
-    """J5: per matched key, weight w(gold_type, sys_type); returns the
-    joined rows with a ``weight`` column (sum gives weighted tp)."""
-    g = gold.select(*keys, F.col(gold_type).alias("_gt"))
-    s = system.select(*keys, F.col(sys_type).alias("_st"))
+    """J5: per matched key, weight w(gold type, system type) over both
+    sides' ``type``; returns the joined rows with a ``weight`` column
+    (sum gives weighted tp)."""
+    g = gold.select(*keys, F.col("type").alias("_gt"))
+    s = system.select(*keys, F.col("type").alias("_st"))
     j = g.join(s, keys)
     if weights is not None:
         w = weights.select(
@@ -45,23 +44,17 @@ def weighted_match_score(
                     F.col("_st").alias("sys_type"), weight.alias("weight"))
 
 
-def first_on_category(
-    mentions: DataFrame,
-    entity_types: DataFrame,
-    cand_col: str = "candidates",
-    cat_col: str = "act_cat",
-    out_col: str = "selected_eid",
-    idx_col: str = "selected_idx",
-) -> DataFrame:
-    """J9: first candidate whose entity types intersect ``cat_col``.
+def first_on_category(mentions: DataFrame, entity_types: DataFrame) -> DataFrame:
+    """J9: first of ``candidates`` whose entity types intersect
+    ``act_cat``, as (selected_eid, selected_idx).
 
     Unmatched → (null, -1) exactly like filter_on_cat's
     ``return None, -1, None`` (eval_models.py:3-13).
     """
     base = mentions.withColumn("_rid", F.monotonically_increasing_id())
     exploded = base.select(
-        "_rid", F.col(cat_col).alias("_cat"),
-        F.posexplode(cand_col).alias("_pos", "_cand"),
+        "_rid", F.col("act_cat").alias("_cat"),
+        F.posexplode("candidates").alias("_pos", "_cand"),
     )
     dim = entity_types.select(F.col("eid").alias("_eid"), F.col("types").alias("_etypes"))
     hit = (
@@ -77,8 +70,8 @@ def first_on_category(
     )
     out = base.join(hit, "_rid", "left").select(
         *mentions.columns,
-        F.col("_sel")["_cand"]["eid"].alias(out_col),
-        F.coalesce(F.col("_sel")["_pos"], F.lit(-1)).alias(idx_col),
+        F.col("_sel")["_cand"]["eid"].alias("selected_eid"),
+        F.coalesce(F.col("_sel")["_pos"], F.lit(-1)).alias("selected_idx"),
     )
     return out
 
@@ -87,17 +80,16 @@ def lookup_with_fallback(
     df: DataFrame,
     dim: DataFrame,
     key_variants: list[Column],
-    dim_key: str = "key",
-    value_col: str = "value",
     out_col: str = "looked_up",
 ) -> DataFrame:
-    """J10: try each key variant in priority order against ``dim``;
-    first hit wins (eval_models.py:15-19's get_pred back-off chain)."""
+    """J10: try each key variant in priority order against ``dim``'s
+    (key, value); first hit wins (eval_models.py:15-19's get_pred
+    back-off chain)."""
     out = df
     hits = []
     for i, kv in enumerate(key_variants):
         d = dim.select(
-            F.col(dim_key).alias(f"_k{i}"), F.col(value_col).alias(f"_v{i}")
+            F.col("key").alias(f"_k{i}"), F.col("value").alias(f"_v{i}")
         )
         out = out.join(F.broadcast(d), kv == F.col(f"_k{i}"), "left").drop(f"_k{i}")
         hits.append(F.col(f"_v{i}"))

@@ -63,7 +63,10 @@ def _jaro(s1: str, s2: str) -> float:
     return (matches / l1 + matches / l2 + (matches - t) / matches) / 3.0
 
 
-def jaro_winkler(s1: str, s2: str, prefix_scale: float = 0.1) -> float:
+PREFIX_SCALE = 0.1  # Winkler's standard prefix boost per common char
+
+
+def jaro_winkler(s1: str, s2: str) -> float:
     """Standard Jaro-Winkler (common prefix boost, cap 4 chars)."""
     j = _jaro(s1, s2)
     if j <= 0.7:
@@ -74,7 +77,7 @@ def jaro_winkler(s1: str, s2: str, prefix_scale: float = 0.1) -> float:
             prefix += 1
         else:
             break
-    return j + prefix * prefix_scale * (1.0 - j)
+    return j + prefix * PREFIX_SCALE * (1.0 - j)
 
 
 def _to_char_matrix(strs) -> tuple[np.ndarray, np.ndarray]:
@@ -95,7 +98,7 @@ def _to_char_matrix(strs) -> tuple[np.ndarray, np.ndarray]:
     return mat, lens
 
 
-def batch_jaro_winkler(av, bv, prefix_scale: float = 0.1) -> np.ndarray:
+def batch_jaro_winkler(av, bv) -> np.ndarray:
     """Vectorized Jaro-Winkler over a batch of string pairs.
 
     Bit-identical to the scalar ``jaro_winkler`` (same IEEE expression
@@ -176,7 +179,7 @@ def batch_jaro_winkler(av, bv, prefix_scale: float = 0.1) -> np.ndarray:
         prefix = running.sum(axis=1)
     else:
         prefix = np.zeros(n, dtype=np.int64)
-    boosted = jaro + prefix * prefix_scale * (1.0 - jaro)
+    boosted = jaro + prefix * PREFIX_SCALE * (1.0 - jaro)
     return np.where(equal, 1.0, np.where(jaro <= 0.7, jaro, boosted))
 
 
@@ -190,7 +193,7 @@ def batch_jaro_winkler(av, bv, prefix_scale: float = 0.1) -> np.ndarray:
 _JW_LENGTH_BUCKETS = (16, 64, 256, 2048)
 
 
-def batch_jaro_winkler_bucketed(av, bv, prefix_scale: float = 0.1) -> np.ndarray:
+def batch_jaro_winkler_bucketed(av, bv) -> np.ndarray:
     """`batch_jaro_winkler` with length-bucketing: same results for any
     batch composition, but a long outlier only pays for itself."""
     n = len(av)
@@ -203,11 +206,9 @@ def batch_jaro_winkler_bucketed(av, bv, prefix_scale: float = 0.1) -> np.ndarray
     for b_id in np.unique(bucket):
         idx = np.nonzero(bucket == b_id)[0]
         if b_id == len(_JW_LENGTH_BUCKETS):
-            out[idx] = [
-                jaro_winkler(av[i], bv[i], prefix_scale) for i in idx
-            ]
+            out[idx] = [jaro_winkler(av[i], bv[i]) for i in idx]
         else:
-            out[idx] = batch_jaro_winkler(av[idx], bv[idx], prefix_scale)
+            out[idx] = batch_jaro_winkler(av[idx], bv[idx])
     return out
 
 
@@ -244,10 +245,10 @@ def score_pairs(
     a_vec: str | None = None,
     b_vec: str | None = None,
     jw_weight: float = 0.5,
-    out_col: str = "score",
 ) -> DataFrame:
-    """Blend string and embedding similarity; round to 3 dp as the
-    reference does for candidate scores (entity_linkers.py:44)."""
+    """Blend string and embedding similarity into ``score``; round to
+    3 dp as the reference does for candidate scores
+    (entity_linkers.py:44)."""
     jw = jaro_winkler_udf(F.col(a_text), F.col(b_text))
     if a_vec is not None and b_vec is not None:
         cos = cosine_sim(F.col(a_vec), F.col(b_vec))
@@ -258,4 +259,4 @@ def score_pairs(
         ).otherwise(blended)
     else:
         score = jw
-    return pairs.withColumn(out_col, F.round(score, 3))
+    return pairs.withColumn("score", F.round(score, 3))

@@ -34,10 +34,10 @@ def with_global_rank(
     order_cols: list,
     rank_col: str = "_k",
     cum_cols: dict[str, str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append a 1-based global rank over ``order_cols`` (list of Column
-    sort expressions, e.g. [F.desc("score"), F.asc("id")]).
+    sort expressions, e.g. [F.desc("score"), F.asc("id")]), ranged over
+    max(defaultParallelism, 2) partitions.
 
     ``cum_cols``: optional {source_col: out_col} running sums — out_col
     holds the global cumulative sum of source_col over the rank order,
@@ -45,7 +45,7 @@ def with_global_rank(
     """
     cum_cols = cum_cols or {}
     spark = df.sparkSession
-    n = num_partitions or max(spark.sparkContext.defaultParallelism, 2)
+    n = max(spark.sparkContext.defaultParallelism, 2)
 
     part = (
         df.repartitionByRange(n, *order_cols)

@@ -59,14 +59,15 @@ def hash_sample_flag(key: Column, rate: float, salt: str = "") -> Column:
     return _bucket(key, salt) < F.lit(rate_to_threshold(rate))
 
 
-def hash_sample(df: DataFrame, key: str, rate: float, salt: str = "") -> DataFrame:
+def hash_sample(df: DataFrame, key: str, rate: float) -> DataFrame:
     """Keep rows whose md5 bucket of ``key`` is below the rate threshold.
 
     Deterministic in the DATA (same rows kept regardless of
-    partitioning, ordering, cluster size, or engine).  ``salt`` decouples
-    independent samples over the same key space.
+    partitioning, ordering, cluster size, or engine).  A salted
+    ``hash_sample_flag`` decouples independent samples over the same
+    key space.
     """
-    return df.where(hash_sample_flag(F.col(key), rate, salt))
+    return df.where(hash_sample_flag(F.col(key), rate))
 
 
 def stratified_take(
@@ -74,8 +75,6 @@ def stratified_take(
     key: str,
     strata: Sequence[str],
     k: int,
-    salt: str = "",
-    rank_col: str = "strat_rank",
 ) -> DataFrame:
     """Deterministic exactly-k-per-stratum sample.
 
@@ -86,48 +85,30 @@ def stratified_take(
     ``df.sample()``'s layout dependence and without a global sort (one
     shuffle on the strata, rank within partition).
 
-    Returns the input plus ``rank_col`` (1-based), filtered to <= k.
+    Returns the input plus ``strat_rank`` (1-based), filtered to <= k.
     """
     from pyspark.sql import Window
 
     w = Window.partitionBy(*strata).orderBy(
-        _bucket(F.col(key), salt), F.col(key)
+        _bucket(F.col(key), ""), F.col(key)
     )
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .where(F.col(rank_col) <= k)
+        df.withColumn("strat_rank", F.row_number().over(w))
+        .where(F.col("strat_rank") <= k)
     )
 
 
-def hash_split(
-    df: DataFrame,
-    key: str,
-    splits: Sequence[tuple[str, float]] = (
-        ("train", 0.8),
-        ("val", 0.1),
-        ("test", 0.1),
-    ),
-    salt: str = "",
-    split_col: str = "split",
-) -> DataFrame:
-    """Assign every row a split label by hash-bucket range.
-
-    ``splits`` is (name, fraction) with fractions summing to 1; the
-    last split absorbs rounding remainder.  Assignment is a pure
-    function of the key — a document keeps its split across reruns and
-    incremental loads, which is what prevents train/test leakage in a
-    growing corpus.
+def hash_split(df: DataFrame, key: str, salt: str = "") -> DataFrame:
+    """Assign every row a ``split`` label, train/val/test at
+    80/10/10%, by hash-bucket range; test absorbs the rounding
+    remainder.  Assignment is a pure function of the key — a document
+    keeps its split across reruns and incremental loads, which is what
+    prevents train/test leakage in a growing corpus.
     """
-    fractions = [f for _, f in splits]
-    if abs(sum(fractions) - 1.0) > 1e-9:
-        raise ValueError(f"split fractions must sum to 1, got {sum(fractions)}")
     bucket = _bucket(F.col(key), salt)
-    expr = None
-    acc = 0.0
-    for name, frac in splits[:-1]:
-        acc += frac
-        cond = bucket < F.lit(rate_to_threshold(acc))
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    last_name = splits[-1][0]
-    expr = F.lit(last_name) if expr is None else expr.otherwise(F.lit(last_name))
-    return df.withColumn(split_col, expr)
+    return df.withColumn(
+        "split",
+        F.when(bucket < F.lit(rate_to_threshold(0.8)), F.lit("train"))
+        .when(bucket < F.lit(rate_to_threshold(0.9)), F.lit("val"))
+        .otherwise(F.lit("test")),
+    )

@@ -22,13 +22,13 @@ def mark_first_mention(
     eid_col: str = "eid",
     start_col: str = "start",
     end_col: str = "end",
-    out_col: str = "is_first",
 ) -> DataFrame:
-    """W3: first mention of each entity per doc, order (start, -end)."""
+    """W3: ``is_first`` marks the first mention of each entity per doc,
+    order (start, -end)."""
     w = Window.partitionBy(doc_col, eid_col).orderBy(
         F.asc(start_col), F.desc(end_col)
     )
-    return annotations.withColumn(out_col, F.row_number().over(w) == 1)
+    return annotations.withColumn("is_first", F.row_number().over(w) == 1)
 
 
 def topk_by(df: DataFrame, order: list[Column], k: int) -> DataFrame:

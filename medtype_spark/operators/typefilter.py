@@ -25,33 +25,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def filter_candidates(
-    mentions: DataFrame,
-    entity_types: DataFrame,
-    cand_col: str = "candidates",
-    pred_col: str = "pred_type",
-    out_col: str = "filtered_candidates",
-    eid_col: str = "eid",
-    types_col: str = "types",
-) -> DataFrame:
-    """Append ``out_col`` (same element type as ``cand_col``).
+def filter_candidates(mentions: DataFrame, entity_types: DataFrame) -> DataFrame:
+    """Append ``filtered_candidates`` (same element type as
+    ``candidates``).
 
-    ``mentions``: any schema containing ``cand_col``
-    (array<struct<eid,...>>) and ``pred_col`` (array<string>).
+    ``mentions``: any schema containing ``candidates``
+    (array<struct<eid,...>>) and ``pred_type`` (array<string>).
     ``entity_types``: dimension (eid, types:array<string>).
     """
     base = mentions.withColumn("_rid", F.monotonically_increasing_id())
 
     exploded = base.select(
         "_rid",
-        F.col(pred_col).alias("_pred"),
-        F.posexplode(cand_col).alias("_pos", "_cand"),
+        F.col("pred_type").alias("_pred"),
+        F.posexplode("candidates").alias("_pos", "_cand"),
     )
     dim = entity_types.select(
-        F.col(eid_col).alias("_eid"), F.col(types_col).alias("_etypes")
+        F.col("eid").alias("_eid"), F.col("types").alias("_etypes")
     )
     joined = exploded.join(
-        F.broadcast(dim), exploded["_cand"][eid_col] == dim["_eid"], "left"
+        F.broadcast(dim), exploded["_cand"]["eid"] == dim["_eid"], "left"
     )
     kept = (
         joined.where(
@@ -73,9 +66,9 @@ def filter_candidates(
     )
 
     result = base.join(kept, "_rid", "left").withColumn(
-        out_col,
-        F.when(F.size(F.coalesce(F.col(pred_col), F.array().cast("array<string>"))) == 0, F.col(cand_col))
-        .when(F.size(F.coalesce(F.col("_kept"), F.expr("array()"))) == 0, F.col(cand_col))
+        "filtered_candidates",
+        F.when(F.size(F.coalesce(F.col("pred_type"), F.array().cast("array<string>"))) == 0, F.col("candidates"))
+        .when(F.size(F.coalesce(F.col("_kept"), F.expr("array()"))) == 0, F.col("candidates"))
         .otherwise(F.col("_kept")),
     )
     return result.drop("_rid", "_kept")

@@ -1507,8 +1507,8 @@ def q69_select_alternatives(spark, sf_dir):
     )
     from medtype_spark.evaluation.prepare import select_alternatives
 
-    def cand(eid, score=1.0, typ="T"):
-        return (eid, score, typ)
+    def cand(eid, score=1.0):
+        return (eid, score, "T")
 
     system = spark.createDataFrame(
         [

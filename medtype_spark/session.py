@@ -117,8 +117,9 @@ def get_spark(
     return spark
 
 
-def fan_out(df, min_partitions: int | None = None):
-    """Widen a too-coarse scan for CPU-heavy downstream map work.
+def fan_out(df):
+    """Widen a too-coarse scan to defaultParallelism partitions for
+    CPU-heavy downstream map work.
 
     Small test-scale inputs (one parquet row group) yield ONE input
     partition, serializing hash/regex-heavy stages on a single core.
@@ -126,7 +127,7 @@ def fan_out(df, min_partitions: int | None = None):
     real scale a 100 TB table already splits into ~maxPartitionBytes
     chunks, the guard is false, and no shuffle is added.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -41,14 +41,13 @@ CAND_SCHEMA = T.ArrayType(T.StructType([
 def embedding_candidates(
     forms: DataFrame,
     lexicon: pd.DataFrame,
-    form_col: str = "norm_form",
     k: int = 5,
     min_cosine: float = 0.0,
-    out_col: str = "emb_candidates",
 ) -> DataFrame:
-    """Append top-k alias-embedding candidates per distinct form.
+    """Append top-k alias-embedding candidates per distinct form as
+    ``emb_candidates``.
 
-    ``forms``: any frame with a ``form_col``; one candidate list is
+    ``forms``: any frame with a ``norm_form``; one candidate list is
     computed per distinct value (callers at mention grain should pass
     the distinct-form projection and join back).
     ``lexicon``: pandas (alias, eid[, ...]) — broadcast via closure.
@@ -61,7 +60,7 @@ def embedding_candidates(
     )
 
     out_schema = T.StructType(
-        list(forms.schema.fields) + [T.StructField(out_col, CAND_SCHEMA)]
+        list(forms.schema.fields) + [T.StructField("emb_candidates", CAND_SCHEMA)]
     )
 
     def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -80,7 +79,7 @@ def embedding_candidates(
         anorm = np.linalg.norm(amat, axis=1)
         anorm[anorm == 0] = 1.0
         for pdf in pdfs:
-            vals = pdf[form_col].fillna("")
+            vals = pdf["norm_form"].fillna("")
             fmat = _featurize_counts(vals)
             fnorm = np.linalg.norm(fmat, axis=1)
             fnorm[fnorm == 0] = 1.0
@@ -100,7 +99,7 @@ def embedding_candidates(
                         break
                 cands_col.append(picked)
             out = pdf.copy()
-            out[out_col] = cands_col
+            out["emb_candidates"] = cands_col
             yield out
 
     return forms.mapInPandas(gen, schema=out_schema)

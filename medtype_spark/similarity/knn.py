@@ -46,11 +46,9 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact top-k cosine neighbours for each query vector.
+    """Exact top-k cosine neighbours for each query vector over
+    (vec_id, embedding) frames.
 
     Returns (query_id, rank, vec_id, cosine).  Ties broken by vec_id
     (deterministic).  Excludes self-matches when ids coincide.
@@ -64,29 +62,29 @@ def brute_force_topk(
     # (l2(query)*l2(corpus)), so every double is bit-identical — only
     # the per-pair work drops from 3 array reductions to 1.
     q = queries.select(
-        F.col(query_id_col).alias("_qid"),
-        F.col(vec_col).alias("_qvec"),
-        l2_norm(F.col(vec_col)).alias("_qn"),
+        F.col("query_id").alias("_qid"),
+        F.col("embedding").alias("_qvec"),
+        l2_norm(F.col("embedding")).alias("_qn"),
     )
     joined = corpus.select(
-        id_col, vec_col, l2_norm(F.col(vec_col)).alias("_cn")
+        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("_cn")
     ).join(F.broadcast(q))
     denom = F.col("_qn") * F.col("_cn")
     cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot_sim(F.col("_qvec"), F.col(vec_col)) / denom
+        dot_sim(F.col("_qvec"), F.col("embedding")) / denom
     )
-    scored = joined.where(F.col(id_col) != F.col("_qid")).select(
+    scored = joined.where(F.col("vec_id") != F.col("_qid")).select(
         F.col("_qid").alias("query_id"),
-        F.col(id_col),
+        F.col("vec_id"),
         cos.alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc(id_col)
+        F.desc("cosine"), F.asc("vec_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "cosine")
+        .select("query_id", "rank", "vec_id", "cosine")
     )
 
 
@@ -125,16 +123,14 @@ def lsh_cosine_pairs(
     min_cosine: float = 0.8,
     n_planes: int = 8,
     n_tables: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     hot_threshold: int = 5000,
     target_cell: int = 1000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS at corpus scale: bucketed
     self-join (never all-pairs).
 
-    Multi-table LSH: ``n_tables`` independent hyperplane sets, each an
+    Multi-table LSH over (vec_id, embedding): ``n_tables`` independent
+    hyperplane sets (table ``t`` seeded ``42 + 1000 * t``), each an
     equi-join on its own bucket key; a pair is a candidate if ANY table
     collides (union + distinct), then exact cosine filters.  More
     tables = higher recall at linear candidate cost.  Returns
@@ -154,11 +150,11 @@ def lsh_cosine_pairs(
     per_table = []
     for t in range(n_tables):
         per_table.append(
-            corpus.select(F.col(id_col), F.col(vec_col)).withColumn(
+            corpus.select(F.col("vec_id"), F.col("embedding")).withColumn(
                 "_bucket",
                 F.concat(
                     F.lit(f"{t}:"),
-                    _hyperplane_bits(F.col(vec_col), dim, n_planes, seed + 1000 * t),
+                    _hyperplane_bits(F.col("embedding"), dim, n_planes, 42 + 1000 * t),
                 ),
             )
         )
@@ -169,16 +165,16 @@ def lsh_cosine_pairs(
     pairs = block_pairs(
         bucketed,
         key_col="_bucket",
-        id_col=id_col,
+        id_col="vec_id",
         hot_threshold=hot_threshold,
         target_cell=target_cell,
-        extra_cols=[vec_col],
+        extra_cols=["embedding"],
     )
     cands = pairs.select(
-        F.col(f"a_{id_col}").alias("a"),
-        F.col(f"b_{id_col}").alias("b"),
-        F.col(f"a_{vec_col}").alias("_va"),
-        F.col(f"b_{vec_col}").alias("_vb"),
+        F.col("a_vec_id").alias("a"),
+        F.col("b_vec_id").alias("b"),
+        F.col("a_embedding").alias("_va"),
+        F.col("b_embedding").alias("_vb"),
     ).dropDuplicates(["a", "b"])
     return cands.select(
         "a", "b", cosine_sim(F.col("_va"), F.col("_vb")).alias("cosine")
@@ -196,41 +192,43 @@ def lsh_cosine_pairs(
 # ----------------------------------------------------------------------
 
 
+_SAMPLE_CAP = 20000
+
+
+def _stratified_sample(corpus: DataFrame) -> np.ndarray:
+    """About ``_SAMPLE_CAP`` embeddings, picked by vec_id hash (not
+    .sample(), whose row pick depends on partitioning)."""
+    stride = max(1, corpus.count() // _SAMPLE_CAP)
+    sample = (
+        corpus.where(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(stride)) == 0)
+        .select("embedding")
+        .toPandas()
+    )
+    return np.array([list(v) for v in sample["embedding"]], dtype=np.float64)
+
+
 def train_ivf_centroids(
     corpus: DataFrame,
     dim: int,
     n_centroids: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_cap: int = 20000,
-    iters: int = 10,
-    seed: int = 42,
 ):
-    """Lloyd k-means on a DETERMINISTIC driver-side sample.
+    """Lloyd k-means (10 iterations, seed 42) on a DETERMINISTIC
+    driver-side sample of (vec_id, embedding).
 
     The sample is id-hash-stratified (not .sample(), whose row pick
-    depends on partitioning), capped at ``sample_cap`` rows — the
+    depends on partitioning), capped at ``_SAMPLE_CAP`` rows — the
     centroid model is the broadcast-sized "index", like the alias
     matrices.  Returns an (n_centroids, dim) numpy array, L2-normalized
     rows (cosine IVF = spherical k-means).
     """
-    import numpy as np
-
-    n = corpus.count()
-    stride = max(1, n // sample_cap)
-    sample = (
-        corpus.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0)
-        .select(vec_col)
-        .toPandas()
-    )
-    x = np.array([list(v) for v in sample[vec_col]], dtype=np.float64)
+    x = _stratified_sample(corpus)
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     x = x / norms
 
-    rs = np.random.RandomState(seed)
+    rs = np.random.RandomState(42)
     cents = x[rs.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
-    for _ in range(iters):
+    for _ in range(10):
         sims = x @ cents.T
         assign = sims.argmax(1)
         for c in range(len(cents)):
@@ -263,12 +261,11 @@ def md5_centroids(dim: int, n_centroids: int, seed: int = 7) -> "np.ndarray":
 def ivf_assign(
     corpus: DataFrame,
     centroids,
-    vec_col: str = "embedding",
     out_col: str = "ivf_cell",
     metric: str = "cosine",
 ) -> DataFrame:
-    """Nearest-centroid cell id per row (Arrow-batched argmax against
-    the broadcast centroid matrix).  ``metric='cosine'`` L2-normalizes
+    """Nearest-centroid cell id of each ``embedding`` (Arrow-batched
+    argmax against the broadcast centroid matrix).  ``metric='cosine'`` L2-normalizes
     rows first (spherical k-means); ``metric='dot'`` ranks by raw inner
     product (IP-IVF, the FAISS IndexIVFFlat/IP analogue) — with
     integer-valued inputs the argmax is exact and engine-portable."""
@@ -286,7 +283,7 @@ def ivf_assign(
             x = x / norms
         return pd.Series((x @ cents.T).argmax(1).astype("int32"))
 
-    return corpus.withColumn(out_col, cell(F.col(vec_col)))
+    return corpus.withColumn(out_col, cell(F.col("embedding")))
 
 
 def ivf_topk(
@@ -296,11 +293,8 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 64,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id_col: str = "query_id",
     centroids=None,
-    seed: int = 42,
     metric: str = "cosine",
 ) -> DataFrame:
     """Approximate top-k via IVF probe lists: assign the corpus once,
@@ -312,10 +306,8 @@ def ivf_topk(
     integer-valued vectors — the driver-checked fixture path); score
     column is named after the metric."""
     if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, dim, n_centroids, id_col, vec_col, seed=seed
-        )
-    assigned = ivf_assign(corpus, centroids, vec_col, metric=metric)
+        centroids = train_ivf_centroids(corpus, dim, n_centroids)
+    assigned = ivf_assign(corpus, centroids, metric=metric)
 
     spark = corpus.sparkSession
     cb = spark.sparkContext.broadcast(np.asarray(centroids))
@@ -337,21 +329,21 @@ def ivf_topk(
     score_col = "cosine" if normalize else "dot"
     score_fn = cosine_sim if normalize else dot_sim
     q = queries.select(
-        F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qvec")
+        F.col(query_id_col).alias("_qid"), F.col("embedding").alias("_qvec")
     ).withColumn("_cell", F.explode(probes(F.col("_qvec"))))
     joined = assigned.join(
         F.broadcast(q), assigned["ivf_cell"] == q["_cell"]
-    ).where(F.col(id_col) != F.col("_qid"))
+    ).where(F.col("vec_id") != F.col("_qid"))
     scored = joined.select(
         F.col("_qid").alias("query_id"),
-        F.col(id_col),
-        score_fn(F.col("_qvec"), F.col(vec_col)).alias(score_col),
+        F.col("vec_id"),
+        score_fn(F.col("_qvec"), F.col("embedding")).alias(score_col),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, score_col)
+        .select("query_id", "rank", "vec_id", score_col)
     )
 
 
@@ -382,19 +374,15 @@ def md5_pq_codebooks(
     )
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks,
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebooks) -> DataFrame:
     """Product-quantization codes: per subspace j, the index of the
     L2-nearest codeword (Arrow-batched argmin against the broadcast
     codebook tensor; ties break to the LOWEST codeword index —
     np.argmin's first-minimum, mirrored by the oracle's
     ``ORDER BY dist, c`` rank).  Output column is ``array<int>`` of
     length m — the 100 TB shape: m bytes of code per vector replace
-    dim floats in the candidate store."""
+    dim floats in the candidate store.  Reads ``embedding``, adds
+    ``pq_code``."""
     spark = corpus.sparkSession
     cb = spark.sparkContext.broadcast(np.asarray(codebooks))
 
@@ -411,7 +399,7 @@ def pq_encode(
             codes[:, j] = np.argmin(dists, axis=1)             # first min
         return pd.Series([row.tolist() for row in codes])
 
-    return corpus.withColumn(out_col, encode(F.col(vec_col)))
+    return corpus.withColumn("pq_code", encode(F.col("embedding")))
 
 
 def ivf_pq_topk(
@@ -422,12 +410,9 @@ def ivf_pq_topk(
     nprobe: int = 2,
     m: int = 8,
     k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id_col: str = "vec_id",
     centroids=None,
     codebooks=None,
-    n_centroids: int = 16,
     seed: int = 7,
 ) -> DataFrame:
     """IVF-PQ approximate top-k — the standard 100 TB ANN shape.
@@ -451,17 +436,14 @@ def ivf_pq_topk(
     bit-portable (ties break on ascending ``vec_id``).
 
     Returns (query_id, rank, vec_id, adc) with rank 1..k by ascending
-    ADC distance.
+    ADC distance.  Without ``centroids`` the coarse quantizer is the 16
+    md5 centroids.
     """
     if centroids is None:
-        centroids = md5_centroids(dim, n_centroids, seed=seed)
+        centroids = md5_centroids(dim, 16, seed=seed)
     if codebooks is None:
         codebooks = md5_pq_codebooks(dim, m, k_codes, seed=seed)
-    assigned = pq_encode(
-        ivf_assign(corpus, centroids, vec_col, metric="dot"),
-        codebooks,
-        vec_col,
-    )
+    assigned = pq_encode(ivf_assign(corpus, centroids, metric="dot"), codebooks)
 
     spark = corpus.sparkSession
     cents_b = spark.sparkContext.broadcast(np.asarray(centroids))
@@ -493,7 +475,7 @@ def ivf_pq_topk(
 
     q = queries.select(
         F.col(query_id_col).alias("_qid"),
-        F.col(vec_col).alias("_qvec"),
+        F.col("embedding").alias("_qvec"),
     ).select(
         "_qid",
         F.explode(probes(F.col("_qvec"))).alias("_cell"),
@@ -501,7 +483,7 @@ def ivf_pq_topk(
     )
     joined = assigned.join(
         F.broadcast(q), assigned["ivf_cell"] == q["_cell"]
-    ).where(F.col(id_col) != F.col("_qid"))
+    ).where(F.col("vec_id") != F.col("_qid"))
     # ADC: sum of m LUT lookups, pure whole-stage-codegen arithmetic.
     # The transform lambda's SECOND parameter is the element index —
     # the one place that pyspark signature is exactly what we want.
@@ -514,13 +496,13 @@ def ivf_pq_topk(
         lambda a, x: a + x,
     )
     scored = joined.select(
-        F.col("_qid").alias("query_id"), F.col(id_col), adc.alias("adc")
+        F.col("_qid").alias("query_id"), F.col("vec_id"), adc.alias("adc")
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "adc")
+        .select("query_id", "rank", "vec_id", "adc")
     )
 
 
@@ -529,31 +511,20 @@ def train_pq_codebooks(
     dim: int,
     m: int = 8,
     k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_cap: int = 20000,
-    iters: int = 10,
     seed: int = 42,
 ) -> np.ndarray:
-    """Per-subspace Lloyd k-means on the same deterministic id-hash-
-    stratified driver sample as :func:`train_ivf_centroids` — the
-    production PQ path (the md5 codebooks are the oracle fixture).
-    Returns (m, k, dim//m)."""
-    n = corpus.count()
-    stride = max(1, n // sample_cap)
-    sample = (
-        corpus.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0)
-        .select(vec_col)
-        .toPandas()
-    )
-    x = np.array([list(v) for v in sample[vec_col]], dtype=np.float64)
+    """Per-subspace Lloyd k-means (10 iterations) on the same
+    deterministic id-hash-stratified driver sample as
+    :func:`train_ivf_centroids` — the production PQ path (the md5
+    codebooks are the oracle fixture).  Returns (m, k, dim//m)."""
+    x = _stratified_sample(corpus)
     d = dim // m
     rs = np.random.RandomState(seed)
     books = np.empty((m, k, d), dtype=np.float64)
     for j in range(m):
         sub = x[:, j * d : (j + 1) * d]
         cents = sub[rs.choice(len(sub), size=min(k, len(sub)), replace=False)]
-        for _ in range(iters):
+        for _ in range(10):
             dists = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             assign = dists.argmin(1)
             for c in range(len(cents)):

@@ -46,57 +46,54 @@ from medtype_spark.similarity.knn import ivf_assign
 def semantic_dedup(
     corpus: DataFrame,
     centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     metric: str = "cosine",
     hot_threshold: int = 10000,
     target_cell: int = 2000,
-    small_graph_threshold: int = 100_000,
 ) -> DataFrame:
-    """Returns DataFrame(id, cell, canonical_id, group_size,
-    is_canonical): every input row labeled with its semantic-duplicate
-    group.  Rows with ``is_canonical`` form the deduplicated corpus.
+    """Returns DataFrame(vec_id, cell, canonical_id, group_size,
+    is_canonical) over a (vec_id, embedding) corpus: every input row
+    labeled with its semantic-duplicate group.  Rows with
+    ``is_canonical`` form the deduplicated corpus.
     """
     # key column must NOT be named "_cell": block_pairs uses that name
     # internally for its salt-grid cell and would overwrite the key
-    assigned = ivf_assign(corpus, centroids, vec_col=vec_col,
-                          out_col="sd_cell", metric=metric)
+    assigned = ivf_assign(corpus, centroids, out_col="sd_cell", metric=metric)
 
     pairs = block_pairs(
-        assigned.select(F.col("sd_cell"), F.col(id_col), F.col(vec_col)),
+        assigned.select(F.col("sd_cell"), F.col("vec_id"), F.col("embedding")),
         key_col="sd_cell",
-        id_col=id_col,
+        id_col="vec_id",
         hot_threshold=hot_threshold,
         target_cell=target_cell,
-        extra_cols=[vec_col],
+        extra_cols=["embedding"],
     )
     score = (
-        cosine_sim(F.col(f"a_{vec_col}"), F.col(f"b_{vec_col}"))
+        cosine_sim(F.col("a_embedding"), F.col("b_embedding"))
         if metric == "cosine"
-        else dot(F.col(f"a_{vec_col}"), F.col(f"b_{vec_col}"))
+        else dot(F.col("a_embedding"), F.col("b_embedding"))
     )
     edges = pairs.where(score >= F.lit(threshold)).select(
-        F.col(f"a_{id_col}").alias("src"), F.col(f"b_{id_col}").alias("dst")
+        F.col("a_vec_id").alias("src"), F.col("b_vec_id").alias("dst")
     )
 
     labels = connected_components(
         edges,
-        vertices=assigned.select(F.col(id_col).alias("node")),
-        small_graph_threshold=small_graph_threshold,
+        vertices=assigned.select(F.col("vec_id").alias("node")),
+        small_graph_threshold=100_000,
     )
     sizes = labels.groupBy("component").agg(
         F.count(F.lit(1)).alias("group_size")
     )
     return (
-        assigned.select(F.col(id_col), F.col("sd_cell").alias("cell"))
-        .join(labels.withColumnRenamed("node", id_col), id_col)
+        assigned.select(F.col("vec_id"), F.col("sd_cell").alias("cell"))
+        .join(labels.withColumnRenamed("node", "vec_id"), "vec_id")
         .join(sizes, "component")
         .select(
-            id_col,
+            "vec_id",
             "cell",
             F.col("component").alias("canonical_id"),
             "group_size",
-            (F.col("component") == F.col(id_col)).alias("is_canonical"),
+            (F.col("component") == F.col("vec_id")).alias("is_canonical"),
         )
     )

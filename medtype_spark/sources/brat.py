@@ -26,14 +26,14 @@ SCORE = 1.0  # brat.py:13
 WP = "Wikipedia:"  # brat.py:14
 
 
-def read_brat_dir(spark: SparkSession, dir_path: str, ext: str = "ann") -> DataFrame:
+def read_brat_dir(spark: SparkSession, dir_path: str) -> DataFrame:
     """Annotation frame from a directory of brat ``.ann`` files."""
     lines = (
-        spark.read.text(f"{dir_path}/*.{ext}")
+        spark.read.text(f"{dir_path}/*.ann")
         .withColumn("_file", F.input_file_name())
         .withColumn(
             "docid",
-            F.regexp_extract("_file", rf"([^/]+)\.{ext}$", 1),
+            F.regexp_extract("_file", r"([^/]+)\.ann$", 1),
         )
         .withColumn("value", F.trim("value"))
     )

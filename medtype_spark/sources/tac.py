@@ -67,17 +67,14 @@ def prepare_tac(
     links_path: str,
     queries_path: str,
     excluded_spans: DataFrame | None = None,
-    mapping: DataFrame | None = None,
 ) -> DataFrame:
     """PrepareTac (tac.py:23-83): annotation frame from queries+links.
 
     ``excluded_spans``: optional (docid, start, end) — queries whose
     start OR end offset falls inside an excluded span are dropped
-    (tac.py:68-71, 108-116).
-    ``mapping``: optional (alias, title) redirect dimension — when
-    given, candidate ids are normalise_link'ed then redirected
-    (tac.py:86-105; without a mapping the reference leaves ids
-    verbatim).
+    (tac.py:68-71, 108-116).  Candidate ids are left verbatim, which
+    is what the reference does without a redirect mapping
+    (tac.py:86-105).
 
     Documented divergence: a query with no links raises ValueError in
     the reference (tac.py:72-73); here it yields an annotation with an
@@ -105,17 +102,6 @@ def prepare_tac(
         )
 
     cand = queries.join(links, "qid", "left")
-
-    if mapping is not None:
-        from medtype_spark.functions.text import normalise_link_col
-
-        m = F.broadcast(
-            mapping.select(F.col("alias").alias("_ma"), F.col("title").alias("_mt"))
-        )
-        cand = cand.withColumn("_norm", normalise_link_col(F.col("eid")))
-        cand = cand.join(m, cand["_norm"] == m["_ma"], "left").withColumn(
-            "eid", F.coalesce("_mt", "_norm")
-        ).drop("_ma", "_mt", "_norm")
 
     # grouped_queries (tac.py:156-158): deduplicate queries by span,
     # pooling candidates of every qid that shares the span

@@ -28,8 +28,6 @@ MAX_BATCH_SIZE = 256  # server/helper.py:100
 
 
 def split_into_partials(requests: DataFrame,
-                        job_col: str = "job_id",
-                        texts_col: str = "texts",
                         max_batch_size: int = MAX_BATCH_SIZE) -> DataFrame:
     """Ventilator analogue (:212-218): explode an oversized job into
     numbered partials of ≤ max_batch_size items each.
@@ -42,43 +40,40 @@ def split_into_partials(requests: DataFrame,
     # silently drops the job (F.sequence(0, -1) would otherwise emit a
     # phantom descending [0, -1] pair).
     n_parts = F.greatest(
-        F.ceil(F.size(texts_col) / F.lit(max_batch_size)).cast("int"), F.lit(1)
+        F.ceil(F.size("texts") / F.lit(max_batch_size)).cast("int"), F.lit(1)
     )
     out = requests.select(
-        F.col(job_col),
+        F.col("job_id"),
         n_parts.alias("n_partials"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), n_parts - 1),
-                lambda i: F.slice(F.col(texts_col), i * max_batch_size + 1, max_batch_size),
+                lambda i: F.slice(F.col("texts"), i * max_batch_size + 1, max_batch_size),
             )
         ).alias("partial_id", "items"),
     )
     return out
 
 
-def reassemble_jobs(partials: DataFrame,
-                    job_col: str = "job_id",
-                    partial_col: str = "partial_id",
-                    items_col: str = "results",
-                    declared_col: str = "n_partials") -> DataFrame:
-    """Sink analogue (:353-393): group partials per job, order by
-    partial_id (ordered-insert :368-379), and keep only jobs whose
-    partial count equals the declared checksum (:386-388).
+def reassemble_jobs(partials: DataFrame) -> DataFrame:
+    """Sink analogue (:353-393): group (job_id, partial_id, results,
+    n_partials) partials per job, order by partial_id (ordered-insert
+    :368-379), and keep only jobs whose partial count equals the
+    declared checksum ``n_partials`` (:386-388).
 
     Works identically on a batch DataFrame or a streaming one inside
     ``foreachBatch`` (update-mode aggregation).
     """
-    agg = partials.groupBy(job_col).agg(
+    agg = partials.groupBy("job_id").agg(
         F.transform(
-            F.array_sort(F.collect_list(F.struct(partial_col, items_col))),
-            lambda s: s[items_col],
+            F.array_sort(F.collect_list(F.struct("partial_id", "results"))),
+            lambda s: s["results"],
         ).alias("ordered_results"),
         F.count(F.lit(1)).alias("collected"),
-        F.first(declared_col).alias("declared"),
+        F.first("n_partials").alias("declared"),
     )
     return agg.where(F.col("collected") == F.col("declared")).select(
-        job_col,
+        "job_id",
         F.flatten("ordered_results").alias("results"),
         "collected",
     )
@@ -146,9 +141,9 @@ WINDOW_FIXTURE_BATCHES = [
 ]
 
 
-def windowed_stats_fixture_run(spark, window: str = "10 minutes",
-                               watermark: str = "30 minutes") -> DataFrame:
-    """Run ``windowed_request_stats`` on a REAL micro-batch stream over
+def windowed_stats_fixture_run(spark) -> DataFrame:
+    """Run ``windowed_request_stats`` (10-minute windows, 30-minute
+    watermark) on a REAL micro-batch stream over
     the deterministic fixture above (file source, one file per
     trigger, availableNow) and return the append-mode-finalized windows
     as an eager local DataFrame.
@@ -206,8 +201,7 @@ def windowed_stats_fixture_run(spark, window: str = "10 minutes",
             .option("maxFilesPerTrigger", 1)
             .json(src)
         )
-        out = windowed_request_stats(stream, window=window,
-                                     watermark=watermark)
+        out = windowed_request_stats(stream)
         q = (
             out.writeStream.format("memory").queryName(name)
             .outputMode("append")

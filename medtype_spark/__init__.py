@@ -12,4 +12,10 @@ are reproduced, each documented with a `file:line` citation into
 /root/reference for parity checking.
 """
 
+import os
+
 __version__ = "0.1.0"
+
+# the committed parse fixtures q49/q63/q64 and their oracles read
+FIXTURES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "fixtures")

@@ -8,6 +8,7 @@ column carries the same alias.
 
 from __future__ import annotations
 
+from medtype_spark import FIXTURES
 from medtype_spark.textstats.quality import LANG_MARKERS, STOPWORDS
 
 _STOPLIST = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
@@ -1006,13 +1007,13 @@ UNION ALL
 {_prf_select('overlap-maxmax::span+kbid', 'ov_nums', 'measure')}
 """
 
-ORACLES["q49_tac_scan"] = """
+ORACLES["q49_tac_scan"] = f"""
 SELECT column0 AS docid, column1 AS start, column2 AS "end",
        column3 AS eid, column4 AS score, column5 AS type
-FROM read_csv('/root/repo/tests/fixtures/tac_gold.combined.tsv',
+FROM read_csv('{FIXTURES}/tac_gold.combined.tsv',
               delim='\t', header=false,
-              columns={'column0':'VARCHAR','column1':'BIGINT','column2':'BIGINT',
-                       'column3':'VARCHAR','column4':'DOUBLE','column5':'VARCHAR'})
+              columns={{'column0':'VARCHAR','column1':'BIGINT','column2':'BIGINT',
+                       'column3':'VARCHAR','column4':'DOUBLE','column5':'VARCHAR'}})
 """
 
 def _type_remap_sql() -> str:
@@ -1066,21 +1067,21 @@ SELECT round(coalesce(sum(tp_at_k::DOUBLE / k * rel) / sum(rel), 0.0), 6) AS ave
 FROM ranked
 """
 
-ORACLES["q63_brat_scan"] = """
+ORACLES["q63_brat_scan"] = f"""
 SELECT column0 AS docid, column1 AS start, column2 AS "end",
        coalesce(column3, '') AS eids, column4 AS n_cands
-FROM read_csv('/root/repo/tests/fixtures/brat/expected.tsv',
+FROM read_csv('{FIXTURES}/brat/expected.tsv',
               delim='\t', header=false,
-              columns={'column0':'VARCHAR','column1':'BIGINT','column2':'BIGINT',
-                       'column3':'VARCHAR','column4':'INT'})
+              columns={{'column0':'VARCHAR','column1':'BIGINT','column2':'BIGINT',
+                       'column3':'VARCHAR','column4':'INT'}})
 """
 
-ORACLES["q64_conll_scan"] = """
+ORACLES["q64_conll_scan"] = f"""
 SELECT column0 AS docid, column1 AS cluster, column2 AS start, column3 AS "end"
-FROM read_csv('/root/repo/tests/fixtures/conll/expected.tsv',
+FROM read_csv('{FIXTURES}/conll/expected.tsv',
               delim='\t', header=false,
-              columns={'column0':'VARCHAR','column1':'VARCHAR',
-                       'column2':'BIGINT','column3':'BIGINT'})
+              columns={{'column0':'VARCHAR','column1':'VARCHAR',
+                       'column2':'BIGINT','column3':'BIGINT'}})
 """
 
 # Luo (2005) example, response 1: gold {A:5, B:2, C:5} vs response

@@ -16,11 +16,13 @@ similarity/clustering-metrics, q3x linkage-specific operators.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from medtype_spark import FIXTURES
 from medtype_spark.dedup.exact import exact_dedup
 from medtype_spark.dedup.minhash import (
     doc_shingles,
@@ -747,11 +749,14 @@ def q53_flagship_linkage(spark, sf_dir):
 
     # partitions=1 (r6, was 4): each python task pays worker and Arrow
     # setup — a fresh fork per task above 8 local threads, where
-    # get_spark turns worker reuse off — so scan-stage task count IS
-    # the fixed cost at this 2000-page fixture size.  That setup dwarfs
-    # the ~0.3s of actual python work; the r6 A/B (median-of-5, same
-    # session, worker reuse off) read 4.43s @ 4 parts vs 2.80s @ 1 part
-    # for the whole query.  Results are partition-invariant (tested).
+    # get_spark turns worker reuse off — so scan-stage task count was
+    # the fixed cost at this 2000-page fixture size.  The r6 A/B
+    # (median-of-5, same session, worker reuse off) read 4.43s @ 4
+    # parts vs 2.80s @ 1 part for the whole query.  Much of that
+    # per-task setup was every task re-reading pyspark.zip's directory
+    # (~0.12 CPU-s), which the worker daemon no longer does, and at
+    # <= 8 threads workers are reused; neither was re-measured.
+    # Results are partition-invariant (tested).
     # Real corpora get their partitioning from the input layout, not
     # this fixture constant.
     pages, gold = synth_pages(spark, 2000, n_entities=60, seed=42, partitions=1)
@@ -1115,8 +1120,8 @@ def q49_tac_scan(spark, sf_dir):
 
     got = prepare_tac(
         spark,
-        "/root/repo/tests/fixtures/tac_gold.tab",
-        "/root/repo/tests/fixtures/tac_gold.xml",
+        os.path.join(FIXTURES, "tac_gold.tab"),
+        os.path.join(FIXTURES, "tac_gold.xml"),
     )
     top = F.try_element_at("candidates", F.lit(1))
     return got.select(
@@ -1331,7 +1336,7 @@ def q63_brat_scan(spark, sf_dir):
     driver-checked."""
     from medtype_spark.sources.brat import read_brat_dir
 
-    got = read_brat_dir(spark, "/root/repo/tests/fixtures/brat")
+    got = read_brat_dir(spark, os.path.join(FIXTURES, "brat"))
     return got.select(
         "docid", "start", "end",
         F.concat_ws("|", F.transform("candidates", lambda c: c["eid"])).alias("eids"),
@@ -1346,7 +1351,7 @@ def q64_conll_scan(spark, sf_dir):
     expected TSV."""
     from medtype_spark.sources.conll import read_conll_coref
 
-    return read_conll_coref(spark, "/root/repo/tests/fixtures/conll/*.conll")
+    return read_conll_coref(spark, os.path.join(FIXTURES, "conll", "*.conll"))
 
 
 def q65_ceaf_fixture(spark, sf_dir):

@@ -1,9 +1,14 @@
 import pytest
 from pyspark.sql import SparkSession
 
+from medtype_spark.session import DAEMON_MODULE, export_package_root
+
 
 @pytest.fixture(scope="session")
 def spark():
+    # the shipped worker path: get_spark's preloading daemon, which also
+    # stops every task from re-reading pyspark.zip's directory
+    export_package_root()
     s = (
         SparkSession.builder.appName("medtype_spark_tests")
         .master("local[4]")
@@ -14,6 +19,7 @@ def spark():
         .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.python.unix.domain.socket.enabled", "false")
         .config("spark.python.authenticate.socketTimeout", "2s")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .getOrCreate()

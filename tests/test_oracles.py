@@ -5,9 +5,10 @@ driver runs the full set at sf0.01)."""
 import duckdb
 import pytest
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check_oracles import TABLES, compare  # noqa: E402
 

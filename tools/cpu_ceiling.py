@@ -12,12 +12,14 @@ Usage: python tools/cpu_ceiling.py [levels...]   (default: 2 4 8 16 32)
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
-WORKER = r"""
+# the worker imports this checkout's package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER = f"import sys\nsys.path.insert(0, {ROOT!r})\n" + r"""
 import sys, time
-sys.path.insert(0, "/root/repo")
 from medtype_spark.session import get_spark
 import pandas as pd
 cpus = int(sys.argv[1])

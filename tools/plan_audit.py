@@ -20,10 +20,11 @@ Usage: python tools/plan_audit.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # deliberately quadratic baselines (documented in their docstrings)
 CROSS_JOIN_OK = {

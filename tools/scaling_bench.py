@@ -21,9 +21,10 @@ import os
 import subprocess
 import sys
 
-WORKER = r"""
+# the worker imports this checkout's package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER = f"import sys\nsys.path.insert(0, {ROOT!r})\n" + r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 from medtype_spark.session import get_spark
 from medtype_spark.datagen.pages import build_lexicon, entity_types_df, synth_pages
 from medtype_spark.pipeline import run_linkage
@@ -44,9 +45,12 @@ import os
 parts = int(os.environ.get("SCALE_PARTITIONS", "16"))
 # partition count is part of the PHYSICAL layout, identical at both
 # levels (the dataset bytes are seed-determined either way).  16, not
-# 64: every python stage forks one worker per task through a single
-# daemon, so task count is a serialized fixed cost — 64 partitions
-# added ~16s/run at local[2] (measured) for zero balance benefit.
+# 64: 64 partitions added ~16s/run at local[2] for zero balance
+# benefit, measured when every python task forked a fresh worker and
+# re-read pyspark.zip's directory (~0.12 CPU-s per task).  Workers are
+# now reused here (SPARK_PYTHON_WORKER_REUSE below) and the daemon
+# skips that re-read, so the per-task cost is smaller; 16 was not
+# re-measured.
 gap = int(os.environ.get("SCALE_GAP", "10"))
 pages, _gold = synth_pages(spark, n_pages, n_entities=n_entities, seed=42,
                            partitions=parts, mentions_per_page=8, gap_words=gap)

@@ -43,9 +43,10 @@ import os
 import subprocess
 import sys
 
-WORKER = r"""
+# the worker imports this checkout's package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER = f"import sys\nsys.path.insert(0, {ROOT!r})\n" + r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
 from medtype_spark.session import get_spark
 from medtype_spark.datagen.pages import build_lexicon, entity_types_df, synth_pages
 from medtype_spark.pipeline import run_linkage

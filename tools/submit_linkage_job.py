@@ -1,7 +1,7 @@
 """Cluster-style entrypoint for the flagship linkage job.
 
-Ship via:
-  cd /root/repo && zip -r /tmp/medtype_spark.zip medtype_spark
+Ship via (from the checkout root):
+  zip -r /tmp/medtype_spark.zip medtype_spark
   spark-submit --master local[8] --py-files /tmp/medtype_spark.zip \
       tools/submit_linkage_job.py --pages 1000 --entities 50 \
       --output /tmp/linkage_out

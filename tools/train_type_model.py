@@ -20,11 +20,13 @@ Usage: python tools/train_type_model.py [n_entities] [out.npz]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from medtype_spark.datagen.pages import FILLER, build_lexicon  # noqa: E402
 from medtype_spark.functions.scoring import COARSE_TYPES  # noqa: E402
@@ -131,7 +133,7 @@ def train(x: np.ndarray, y: np.ndarray, epochs: int = 300, lr: float = 3e-3):
 def main():
     n_entities = int(sys.argv[1]) if len(sys.argv) > 1 else 240
     out = sys.argv[2] if len(sys.argv) > 2 else (
-        "/root/repo/medtype_spark/config/type_model.npz"
+        os.path.join(ROOT, "medtype_spark", "config", "type_model.npz")
     )
     x, y = build_dataset(n_entities)
     print(f"training on {len(x)} windows ({n_entities} entities)")

@@ -16,6 +16,7 @@ import os
 
 __version__ = "0.1.0"
 
+# the checkout this package sits in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # the committed parse fixtures q49/q63/q64 and their oracles read
-FIXTURES = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "fixtures")
+FIXTURES = os.path.join(ROOT, "tests", "fixtures")

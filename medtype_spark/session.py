@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from medtype_spark import ROOT
+
 
 # spark.python.daemon.module: the worker daemon every session here uses
 DAEMON_MODULE = "medtype_spark.daemon"
@@ -22,10 +24,9 @@ DAEMON_MODULE = "medtype_spark.daemon"
 def export_package_root() -> None:
     """Put this package's root on PYTHONPATH, so the worker-daemon
     process Spark spawns can import ``DAEMON_MODULE``."""
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = pkg_root + (os.pathsep + pp if pp else "")
+    if ROOT not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = ROOT + (os.pathsep + pp if pp else "")
 
 
 def get_spark(
@@ -103,13 +104,9 @@ def get_spark(
         # the pandas-UDF stack BEFORE forking lets workers inherit the
         # loaded modules copy-on-write: measured 10.4s -> 7.3s at
         # local[8] and 5-13s (unstable) -> 3.0s (stable) at local[32]
-        # for the 100k-page mention scan.  With or without reuse, every
-        # task also re-read the central directory of pyspark.zip and
-        # the py4j zip once per zipimporter (16 of them, ~0.12 CPU-s
-        # per task) when it invalidated the import caches; the daemon
-        # re-reads a zip only when it has changed, which cut Python-
-        # worker CPU per warm benchmark op 5.64 -> 1.54 CPU-s (zipf)
-        # and 4.37 -> 1.79 (uniform) at local[4].
+        # for the 100k-page mention scan.  The daemon also stops each
+        # task re-reading the pyspark/py4j zip directories; see
+        # medtype_spark.daemon.
         .config("spark.python.daemon.module", DAEMON_MODULE)
         # 4 MiB stream buffers: ~64x fewer socket syscalls on the
         # arrow channel — significant under this sandbox's syscall

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Split the CPU of warm flagship ops by layer, from /proc.
 
-    python tools/op_cpu_breakdown.py --workload zipf_skew_4k [--seed N] [--ops 5] [--stage op|edges]
+    python tools/op_cpu_breakdown.py --workload zipf_skew_4k [--ops 5] [--stage op|edges]
 
 Runs a perfbench workload the way ``perfbench/run.py`` does -- its
 seeded pages and lexicon, its ``get_spark`` session at local[4], one
@@ -122,13 +122,11 @@ def main(argv=None) -> int:
     spec = bench.load_json(os.path.join(bench.HERE, "spec.json"))
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", required=True, choices=sorted(spec["workloads"]))
-    p.add_argument("--seed", type=int, default=None,
-                   help="input seed (default: the workload's seed in spec.json)")
     p.add_argument("--ops", type=int, default=5, help="timed ops after the warm-up")
     p.add_argument("--stage", choices=("op", "edges"), default="op")
     args = p.parse_args(argv)
     wl_spec = spec["workloads"][args.workload]
-    seed = wl_spec["seed"] if args.seed is None else args.seed
+    seed = wl_spec["seed"]
     workload = bench.Flagship(args.workload, wl_spec, seed, 1.0)
     if not bench.finished(workload.pool_dir):
         print(f"error: no page pool; run perfbench/run.py --workload {args.workload} "

@@ -98,9 +98,10 @@ def get_measure(name: str | MeasureSpec) -> MeasureSpec:
 def with_fields(ann: DataFrame) -> DataFrame:
     """Materialize the top-candidate-delegated fields used by keys and
     filters (annotation.py:85-93, 169-188)."""
-    # try_element_at: an empty candidate list yields null fields (ANSI
-    # element_at throws on the empty array)
-    top = F.try_element_at("candidates", F.lit(1))
+    # get: an empty candidate list yields null fields (ANSI element_at
+    # throws on the empty array); try_element_at's generated code fails
+    # to compile here and falls back to interpreted evaluation
+    top = F.get("candidates", 0)
     eid = top["eid"]
     is_nil = eid.isNull() | eid.startswith("NIL")
     return (

@@ -8,19 +8,26 @@ and the serving layer routes hot traffic specially
 blocking key (a common surface form like "apple") turns the within-block
 self-join into a single-reducer quadratic bomb, so:
 
-1. a cheap pre-pass counts block sizes (one groupBy);
-2. keys whose count exceeds ``hot_threshold`` are *salted*: members get
-   a deterministic salt in [0, s) with s = ceil(count / target);
-3. pairs = within-salt-cell pairs + cross-cell pairs enumerated over the
-   (i < j) cell grid — every unordered intra-block pair is produced
-   EXACTLY once (completeness is property-tested with a planted hot
-   key in tests/test_blocking.py).
+1. one aggregate finds the *hot* keys, those with more than
+   ``hot_threshold`` members, and collects them to the driver: at most
+   rows / ``hot_threshold`` keys, NULL keys excluded;
+2. members of a hot key get a deterministic salt cell in [0, s) with
+   s = ceil(count / target), looked up in a literal map; every other
+   key has one cell;
+3. pairs = within-cell pairs (one self-join on key and cell) + for hot
+   keys only, cross-cell pairs enumerated over the (i < j) cell grid —
+   every unordered intra-block pair is produced EXACTLY once
+   (completeness is property-tested with a planted hot key in
+   tests/test_blocking.py).  With no hot key there is no cell and no
+   grid: cold blocks pair through one key self-join.
 
 Everything is built-in DataFrame ops — the joins shuffle on
 (key, salt) so no single task ever sees a whole hot block.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,11 +42,15 @@ def block_pairs(
     target_cell: int = 2000,
     extra_cols: list[str] | None = None,
     persist_registry: list | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """All unordered within-block pairs, salted for hot keys.
 
     Returns DataFrame(key_col, a_<id>, b_<id> [, a_/b_ extra cols]) with
-    ``a < b`` canonical order.
+    ``a < b`` canonical order; rows with a NULL key pair with nothing.
+    ``stats``: optional dict, filled in place from the hot-key set
+    (no extra job): ``salted_blocks`` (keys above ``hot_threshold``)
+    and ``max_cells`` (the most salt cells of any key, 1 if none).
     """
     extra_cols = extra_cols or []
     cols = [key_col, id_col, *extra_cols]
@@ -49,40 +60,59 @@ def block_pairs(
         # the salt grid overwrites these internally; a caller key named
         # "_cell" silently degrades the block join to all-pairs
         raise ValueError(f"block_pairs reserved column name(s) in input: {clash}")
-    # The salted table is consumed three times (size pre-pass + both
-    # join sides); persist it so upstream stages (UDF scans, joins) run
-    # once.  MEMORY_AND_DISK: spills instead of OOM at scale.
+    # Consumed three times (hot-key aggregate + both join sides);
+    # persist it so upstream stages (UDF scans, joins) run once.
+    # MEMORY_AND_DISK: spills instead of OOM at scale.
     base = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
     if persist_registry is not None:
         persist_registry.append(base)
 
-    counts = base.groupBy(key_col).agg(F.count(F.lit(1)).alias("_bsize")).withColumn(
-        "_ncells",
-        F.when(F.col("_bsize") > hot_threshold,
-               F.ceil(F.col("_bsize") / F.lit(target_cell)).cast("int"))
-        .otherwise(F.lit(1)),
-    )
+    # NULL keys never join, and a NULL map key is an error
+    hot = {
+        r[0]: math.ceil(r[1] / target_cell)
+        for r in base.where(F.col(key_col).isNotNull())
+        .groupBy(key_col).agg(F.count(F.lit(1)).alias("_bsize"))
+        .where(F.col("_bsize") > hot_threshold).collect()
+    }
+    if stats is not None:
+        stats["salted_blocks"] = len(hot)
+        stats["max_cells"] = max(hot.values(), default=1)
 
-    salted = base.join(counts, key_col).withColumn(
-        "_cell", F.pmod(F.xxhash64(F.col(id_col)), F.col("_ncells")).cast("int")
-    )
+    salted = base
+    if hot:
+        key_type = base.schema[key_col].dataType
+        cells = F.create_map(*[
+            x for k, n in hot.items() for x in (F.lit(k).cast(key_type), F.lit(n))
+        ])
+        salted = base.withColumn(
+            "_ncells", F.coalesce(cells[F.col(key_col)], F.lit(1))
+        ).withColumn(
+            "_cell", F.pmod(F.xxhash64(F.col(id_col)), F.col("_ncells")).cast("int")
+        )
 
     def side(prefix: str) -> DataFrame:
         renames = [F.col(key_col)] + [
             F.col(c).alias(f"{prefix}_{c}") for c in [id_col, *extra_cols]
-        ] + [F.col("_cell").alias(f"{prefix}_cell"),
-             F.col("_ncells").alias(f"{prefix}_ncells")]
+        ]
+        if hot:
+            renames += [F.col("_cell").alias(f"{prefix}_cell"),
+                        F.col("_ncells").alias(f"{prefix}_ncells")]
         return salted.select(*renames)
 
     a, b = side("a"), side("b")
+    out_cols = [key_col] + [f"a_{c}" for c in [id_col, *extra_cols]] + [
+        f"b_{c}" for c in [id_col, *extra_cols]
+    ]
 
     # Same-cell pairs: canonical id order within the cell.  Shuffle key
     # is (key, cell) — a hot block spreads over its s cells.
-    same = a.join(
-        b.drop("b_ncells"),
-        on=[a[key_col] == b[key_col], F.col("a_cell") == F.col("b_cell"),
-            F.col(f"a_{id_col}") < F.col(f"b_{id_col}")],
-    ).drop(b[key_col]).drop("a_ncells")
+    on = [a[key_col] == b[key_col], F.col(f"a_{id_col}") < F.col(f"b_{id_col}")]
+    if hot:
+        on.append(F.col("a_cell") == F.col("b_cell"))
+    same = a.join(b, on=on).drop(b[key_col]).select(*out_cols)
+    if not hot:
+        return same
+
     # Cross-cell pairs via 2D grid replication: grid cell (i, j), i<j,
     # receives replicas of cell i (as the a side) and cell j (as the b
     # side), so the JOIN KEY is (key, i, j) — ~s²/2 keys of ~target²
@@ -113,11 +143,6 @@ def block_pairs(
         b_rep[key_col]
     ).drop(b_rep["_gi"]).drop(b_rep["_gj"])
 
-    out_cols = [key_col] + [f"a_{c}" for c in [id_col, *extra_cols]] + [
-        f"b_{c}" for c in [id_col, *extra_cols]
-    ]
-    same_part = same.select(*out_cols)
-
     # For cross-cell pairs enforce a<b by swapping where needed.
     swap_needed = F.col(f"a_{id_col}") > F.col(f"b_{id_col}")
     swapped_cols = [F.col(key_col)]
@@ -131,4 +156,4 @@ def block_pairs(
         )
     cross_part = cross.select(*swapped_cols).select(*out_cols)
 
-    return same_part.union(cross_part)
+    return same.union(cross_part)

@@ -147,6 +147,7 @@ def form_edges(
     alias_embeddings: DataFrame | None = None,
     jw_weight: float = 0.5,
     persisted: list | None = None,
+    stats: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(units, edges): the form units and the form graph's (src, dst)
     edges.
@@ -166,7 +167,9 @@ def form_edges(
     "Jaro-Winkler + alias-embedding pairwise scores within salted
     blocks"); forms without an embedding fall back to pure JW.
     ``jw_weight`` sets the blend.  ``persisted`` collects the frames
-    ``block_pairs`` caches, for the caller to release.
+    ``block_pairs`` caches, for the caller to release; ``stats`` passes
+    through to ``block_pairs`` (salted blocks and their largest cell
+    count).
     """
     units = form_units(mentions)
     extra = ["pred_type"]
@@ -187,6 +190,7 @@ def form_edges(
         target_cell=target_cell,
         extra_cols=extra,
         persist_registry=persisted,
+        stats=stats,
     )
     scored = score_pairs(pairs, "a_norm_form", "b_norm_form", a_vec, b_vec, jw_weight)
     agree = (
@@ -249,8 +253,9 @@ def run_linkage(
     Returns ``mentions`` (persisted), ``edges`` (the form graph,
     persisted), ``clusters`` (mention_key, entity_cluster),
     ``persisted_frames`` and ``report``, what the run did as data:
-    ``report["cc"]`` is connected_components' stats (which CC path ran,
-    with its edge count or rounds).  ``type_scorer``/``matcher`` go to
+    ``report["blocking"]`` is block_pairs' stats (``salted_blocks``,
+    ``max_cells``) and ``report["cc"]`` connected_components' (which CC
+    path ran, with its edge count or rounds).  ``type_scorer``/``matcher`` go to
     ``scan_mentions``; ``score_threshold``, ``hot_threshold``,
     ``target_cell``, ``alias_embeddings`` and ``jw_weight`` to
     ``form_edges``; ``cc_small_graph_threshold`` to ``form_clusters``.
@@ -277,9 +282,10 @@ def run_linkage(
     # executes exactly once
     mentions = mentions.persist(StorageLevel.MEMORY_AND_DISK)
     persisted: list[DataFrame] = [mentions]
+    blocking_stats: dict = {}
     units, edges = form_edges(
         mentions, score_threshold, hot_threshold, target_cell,
-        alias_embeddings, jw_weight, persisted,
+        alias_embeddings, jw_weight, persisted, blocking_stats,
     )
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     persisted.append(edges)
@@ -299,7 +305,7 @@ def run_linkage(
         "edges": edges,
         "clusters": clusters,
         "persisted_frames": [] if cleanup else persisted,
-        "report": {"cc": cc_stats},
+        "report": {"blocking": blocking_stats, "cc": cc_stats},
     }
 
 

@@ -60,6 +60,15 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce the last shuffle of a persisted plan too
+        # (Spark keeps a cached plan's output partitioning by default).
+        # Otherwise every cached flagship frame (mentions, the blocking
+        # base, edges) keeps all shuffle partitions, and every stage
+        # over it runs that many tasks over a few thousand rows.
+        # Executed tasks per warm benchmark op (local[4], 8 shuffle
+        # partitions), together with block_pairs' driver-side hot keys:
+        # uniform_10k 173 -> 33, zipf_skew_4k 251 -> 49.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Bound pandas-UDF batch memory; analogue of the reference's
         # max_batch_size=256 serving micro-batches (server/helper.py:100),

@@ -41,12 +41,53 @@ def test_salted_hot_key_exact_cover(spark):
     # hot key with 120 members, forced salting into ~12 cells
     rows = [("hot", f"m{i:03d}") for i in range(120)] + [("cold", f"c{i}") for i in range(4)]
     df = spark.createDataFrame(rows, ["block_key", "mention_key"])
-    out = block_pairs(df, hot_threshold=50, target_cell=10)
+    stats = {}
+    out = block_pairs(df, hot_threshold=50, target_cell=10, stats=stats)
     got = _got_pairs(out)
     want = _expected_pairs(rows)
     assert got == want  # every unordered pair exactly once
     # and no duplicates at all
     assert out.count() == len(want)
+    assert stats == {"salted_blocks": 1, "max_cells": 12}
+
+
+def _plan_nodes(df):
+    """Node names of the optimized logical plan, one per tree line."""
+    tree = df._jdf.queryExecution().optimizedPlan().toString()
+    return [line.lstrip(" :+-|").split(" ")[0] for line in tree.splitlines()]
+
+
+def test_cold_blocks_pair_through_one_self_join(spark):
+    """No key above hot_threshold: no salt cell and no cross-cell grid,
+    so the plan is one key self-join with no Generate (explode)."""
+    rows = [("k1", f"a{i}") for i in range(5)] + [("k2", f"b{i}") for i in range(3)]
+    df = spark.createDataFrame(rows, ["block_key", "mention_key"])
+    stats = {}
+    out = block_pairs(df, hot_threshold=50, target_cell=10, stats=stats)
+    nodes = _plan_nodes(out)
+    assert nodes.count("Join") == 1, nodes
+    assert "Generate" not in nodes, nodes
+    assert _got_pairs(out) == _expected_pairs(rows)
+    assert stats == {"salted_blocks": 0, "max_cells": 1}
+
+
+def test_null_keys_pair_with_nothing(spark):
+    """NULL block keys form no block, even a NULL group above
+    hot_threshold: no error (a NULL map key would raise) and no pairs,
+    on both the cold plan and the salted one."""
+    rows = ([(None, f"n{i:03d}") for i in range(60)]
+            + [("k", f"a{i}") for i in range(4)])
+    df = spark.createDataFrame(rows, "block_key string, mention_key string")
+    want = _expected_pairs([r for r in rows if r[0] is not None])
+    stats = {}
+    assert _got_pairs(block_pairs(df, hot_threshold=50, target_cell=10, stats=stats)) == want
+    assert stats["salted_blocks"] == 0
+    hot = rows + [("hot", f"h{i:03d}") for i in range(60)]
+    df = spark.createDataFrame(hot, "block_key string, mention_key string")
+    want = _expected_pairs([r for r in hot if r[0] is not None])
+    stats = {}
+    assert _got_pairs(block_pairs(df, hot_threshold=50, target_cell=10, stats=stats)) == want
+    assert stats == {"salted_blocks": 1, "max_cells": 6}
 
 
 def test_salted_hot_key_pairs_are_distributed(spark):

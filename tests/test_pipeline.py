@@ -83,6 +83,8 @@ def test_flagship_f1(spark, corpus):
     assert row["fscore"] >= 0.99, dict(row.asDict())
     # the form graph is far below the default small-graph threshold
     assert result["report"]["cc"]["path"] == "small"
+    # no form block reaches hot_threshold=50: nothing is salted
+    assert result["report"]["blocking"] == {"salted_blocks": 0, "max_cells": 1}
 
 
 def test_alias_embedding_blend_links_dissimilar_strings(spark):

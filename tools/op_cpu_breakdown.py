@@ -28,10 +28,14 @@ edges`` persists the workload's mentions once and times
 ``form_edges(...)`` + ``edges.count()``: blocking and the Jaro-Winkler
 scorer, so its python_workers class is the JW stage alone.
 
+Next to the CPU classes it counts each op's Spark jobs and executed
+tasks (``numCompletedTasks`` of the op's distinct stages, so a skipped
+stage adds none), from the status tracker under a job group per op.
+
 The workload's page pool must exist (``perfbench/run.py --workload W
 --generate`` writes it); this seed's pages are cut from it if needed.
-Prints one line per op, then one JSON object: per class, the median
-over the ops and every op's value.
+Prints one line per op, then one JSON object: per class and count, the
+median over the ops and every op's value.
 """
 
 from __future__ import annotations
@@ -50,6 +54,7 @@ sys.path.insert(0, ROOT)
 from perfbench import run as bench  # noqa: E402
 
 CLASSES = ("jit", "tasks", "py4j", "gc", "jvm_other", "python_workers", "python_driver")
+COUNTS = ("jobs", "executed_tasks")
 TICK = os.sysconf("SC_CLK_TCK")
 
 
@@ -118,6 +123,21 @@ def split(before: dict, after: dict) -> dict:
     return out
 
 
+def job_counts(sc, group: str) -> dict:
+    """Jobs of a job group, and the tasks its distinct stages executed."""
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = set()
+    for job in jobs:
+        info = tracker.getJobInfo(job)
+        stages.update(info.stageIds if info is not None else ())
+    tasks = 0
+    for stage in stages:
+        info = tracker.getStageInfo(stage)
+        tasks += info.numCompletedTasks if info is not None else 0
+    return {"jobs": len(jobs), "executed_tasks": tasks}
+
+
 def main(argv=None) -> int:
     spec = bench.load_json(os.path.join(bench.HERE, "spec.json"))
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
@@ -142,13 +162,18 @@ def main(argv=None) -> int:
         action = _action(workload, args.stage)
         jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
         action()  # warm-up, discarded
+        sc = spark.sparkContext
         ops = []
         for rep in range(args.ops):
+            group = f"breakdown-op-{rep + 1}"
+            sc.setJobGroup(group, group)
             before = snapshot(jvm_pid)
             action()
             ops.append(split(before, snapshot(jvm_pid)))
+            ops[-1].update(job_counts(sc, group))
             bench.log(f"# {args.stage} {rep + 1}: " + " ".join(
-                f"{c} {ops[-1][c]:.2f}" for c in (*CLASSES, "total")))
+                f"{c} {ops[-1][c]:.2f}" for c in (*CLASSES, "total"))
+                + " " + " ".join(f"{c} {ops[-1][c]}" for c in COUNTS))
     finally:
         if spark is not None:
             bench.shutdown_spark(spark)
@@ -158,6 +183,9 @@ def main(argv=None) -> int:
         "cpu_s": {c: {"median": round(statistics.median(op[c] for op in ops), 3),
                       "ops": [round(op[c], 3) for op in ops]}
                   for c in (*CLASSES, "total")},
+        "counts": {c: {"median": statistics.median(op[c] for op in ops),
+                       "ops": [op[c] for op in ops]}
+                   for c in COUNTS},
     }), flush=True)
     return 0
 

@@ -33,6 +33,8 @@ from functools import lru_cache
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from medtype_spark.textstats.quality import tokens
+
 
 @lru_cache(maxsize=32)
 def _gram_array(text_col: str, n: int):
@@ -41,7 +43,7 @@ def _gram_array(text_col: str, n: int):
     this host; Columns are immutable plan fragments, safe to reuse.
     sequence(1, sz-n+1) is DESCENDING when sz < n (Spark yields [1, 0],
     not []), so short docs short-circuit to an empty array."""
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = tokens(F.col(text_col))
     grams = F.when(
         F.size(toks) >= n,
         F.transform(

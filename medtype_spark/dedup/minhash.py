@@ -19,26 +19,17 @@ from functools import lru_cache
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def word_shingles(col, n: int = 3):
-    """Array of n-word shingles from whitespace-tokenized text.
-
-    Accepts a Column or a column NAME; the name form is lru_cached —
-    the shingle tree costs dozens of py4j round-trips to construct,
-    which dominated repeated query builds on this host (Columns are
-    immutable plan fragments, safe to reuse across DataFrames)."""
-    if isinstance(col, str):
-        return _word_shingles_cached(col, n)
-    return _word_shingles_build(col, n)
+from medtype_spark.textstats.quality import tokens
 
 
 @lru_cache(maxsize=32)
-def _word_shingles_cached(col_name: str, n: int):
-    return _word_shingles_build(F.col(col_name), n)
-
-
-def _word_shingles_build(col, n: int):
-    toks = F.filter(F.split(F.trim(col), r"\s+"), lambda t: t != "")
+def word_shingles(col_name: str, n: int = 3):
+    """Array of n-word shingles from the whitespace tokens of column
+    ``col_name``, built once per (name, n): the shingle tree costs
+    dozens of py4j round-trips to construct, which dominated repeated
+    query builds on this host (Columns are immutable plan fragments,
+    safe to reuse across DataFrames)."""
+    toks = tokens(F.col(col_name))
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     return F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))

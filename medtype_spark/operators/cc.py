@@ -147,8 +147,8 @@ def connected_components(
         paths (min node id per component — parity-tested); 0 sends
         every non-empty edge set to the distributed algorithm.
     stats : optional dict, filled in place with execution evidence:
-        ``path`` ("empty" | "small" | "distributed"), ``n_edges``
-        (empty/small path: exact count from the complete probe),
+        ``path`` ("small" | "distributed"), ``n_edges`` (small path,
+        0 for no edges: exact count from the complete probe),
         ``rounds`` (distributed path: alternating-star rounds executed).
 
     Returns DataFrame(node, component).
@@ -172,17 +172,8 @@ def connected_components(
     probe = e.limit(small_graph_threshold + 1).select("u", "v").toPandas()
     if len(probe) <= small_graph_threshold:
         if stats is not None:
-            stats["path"] = "empty" if len(probe) == 0 else "small"
+            stats["path"] = "small"
             stats["n_edges"] = len(probe)
-        if len(probe) == 0:
-            if vertices is None:
-                return e.sparkSession.createDataFrame([], T.StructType([
-                    T.StructField("node", e.schema["u"].dataType),
-                    T.StructField("component", e.schema["u"].dataType),
-                ]))
-            return vertices.select("node").distinct().select(
-                "node", F.col("node").alias("component")
-            )
         # the probe IS the complete edge set, so union-find labels
         # cover every edge-touched node; only isolated vertices (in
         # ``vertices`` but untouched by any edge) are added,

@@ -45,6 +45,7 @@ from medtype_spark.textstats.quality import (
     STOPWORDS,
     predict_lang,
     quality_features,
+    tokens,
 )
 
 
@@ -154,7 +155,7 @@ def q08_token_topk(spark, sf_dir):
 
     d = fan_out(_t(spark, sf_dir, "documents").select("text"))
     toks = d.select(
-        F.explode(F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")).alias("token")
+        F.explode(tokens(F.col("text"))).alias("token")
     )
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     return topk_by(counts, [F.desc("n"), F.asc("token")], 20)
@@ -852,7 +853,7 @@ def q32_split_reassemble(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("job_id"),
-        F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "").alias("texts"),
+        tokens(F.col("text")).alias("texts"),
     )
     parts = split_into_partials(d, max_batch_size=4)
     per_partial = parts.select(

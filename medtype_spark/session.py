@@ -103,10 +103,8 @@ def get_spark(
         # where reuse=true is Spark's default) — reuse removes the
         # serialized fork-per-task cost: flagship 800k runs ~35%
         # faster at local[8] and 2->8 scaling efficiency rises
-        # 0.62 -> 0.83.  Env-overridable for A/B.
-        .config("spark.python.worker.reuse",
-                os.environ.get("SPARK_PYTHON_WORKER_REUSE",
-                               "true" if 0 < n <= 8 else "false"))
+        # 0.62 -> 0.83.
+        .config("spark.python.worker.reuse", "true" if 0 < n <= 8 else "false")
         # With reuse=false every task pays the pandas/pyarrow import in
         # its fresh worker (~1s under syscall emulation, and the forks
         # contend at high parallelism).  A daemon module that imports

@@ -221,10 +221,7 @@ def train_ivf_centroids(
     matrices.  Returns an (n_centroids, dim) numpy array, L2-normalized
     rows (cosine IVF = spherical k-means).
     """
-    x = _stratified_sample(corpus)
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    x = x / norms
+    x = _unit_rows(_stratified_sample(corpus))
 
     rs = np.random.RandomState(42)
     cents = x[rs.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
@@ -238,6 +235,33 @@ def train_ivf_centroids(
                 nv = np.linalg.norm(v)
                 cents[c] = v / nv if nv > 0 else cents[c]
     return cents
+
+
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """Rows of ``x`` scaled to unit L2 norm; zero rows stay zero."""
+    norms = np.linalg.norm(x, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return x / norms
+
+
+def _vectors(vecs: pd.Series, normalize: bool) -> np.ndarray:
+    """An Arrow batch of embeddings as an (N, dim) float64 matrix,
+    unit-normalized rows when ``normalize``."""
+    x = np.array([list(v) for v in vecs], dtype=np.float64)
+    return _unit_rows(x) if normalize else x
+
+
+def _probes_udf(centroids_b, nprobe: int, normalize: bool):
+    """pandas UDF: each vector's ``nprobe`` most similar centroid ids,
+    best first (stable argsort, so ties go to the lower id)."""
+
+    @pandas_udf(ArrayType(IntegerType()))
+    def probes(vecs: pd.Series) -> pd.Series:
+        sims = _vectors(vecs, normalize) @ centroids_b.value.T
+        order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+        return pd.Series([row.astype("int32").tolist() for row in order])
+
+    return probes
 
 
 def md5_centroids(dim: int, n_centroids: int, seed: int = 7) -> "np.ndarray":
@@ -275,13 +299,7 @@ def ivf_assign(
 
     @pandas_udf(IntegerType())
     def cell(vecs: pd.Series) -> pd.Series:
-        cents = cb.value
-        x = np.array([list(v) for v in vecs], dtype=np.float64)
-        if normalize:
-            norms = np.linalg.norm(x, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            x = x / norms
-        return pd.Series((x @ cents.T).argmax(1).astype("int32"))
+        return pd.Series((_vectors(vecs, normalize) @ cb.value.T).argmax(1).astype("int32"))
 
     return corpus.withColumn(out_col, cell(F.col("embedding")))
 
@@ -311,20 +329,8 @@ def ivf_topk(
 
     spark = corpus.sparkSession
     cb = spark.sparkContext.broadcast(np.asarray(centroids))
-    np_probe = min(nprobe, len(centroids))
     normalize = metric == "cosine"
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def probes(vecs: pd.Series) -> pd.Series:
-        cents = cb.value
-        x = np.array([list(v) for v in vecs], dtype=np.float64)
-        if normalize:
-            norms = np.linalg.norm(x, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            x = x / norms
-        sims = x @ cents.T
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :np_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
+    probes = _probes_udf(cb, min(nprobe, len(centroids)), normalize)
 
     score_col = "cosine" if normalize else "dot"
     score_fn = cosine_sim if normalize else dot_sim
@@ -390,7 +396,7 @@ def pq_encode(corpus: DataFrame, codebooks) -> DataFrame:
     def encode(vecs: pd.Series) -> pd.Series:
         books = cb.value  # (m, k, d)
         m_sub, _k, d = books.shape
-        x = np.array([list(v) for v in vecs], dtype=np.float64)
+        x = _vectors(vecs, normalize=False)
         codes = np.empty((len(x), m_sub), dtype=np.int32)
         for j in range(m_sub):
             sub = x[:, j * d : (j + 1) * d]                    # (N, d)
@@ -448,15 +454,7 @@ def ivf_pq_topk(
     spark = corpus.sparkSession
     cents_b = spark.sparkContext.broadcast(np.asarray(centroids))
     books_b = spark.sparkContext.broadcast(np.asarray(codebooks))
-    np_probe = min(nprobe, len(centroids))
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def probes(vecs: pd.Series) -> pd.Series:
-        cents = cents_b.value
-        x = np.array([list(v) for v in vecs], dtype=np.float64)
-        sims = x @ cents.T
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :np_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
+    probes = _probes_udf(cents_b, min(nprobe, len(centroids)), normalize=False)
 
     from pyspark.sql.types import DoubleType
 
@@ -464,7 +462,7 @@ def ivf_pq_topk(
     def adc_lut(vecs: pd.Series) -> pd.Series:
         books = books_b.value  # (m, k, d)
         m_sub, kk, d = books.shape
-        x = np.array([list(v) for v in vecs], dtype=np.float64)
+        x = _vectors(vecs, normalize=False)
         out = np.empty((len(x), m_sub * kk), dtype=np.float64)
         for j in range(m_sub):
             sub = x[:, j * d : (j + 1) * d]

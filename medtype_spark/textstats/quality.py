@@ -32,6 +32,7 @@ BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def tokens(col: Column) -> Column:
+    """Whitespace tokens of a string Column, empty tokens dropped."""
     return F.filter(F.split(F.trim(col), r"\s+"), lambda t: t != "")
 
 

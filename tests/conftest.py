@@ -1,30 +1,14 @@
 import pytest
-from pyspark.sql import SparkSession
 
-from medtype_spark.session import DAEMON_MODULE, export_package_root
+from medtype_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    # the shipped worker path: get_spark's preloading daemon, which also
-    # stops every task from re-reading pyspark.zip's directory
-    export_package_root()
-    s = (
-        SparkSession.builder.appName("medtype_spark_tests")
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        # get_spark's plan shape: AQE may coalesce persisted plans
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.icu.caseMappings.enabled", "false")
-        .config("spark.python.unix.domain.socket.enabled", "false")
-        .config("spark.python.authenticate.socketTimeout", "2s")
-        .config("spark.python.daemon.module", DAEMON_MODULE)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
+    # the shipped session config, at 4 threads, 8 shuffle partitions and
+    # a 4g heap
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_DRIVER_MEM", "4g")
+        s = get_spark("medtype_spark_tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()

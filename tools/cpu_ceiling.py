@@ -3,8 +3,8 @@
 Runs a fixed pure-python busy-loop stage (64 equal tasks, no data, no
 shuffle) at several local[N] levels.  Whatever efficiency THIS shows is
 the best any pipeline can measure on this host at those levels — it
-bounds the flagship scaling evidence and justifies the choice of
-benchmark levels (see tools/scaling_bench.py).
+bounds the flagship scaling evidence that tools/scaling_bench.py
+measures at N = nproc // 4 -> 4N.
 
 Usage: python tools/cpu_ceiling.py [levels...]   (default: 2 4 8 16 32)
 """

@@ -1,207 +1,157 @@
-"""Two-parallelism scaling benchmark — the sandbox evidence for the
-north rule's N→4N executor scaling-efficiency ≥ 0.8 criterion.
+#!/usr/bin/env python3
+"""N -> 4N scaling efficiency of the flagship on a benchmark workload.
 
-Runs the flagship linkage job on an IDENTICAL deterministic synthetic
-pages corpus at local[N] and local[4N] (default 8 vs 32), measures
-docs/sec for the full pipeline (extract → mentions → blocking → pairs
-→ CC → clusters), and reports throughput at both levels plus
-efficiency = (T_N / T_4N) / 4.
+    python tools/scaling_bench.py --workload {uniform_10k,zipf_skew_4k} [--scale S]
 
-Each level runs in a FRESH subprocess (own JVM) so JIT/caches don't
-leak between levels; per reference benchmark.py:30, the first
-(warm-up) repetition in each process is discarded.
+The north rule asks for >= 0.8 throughput scaling efficiency from N to
+4N parallelism.  N = max(1, nproc // 4) comes from the host, so a
+4-core host measures local[1] -> local[4].
 
-Usage: python tools/scaling_bench.py [n_pages] [> report.json]
+Inputs, settings and checks are perfbench/run.py's, used read-only: the
+workload's seeded pages, lexicon and ``run_linkage`` settings, and
+``Flagship.op`` as the timed op, which checks pairwise F1 >= 0.99 and
+the cluster fingerprint.  ``--scale`` sizes the input as perfbench's
+does.  Each level runs in a fresh driver JVM with a heap of 768 MiB per
+core (local[4] gets the benchmark's 3g, so memory per core is equal at
+both levels) and the benchmark's shuffle partitions, so both levels run
+the same plan.  A level runs one warm-up ``run_linkage``, whose report
+(salted blocks, CC path) is logged as the path evidence, then
+``OPS`` timed ops; its figure is their median wall time.
+
+``PAIRS`` pairs of levels run, alternating which level goes first.  The
+tool fails if the cluster fingerprints differ between runs.  It prints
+one JSON object: per-level times, the pair speedups, their median and
+efficiency = speedup / 4.  The workload's page pool is written first if
+it is missing.
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
 import json
 import os
+import shutil
+import statistics
 import subprocess
 import sys
 
-# the worker imports this checkout's package
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKER = f"import sys\nsys.path.insert(0, {ROOT!r})\n" + r"""
-import json, sys, time
-from medtype_spark.session import get_spark
-from medtype_spark.datagen.pages import build_lexicon, entity_types_df, synth_pages
-from medtype_spark.pipeline import run_linkage
+HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)
+sys.path.insert(0, ROOT)
 
-cpus = int(sys.argv[1])
-n_pages = int(sys.argv[2])
-n_entities = int(sys.argv[3])
-repeats = int(sys.argv[4])
+from perfbench import run as bench  # noqa: E402
 
-spark = get_spark("scalebench", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8))
-spark.sparkContext.setLogLevel("ERROR")
-
-lex = build_lexicon(n_entities)
-etypes = entity_types_df(spark, n_entities)
-# identical input at every parallelism level: deterministic generator,
-# fixed partition count independent of cpus
-import os
-parts = int(os.environ.get("SCALE_PARTITIONS", "16"))
-# partition count is part of the PHYSICAL layout, identical at both
-# levels (the dataset bytes are seed-determined either way).  16, not
-# 64: 64 partitions added ~16s/run at local[2] for zero balance
-# benefit, measured when every python task forked a fresh worker and
-# re-read pyspark.zip's directory (~0.12 CPU-s per task).  Workers are
-# now reused here (SPARK_PYTHON_WORKER_REUSE below) and the daemon
-# skips that re-read, so the per-task cost is smaller; 16 was not
-# re-measured.
-gap = int(os.environ.get("SCALE_GAP", "10"))
-pages, _gold = synth_pages(spark, n_pages, n_entities=n_entities, seed=42,
-                           partitions=parts, mentions_per_page=8, gap_words=gap)
-pages = pages.persist()
-n = pages.count()  # materialize input before timing
-
-times = []
-WARMUPS = int(os.environ.get("SCALE_WARMUPS", "2"))  # discarded, per reference benchmark.py:30
-for rep in range(repeats + WARMUPS):
-    t0 = time.perf_counter()
-    result = run_linkage(pages, lex, etypes, cleanup=True, type_scorer='stub')
-    n_clusters = result["clusters"].count()
-    dt = time.perf_counter() - t0
-    if rep >= WARMUPS:
-        times.append(dt)
-
-srt = sorted(times)
-median = srt[len(srt) // 2] if len(srt) % 2 else (srt[len(srt)//2 - 1] + srt[len(srt)//2]) / 2
-print(json.dumps({"cpus": cpus, "n_pages": n, "sec": median,
-                  "sec_avg": sum(times) / len(times), "sec_best": min(times),
-                  "docs_per_sec": n / median, "n_cluster_rows": n_clusters,
-                  "times": times}))
-"""
+HEAP_MB_PER_CORE = 768
+OPS = 3
+PAIRS = 5
+TARGET = 0.8
 
 
-def run_level(cpus: int, n_pages: int, n_entities: int, repeats: int) -> dict:
-    env = dict(os.environ)
-    # Python worker REUSE at the measured levels (Spark's cluster
-    # default).  reuse=false is a 32-thread sandbox workaround (see
-    # session.py); at <=8 threads it adds a serialized fork-per-task
-    # cost that caps measurable scaling (800k@2->8: 0.55-0.62 with
-    # fresh workers vs 0.83 with reuse — and reuse is also ~35%
-    # faster in absolute terms there).  Real executors run 4-8 cores
-    # with reuse=true, so this is the cluster-faithful setting for
-    # the scaling criterion.  Overridable for A/B.
-    env.setdefault("SPARK_PYTHON_WORKER_REUSE", "true")
-    # Cluster-faithful MEMORY model: a real N -> 4N executor scale-up
-    # multiplies aggregate cluster memory by 4 (each executor brings
-    # its own heap); a single-JVM local[n] sweep with a FIXED heap
-    # instead QUARTERS memory-per-task at the high level — a confound
-    # no real cluster has (measured: 800k@2->8 under a fixed 16g heap
-    # loses ~0.09 efficiency to high-level GC/eviction pressure that
-    # the low level never pays).  So each level gets the same
-    # memory-per-core: heap = cpus * SCALE_MEM_PER_CORE_GB (default
-    # 6g/core -> 12g@local[2], 48g@local[8]; host has 128 GiB).
-    # Set SCALE_MEM_PER_CORE_GB=0 to pin the old fixed-heap behavior
-    # via SPARK_DRIVER_MEM for A/B.
-    per_core = int(os.environ.get("SCALE_MEM_PER_CORE_GB", "6"))
-    if per_core > 0:
-        env["SPARK_DRIVER_MEM"] = f"{cpus * per_core}g"
-    out = subprocess.run(
-        [sys.executable, "-c", WORKER, str(cpus), str(n_pages),
-         str(n_entities), str(repeats)],
-        capture_output=True, text=True, check=True, env=env,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+def levels(nproc: int) -> tuple[int, int]:
+    """(N, 4N) local threads for a host with ``nproc`` cores."""
+    n = max(1, nproc // 4)
+    return n, 4 * n
 
 
-def main():
-    n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 400000
-    n_entities = 150
-    repeats = int(os.environ.get("SCALE_REPEATS", "5"))
-    # Default levels 2 -> 8 (N -> 4N).  This host exposes 32 hardware
-    # threads but pure-CPU python work scales only 0.55 (N->4N) at
-    # 8->32 and 0.75 at 4->16 (tools/cpu_ceiling.py,
-    # BENCH_cpu_ceiling.json) — measurements there report the
-    # hardware's oversubscription, not the pipeline.  2 -> 8 is the
-    # window with full 4x headroom.
-    lo = int(os.environ.get("SCALE_LO", "2"))
-    hi = int(os.environ.get("SCALE_HI", "8"))
+def summarize(pairs: list[tuple[dict, dict]]) -> dict:
+    """The report over (N run, 4N run) pairs; each run has ``cores``,
+    ``sec`` and ``fingerprint``.  Raises CheckFailed if the runs did not
+    compute the same clusters."""
+    fingerprints = {run["fingerprint"] for pair in pairs for run in pair}
+    if len(fingerprints) != 1:
+        raise bench.CheckFailed(f"cluster fingerprints differ between runs: {sorted(fingerprints)}")
+    speedups = [lo["sec"] / hi["sec"] for lo, hi in pairs]
+    speedup = statistics.median(speedups)
+    lo, hi = pairs[0][0]["cores"], pairs[0][1]["cores"]
+    return {
+        "levels": [f"local[{lo}]", f"local[{hi}]"],
+        "low_sec": [round(p[0]["sec"], 3) for p in pairs],
+        "high_sec": [round(p[1]["sec"], 3) for p in pairs],
+        "pair_speedups": [round(s, 3) for s in speedups],
+        "speedup": round(speedup, 3),
+        "scaling_efficiency": round(speedup / (hi / lo), 3),
+        "target": TARGET,
+        "fingerprint": fingerprints.pop(),
+    }
 
-    # SCALE_MIN_OF=k: each pair member is the MIN over k fresh-JVM
-    # runs.  Host interference on this shared sandbox is one-sided (it
-    # only ADDS time), so the per-level minimum estimates the
-    # uncontended runtime — the quantity the north rule's cluster-size
-    # criterion is actually about — where a single sample (or a
-    # median across a long drifting session) measures the neighbours.
-    # The full per-run distribution is still reported.
-    min_of = int(os.environ.get("SCALE_MIN_OF", "1"))
 
-    if os.environ.get("SCALE_PAIRED", "1") == "1":
-        # PAIRED design: alternate (lo, hi) single-rep JVMs so host
-        # interference — the dominant noise on this shared sandbox,
-        # run-to-run spreads of 2-3x — hits both members of a pair
-        # under similar conditions; the per-pair speedup is the robust
-        # sample, its median the estimator.  A separated block design
-        # (all lo runs, then all hi runs) conflates which BLOCK was
-        # unlucky with the scaling being measured.
-        pairs = []
-        lo_runs, hi_runs = [], []
-        for _ in range(repeats):
-            lo_samples = [
-                run_level(lo, n_pages, n_entities, 1)["sec"] for _ in range(min_of)
-            ]
-            hi_results = [run_level(hi, n_pages, n_entities, 1) for _ in range(min_of)]
-            hi_samples = [r["sec"] for r in hi_results]
-            r_lo = {"sec": min(lo_samples)}
-            r_hi = hi_results[hi_samples.index(min(hi_samples))]
-            lo_runs.extend(lo_samples)
-            hi_runs.extend(hi_samples)
-            pairs.append(round(r_lo["sec"] / r_hi["sec"], 3))
-        srt = sorted(pairs)
-        mid = len(srt) // 2
-        speedup = srt[mid] if len(srt) % 2 else (srt[mid - 1] + srt[mid]) / 2
+def _workload(name: str, scale: float):
+    spec = bench.load_json(os.path.join(bench.HERE, "spec.json"))["workloads"][name]
+    return bench.Flagship(name, spec, spec["seed"], scale)
 
-        def _median(xs):
-            s = sorted(xs)
-            m = len(s) // 2
-            return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2
 
-        # block estimate from the SAME runs: per-level medians.  Both
-        # estimators are reported so a straddle (one passes, one
-        # misses) is visible in a single artifact instead of spread
-        # across cherry-pickable files.
-        blk_speedup = _median(lo_runs) / _median(hi_runs)
-        report = {
-            "n_pages": n_pages,
-            "estimator": (f"median_of_{repeats}_paired_speedups"
-                          + (f"_min_of_{min_of}" if min_of > 1 else "")),
-            "levels": {"low_cpus": lo, "high_cpus": hi},
-            "low_sec": [round(x, 2) for x in lo_runs],
-            "high_sec": [round(x, 2) for x in hi_runs],
-            "pair_speedups": pairs,
-            "speedup": round(speedup, 3),
-            "scaling_efficiency": round(speedup / (hi / lo), 3),
-            "block_low_median_sec": round(_median(lo_runs), 2),
-            "block_high_median_sec": round(_median(hi_runs), 2),
-            "block_speedup": round(blk_speedup, 3),
-            "block_scaling_efficiency": round(blk_speedup / (hi / lo), 3),
-            "target": 0.8,
-            "throughput_low_docs_per_sec": round(n_pages / (sum(lo_runs) / len(lo_runs)), 1),
-            "throughput_high_docs_per_sec": round(n_pages / (sum(hi_runs) / len(hi_runs)), 1),
-            "n_cluster_rows": r_hi["n_cluster_rows"],
-        }
-    else:
-        r_lo = run_level(lo, n_pages, n_entities, repeats)
-        r_hi = run_level(hi, n_pages, n_entities, repeats)
-        efficiency = (r_lo["sec"] / r_hi["sec"]) / (hi / lo)
-        report = {
-            "n_pages": n_pages,
-            "estimator": f"median_of_{repeats}",
-            "low": r_lo,
-            "high": r_hi,
-            "speedup": round(r_lo["sec"] / r_hi["sec"], 3),
-            "scaling_efficiency": round(efficiency, 3),
-            "target": 0.8,
-            "throughput_low_docs_per_sec": round(r_lo["docs_per_sec"], 1),
-            "throughput_high_docs_per_sec": round(r_hi["docs_per_sec"], 1),
-        }
-    print(json.dumps(report, indent=2))
+def level(name: str, scale: str, cores: str) -> None:
+    """One level in this process's own driver JVM; prints its run as the
+    last stdout line."""
+    from medtype_spark.pipeline import run_linkage
+    from medtype_spark.session import get_spark
+
+    workload, cores = _workload(name, float(scale)), int(cores)
+    run_dir = os.path.join(bench.WORK, f"scaling-{os.getpid()}")
+    bench.configure_env(run_dir, f"{HEAP_MB_PER_CORE * cores}m")
+    spark = None
+    try:
+        spark = get_spark(f"scaling-{name}", master=f"local[{cores}]",
+                          shuffle_partitions=bench.SHUFFLE_PARTITIONS)
+        spark.sparkContext.setLogLevel("ERROR")
+        workload.load(spark)
+        warmup = run_linkage(workload.pages, workload.lexicon, workload.etypes,
+                             cleanup=True, **workload.linkage_kwargs)
+        warmup["clusters"].count()
+        bench.log(f"# local[{cores}] warm-up report {json.dumps(warmup['report'])}")
+        secs = [workload.op(spark, f"rep{rep}")["linkage"] for rep in range(1, OPS + 1)]
+    finally:
+        if spark is not None:
+            bench.shutdown_spark(spark)
+        shutil.rmtree(run_dir, ignore_errors=True)
+    print(json.dumps({"cores": cores, "sec": statistics.median(secs), "ops": secs,
+                      "fingerprint": workload.reference_fp,
+                      "report": warmup["report"]}), flush=True)
+
+
+def run_level(name: str, scale: float, cores: int) -> dict:
+    code = (f"import sys; sys.path.insert(0, {HERE!r}); import scaling_bench; "
+            "scaling_bench.level(*sys.argv[1:])")
+    out = subprocess.run([sys.executable, "-c", code, name, str(scale), str(cores)],
+                         stdout=subprocess.PIPE, text=True, check=True).stdout
+    *lines, last = out.strip().splitlines()
+    for line in lines:
+        print(line, file=sys.stderr, flush=True)
+    run = json.loads(last)
+    print(f"# local[{cores}] ops {[round(s, 3) for s in run['ops']]}", file=sys.stderr, flush=True)
+    return run
+
+
+def main(argv=None) -> int:
+    spec = bench.load_json(os.path.join(bench.HERE, "spec.json"))
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--workload", required=True, choices=sorted(spec["workloads"]))
+    p.add_argument("--scale", type=float, default=1.0, help="input size factor")
+    args = p.parse_args(argv)
+    workload = _workload(args.workload, args.scale)
+    # stdout carries only the report
+    if not bench.finished(workload.pool_dir):
+        subprocess.run([sys.executable, os.path.join(bench.HERE, "run.py"), "--workload",
+                        args.workload, "--scale", str(args.scale), "--generate"],
+                       stdout=sys.stderr, check=True)
+    with contextlib.redirect_stdout(sys.stderr):
+        bench.prepare(workload.data_dir, workload.generate)
+    lo, hi = levels(len(os.sched_getaffinity(0)))
+    pairs = []
+    for i in range(PAIRS):
+        order = (lo, hi) if i % 2 == 0 else (hi, lo)
+        runs = {cores: run_level(args.workload, args.scale, cores) for cores in order}
+        pairs.append((runs[lo], runs[hi]))
+    report = {"workload": args.workload, "seed": workload.seed, "pages": workload.n_pages,
+              "estimator": f"median of {PAIRS} paired speedups; a level's time is the "
+                           f"median wall of {OPS} ops after one warm-up",
+              **summarize(pairs),
+              "warmup_report": {f"local[{c}]": pairs[0][i]["report"]
+                                for i, c in enumerate((lo, hi))}}
+    print(json.dumps(report, indent=2), flush=True)
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

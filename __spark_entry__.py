@@ -44,7 +44,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
     lex = build_lexicon(30)
     etypes = entity_types_df(spark, 30)
-    result = run_linkage(pages, lex, etypes, hot_threshold=50, target_cell=25)
+    # cleanup: release the run's cached intermediates, so only the
+    # cluster table's own checkpoint outlives the call
+    result = run_linkage(pages, lex, etypes, hot_threshold=50, target_cell=25, cleanup=True)
     return result["clusters"]
 
 

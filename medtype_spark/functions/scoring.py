@@ -35,8 +35,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
+
+from medtype_spark.session import live_pandas_udf
 
 # The 24 coarse semantic types of /root/reference/config/type2id.json.
 COARSE_TYPES = [
@@ -139,7 +140,7 @@ def stub_types(texts: pd.Series) -> list[list[str]]:
     return out
 
 
-@pandas_udf(ArrayType(StringType()))
+@live_pandas_udf(ArrayType(StringType()))
 def stub_type_scorer_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     """mention+context string → predicted coarse-type set (array).
 

@@ -25,8 +25,9 @@ import re
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from medtype_spark.session import live_pandas_udf
 
 
 # --- pure-Python reference semantics (used by tests as the oracle) -----
@@ -66,12 +67,12 @@ def clean_text_pandas(s: pd.Series) -> pd.Series:
     return out
 
 
-@pandas_udf(StringType())
+@live_pandas_udf(StringType())
 def clean_text_udf(s: pd.Series) -> pd.Series:
     return clean_text_pandas(s)
 
 
-@pandas_udf(StringType())
+@live_pandas_udf(StringType())
 def clean_collapse_udf(s: pd.Series) -> pd.Series:
     """clean_text then collapse space runs — the reference's full
     normalization chain (server helper.py:264-288, clean_text followed

@@ -22,8 +22,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
+
+from medtype_spark.session import live_pandas_udf
 
 
 def _jaro(s1: str, s2: str) -> float:
@@ -212,7 +213,7 @@ def batch_jaro_winkler_bucketed(av, bv) -> np.ndarray:
     return out
 
 
-@pandas_udf(DoubleType())
+@live_pandas_udf(DoubleType())
 def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     av = a.fillna("").to_numpy()
     bv = b.fillna("").to_numpy()

@@ -32,7 +32,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 from pyspark.storagelevel import StorageLevel
 
@@ -42,9 +41,10 @@ from medtype_spark.operators.cc import connected_components
 from medtype_spark.operators.mentions import fused_mention_scan, normalize_form_py
 from medtype_spark.operators.pairs import score_pairs
 from medtype_spark.operators.typefilter import filter_candidates
+from medtype_spark.session import live_pandas_udf
 
 
-@pandas_udf(StringType())
+@live_pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """Extract body text from page html, byte-identical per url.
 

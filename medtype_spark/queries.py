@@ -1391,7 +1391,12 @@ def q67_ivf_topk(spark, sf_dir):
     oracle replays assignment, probing, and ranking from scratch.  The
     float/cosine production path keeps its recall pytest
     (test_neardup.py) against brute force."""
-    from medtype_spark.similarity.knn import ivf_pq_topk, ivf_topk, md5_centroids
+    from medtype_spark.similarity.knn import (
+        ivf_pq_topk,
+        ivf_topk,
+        md5_centroids,
+        md5_pq_codebooks,
+    )
 
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -1400,37 +1405,21 @@ def q67_ivf_topk(spark, sf_dir):
             lambda x: F.floor(x.cast("double") * 1000).cast("double"),
         ).alias("embedding"),
     )
-    queries = emb.where(F.col("vec_id") % 23 == 0)
-    ivf = ivf_topk(
-        emb,
-        queries,
-        dim=64,
-        k=3,
-        nprobe=2,
-        query_id_col="vec_id",
-        centroids=md5_centroids(64, 16, seed=7),
-        metric="dot",
-    ).select(
+    queries = emb.where(F.col("vec_id") % 23 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    cents = md5_centroids(64, 16, seed=7)
+    ivf = ivf_topk(emb, queries, cents, k=3, nprobe=2, metric="dot").select(
         F.lit("ivf").alias("kind"),
         "query_id", "rank", "vec_id",
         F.col("dot").cast("long").alias("score"),
     )
     # PQ arm: same coarse quantizer (shared cells/probes), ADC re-rank
-    # over m=8 sub-space codes instead of the exact dot — the IVF-PQ
-    # composition (`similarity/knn.py:ivf_pq_topk`), every LUT entry
-    # and ADC sum an exact integer.
-    pq = ivf_pq_topk(
-        emb,
-        queries,
-        dim=64,
-        k=3,
-        nprobe=2,
-        m=8,
-        k_codes=16,
-        query_id_col="vec_id",
-        centroids=md5_centroids(64, 16, seed=7),
-        seed=7,
-    ).select(
+    # over m=8 sub-space codes of 16 codewords instead of the exact dot
+    # — the IVF-PQ composition (`similarity/knn.py:ivf_pq_topk`), every
+    # LUT entry and ADC sum an exact integer.
+    books = md5_pq_codebooks(64, 8, 16, seed=7)
+    pq = ivf_pq_topk(emb, queries, cents, books, k=3, nprobe=2).select(
         F.lit("pq").alias("kind"),
         "query_id", "rank", "vec_id",
         F.col("adc").cast("long").alias("score"),
@@ -1443,7 +1432,7 @@ def q67_ivf_topk(spark, sf_dir):
 
     sd = semantic_dedup(
         emb,
-        md5_centroids(64, 16, seed=7),
+        cents,
         threshold=350_000.0,
         metric="dot",
     ).select(

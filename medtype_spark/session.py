@@ -10,9 +10,11 @@ flat regardless of partition size.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.functions import pandas_udf
 
 from medtype_spark import ROOT
 
@@ -27,6 +29,25 @@ def export_package_root() -> None:
     pp = os.environ.get("PYTHONPATH", "")
     if ROOT not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = ROOT + (os.pathsep + pp if pp else "")
+
+
+def live_pandas_udf(return_type):
+    """``@pandas_udf(return_type)`` for a module-level function, built
+    anew at each call so that it binds to the live SparkContext.
+
+    PySpark keeps a UDF's JVM function together with the accumulator of
+    the first context it ran in; a UDF built once at import keeps
+    reporting to that context after ``spark.stop()`` and ``get_spark()``,
+    and every task then logs ``Failed to update accumulator``."""
+
+    def wrap(fn):
+        @functools.wraps(fn)
+        def call(*cols):
+            return pandas_udf(fn, return_type)(*cols)
+
+        return call
+
+    return wrap
 
 
 def get_spark(

@@ -1,28 +1,32 @@
 """Approximate & exact nearest-neighbour search over embedding columns.
 
 The Spark-native analogue of ScispaCy's alias-embedding kNN candidate
-generator (entity_linkers.py:25-46).  Two strategies:
+generator (entity_linkers.py:25-46).  Four strategies:
 
 - ``brute_force_topk``: queries × corpus cosine ranking.  The query
   side is broadcast (queries are few); scoring is JVM-side zip_with /
-  aggregate, ranking is a window per query.  Correct baseline and the
-  within-block scorer.
+  aggregate.  Correct baseline and the within-block scorer.
+- ``ivf_topk``: inverted-file probe lists.  A query is scored exactly
+  against the corpus rows of its ``nprobe`` nearest cells only.
+- ``ivf_pq_topk``: the same probes, ranked by asymmetric distance over
+  product-quantization codes instead of the exact score.
 - ``lsh_cosine_pairs``: random-hyperplane LSH — bucket on sign bits
   of H seeded projections, candidate join within buckets, exact
-  re-rank.  The scale path: candidates per vector ∝ bucket size,
-  not corpus size.
+  re-rank.  The scale path for near-duplicate PAIRS: candidates per
+  vector ∝ bucket size, not corpus size.
+
+The three top-k searches share one contract.  The corpus is (vec_id,
+embedding) and the queries are (query_id, embedding).  Quantizers are
+arguments: ``md5_centroids`` / ``md5_pq_codebooks`` build the integer
+fixtures the DuckDB oracle re-derives, ``train_ivf_centroids`` /
+``train_pq_codebooks`` run k-means on a deterministic sample.  Each
+returns (query_id, rank, vec_id, <score>) with ranks 1..k per query,
+ordered by score then vec_id, self matches excluded.
 
 Plane components are md5-derived integers baked into the plan as
 LITERAL arrays: zero per-row hashing at runtime (the dot against a
 constant vector is pure whole-stage-codegen arithmetic), identical on
 every executor, and reproducible by the DuckDB oracle (q61).
-
-Skew guard (``lsh_cosine_pairs``): bucket population grows linearly
-with the corpus at fixed n_planes, so within-bucket pair generation is
-routed through ``operators.blocking.block_pairs`` — buckets beyond
-``hot_threshold`` members are salted onto a 2-D cell grid exactly like
-hot blocking keys, so no task ever materializes a whole bucket's
-quadratic.
 """
 
 from __future__ import annotations
@@ -33,20 +37,16 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
 from medtype_spark.functions.scoring import md5_bucket
 from medtype_spark.operators.pairs import cosine_sim, dot as dot_sim
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbours for each query vector over
     (vec_id, embedding) frames.
 
@@ -78,13 +78,19 @@ def brute_force_topk(
         F.col("vec_id"),
         cos.alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
+    return _top_k(scored, "cosine", k, ascending=False)
+
+
+def _top_k(scored: DataFrame, score: str, k: int, ascending: bool) -> DataFrame:
+    """The ``k`` best (query_id, vec_id, ``score``) rows of each query,
+    best first by ``score`` (``ascending`` for distances), ties broken
+    by vec_id; adds ``rank`` 1..k."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
+        .select("query_id", "rank", "vec_id", score)
     )
 
 
@@ -182,13 +188,12 @@ def lsh_cosine_pairs(
 
 
 # ----------------------------------------------------------------------
-# IVF (inverted-file) ANN: k-means coarse quantizer + probe lists — the
+# IVF (inverted-file) ANN: a coarse quantizer + probe lists — the
 # second scale path next to hyperplane LSH.  The centroid model is
-# dimension-sized (n_centroids × dim), so it trains driver-side on a
-# deterministic sample and broadcasts; corpus assignment is one
-# Arrow-batched argmax pass; a query touches only its nprobe nearest
-# centroids' posting lists (candidates ∝ nprobe/n_centroids of the
-# corpus, never all of it).
+# dimension-sized (n_centroids × dim), so it is built driver-side and
+# broadcast; corpus assignment is one Arrow-batched argmax pass; a
+# query touches only its nprobe nearest centroids' posting lists
+# (candidates ∝ nprobe/n_centroids of the corpus, never all of it).
 # ----------------------------------------------------------------------
 
 
@@ -207,11 +212,7 @@ def _stratified_sample(corpus: DataFrame) -> np.ndarray:
     return np.array([list(v) for v in sample["embedding"]], dtype=np.float64)
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    dim: int,
-    n_centroids: int = 64,
-):
+def train_ivf_centroids(corpus: DataFrame, n_centroids: int) -> np.ndarray:
     """Lloyd k-means (10 iterations, seed 42) on a DETERMINISTIC
     driver-side sample of (vec_id, embedding).
 
@@ -251,20 +252,7 @@ def _vectors(vecs: pd.Series, normalize: bool) -> np.ndarray:
     return _unit_rows(x) if normalize else x
 
 
-def _probes_udf(centroids_b, nprobe: int, normalize: bool):
-    """pandas UDF: each vector's ``nprobe`` most similar centroid ids,
-    best first (stable argsort, so ties go to the lower id)."""
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def probes(vecs: pd.Series) -> pd.Series:
-        sims = _vectors(vecs, normalize) @ centroids_b.value.T
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    return probes
-
-
-def md5_centroids(dim: int, n_centroids: int, seed: int = 7) -> "np.ndarray":
+def md5_centroids(dim: int, n_centroids: int, seed: int = 7) -> np.ndarray:
     """Deterministic integer centroid grid for the driver-checked IVF
     fixture: component j of centroid c = md5_bucket('ivf{seed}:c:j',
     1001) - 500 — the same engine-portable md5 recipe as the LSH
@@ -304,15 +292,42 @@ def ivf_assign(
     return corpus.withColumn(out_col, cell(F.col("embedding")))
 
 
+def _probe_join(
+    assigned: DataFrame,
+    queries: DataFrame,
+    centroids,
+    nprobe: int,
+    normalize: bool,
+    query_col: Column,
+) -> DataFrame:
+    """Candidate pairs of the IVF searches.  Each query's ``nprobe``
+    most similar centroid ids (stable argsort, so ties go to the lower
+    id) are exploded and broadcast-joined to the ``ivf_cell`` of the
+    assigned corpus; self matches are dropped.  Each pair carries the
+    query's ``query_id`` and ``query_col``."""
+    cb = assigned.sparkSession.sparkContext.broadcast(np.asarray(centroids))
+    n = min(nprobe, len(centroids))
+
+    @pandas_udf(ArrayType(IntegerType()))
+    def probes(vecs: pd.Series) -> pd.Series:
+        sims = _vectors(vecs, normalize) @ cb.value.T
+        order = np.argsort(-sims, axis=1, kind="stable")[:, :n]
+        return pd.Series([row.astype("int32").tolist() for row in order])
+
+    q = queries.select(
+        "query_id", query_col, F.explode(probes(F.col("embedding"))).alias("_cell")
+    )
+    return assigned.join(
+        F.broadcast(q), assigned["ivf_cell"] == q["_cell"]
+    ).where(F.col("vec_id") != F.col("query_id"))
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_centroids: int = 64,
-    nprobe: int = 4,
-    query_id_col: str = "query_id",
-    centroids=None,
+    centroids,
+    k: int,
+    nprobe: int,
     metric: str = "cosine",
 ) -> DataFrame:
     """Approximate top-k via IVF probe lists: assign the corpus once,
@@ -323,41 +338,20 @@ def ivf_topk(
     normalization and ranks by raw inner product (exact on
     integer-valued vectors — the driver-checked fixture path); score
     column is named after the metric."""
-    if centroids is None:
-        centroids = train_ivf_centroids(corpus, dim, n_centroids)
-    assigned = ivf_assign(corpus, centroids, metric=metric)
-
-    spark = corpus.sparkSession
-    cb = spark.sparkContext.broadcast(np.asarray(centroids))
     normalize = metric == "cosine"
-    probes = _probes_udf(cb, min(nprobe, len(centroids)), normalize)
-
     score_col = "cosine" if normalize else "dot"
     score_fn = cosine_sim if normalize else dot_sim
-    q = queries.select(
-        F.col(query_id_col).alias("_qid"), F.col("embedding").alias("_qvec")
-    ).withColumn("_cell", F.explode(probes(F.col("_qvec"))))
-    joined = assigned.join(
-        F.broadcast(q), assigned["ivf_cell"] == q["_cell"]
-    ).where(F.col("vec_id") != F.col("_qid"))
-    scored = joined.select(
-        F.col("_qid").alias("query_id"),
-        F.col("vec_id"),
-        score_fn(F.col("_qvec"), F.col("embedding")).alias(score_col),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", score_col)
-    )
+    assigned = ivf_assign(corpus, centroids, metric=metric)
+    qvec = F.col("embedding").alias("_qvec")
+    joined = _probe_join(assigned, queries, centroids, nprobe, normalize, qvec)
+    score = score_fn(F.col("_qvec"), F.col("embedding")).alias(score_col)
+    scored = joined.select("query_id", "vec_id", score)
+    return _top_k(scored, score_col, k, ascending=False)
 
 
 # --- IVF-PQ: product-quantized ADC re-rank ------------------------------
 
-def md5_pq_codebooks(
-    dim: int = 64, m: int = 8, k: int = 16, seed: int = 7
-) -> np.ndarray:
+def md5_pq_codebooks(dim: int, m: int, k: int, seed: int = 7) -> np.ndarray:
     """Deterministic integer PQ codebooks, shape (m, k, dim//m).
 
     Component t of codeword c in subspace j =
@@ -380,6 +374,20 @@ def md5_pq_codebooks(
     )
 
 
+def _sq_dists(sub: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """(N, k): ||sub_i - cents_c||² for N sub-vectors and k codewords."""
+    return ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+
+
+def _subspace_dists(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(N, m, k): the squared distance of each row's subspace j to
+    every codeword of codebook j, for (m, k, d) ``books``."""
+    m, _k, d = books.shape
+    return np.stack(
+        [_sq_dists(x[:, j * d : (j + 1) * d], books[j]) for j in range(m)], axis=1
+    )
+
+
 def pq_encode(corpus: DataFrame, codebooks) -> DataFrame:
     """Product-quantization codes: per subspace j, the index of the
     L2-nearest codeword (Arrow-batched argmin against the broadcast
@@ -394,32 +402,15 @@ def pq_encode(corpus: DataFrame, codebooks) -> DataFrame:
 
     @pandas_udf(ArrayType(IntegerType()))
     def encode(vecs: pd.Series) -> pd.Series:
-        books = cb.value  # (m, k, d)
-        m_sub, _k, d = books.shape
-        x = _vectors(vecs, normalize=False)
-        codes = np.empty((len(x), m_sub), dtype=np.int32)
-        for j in range(m_sub):
-            sub = x[:, j * d : (j + 1) * d]                    # (N, d)
-            # (N, k): ||sub - C_jc||^2 for every codeword
-            dists = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = np.argmin(dists, axis=1)             # first min
+        dists = _subspace_dists(_vectors(vecs, normalize=False), cb.value)
+        codes = dists.argmin(axis=2).astype(np.int32)  # first min
         return pd.Series([row.tolist() for row in codes])
 
     return corpus.withColumn("pq_code", encode(F.col("embedding")))
 
 
 def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int = 64,
-    k: int = 3,
-    nprobe: int = 2,
-    m: int = 8,
-    k_codes: int = 16,
-    query_id_col: str = "vec_id",
-    centroids=None,
-    codebooks=None,
-    seed: int = 7,
+    corpus: DataFrame, queries: DataFrame, centroids, codebooks, k: int, nprobe: int
 ) -> DataFrame:
     """IVF-PQ approximate top-k — the standard 100 TB ANN shape.
 
@@ -441,90 +432,53 @@ def ivf_pq_topk(
     LUT entry and every ADC sum is an exact integer, so rankings are
     bit-portable (ties break on ascending ``vec_id``).
 
-    Returns (query_id, rank, vec_id, adc) with rank 1..k by ascending
-    ADC distance.  Without ``centroids`` the coarse quantizer is the 16
-    md5 centroids.
+    Cells are assigned by raw inner product (``metric='dot'``).
+    Returns (query_id, rank, vec_id, adc), rank 1..k by ascending ADC.
     """
-    if centroids is None:
-        centroids = md5_centroids(dim, 16, seed=seed)
-    if codebooks is None:
-        codebooks = md5_pq_codebooks(dim, m, k_codes, seed=seed)
-    assigned = pq_encode(ivf_assign(corpus, centroids, metric="dot"), codebooks)
-
-    spark = corpus.sparkSession
-    cents_b = spark.sparkContext.broadcast(np.asarray(centroids))
-    books_b = spark.sparkContext.broadcast(np.asarray(codebooks))
-    probes = _probes_udf(cents_b, min(nprobe, len(centroids)), normalize=False)
-
-    from pyspark.sql.types import DoubleType
+    books = np.asarray(codebooks)
+    n_codes = books.shape[1]
+    assigned = pq_encode(ivf_assign(corpus, centroids, metric="dot"), books)
+    books_b = corpus.sparkSession.sparkContext.broadcast(books)
 
     @pandas_udf(ArrayType(DoubleType()))
     def adc_lut(vecs: pd.Series) -> pd.Series:
-        books = books_b.value  # (m, k, d)
-        m_sub, kk, d = books.shape
         x = _vectors(vecs, normalize=False)
-        out = np.empty((len(x), m_sub * kk), dtype=np.float64)
-        for j in range(m_sub):
-            sub = x[:, j * d : (j + 1) * d]
-            out[:, j * kk : (j + 1) * kk] = (
-                (sub[:, None, :] - books[j][None, :, :]) ** 2
-            ).sum(axis=2)
-        return pd.Series([row.tolist() for row in out])
+        lut = _subspace_dists(x, books_b.value).reshape(len(x), -1)
+        return pd.Series([row.tolist() for row in lut])
 
-    q = queries.select(
-        F.col(query_id_col).alias("_qid"),
-        F.col("embedding").alias("_qvec"),
-    ).select(
-        "_qid",
-        F.explode(probes(F.col("_qvec"))).alias("_cell"),
-        adc_lut(F.col("_qvec")).alias("_lut"),
+    lut = adc_lut(F.col("embedding")).alias("_lut")
+    joined = _probe_join(
+        assigned, queries, centroids, nprobe, normalize=False, query_col=lut
     )
-    joined = assigned.join(
-        F.broadcast(q), assigned["ivf_cell"] == q["_cell"]
-    ).where(F.col("vec_id") != F.col("_qid"))
     # ADC: sum of m LUT lookups, pure whole-stage-codegen arithmetic.
     # The transform lambda's SECOND parameter is the element index —
     # the one place that pyspark signature is exactly what we want.
     adc = F.aggregate(
         F.transform(
             F.col("pq_code"),
-            lambda c, j: F.element_at(F.col("_lut"), j * k_codes + c + 1),
+            lambda c, j: F.element_at(F.col("_lut"), j * n_codes + c + 1),
         ),
         F.lit(0.0),
         lambda a, x: a + x,
     )
-    scored = joined.select(
-        F.col("_qid").alias("query_id"), F.col("vec_id"), adc.alias("adc")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "adc")
-    )
+    scored = joined.select("query_id", "vec_id", adc.alias("adc"))
+    return _top_k(scored, "adc", k, ascending=True)
 
 
-def train_pq_codebooks(
-    corpus: DataFrame,
-    dim: int,
-    m: int = 8,
-    k: int = 16,
-    seed: int = 42,
-) -> np.ndarray:
-    """Per-subspace Lloyd k-means (10 iterations) on the same
+def train_pq_codebooks(corpus: DataFrame, m: int, k: int) -> np.ndarray:
+    """Per-subspace Lloyd k-means (10 iterations, seed 42) on the same
     deterministic id-hash-stratified driver sample as
     :func:`train_ivf_centroids` — the production PQ path (the md5
     codebooks are the oracle fixture).  Returns (m, k, dim//m)."""
     x = _stratified_sample(corpus)
-    d = dim // m
-    rs = np.random.RandomState(seed)
+    d = x.shape[1] // m
+    rs = np.random.RandomState(42)
     books = np.empty((m, k, d), dtype=np.float64)
     for j in range(m):
         sub = x[:, j * d : (j + 1) * d]
         cents = sub[rs.choice(len(sub), size=min(k, len(sub)), replace=False)]
         for _ in range(10):
-            dists = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = dists.argmin(1)
+            assign = _sq_dists(sub, cents).argmin(1)
             for c in range(len(cents)):
                 members = sub[assign == c]
                 if len(members):

@@ -1,0 +1,86 @@
+"""The benchmark's calls into the library still bind.
+
+``perfbench/`` is the benchmark's own directory and changes only with
+the benchmark, yet it calls ``run_linkage``, ``fused_mention_scan``,
+``block_pairs`` and other library functions directly.  This guard
+parses ``perfbench/*.py`` and binds every call into ``medtype_spark``
+to the function's current signature (the call's positional count and
+keyword names), and checks that each workload's ``linkage`` and
+``datagen`` settings in ``perfbench/spec.json`` are parameters of
+``run_linkage`` and ``synth_pages``.  No Spark is needed.
+"""
+from __future__ import annotations
+
+import ast
+import glob
+import importlib
+import inspect
+import json
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BENCH = os.path.join(ROOT, "perfbench")
+
+# the library functions the benchmark is known to call; the guard fails
+# if the parse stops finding any of them
+EXPECTED = {
+    "run_linkage", "fused_mention_scan", "block_pairs", "connected_components",
+    "jaro_winkler_udf", "evaluate_linkage", "synth_pages", "build_lexicon",
+    "entity_types_df", "get_spark",
+}
+
+
+def _library_calls():
+    """(file, line, function, call node) for every call in perfbench/
+    of a name imported from medtype_spark."""
+    for path in sorted(glob.glob(os.path.join(BENCH, "*.py"))):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        imported = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+                "medtype_spark"
+            ):
+                mod = importlib.import_module(node.module)
+                for alias in node.names:
+                    imported[alias.asname or alias.name] = getattr(mod, alias.name)
+            elif isinstance(node, ast.Import):
+                assert not any(a.name.startswith("medtype_spark") for a in node.names), (
+                    f"{path}:{node.lineno}: module import of the library; "
+                    "extend this guard to follow attribute calls")
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+                fn = imported.get(node.func.id)
+                if callable(fn):
+                    yield os.path.relpath(path, ROOT), node.lineno, fn, node
+
+
+def test_benchmark_calls_bind_to_library_signatures():
+    seen = set()
+    for rel, line, fn, call in _library_calls():
+        seen.add(fn.__name__)
+        n_pos = sum(not isinstance(a, ast.Starred) for a in call.args)
+        names = [kw.arg for kw in call.keywords if kw.arg is not None]
+        # *args / **kwargs may supply any missing argument: bind partially
+        spread = len(names) < len(call.keywords) or n_pos < len(call.args)
+        sig = inspect.signature(fn)
+        bind = sig.bind_partial if spread else sig.bind
+        try:
+            bind(*[None] * n_pos, **dict.fromkeys(names))
+        except TypeError as exc:
+            raise AssertionError(f"{rel}:{line}: {fn.__name__}{sig}: {exc}") from None
+    assert EXPECTED <= seen, sorted(EXPECTED - seen)
+
+
+def test_spec_settings_are_parameters():
+    from medtype_spark.datagen.pages import synth_pages
+    from medtype_spark.pipeline import run_linkage
+
+    with open(os.path.join(BENCH, "spec.json"), encoding="utf-8") as fh:
+        workloads = json.load(fh)["workloads"]
+    assert workloads
+    for section, fn in (("linkage", run_linkage), ("datagen", synth_pages)):
+        params = inspect.signature(fn).parameters
+        for name, spec in workloads.items():
+            unknown = set(spec[section]) - set(params)
+            assert not unknown, f"{name}.{section}: {sorted(unknown)} not in {fn.__name__}"

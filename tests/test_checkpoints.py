@@ -182,3 +182,18 @@ def test_no_cached_rdds_left_behind(spark, tmp_path):
     res["clusters"].collect()
     product = res["clusters"]._jdf.queryExecution().analyzed().rdd().id()
     assert _persistent_rdd_ids(spark) - before == {product}
+
+
+def test_entry_leaves_only_its_product_cached(spark):
+    """The driver's flagship ``entry`` releases the run's cached
+    intermediates (mentions, blocking base, edges) before the queries
+    that follow it: only the cluster table's own local checkpoint
+    stays."""
+    import __spark_entry__
+
+    before = _persistent_rdd_ids(spark)
+    clusters = __spark_entry__.entry(spark)
+    assert clusters.collect()
+    new = _persistent_rdd_ids(spark) - before
+    assert len(new) == 1, new
+    assert new == {clusters._jdf.queryExecution().analyzed().rdd().id()}

@@ -131,7 +131,11 @@ def test_lsh_cosine_pairs_hot_bucket_salted(spark):
 def test_ivf_topk_recall_vs_brute_force(spark):
     """IVF coarse-quantizer ANN: with a healthy nprobe the probed
     candidates must recover ≥0.9 of the exact top-3 neighbour sets."""
-    from medtype_spark.similarity.knn import brute_force_topk, ivf_topk
+    from medtype_spark.similarity.knn import (
+        brute_force_topk,
+        ivf_topk,
+        train_ivf_centroids,
+    )
 
     rng = random.Random(17)
     rows = []
@@ -147,7 +151,7 @@ def test_ivf_topk_recall_vs_brute_force(spark):
         F.col("vec_id").alias("query_id"), "embedding"
     )
 
-    got = ivf_topk(emb, queries, dim=16, k=3, n_centroids=8, nprobe=3)
+    got = ivf_topk(emb, queries, train_ivf_centroids(emb, 8), k=3, nprobe=3)
     want = brute_force_topk(emb, queries, k=3)
     g = {(r["query_id"], r["vec_id"]) for r in got.collect()}
     w = {(r["query_id"], r["vec_id"]) for r in want.collect()}
@@ -167,13 +171,12 @@ def test_ivf_topk_dot_metric_integer_exact(spark):
         for i in range(120)
     ]
     emb = spark.createDataFrame(rows, "vec_id:long, embedding:array<double>")
-    queries = emb.where(F.col("vec_id") % 17 == 0)
+    queries = emb.where(F.col("vec_id") % 17 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
     cents = md5_centroids(16, 8, seed=7)
 
-    got = ivf_topk(
-        emb, queries, dim=16, k=3, nprobe=2, query_id_col="vec_id",
-        centroids=cents, metric="dot",
-    ).collect()
+    got = ivf_topk(emb, queries, cents, k=3, nprobe=2, metric="dot").collect()
     assert got and all(r["dot"] == int(r["dot"]) for r in got)
 
     # exact-integer check: replay assignment/probing/ranking in python
@@ -201,8 +204,7 @@ def test_ivf_topk_dot_metric_integer_exact(spark):
 
     # partition invariance
     again = ivf_topk(
-        emb.repartition(7), queries, dim=16, k=3, nprobe=2,
-        query_id_col="vec_id", centroids=cents, metric="dot",
+        emb.repartition(7), queries, cents, k=3, nprobe=2, metric="dot"
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, again))
 

@@ -273,3 +273,58 @@ def test_generated_classes_stay_cached_across_ops():
     compiles = json.loads(proc.stdout.strip().splitlines()[-1])["compiles"]
     # the first op must compile more classes than the default cache holds
     assert compiles[0] > 100 and compiles[2] <= 10, compiles
+
+
+_UDF_RESTART_SCRIPT = """
+import json
+from pyspark.sql import functions as F
+from medtype_spark.functions.scoring import stub_type_scorer_udf
+from medtype_spark.functions.text import clean_collapse_udf, clean_text_udf
+from medtype_spark.operators.pairs import jaro_winkler_udf
+from medtype_spark.pipeline import extract_pages
+from medtype_spark.session import get_spark
+
+def run(spark):
+    df = spark.createDataFrame(
+        [("martha", "marhta", b"<html><body>a  b|c</body></html>"),
+         ("dixon", "dicksonx", b"<p>x 'y'</p>")],
+        "a string, b string, html binary")
+    out = extract_pages(df).select(
+        jaro_winkler_udf(F.col("a"), F.col("b")).alias("jw"),
+        stub_type_scorer_udf(F.col("a")).alias("types"),
+        clean_text_udf(F.col("extracted_text")).alias("clean"),
+        clean_collapse_udf(F.col("extracted_text")).alias("collapsed"),
+        "extracted_text")
+    return sorted(map(str, out.collect()))
+
+spark = get_spark("udf-restart", master="local[1]")
+before = run(spark)
+spark.stop()
+spark = get_spark("udf-restart", master="local[1]")
+after = run(spark)
+spark.stop()
+print(json.dumps({"same": before == after, "rows": len(after)}))
+"""
+
+
+def test_python_udfs_survive_context_restart():
+    """The library's pandas UDFs bind to the live SparkContext: after
+    ``spark.stop()`` and a fresh ``get_spark()`` they give the same
+    values, and no task reports its accumulator update to the stopped
+    context (Spark logs ``Failed to update accumulator`` when one
+    does).  Runs in its own process so the shared test session is not
+    stopped."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _UDF_RESTART_SCRIPT],
+        cwd=root, capture_output=True, text=True, timeout=600,
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == {"same": True, "rows": 2}
+    assert "Failed to update accumulator" not in proc.stderr

@@ -49,14 +49,13 @@ def test_ivf_pq_matches_python_replay_integer_exact(spark):
     number an exact integer, equal to Spark's output."""
     rows = _int_vecs(120, 16, seed=3)
     emb = spark.createDataFrame(rows, "vec_id:long, embedding:array<double>")
-    queries = emb.where(F.col("vec_id") % 17 == 0)
+    queries = emb.where(F.col("vec_id") % 17 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
     cents = md5_centroids(16, 8, seed=7)
     books = md5_pq_codebooks(dim=16, m=4, k=8, seed=7)
 
-    got = ivf_pq_topk(
-        emb, queries, dim=16, k=3, nprobe=2, m=4, k_codes=8,
-        query_id_col="vec_id", centroids=cents, codebooks=books,
-    ).collect()
+    got = ivf_pq_topk(emb, queries, cents, books, k=3, nprobe=2).collect()
     assert got and all(r["adc"] == int(r["adc"]) for r in got)
 
     vecs = dict(rows)
@@ -124,14 +123,13 @@ def test_trained_pq_recall_vs_exact(spark):
             rows.append((vid, [x + rng.gauss(0, 0.1) for x in base]))
             vid += 1
     emb = spark.createDataFrame(rows, "vec_id:long, embedding:array<double>")
-    queries = emb.where(F.col("vec_id") % 20 == 0)
+    queries = emb.where(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
     cents = md5_centroids(16, 8, seed=7)
-    books = train_pq_codebooks(emb, dim=16, m=8, k=16, seed=42)
+    books = train_pq_codebooks(emb, m=8, k=16)
 
-    got = ivf_pq_topk(
-        emb, queries, dim=16, k=3, nprobe=8, m=8, k_codes=16,
-        query_id_col="vec_id", centroids=cents, codebooks=books,
-    ).collect()
+    got = ivf_pq_topk(emb, queries, cents, books, k=3, nprobe=8).collect()
 
     vecs = dict(rows)
 

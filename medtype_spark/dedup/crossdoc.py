@@ -24,6 +24,9 @@ Scale shape (100 TB):
   stop-phrase grams from BOTH sides if a corpus needs it;
 - everything is JVM-side (split/slice/concat_ws/groupBy) — no Python
   in the hot path, and all decision arithmetic is integer-exact.
+
+Both operators read documents as ``(doc_id, text)``, key their output
+by ``doc_id`` and work on word 8-grams.
 """
 
 from __future__ import annotations
@@ -36,64 +39,63 @@ from pyspark.sql import functions as F
 from medtype_spark.textstats.quality import tokens
 
 
-@lru_cache(maxsize=32)
-def _gram_array(text_col: str, n: int):
-    """Distinct-within-doc word n-gram array Column, built once per
-    (column, n) — r6: column construction is py4j-round-trip-bound on
-    this host; Columns are immutable plan fragments, safe to reuse.
-    sequence(1, sz-n+1) is DESCENDING when sz < n (Spark yields [1, 0],
+@lru_cache(maxsize=1)
+def _gram_array():
+    """Distinct-within-doc word 8-gram array of ``text``, built once —
+    r6: column construction is py4j-round-trip-bound on this host;
+    Columns are immutable plan fragments, safe to reuse.
+    sequence(1, sz-7) is DESCENDING when sz < 8 (Spark yields [1, 0],
     not []), so short docs short-circuit to an empty array."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     grams = F.when(
-        F.size(toks) >= n,
+        F.size(toks) >= 8,
         F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+            F.sequence(F.lit(1), F.size(toks) - 7),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, 8)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     return F.array_distinct(grams)
 
 
-def cross_doc_shared_ngrams(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-) -> DataFrame:
-    """Per-doc cross-document n-gram duplication stats.
+def _distinct_doc_ngrams(df: DataFrame) -> DataFrame:
+    """One row per DISTINCT (doc_id, word 8-gram)."""
+    return df.select(F.col("doc_id"), F.explode(_gram_array()).alias("gram"))
+
+
+def cross_doc_shared_ngrams(df: DataFrame) -> DataFrame:
+    """Per-doc cross-document 8-gram duplication stats.
 
     Returns one row per input doc:
-      - ``n_distinct_ngrams``: distinct word n-grams in the doc;
+      - ``n_distinct_ngrams``: distinct word 8-grams in the doc;
       - ``n_shared_ngrams``: how many of those occur in >= 2 distinct
         docs corpus-wide (the doc itself counts once);
       - ``shared_ngram_ratio``: n_shared / n_distinct rounded to 6dp
-        (0.0 for docs too short to form an n-gram);
+        (0.0 for docs too short to form an 8-gram);
       - ``max_ngram_doc_freq``: document frequency of the doc's most
-        widely shared n-gram (0 when the doc has no n-grams).
+        widely shared 8-gram (0 when the doc has no 8-grams).
 
     Tokens are whitespace-split (``\\s+`` on the trimmed text, empties
     dropped) and kept RAW — duplication is a byte-content question, so
     no case folding.  The HOF lambdas stay single-parameter (pyspark
     binds a second parameter to the element index).
     """
-    # one row per DISTINCT (doc, gram); gram Column cached per (col, n)
-    base = df.select(F.col(id_col))
-    dg = df.select(F.col(id_col), F.explode(_gram_array(text_col, n)).alias("gram"))
+    base = df.select(F.col("doc_id"))
+    dg = _distinct_doc_ngrams(df)
     dfreq = dg.groupBy("gram").agg(F.count(F.lit(1)).alias("doc_freq"))
     per_doc = (
         dg.join(dfreq, "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_distinct_ngrams"),
             F.sum((F.col("doc_freq") >= 2).cast("int")).alias("n_shared_ngrams"),
             F.max("doc_freq").alias("max_ngram_doc_freq"),
         )
     )
-    out = base.join(per_doc, id_col, "left")
+    out = base.join(per_doc, "doc_id", "left")
     n_distinct = F.coalesce(F.col("n_distinct_ngrams"), F.lit(0))
     n_shared = F.coalesce(F.col("n_shared_ngrams"), F.lit(0))
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_distinct.alias("n_distinct_ngrams"),
         n_shared.cast("long").alias("n_shared_ngrams"),
         F.when(n_distinct == 0, F.lit(0.0))
@@ -105,23 +107,9 @@ def cross_doc_shared_ngrams(
     )
 
 
-def _distinct_doc_ngrams(
-    df: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
-    """One row per DISTINCT (doc, word-n-gram); same tokenization and
-    short-doc semantics as cross_doc_shared_ngrams."""
-    return df.select(F.col(id_col), F.explode(_gram_array(text_col, n)).alias("gram"))
-
-
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag corpus docs that share any word
-    n-gram with the benchmark set.
+    8-gram with the benchmark set.
 
     The GPT-3 Appendix-C / PaLM / Llama training-data stage: before
     training, any document overlapping an EVALUATION set at n-gram
@@ -134,17 +122,15 @@ def decontaminate(
     benchmark gram set when it fits (the common case), so the corpus
     is flagged in ONE pass with no corpus-side shuffle at all.
 
-    Returns DataFrame(id_col, contaminated int 0/1) — one row per
+    Returns DataFrame(doc_id, contaminated int 0/1) — one row per
     corpus doc.
     """
-    cg = _distinct_doc_ngrams(corpus, text_col, id_col, n)
-    bg = _distinct_doc_ngrams(benchmark, text_col, id_col, n).select(
-        "gram"
-    ).distinct()
-    hits = cg.join(bg, "gram", "left_semi").select(id_col).distinct()
-    return corpus.select(id_col).join(
-        hits.withColumn("contaminated", F.lit(1)), id_col, "left"
+    cg = _distinct_doc_ngrams(corpus)
+    bg = _distinct_doc_ngrams(benchmark).select("gram").distinct()
+    hits = cg.join(bg, "gram", "left_semi").select("doc_id").distinct()
+    return corpus.select("doc_id").join(
+        hits.withColumn("contaminated", F.lit(1)), "doc_id", "left"
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.coalesce(F.col("contaminated"), F.lit(0)).alias("contaminated"),
     )

@@ -13,21 +13,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def exact_dedup(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Map each row to its duplicate-group canonical id (min id).
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Map each ``(doc_id, text)`` row to its duplicate-group canonical
+    id (min ``doc_id`` over rows with the same ``text``).
 
     Returns the input plus (content_hash, canonical_id, group_size,
     is_canonical) — keep ``is_canonical`` rows to dedup.
     """
-    hashed = df.withColumn("content_hash", F.md5(F.col(content_col)))
+    hashed = df.withColumn("content_hash", F.md5(F.col("text")))
     groups = hashed.groupBy("content_hash").agg(
-        F.min(id_col).alias("canonical_id"),
+        F.min("doc_id").alias("canonical_id"),
         F.count(F.lit(1)).alias("group_size"),
     )
     return hashed.join(groups, "content_hash").withColumn(
-        "is_canonical", F.col(id_col) == F.col("canonical_id")
+        "is_canonical", F.col("doc_id") == F.col("canonical_id")
     )

@@ -11,8 +11,8 @@ fuzzy duplication, this one removes exact repeated lines.
 Spark-first plan (one shuffle, no joins):
 
 * split each doc into (id, line_no, line) via posexplode — narrow;
-* lines SHORTER than ``min_len`` bypass the shuffle entirely (kept
-  verbatim): blank lines and one-word fragments are the hottest hash
+* lines SHORTER than ``MIN_LEN`` (20) characters bypass the shuffle
+  entirely (kept verbatim): blank lines and one-word fragments are the hottest hash
   keys in any crawl, and exempting them both matches CCNet (it hashes
   normalized lines above a floor) and removes the worst skew before it
   reaches the exchange;
@@ -34,28 +34,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+MIN_LEN = 20
 
-def dedup_corpus_lines(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    min_len: int = 20,
-) -> DataFrame:
+
+def dedup_corpus_lines(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Remove corpus-wide duplicate lines (newline-separated) from
     ``text_col``.
 
     Returns one row per input row: (id_col, text_dedup, n_lines,
     n_dup_lines_removed).  A line is removed when an identical line
     with a smaller (id, line_no) exists anywhere in the corpus and the
-    line is at least ``min_len`` characters.
+    line is at least ``MIN_LEN`` characters.
     """
     lines = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), "\n", -1)).alias("line_no", "ln"),
     )
-    short = lines.where(F.length("ln") < min_len).withColumn("keep", F.lit(True))
+    short = lines.where(F.length("ln") < MIN_LEN).withColumn("keep", F.lit(True))
     w = Window.partitionBy(F.md5(F.col("ln"))).orderBy(id_col, "line_no")
-    long_marked = lines.where(F.length("ln") >= min_len).withColumn(
+    long_marked = lines.where(F.length("ln") >= MIN_LEN).withColumn(
         "keep", F.row_number().over(w) == 1
     )
     marked = short.unionByName(long_marked)

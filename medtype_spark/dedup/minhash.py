@@ -10,6 +10,10 @@ Scale shape (the part that matters at 100 TB):
 
 Hashes are md5-based so the DuckDB oracle can reproduce them exactly
 (both engines expose md5 over strings).
+
+Every operator reads documents as ``(doc_id, text)`` and keys its
+output by ``doc_id``; shingles are word 3-grams except SimHash's
+2-grams.
 """
 
 from __future__ import annotations
@@ -22,40 +26,35 @@ from pyspark.sql import functions as F
 from medtype_spark.textstats.quality import tokens
 
 
-@lru_cache(maxsize=32)
-def word_shingles(col_name: str, n: int = 3):
-    """Array of n-word shingles from the whitespace tokens of column
-    ``col_name``, built once per (name, n): the shingle tree costs
-    dozens of py4j round-trips to construct, which dominated repeated
-    query builds on this host (Columns are immutable plan fragments,
-    safe to reuse across DataFrames)."""
-    toks = tokens(F.col(col_name))
+@lru_cache(maxsize=2)
+def word_shingles(n: int):
+    """Array of n-word shingles from the whitespace tokens of ``text``,
+    built once per n: the shingle tree costs dozens of py4j round-trips
+    to construct, which dominated repeated query builds on this host
+    (Columns are immutable plan fragments, safe to reuse across
+    DataFrames)."""
+    toks = tokens(F.col("text"))
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     return F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
     )
 
 
-def doc_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                 n: int = 3, distinct: bool = True) -> DataFrame:
-    """(id, shingle) pairs, deduplicated by default.
+def doc_shingles(df: DataFrame, distinct: bool = True) -> DataFrame:
+    """(doc_id, shingle) pairs, deduplicated by default.
 
     ``distinct=False`` skips the dedup SHUFFLE for consumers that are
     duplicate-insensitive — ``min()`` aggregation (minhash) gives the
     same signature either way, so the minhash path saves a full pass
     over the shingle stream."""
     out = df.select(
-        F.col(id_col), F.explode(word_shingles(text_col, n)).alias("shingle")
+        F.col("doc_id"), F.explode(word_shingles(3)).alias("shingle")
     )
-    return out.dropDuplicates([id_col, "shingle"]) if distinct else out
+    return out.dropDuplicates(["doc_id", "shingle"]) if distinct else out
 
 
-def minhash_signatures(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-) -> DataFrame:
-    """(id, sig: array<string>) — sig[i] = min(md5(i || ':' || shingle)).
+def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """(doc_id, sig: array<string>) — sig[i] = min(md5(i || ':' || shingle)).
 
     md5-as-hash-family keeps the signature portable across engines; a
     production swap-in would be xxhash64 with seed i (cheaper, JVM).
@@ -72,21 +71,15 @@ def minhash_signatures(
         ).alias(f"_mh{i}")
         for i in range(num_hashes)
     ]
-    mins = shingles.groupBy(id_col).agg(*aggs)
+    mins = shingles.groupBy("doc_id").agg(*aggs)
     return mins.select(
-        id_col,
+        "doc_id",
         F.array(*[F.col(f"_mh{i}") for i in range(num_hashes)]).alias("sig"),
     )
 
 
-def minhash_signatures_local(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """(id, sig) computed ROW-LOCALLY — no explode, no shuffle (r6).
+def minhash_signatures_local(df: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """(doc_id, sig) computed ROW-LOCALLY — no explode, no shuffle (r6).
 
     sig[i] = array_min(transform(shingles, g -> md5(i || ':' || g))) is
     the same min-over-the-doc's-shingles as the explode+groupBy form
@@ -98,8 +91,7 @@ def minhash_signatures_local(
     is embarrassingly parallel over the scan.  Equality with
     ``doc_shingles(distinct=False) |> minhash_signatures`` is
     pytest-asserted (tests/test_neardup.py)."""
-    grams = word_shingles(text_col, n)
-    base = df.select(F.col(id_col), grams.alias("_grams"))
+    base = df.select(F.col("doc_id"), word_shingles(3).alias("_grams"))
 
     def _mh(i: int):
         return F.array_min(
@@ -110,24 +102,20 @@ def minhash_signatures_local(
         )
 
     return base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array(*[_mh(i) for i in range(num_hashes)]).alias("sig"),
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4) -> DataFrame:
     """Band the signature; equi-join on (band, band_hash) → candidate
     pairs (a < b), deduplicated across bands."""
     banded = signatures.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
         "sig",
     ).select(
-        id_col,
+        "doc_id",
         "band",
         F.md5(
             F.concat_ws(
@@ -140,8 +128,8 @@ def lsh_candidate_pairs(
             )
         ).alias("band_hash"),
     )
-    a = banded.select(F.col(id_col).alias("a"), "band", "band_hash")
-    b = banded.select(F.col(id_col).alias("b"), "band", "band_hash")
+    a = banded.select(F.col("doc_id").alias("a"), "band", "band_hash")
+    b = banded.select(F.col("doc_id").alias("b"), "band", "band_hash")
     return (
         a.join(b, ["band", "band_hash"])
         .where(F.col("a") < F.col("b"))
@@ -150,19 +138,17 @@ def lsh_candidate_pairs(
     )
 
 
-def capped_jaccard_pairs(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    df_cap: int = 50,
-    min_jaccard: float = 0.0,
-) -> DataFrame:
+DF_CAP = 50
+
+
+def capped_jaccard_pairs(shingles: DataFrame, min_jaccard: float = 0.0) -> DataFrame:
     """Exact Jaccard over the df-capped shingle space, in ONE self-join.
 
-    Shingles appearing in more than ``df_cap`` documents (stop-phrases)
+    Shingles appearing in more than ``DF_CAP`` documents (stop-phrases)
     are excluded from BOTH the intersection and the union — the SpotSigs
     stopword-filtering semantics (Theobald et al., SIGIR 2008).  This
     buys two scale properties at once: candidate generation is bounded
-    (per-shingle work ≤ df_cap²) AND the intersection count falls out of
+    (per-shingle work ≤ DF_CAP²) AND the intersection count falls out of
     the generation join itself, so there is no join-back of candidate
     pairs against full posting lists (the quadratic×fan-out stage that
     dominates a generate-then-verify plan).
@@ -173,12 +159,12 @@ def capped_jaccard_pairs(
     # session's CacheManager, where a persist would outlive the query
     # and be reused by the next call's identical plan.
     rare = shingles.join(
-        dfreq.where(F.col("_df") <= df_cap).select("shingle"), "shingle"
+        dfreq.where(F.col("_df") <= DF_CAP).select("shingle"), "shingle"
     ).localCheckpoint(eager=False)
 
-    sizes = rare.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = rare.select(F.col(id_col).alias("a"), "shingle")
-    b = rare.select(F.col(id_col).alias("b"), "shingle")
+    sizes = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    a = rare.select(F.col("doc_id").alias("a"), "shingle")
+    b = rare.select(F.col("doc_id").alias("b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .where(F.col("a") < F.col("b"))
@@ -186,8 +172,8 @@ def capped_jaccard_pairs(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     out = (
-        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("n_a")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("n_b")), "b")
+        inter.join(sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a")), "a")
+        .join(sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b")), "b")
         .select(
             "a",
             "b",
@@ -224,7 +210,7 @@ def jaccard_pairs(
     return out.where(F.col("jaccard") >= min_jaccard)
 
 
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash over word 2-grams, JVM-side bit arithmetic.
 
     For each of 64 bit positions, sum +1/-1 votes of hash(shingle)
@@ -235,9 +221,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     identical arithmetic in DuckDB, so q50's oracle reproduces the full
     SimHash bit-for-bit.
     """
-    sh = df.select(
-        F.col(id_col), F.explode(word_shingles(text_col, 2)).alias("shingle")
-    )
+    sh = df.select(F.col("doc_id"), F.explode(word_shingles(2)).alias("shingle"))
     # parse each hex digit ONCE into an int array; the 64 bit probes
     # are then cheap shifts on array elements (16 instr calls per
     # shingle instead of 64)
@@ -259,11 +243,11 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         F.sum(F.when(bit(b), F.lit(1)).otherwise(F.lit(-1))).alias(f"_v{b}")
         for b in range(64)
     ]
-    votes = sh.groupBy(id_col).agg(*vote_aggs)
+    votes = sh.groupBy("doc_id").agg(*vote_aggs)
     packed = None
     for b in range(64):
         term = F.when(F.col(f"_v{b}") > 0, F.expr(f"shiftleft(1L, {b})")).otherwise(
             F.lit(0).cast("long")
         )
         packed = term if packed is None else packed + term
-    return votes.select(id_col, packed.alias("simhash"))
+    return votes.select("doc_id", packed.alias("simhash"))

@@ -31,19 +31,18 @@ from medtype_spark.operators.cc import connected_components
 
 def near_dup_clusters(
     docs: DataFrame,
-    num_hashes: int = 16,
     bands: int = 4,
     min_jaccard: float = 0.8,
 ) -> DataFrame:
     """(doc_id, neardup_group, group_size): every (doc_id, text)
     document labeled with its near-duplicate group's canonical
-    (minimum) id, over word 3-gram shingles."""
+    (minimum) id, over word 3-gram shingles and 16 MinHashes."""
     sh = doc_shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
     # (r6) signatures row-locally (array_min over the doc's shingle
     # array — no explode/groupBy/exchange; bit-identical to the
     # exploded form, pytest-asserted).  ``sh`` stays persisted for the
     # Jaccard verification, its other consumer.
-    sig = minhash_signatures_local(docs, num_hashes=num_hashes)
+    sig = minhash_signatures_local(docs)
     cands = lsh_candidate_pairs(sig, bands=bands)
     verified = jaccard_pairs(sh, cands, min_jaccard=min_jaccard)
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from medtype_spark.metrics.matrix import prf
 
 N_TRIALS = 2500  # significance.py:27
+SEED = 42  # q68's oracle replays every trial's md5 draws from it
 
 
 def _md5_int(*cols):
@@ -63,11 +64,7 @@ def _prf_diff(df: DataFrame, group: list[str]) -> DataFrame:
     )
 
 
-def permutation_test(
-    per_doc: DataFrame,
-    n_trials: int = N_TRIALS,
-    seed: int = 42,
-) -> DataFrame:
+def permutation_test(per_doc: DataFrame, n_trials: int = N_TRIALS) -> DataFrame:
     """R1: two-sided paired permutation p-value (significance.py:52-70).
 
     Returns a 1-row DataFrame (base_diff, p_value, n_trials).  p is the
@@ -81,7 +78,7 @@ def permutation_test(
     trials = per_doc.crossJoin(
         per_doc.sparkSession.range(n_trials).select(F.col("id").alias("trial"))
     )
-    swap = _u01(F.lit(seed), F.col("trial"), F.col("docid")) < 0.5
+    swap = _u01(F.lit(SEED), F.col("trial"), F.col("docid")) < 0.5
     swapped = trials.select(
         "trial",
         F.when(swap, F.col("tp2")).otherwise(F.col("tp1")).alias("tp1"),
@@ -103,11 +100,7 @@ def permutation_test(
     )
 
 
-def bootstrap_diffs(
-    per_doc: DataFrame,
-    n_trials: int = N_TRIALS,
-    seed: int = 42,
-) -> DataFrame:
+def bootstrap_diffs(per_doc: DataFrame, n_trials: int = N_TRIALS) -> DataFrame:
     """R2: per-trial score differences under document resampling with
     replacement (significance.py:73-90).  Returns (trial, diff)."""
     from medtype_spark.operators.ranks import with_global_rank
@@ -125,7 +118,7 @@ def bootstrap_diffs(
     picks = slots.select(
         "trial",
         F.pmod(
-            _md5_int(F.lit(seed), F.col("trial"), F.col("slot")), F.lit(n_docs)
+            _md5_int(F.lit(SEED), F.col("trial"), F.col("slot")), F.lit(n_docs)
         ).alias("_idx"),
     )
     resampled = picks.join(docs, "_idx")

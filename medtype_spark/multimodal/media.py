@@ -228,17 +228,17 @@ def resized_meta(media: DataFrame, width: int, height: int) -> DataFrame:
     )
 
 
-def sample_frame_indices(media: DataFrame, k: int = 4) -> DataFrame:
-    """Uniform k-frame sampling plan for video rows: pure JVM column
-    arithmetic over metadata (idx_i = floor(i * n_frames / k), deduped
+def sample_frame_indices(media: DataFrame) -> DataFrame:
+    """Uniform 4-frame sampling plan for video rows: pure JVM column
+    arithmetic over metadata (idx_i = floor(i * n_frames / 4), deduped
     ascending) — the selection is decided WITHOUT touching payloads,
     so a downstream decode only reads chosen frames."""
     n = F.col("meta.n_frames")
     idx = F.array_sort(
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(0), F.lit(k - 1)),
-                lambda i: F.floor(i * n / k).cast("int"),
+                F.sequence(F.lit(0), F.lit(3)),
+                lambda i: F.floor(i * n / 4).cast("int"),
             )
         )
     )

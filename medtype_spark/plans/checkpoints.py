@@ -151,7 +151,6 @@ def run_linkage_checkpointed(
     spark: SparkSession,
     pages: DataFrame,
     lexicon,
-    entity_types: DataFrame,
     workdir: str,
     *,
     score_threshold: float = 0.92,
@@ -167,9 +166,7 @@ def run_linkage_checkpointed(
     (``form_edges``) → 030_clusters (``form_clusters``).  Each stage
     runs only its own stage function over its upstream's parquet and
     releases whatever it cached.  Kill the job at any point; re-running
-    skips every stage whose manifest committed.  ``entity_types`` is
-    unused (the candidate filter's output is not a stage product); it
-    keeps the argument order of ``run_linkage``.
+    skips every stage whose manifest committed.
     """
     from medtype_spark.pipeline import (
         form_clusters,

@@ -361,7 +361,7 @@ def q13_clean_text(spark, sf_dir):
         lambda i: F.array_join(F.slice(toks, i * 8 + 1, 8), " "),
     )
     lined = d.select("doc_id", F.array_join(chunked, "\n").alias("lt"))
-    ld = dedup_corpus_lines(lined, "lt", "doc_id", min_len=20).select(
+    ld = dedup_corpus_lines(lined, "lt", "doc_id").select(
         "doc_id",
         F.md5("text_dedup").alias("line_dedup_md5"),
         F.col("n_lines").cast("long").alias("n_lines"),
@@ -439,7 +439,7 @@ def q14_exact_dedup(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     ex = hash_split(
-        exact_dedup(d, "text", "doc_id").select(
+        exact_dedup(d).select(
             "doc_id", "canonical_id", "group_size"
         ),
         key="doc_id",
@@ -452,7 +452,7 @@ def q14_exact_dedup(spark, sf_dir):
         ex5.select("doc_id", "lang", "strat_rank"), "doc_id", "left"
     ).withColumn("exemplar_rank", F.coalesce(F.col("strat_rank"), F.lit(0))) \
      .drop("strat_rank", "lang")
-    shared = cross_doc_shared_ngrams(fan_out(d), "text", "doc_id", n=8)
+    shared = cross_doc_shared_ngrams(fan_out(d))
     return ex.join(shared, "doc_id")
 
 
@@ -470,7 +470,7 @@ def q15_minhash(spark, sf_dir):
     from medtype_spark.session import fan_out
 
     d = fan_out(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    sig = minhash_signatures_local(d, "text", "doc_id", n=3, num_hashes=8)
+    sig = minhash_signatures_local(d, num_hashes=8)
     return sig.select("doc_id", F.md5(F.concat_ws("|", "sig")).alias("sig_md5"))
 
 
@@ -485,8 +485,8 @@ def q16_ngram_jaccard(spark, sf_dir):
     from medtype_spark.session import fan_out
 
     d = fan_out(_t(spark, sf_dir, "documents"))
-    sh = doc_shingles(d, "text", "doc_id", n=3)
-    return capped_jaccard_pairs(sh, "doc_id", df_cap=50, min_jaccard=0.1).select(
+    sh = doc_shingles(d)
+    return capped_jaccard_pairs(sh, min_jaccard=0.1).select(
         "a", "b", _r6(F.col("jaccard")).alias("jaccard")
     )
 
@@ -522,21 +522,20 @@ def q17_textstats(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     dn = d.select("doc_id", "text")
     bench = dn.where(F.col("doc_id") % 37 == 0)
-    contam = decontaminate(dn.where(F.col("doc_id") % 37 != 0), bench,
-                           "text", "doc_id", n=8).unionByName(
+    contam = decontaminate(dn.where(F.col("doc_id") % 37 != 0), bench).unionByName(
         bench.select("doc_id", F.lit(-1).alias("contaminated"))
     )
-    q = quality_features(d, "text", "doc_id").select(
+    q = quality_features(d).select(
         "doc_id", "n_chars", "n_tokens", "n_bpe_tokens",
         _r6(F.col("avg_token_len")).alias("avg_token_len"),
         _r6(F.col("alpha_ratio")).alias("alpha_ratio"),
         _r6(F.col("punct_ratio")).alias("punct_ratio"),
         _r6(F.col("stopword_ratio")).alias("stopword_ratio"),
     )
-    lang = predict_lang(d, "text", "doc_id")
-    fp = fingerprint(d, "text", "doc_id")
-    gq = gopher_quality(d, "text", "doc_id")
-    rep = gopher_repetition(dn, "text", "doc_id")
+    lang = predict_lang(d)
+    fp = fingerprint(d)
+    gq = gopher_quality(d)
+    rep = gopher_repetition(dn)
     return (
         q.join(lang, "doc_id")
         .join(fp, "doc_id")
@@ -722,7 +721,7 @@ def q50_simhash(spark, sf_dir):
     and all — reproduced bit-for-bit by the DuckDB oracle."""
     from medtype_spark.session import fan_out
 
-    return simhash64(fan_out(_t(spark, sf_dir, "documents")), "text", "doc_id")
+    return simhash64(fan_out(_t(spark, sf_dir, "documents")))
 
 
 def q52_stub_type_scorer(spark, sf_dir):
@@ -1019,8 +1018,8 @@ def q44_lsh_candidates(spark, sf_dir):
     from medtype_spark.dedup.minhash import minhash_signatures_local
 
     d = _t(spark, sf_dir, "documents")
-    sig = minhash_signatures_local(d, "text", "doc_id", n=3, num_hashes=8)
-    return lsh_candidate_pairs(sig, "doc_id", bands=4)
+    sig = minhash_signatures_local(d, num_hashes=8)
+    return lsh_candidate_pairs(sig, bands=4)
 
 
 def q45_filter_candidates(spark, sf_dir):
@@ -1178,7 +1177,7 @@ def q57_media_decode(spark, sf_dir):
     feats = extract_media_features(media).select(
         "media_id", F.size("features").alias("n_features")
     )
-    frames = sample_frame_indices(media, k=4).select(
+    frames = sample_frame_indices(media).select(
         "media_id", "n_frames",
         F.concat_ws(
             ",", F.transform("frame_indices", lambda i: i.cast("string"))
@@ -1408,7 +1407,7 @@ def q67_ivf_topk(spark, sf_dir):
     queries = emb.where(F.col("vec_id") % 23 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cents = md5_centroids(64, 16, seed=7)
+    cents = md5_centroids(64, 16)
     ivf = ivf_topk(emb, queries, cents, k=3, nprobe=2, metric="dot").select(
         F.lit("ivf").alias("kind"),
         "query_id", "rank", "vec_id",
@@ -1418,7 +1417,7 @@ def q67_ivf_topk(spark, sf_dir):
     # over m=8 sub-space codes of 16 codewords instead of the exact dot
     # — the IVF-PQ composition (`similarity/knn.py:ivf_pq_topk`), every
     # LUT entry and ADC sum an exact integer.
-    books = md5_pq_codebooks(64, 8, 16, seed=7)
+    books = md5_pq_codebooks(64, 8, 16)
     pq = ivf_pq_topk(emb, queries, cents, books, k=3, nprobe=2).select(
         F.lit("pq").alias("kind"),
         "query_id", "rank", "vec_id",
@@ -1470,8 +1469,8 @@ def q68_significance(spark, sf_dir):
             ((d + 2) % 4).alias("fn2"),
         )
     )
-    perm = permutation_test(per_doc, n_trials=n_trials, seed=42)
-    boots = bootstrap_diffs(per_doc, n_trials=n_trials, seed=42)
+    perm = permutation_test(per_doc, n_trials=n_trials)
+    boots = bootstrap_diffs(per_doc, n_trials=n_trials)
     ci = percentile_ci_exact(boots, n_trials)
     return ci.crossJoin(perm).select(
         "level",

@@ -252,9 +252,9 @@ def _vectors(vecs: pd.Series, normalize: bool) -> np.ndarray:
     return _unit_rows(x) if normalize else x
 
 
-def md5_centroids(dim: int, n_centroids: int, seed: int = 7) -> np.ndarray:
+def md5_centroids(dim: int, n_centroids: int) -> np.ndarray:
     """Deterministic integer centroid grid for the driver-checked IVF
-    fixture: component j of centroid c = md5_bucket('ivf{seed}:c:j',
+    fixture: component j of centroid c = md5_bucket('ivf7:c:j',
     1001) - 500 — the same engine-portable md5 recipe as the LSH
     hyperplanes, so the DuckDB oracle re-derives the coarse quantizer
     from scratch.  Integer-valued float64, so every dot product against
@@ -263,7 +263,7 @@ def md5_centroids(dim: int, n_centroids: int, seed: int = 7) -> np.ndarray:
     bit-portable across numpy, Spark, and DuckDB."""
     return np.array(
         [
-            [float(md5_bucket(f"ivf{seed}:{c}:{j}", 1001) - 500) for j in range(dim)]
+            [float(md5_bucket(f"ivf7:{c}:{j}", 1001) - 500) for j in range(dim)]
             for c in range(n_centroids)
         ],
         dtype=np.float64,
@@ -351,11 +351,11 @@ def ivf_topk(
 
 # --- IVF-PQ: product-quantized ADC re-rank ------------------------------
 
-def md5_pq_codebooks(dim: int, m: int, k: int, seed: int = 7) -> np.ndarray:
+def md5_pq_codebooks(dim: int, m: int, k: int) -> np.ndarray:
     """Deterministic integer PQ codebooks, shape (m, k, dim//m).
 
     Component t of codeword c in subspace j =
-    ``md5_bucket('pq{seed}:{j}:{c}:{t}', 2001) - 1000`` — the same
+    ``md5_bucket('pq7:{j}:{c}:{t}', 2001) - 1000`` — the same
     engine-portable md5 recipe as the IVF centroid grid, so the DuckDB
     oracle re-derives every codeword from scratch.  Integer-valued
     float64: squared-distance sums stay far below 2^53, making encode
@@ -365,7 +365,7 @@ def md5_pq_codebooks(dim: int, m: int, k: int, seed: int = 7) -> np.ndarray:
     return np.array(
         [
             [
-                [float(md5_bucket(f"pq{seed}:{j}:{c}:{t}", 2001) - 1000) for t in range(d)]
+                [float(md5_bucket(f"pq7:{j}:{c}:{t}", 2001) - 1000) for t in range(d)]
                 for c in range(k)
             ]
             for j in range(m)

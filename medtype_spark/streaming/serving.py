@@ -79,21 +79,18 @@ def reassemble_jobs(partials: DataFrame) -> DataFrame:
     )
 
 
-def windowed_request_stats(
-    events: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def windowed_request_stats(events: DataFrame) -> DataFrame:
     """Streaming ServerStatistic (A12 analogue,
     .../server/__init__.py:605-673) as a watermarked windowed
-    aggregation: per (client, event-time window) request counts and
-    mean message size.  Late data beyond the watermark is dropped and
-    state for closed windows is evicted — the property that keeps the
-    aggregation's state bounded on an unbounded stream.  Works on a
-    streaming OR batch frame (same plan; tests run both)."""
+    aggregation: per (client, 10-minute event-time window) request
+    counts and mean message size.  Late data beyond the 30-minute
+    watermark is dropped and state for closed windows is evicted — the
+    property that keeps the aggregation's state bounded on an unbounded
+    stream.  Works on a streaming OR batch frame (same plan; tests run
+    both)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "user_id")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "10 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_requests"),
             F.avg("value").alias("avg_msg_size"),

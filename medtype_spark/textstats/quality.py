@@ -4,7 +4,8 @@ Language-ID (marker-word heuristic), quality scoring (length / punct /
 stopword ratios), token counting (whitespace + BPE-ish regex), and
 document fingerprinting.  All pure ``pyspark.sql.functions`` — JVM-side
 whole-stage-codegen, no Python in the hot path; filters over these
-columns push down to the parquet scan.
+columns push down to the parquet scan.  Every operator reads documents
+as ``(doc_id, text)`` and keys its output by ``doc_id``.
 """
 
 from __future__ import annotations
@@ -41,29 +42,28 @@ def bpe_token_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_TOKEN_RE))
 
 
-@lru_cache(maxsize=8)
-def _quality_cols(text_col: str) -> tuple:
-    """Column expressions of quality_features, built once per column
-    name (r6): Column trees are immutable plan fragments bound to an
+@lru_cache(maxsize=1)
+def _quality_cols() -> tuple:
+    """Column expressions of quality_features over ``text``, built once
+    (r6): Column trees are immutable plan fragments bound to an
     unresolved name, so they are safely reusable across DataFrames —
     and each construction costs dozens of py4j round-trips, which
     dominated repeated query builds under this sandbox's syscall
     emulation.  (Caveat: cached Columns wrap JVM objects, so they are
     valid for the life of the python process's JVM — the repo's
     tools/tests use one JVM per process.)"""
-    toks = tokens(F.col(text_col))
+    text = F.col("text")
+    toks = tokens(text)
     n_toks = F.size(toks)
-    n_chars = F.length(F.col(text_col))
-    n_alpha = n_chars - F.length(F.regexp_replace(F.col(text_col), r"[A-Za-z]", ""))
-    n_punct = F.length(F.col(text_col)) - F.length(
-        F.regexp_replace(F.col(text_col), r"[^\w\s]", "")
-    )
+    n_chars = F.length(text)
+    n_alpha = n_chars - F.length(F.regexp_replace(text, r"[A-Za-z]", ""))
+    n_punct = F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
     stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, F.lower(t))))
     return (
         n_chars.alias("n_chars"),
         n_toks.alias("n_tokens"),
-        bpe_token_count(F.col(text_col)).alias("n_bpe_tokens"),
+        bpe_token_count(text).alias("n_bpe_tokens"),
         F.when(n_toks == 0, F.lit(0.0)).otherwise(n_chars / n_toks).alias("avg_token_len"),
         F.when(n_chars == 0, F.lit(0.0)).otherwise(n_alpha / n_chars).alias("alpha_ratio"),
         F.when(n_chars == 0, F.lit(0.0)).otherwise(n_punct / n_chars).alias("punct_ratio"),
@@ -71,11 +71,9 @@ def _quality_cols(text_col: str) -> tuple:
     )
 
 
-def quality_features(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Per-doc quality features: lengths, ratios, stopword share."""
-    return df.select(F.col(id_col), *_quality_cols(text_col))
+    return df.select(F.col("doc_id"), *_quality_cols())
 
 
 # The 8 "required stop words" of the published Gopher quality filter
@@ -90,9 +88,7 @@ _BULLET_RE = r"^[•‣▪\-\*]"
 _ELLIPSIS_END_RE = r"(\.\.\.|…)$"
 
 
-def gopher_quality(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def gopher_quality(df: DataFrame) -> DataFrame:
     """Gopher-rule quality signals (Rae et al. 2021, Appendix A) as
     pure-JVM columns, plus the composite ``gopher_pass`` verdict.
 
@@ -112,21 +108,22 @@ def gopher_quality(
     higher-order functions (``array_distinct`` + ``aggregate``) — no
     explode, no shuffle; per-doc work is bounded by line count.
     """
-    return df.select(F.col(id_col), *_gopher_quality_cols(text_col))
+    return df.select(F.col("doc_id"), *_gopher_quality_cols())
 
 
-@lru_cache(maxsize=8)
-def _gopher_quality_cols(text_col: str) -> tuple:
-    """gopher_quality's Column expressions, built once per column name
+@lru_cache(maxsize=1)
+def _gopher_quality_cols() -> tuple:
+    """gopher_quality's Column expressions over ``text``, built once
     (r6, see _quality_cols)."""
-    toks = tokens(F.col(text_col))
+    text = F.col("text")
+    toks = tokens(text)
     toks_lower = F.transform(toks, lambda t: F.lower(t))
     n_toks = F.size(toks)
     word_chars = F.aggregate(
         F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
     )
-    n_symbols = F.regexp_count(F.col(text_col), F.lit(_SYMBOL_RE))
-    lines = F.split(F.col(text_col), r"\n")
+    n_symbols = F.regexp_count(text, F.lit(_SYMBOL_RE))
+    lines = F.split(text, r"\n")
     n_lines = F.size(lines)  # >= 1: splitting '' yields ['']
     n_bullet = F.size(F.filter(lines, lambda l: F.ltrim(l).rlike(_BULLET_RE)))
     n_ellipsis = F.size(F.filter(lines, lambda l: F.rtrim(l).rlike(_ELLIPSIS_END_RE)))
@@ -243,9 +240,7 @@ def _rep_run_stats(toks_sql: str, n: int):
     """)
 
 
-def gopher_repetition(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def gopher_repetition(df: DataFrame) -> DataFrame:
     """Gopher n-gram repetition signals as ONE row-local projection.
 
     (r6) Each rule's top-gram / duplicated-gram character mass is a
@@ -267,9 +262,9 @@ def gopher_repetition(
     filter.  Differential-tested against a pure-python reference
     (tests/test_textstats.py) and the unchanged window-ranked oracle.
     """
-    toks = F.transform(tokens(F.col(text_col)), lambda t: F.lower(t))
+    toks = F.transform(tokens(F.col("text")), lambda t: F.lower(t))
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("_toks"),
         F.aggregate(
             F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
@@ -279,7 +274,7 @@ def gopher_repetition(
         n: _rep_run_stats("_toks", n).alias(f"_st{n}")
         for n, _kind, _thr in GOPHER_NGRAM_RULES
     }
-    staged = base.select(F.col(id_col), F.col("_wc"), *stat_cols.values())
+    staged = base.select(F.col("doc_id"), F.col("_wc"), *stat_cols.values())
     zero = F.lit(0.0)
     ratio_cols, pass_expr = [], F.lit(True)
     for n, kind, (num, den) in GOPHER_NGRAM_RULES:
@@ -292,17 +287,17 @@ def gopher_repetition(
         # chars/wc <= num/den  <=>  den*chars <= num*wc  (wc=0 -> pass)
         pass_expr = pass_expr & (den * chars <= num * F.col("_wc"))
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *ratio_cols,
         pass_expr.cast("int").alias("gopher_rep_pass"),
     )
 
 
-@lru_cache(maxsize=8)
-def _predict_lang_col(text_col: str):
-    """predict_lang's Column expression, built once per column name
+@lru_cache(maxsize=1)
+def _predict_lang_col():
+    """predict_lang's Column expression over ``text``, built once
     (r6, see _quality_cols)."""
-    toks = F.transform(tokens(F.col(text_col)), lambda t: F.lower(t))
+    toks = F.transform(tokens(F.col("text")), lambda t: F.lower(t))
     scores = []
     for i, lang in enumerate(sorted(LANG_MARKERS)):
         marker_arr = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
@@ -320,17 +315,17 @@ def _predict_lang_col(text_col: str):
     return predicted.alias("pred_lang")
 
 
-def predict_lang(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def predict_lang(df: DataFrame) -> DataFrame:
     """Marker-word language ID: argmax of per-language marker hits.
 
     Deterministic tie-break by language code; 'und' when no marker hits.
     """
-    return df.select(F.col(id_col), _predict_lang_col(text_col))
+    return df.select(F.col("doc_id"), _predict_lang_col())
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Normalized-content fingerprint: md5 of lowercased, whitespace-
     collapsed, punctuation-stripped text (portable across engines)."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9\s]", "")
+    norm = F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", "")
     norm = F.trim(F.regexp_replace(norm, r"\s+", " "))
-    return df.select(F.col(id_col), F.md5(norm).alias("fingerprint"))
+    return df.select(F.col("doc_id"), F.md5(norm).alias("fingerprint"))

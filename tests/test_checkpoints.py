@@ -127,10 +127,10 @@ def test_checkpointed_flagship_resume(spark, tmp_path):
     from medtype_spark.pipeline import evaluate_linkage
     from medtype_spark.plans.checkpoints import run_linkage_checkpointed
 
-    pages, gold, lex, et = _flagship_fixture(spark)
+    pages, gold, lex, _ = _flagship_fixture(spark)
     wd = str(tmp_path / "wd")
 
-    clusters = run_linkage_checkpointed(spark, pages, lex, et, wd)
+    clusters = run_linkage_checkpointed(spark, pages, lex, wd)
     row = evaluate_linkage(clusters, gold).collect()[0]
     assert row["fscore"] >= 0.99
 
@@ -138,7 +138,7 @@ def test_checkpointed_flagship_resume(spark, tmp_path):
     assert ck.completed_stages() == ["010_mentions", "020_edges", "030_clusters"]
 
     # restart: everything resumes, same result
-    clusters2 = run_linkage_checkpointed(spark, pages, lex, et, wd)
+    clusters2 = run_linkage_checkpointed(spark, pages, lex, wd)
     c1 = {(r["mention_key"], r["entity_cluster"]) for r in clusters.collect()}
     c2 = {(r["mention_key"], r["entity_cluster"]) for r in clusters2.collect()}
     assert c1 == c2
@@ -156,7 +156,7 @@ def test_checkpointed_matches_run_linkage(spark, tmp_path):
     from medtype_spark.plans.checkpoints import run_linkage_checkpointed
 
     pages, _, lex, et = _flagship_fixture(spark)
-    ck = run_linkage_checkpointed(spark, pages, lex, et, str(tmp_path / "wd"))
+    ck = run_linkage_checkpointed(spark, pages, lex, str(tmp_path / "wd"))
     got = {(r["mention_key"], r["entity_cluster"]) for r in ck.collect()}
     res = run_linkage(pages, lex, et, cleanup=True)
     want = {(r["mention_key"], r["entity_cluster"]) for r in res["clusters"].collect()}
@@ -174,7 +174,7 @@ def test_no_cached_rdds_left_behind(spark, tmp_path):
     # compare sets of new ids: unreachable RDDs of earlier tests may be
     # garbage-collected (and so leave the registry) meanwhile
     before = _persistent_rdd_ids(spark)
-    run_linkage_checkpointed(spark, pages, lex, et, str(tmp_path / "wd")).collect()
+    run_linkage_checkpointed(spark, pages, lex, str(tmp_path / "wd")).collect()
     assert _persistent_rdd_ids(spark) - before == set()
 
     before = _persistent_rdd_ids(spark)

@@ -126,5 +126,5 @@ def test_decontaminate_planted_overlap(spark):
         Row(doc_id=100, text=f"benchmark question: {shared} answer choice"),
     ])
     got = {r.doc_id: r.contaminated
-           for r in decontaminate(corpus, bench, "text", "doc_id", n=8).collect()}
+           for r in decontaminate(corpus, bench).collect()}
     assert got == {1: 1, 2: 0, 3: 0}

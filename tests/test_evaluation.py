@@ -215,7 +215,7 @@ def test_windowed_request_stats_stream(spark, tmp_path):
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(src))
     )
-    out = windowed_request_stats(stream, window="10 minutes", watermark="30 minutes")
+    out = windowed_request_stats(stream)
     q = (
         out.writeStream.format("memory").queryName("winstats")
         .outputMode("append")

@@ -63,7 +63,7 @@ def test_resized_meta_columnar(spark):
 
 def test_frame_sampling_uniform(spark):
     m = synth_media(spark, _docs(spark, 40))
-    rows = sample_frame_indices(m, k=4).collect()
+    rows = sample_frame_indices(m).collect()
     assert rows  # some videos exist
     for r in rows:
         n = r["n_frames"]

@@ -34,7 +34,7 @@ def _planted_docs(spark, n_groups=12, words=40):
 
 def test_near_dup_clusters_recover_planted_groups(spark):
     docs, truth = _planted_docs(spark)
-    out = near_dup_clusters(docs, min_jaccard=0.5, num_hashes=16, bands=8)
+    out = near_dup_clusters(docs, min_jaccard=0.5, bands=8)
     got = {r["doc_id"]: r["neardup_group"] for r in out.collect()}
     assert set(got) == set(truth)  # every doc labeled
 
@@ -174,7 +174,7 @@ def test_ivf_topk_dot_metric_integer_exact(spark):
     queries = emb.where(F.col("vec_id") % 17 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cents = md5_centroids(16, 8, seed=7)
+    cents = md5_centroids(16, 8)
 
     got = ivf_topk(emb, queries, cents, k=3, nprobe=2, metric="dot").collect()
     assert got and all(r["dot"] == int(r["dot"]) for r in got)
@@ -228,11 +228,11 @@ def test_minhash_local_equals_exploded(spark):
         (5, "alpha beta gamma delta alpha beta gamma"),  # dup of 1
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    sh = doc_shingles(df, "text", "doc_id", n=3, distinct=False)
+    sh = doc_shingles(df, distinct=False)
     a = {r["doc_id"]: r["sig"] for r in
-         minhash_signatures(sh, "doc_id", num_hashes=8).collect()}
+         minhash_signatures(sh, num_hashes=8).collect()}
     b = {r["doc_id"]: r["sig"] for r in
-         minhash_signatures_local(df, "text", "doc_id", n=3, num_hashes=8).collect()}
+         minhash_signatures_local(df, num_hashes=8).collect()}
     assert a == b
 
 
@@ -245,8 +245,7 @@ spark = get_spark("jaccard-cache", master="local[1]")
 docs = spark.createDataFrame(
     [(i, " ".join(f"w{(i + k) % 60}" for k in range(10))) for i in range(200)],
     "doc_id long, text string")
-pairs = capped_jaccard_pairs(doc_shingles(docs, "text", "doc_id", n=3),
-                             "doc_id", df_cap=50, min_jaccard=0.1)
+pairs = capped_jaccard_pairs(doc_shingles(docs), min_jaccard=0.1)
 n = len(pairs.collect())
 empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
 spark.stop()

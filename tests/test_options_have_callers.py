@@ -8,14 +8,17 @@ fails on each defaulted parameter that no same-named call sets, unless
 ``ALLOWED`` names it with a reason.  It also fails on a stale
 ``ALLOWED`` entry.
 
-A call sets a parameter when it passes it by keyword, covers its
-position with positional arguments, or passes ``*args`` (positional
-parameters) or ``**kwargs`` (all parameters).  Calls are matched by
-name only (``f(...)`` and ``obj.f(...)``), which over-counts when two
+A call sets a parameter when it passes, by keyword or by position, a
+literal that is not equal to the default (both read with
+``ast.literal_eval``) or any non-literal expression, or when it spreads
+``*args`` (positional parameters) or ``**kwargs`` (all parameters).
+Passing the default itself sets nothing.  Calls are matched by name
+only (``f(...)`` and ``obj.f(...)``), which over-counts when two
 functions share a name; the guard errs towards passing.
 
 Run ``python tests/test_options_have_callers.py`` to list the unset
-parameters.  No Spark is needed.
+parameters, each with the ``file:line`` of every call that passes it
+its default.  No Spark is needed.
 """
 from __future__ import annotations
 
@@ -46,53 +49,74 @@ ALLOWED = {
 }
 
 
-def _python_files():
+def _checkout_trees():
+    """{path relative to the checkout: parsed module} of every .py file."""
+    trees = {}
     for dirpath, dirnames, filenames in os.walk(ROOT):
         dirnames[:] = sorted(d for d in dirnames if d not in SKIP_DIRS)
         for name in sorted(filenames):
             if name.endswith(".py"):
-                yield os.path.relpath(os.path.join(dirpath, name), ROOT)
+                path = os.path.join(dirpath, name)
+                rel = os.path.relpath(path, ROOT)
+                with open(path, encoding="utf-8") as fh:
+                    trees[rel] = ast.parse(fh.read(), filename=rel)
+    return trees
 
 
-def _parse(rel):
-    with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
-        return ast.parse(fh.read(), filename=rel)
+_NOT_LITERAL = object()
+
+
+def _literal(node):
+    """The value of a literal expression, or ``_NOT_LITERAL``."""
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return _NOT_LITERAL
+
+
+def _is_default(node, default):
+    value = _literal(node)
+    return (value is not _NOT_LITERAL and default is not _NOT_LITERAL
+            and type(value) is type(default) and value == default)
 
 
 def _defaulted(fn):
-    """(name, positional index or None) of each defaulted parameter."""
+    """(name, positional index or None, default value) of each defaulted
+    parameter."""
     a = fn.args
     positional = a.posonlyargs + a.args
     first = len(positional) - len(a.defaults)
-    out = [(p.arg, i) for i, p in enumerate(positional) if i >= first]
-    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+    out = [(p.arg, i, _literal(a.defaults[i - first]))
+           for i, p in enumerate(positional) if i >= first]
+    out += [(p.arg, None, _literal(d)) for p, d in zip(a.kwonlyargs, a.kw_defaults)
             if d is not None]
     return out
 
 
-def library_options():
-    """[(module, function, parameter, positional index, is_method)]."""
+def library_options(trees):
+    """[(module, function, parameter, positional index, default, is_method)]."""
     out = []
-    for rel in _python_files():
+    for rel, tree in trees.items():
         if not rel.startswith(LIBRARY + os.sep) or rel == SPEC:
             continue
         module = os.path.relpath(rel, LIBRARY).replace(os.sep, "/")
-        tree = _parse(rel)
         methods = {id(f) for c in ast.walk(tree) if isinstance(c, ast.ClassDef)
                    for f in c.body
                    if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))}
         for fn in ast.walk(tree):
             if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                for name, index in _defaulted(fn):
-                    out.append((module, fn.name, name, index, id(fn) in methods))
+                for name, index, default in _defaulted(fn):
+                    out.append((module, fn.name, name, index, default,
+                                id(fn) in methods))
     return out
 
 
-def call_sites():
-    """{callee name: [(n positional, has *args, keywords, has **kwargs)]}."""
+def call_sites(trees):
+    """{callee name: [(file:line, positional args before any *args, has
+    *args, {keyword: arg}, has **kwargs)]}."""
     sites = {}
-    for rel in _python_files():
-        for node in ast.walk(_parse(rel)):
+    for rel, tree in trees.items():
+        for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
             f = node.func
@@ -100,46 +124,100 @@ def call_sites():
                 f.attr if isinstance(f, ast.Attribute) else None)
             if name is None:
                 continue
-            star = any(isinstance(a, ast.Starred) for a in node.args)
-            n_pos = sum(not isinstance(a, ast.Starred) for a in node.args)
-            kws = {k.arg for k in node.keywords if k.arg is not None}
+            star = next((i for i, a in enumerate(node.args)
+                         if isinstance(a, ast.Starred)), None)
+            positional = node.args if star is None else node.args[:star]
+            kws = {k.arg: k.value for k in node.keywords if k.arg is not None}
             dstar = any(k.arg is None for k in node.keywords)
-            sites.setdefault(name, []).append((n_pos, star, kws, dstar))
+            sites.setdefault(name, []).append(
+                (f"{rel}:{node.lineno}", positional, star is not None, kws, dstar))
     return sites
 
 
-@lru_cache(maxsize=1)
-def unset_options() -> tuple:
-    """(module, function, parameter) of every defaulted parameter that
-    no call site sets."""
-    sites = call_sites()
+def unset_options(trees):
+    """[(module, function, parameter, [file:line of each call that passes
+    the default])] of every defaulted parameter that no call sets."""
+    sites = call_sites(trees)
     unset = []
-    for module, fn, param, index, is_method in library_options():
-        shift = 1 if is_method else 0
-        is_set = False
-        for n_pos, star, kws, dstar in sites.get(fn, ()):
-            if param in kws or dstar:
+    for module, fn, param, index, default, is_method in library_options(trees):
+        pos = None if index is None else index - (1 if is_method else 0)
+        is_set, passes_default = False, []
+        for where, positional, star, kws, dstar in sites.get(fn, ()):
+            arg = kws.get(param)
+            if arg is None and pos is not None and 0 <= pos < len(positional):
+                arg = positional[pos]
+            if dstar or (star and pos is not None and arg is None):
                 is_set = True
-            elif index is not None and (star or n_pos > index - shift):
-                is_set = True
+            elif arg is not None:
+                if not _is_default(arg, default):
+                    is_set = True
+                else:
+                    passes_default.append(where)
             if is_set:
                 break
         if not is_set:
-            unset.append((module, fn, param))
-    return tuple(unset)
+            unset.append((module, fn, param, passes_default))
+    return unset
+
+
+@lru_cache(maxsize=1)
+def checkout_unset() -> tuple:
+    return tuple((m, f, p, tuple(w)) for m, f, p, w in unset_options(_checkout_trees()))
+
+
+def _unset_keys():
+    return {(m, f, p) for m, f, p, _where in checkout_unset()}
+
+
+# the rule on canned sources: one library function, one caller per case
+_CANNED_LIBRARY = """
+def f(df, a=3, b="x", *, c=None):
+    pass
+
+class K:
+    def g(self, k=5):
+        pass
+"""
+
+
+def _unset_given(caller):
+    trees = {os.path.join(LIBRARY, "m.py"): ast.parse(_CANNED_LIBRARY),
+             "caller.py": ast.parse(caller)}
+    return {(f, p): where for _m, f, p, where in unset_options(trees)}
+
+
+def test_the_default_sets_nothing():
+    every = {("f", "a"), ("f", "b"), ("f", "c"), ("g", "k")}
+    assert set(_unset_given("f(df)\nK().g()")) == every
+    # the default, by position and by keyword
+    got = _unset_given("f(df, 3, 'x')\nf(df, a=3, b='x', c=None)\nK().g(5)")
+    assert set(got) == every
+    assert got[("f", "a")] == ["caller.py:1", "caller.py:2"]
+    assert got[("f", "c")] == ["caller.py:2"]
+    assert got[("g", "k")] == ["caller.py:3"]
+    # an equal value of another type is not the default
+    assert ("f", "a") not in _unset_given("f(df, 3.0)")
+
+
+def test_a_different_literal_a_name_or_a_spread_sets():
+    assert set(_unset_given("f(df, 4)\nK().g(k=6)")) == {("f", "b"), ("f", "c")}
+    assert set(_unset_given("f(df, b=name, c=-1)")) == {("f", "a"), ("g", "k")}
+    assert set(_unset_given("f(df, 3, c=x.y)")) == {("f", "a"), ("f", "b"), ("g", "k")}
+    # *args covers every positional parameter, **kwargs every parameter
+    assert set(_unset_given("f(*args)\nK().g(*args)")) == {("f", "c")}
+    assert set(_unset_given("f(df, **kw)")) == {("g", "k")}
 
 
 def test_every_defaulted_parameter_has_a_caller():
-    unset = set(unset_options())
-    missing = sorted(unset - set(ALLOWED))
+    missing = sorted(_unset_keys() - set(ALLOWED))
     assert not missing, (
-        "defaulted parameters that no call site sets; make each the constant "
-        "it always is, or add a caller:\n"
+        "defaulted parameters that no call site sets to anything but the "
+        "default; make each the constant it always is, or add a caller:\n"
         + "\n".join(f"  {m}:{f}({p}=)" for m, f, p in missing))
 
 
 def test_allowlist_is_current():
-    stale = sorted(set(ALLOWED) - set(unset_options()))
+    stale = sorted(set(ALLOWED) - _unset_keys())
     assert not stale, (
         "allowlisted parameters that are now set by a caller or gone:\n"
         + "\n".join(f"  {m}:{f}({p}=)" for m, f, p in stale))
@@ -147,7 +225,11 @@ def test_allowlist_is_current():
 
 
 if __name__ == "__main__":
-    rows = unset_options()
-    for m, f, p in rows:
-        print(f"{m}:{f}({p}=)" + ("   [allowed]" if (m, f, p) in ALLOWED else ""))
-    print(len(rows), "unset;", len(library_options()), "defaulted", file=sys.stderr)
+    rows = checkout_unset()
+    for m, f, p, where in rows:
+        line = f"{m}:{f}({p}=)" + ("   [allowed]" if (m, f, p) in ALLOWED else "")
+        if where:
+            line += "   default passed at " + ", ".join(where)
+        print(line)
+    print(len(rows), "unset;", len(library_options(_checkout_trees())), "defaulted",
+          file=sys.stderr)

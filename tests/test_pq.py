@@ -24,7 +24,7 @@ def test_pq_encode_matches_python_argmin(spark):
     and are partition-invariant."""
     rows = _int_vecs(60, 16, seed=5)
     emb = spark.createDataFrame(rows, "vec_id:long, embedding:array<double>")
-    books = md5_pq_codebooks(dim=16, m=4, k=8, seed=7)
+    books = md5_pq_codebooks(dim=16, m=4, k=8)
 
     got = {r["vec_id"]: r["pq_code"] for r in pq_encode(emb, books).collect()}
     d = 4
@@ -52,8 +52,8 @@ def test_ivf_pq_matches_python_replay_integer_exact(spark):
     queries = emb.where(F.col("vec_id") % 17 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cents = md5_centroids(16, 8, seed=7)
-    books = md5_pq_codebooks(dim=16, m=4, k=8, seed=7)
+    cents = md5_centroids(16, 8)
+    books = md5_pq_codebooks(dim=16, m=4, k=8)
 
     got = ivf_pq_topk(emb, queries, cents, books, k=3, nprobe=2).collect()
     assert got and all(r["adc"] == int(r["adc"]) for r in got)
@@ -126,7 +126,7 @@ def test_trained_pq_recall_vs_exact(spark):
     queries = emb.where(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cents = md5_centroids(16, 8, seed=7)
+    cents = md5_centroids(16, 8)
     books = train_pq_codebooks(emb, m=8, k=16)
 
     got = ivf_pq_topk(emb, queries, cents, books, k=3, nprobe=8).collect()

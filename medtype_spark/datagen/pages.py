@@ -18,7 +18,7 @@ Design goals:
   vary case/punctuation/whitespace (normalize to the same form) plus
   one typo variant (JW ≈ 0.98); distinct entities in a block differ by
   a long dissimilar tail word (JW ≲ 0.9).  One deliberately *hot*
-  alias appears on a large fraction of pages to exercise salting.
+  alias opens ``HOT_FRACTION`` of the pages to exercise salting.
 - ``html`` is derived from ``text`` by a reversible wrapping so the
   extraction UDF can be verified byte-identical per url.
 """
@@ -49,6 +49,7 @@ FILLER = [
     "veniam", "nostrud", "ullamco", "laboris", "aliquip", "commodo",
 ]
 LANGS = ["en", "de", "fr", "es", "zh"]
+HOT_FRACTION = 0.15  # share of pages whose first mention is the hot alias
 
 PAGE_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -161,7 +162,6 @@ def synth_pages(
     n_entities: int = 50,
     seed: int = 42,
     mentions_per_page: int = 3,
-    hot_fraction: float = 0.15,
     n_families: int = 7,
     partitions: int | None = None,
     gap_words: int = 1,
@@ -193,7 +193,7 @@ def synth_pages(
             n = len(ids)
             r_lang = _rand_u64(seed, ids, 1) % len(LANGS)
             r_nmen = (_rand_u64(seed, ids, 2) % mentions_per_page) + 1
-            r_hot = (_rand_u64(seed, ids, 3) % 10**6) < int(hot_fraction * 10**6)
+            r_hot = (_rand_u64(seed, ids, 3) % 10**6) < int(HOT_FRACTION * 10**6)
             out = []
             for k in range(n):
                 pid = int(ids[k])

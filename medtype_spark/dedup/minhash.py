@@ -40,21 +40,16 @@ def word_shingles(n: int):
     )
 
 
-def doc_shingles(df: DataFrame, distinct: bool = True) -> DataFrame:
-    """(doc_id, shingle) pairs, deduplicated by default.
-
-    ``distinct=False`` skips the dedup SHUFFLE for consumers that are
-    duplicate-insensitive — ``min()`` aggregation (minhash) gives the
-    same signature either way, so the minhash path saves a full pass
-    over the shingle stream."""
-    out = df.select(
+def doc_shingles(df: DataFrame) -> DataFrame:
+    """Distinct (doc_id, shingle) pairs."""
+    return df.select(
         F.col("doc_id"), F.explode(word_shingles(3)).alias("shingle")
-    )
-    return out.dropDuplicates(["doc_id", "shingle"]) if distinct else out
+    ).dropDuplicates(["doc_id", "shingle"])
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """(doc_id, sig: array<string>) — sig[i] = min(md5(i || ':' || shingle)).
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
+    """(doc_id, sig: array<string>) — 16 MinHashes,
+    sig[i] = min(md5(i || ':' || shingle)).
 
     md5-as-hash-family keeps the signature portable across engines; a
     production swap-in would be xxhash64 with seed i (cheaper, JVM).
@@ -69,12 +64,12 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
         F.min(
             F.md5(F.concat_ws(":", F.lit(str(i)), F.col("shingle")))
         ).alias(f"_mh{i}")
-        for i in range(num_hashes)
+        for i in range(16)
     ]
     mins = shingles.groupBy("doc_id").agg(*aggs)
     return mins.select(
         "doc_id",
-        F.array(*[F.col(f"_mh{i}") for i in range(num_hashes)]).alias("sig"),
+        F.array(*[F.col(f"_mh{i}") for i in range(16)]).alias("sig"),
     )
 
 
@@ -89,7 +84,7 @@ def minhash_signatures_local(df: DataFrame, num_hashes: int = 16) -> DataFrame:
     exchange all disappear.  At 100 TB this is strictly better — the
     signature is a pure function of the document row, so the operator
     is embarrassingly parallel over the scan.  Equality with
-    ``doc_shingles(distinct=False) |> minhash_signatures`` is
+    ``minhash_signatures(doc_shingles(df))`` at 16 hashes is
     pytest-asserted (tests/test_neardup.py)."""
     base = df.select(F.col("doc_id"), word_shingles(3).alias("_grams"))
 
@@ -107,12 +102,15 @@ def minhash_signatures_local(df: DataFrame, num_hashes: int = 16) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4) -> DataFrame:
-    """Band the signature; equi-join on (band, band_hash) → candidate
-    pairs (a < b), deduplicated across bands."""
+BANDS = 4
+
+
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
+    """Band the signature into ``BANDS`` bands; equi-join on (band,
+    band_hash) → candidate pairs (a < b), deduplicated across bands."""
     banded = signatures.select(
         F.col("doc_id"),
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+        F.explode(F.sequence(F.lit(0), F.lit(BANDS - 1))).alias("band"),
         "sig",
     ).select(
         "doc_id",
@@ -122,8 +120,8 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4) -> DataFrame:
                 "|",
                 F.slice(
                     F.col("sig"),
-                    F.col("band") * (F.size("sig") / F.lit(bands)).cast("int") + 1,
-                    (F.size("sig") / F.lit(bands)).cast("int"),
+                    F.col("band") * (F.size("sig") / F.lit(BANDS)).cast("int") + 1,
+                    (F.size("sig") / F.lit(BANDS)).cast("int"),
                 ),
             )
         ).alias("band_hash"),

@@ -29,22 +29,19 @@ from medtype_spark.dedup.minhash import (
 from medtype_spark.operators.cc import connected_components
 
 
-def near_dup_clusters(
-    docs: DataFrame,
-    bands: int = 4,
-    min_jaccard: float = 0.8,
-) -> DataFrame:
+def near_dup_clusters(docs: DataFrame) -> DataFrame:
     """(doc_id, neardup_group, group_size): every (doc_id, text)
     document labeled with its near-duplicate group's canonical
-    (minimum) id, over word 3-gram shingles and 16 MinHashes."""
+    (minimum) id, over word 3-gram shingles and 16 MinHashes in 4
+    bands; a candidate pair links at shingle Jaccard ≥ 0.8."""
     sh = doc_shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
     # (r6) signatures row-locally (array_min over the doc's shingle
     # array — no explode/groupBy/exchange; bit-identical to the
     # exploded form, pytest-asserted).  ``sh`` stays persisted for the
     # Jaccard verification, its other consumer.
     sig = minhash_signatures_local(docs)
-    cands = lsh_candidate_pairs(sig, bands=bands)
-    verified = jaccard_pairs(sh, cands, min_jaccard=min_jaccard)
+    cands = lsh_candidate_pairs(sig)
+    verified = jaccard_pairs(sh, cands, min_jaccard=0.8)
 
     comp = connected_components(
         verified.select(F.col("a").alias("src"), F.col("b").alias("dst")),

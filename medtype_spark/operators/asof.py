@@ -29,7 +29,7 @@ partition's sort, never to a cross product.
 Ties: right rows sharing (key, ts) are deterministically reduced to
 the one with the greatest ``tiebreak`` BEFORE the window (so the
 result is a function of the data, not of partitioning); a right row
-with ts equal to the left ts matches unless ``strict=True``.
+with ts equal to the left ts matches.
 """
 
 from __future__ import annotations
@@ -48,13 +48,12 @@ def asof_join(
     right_ts: str,
     payload_cols: Sequence[str],
     tiebreak: str | None = None,
-    strict: bool = False,
 ) -> DataFrame:
     """Left as-of join.
 
     Every ``left`` row is returned once, with ``payload_cols`` from the
     latest ``right`` row of the same ``on`` key whose ``right_ts`` is
-    <= ``left_ts`` (< if ``strict``), or NULLs when no such row exists.
+    <= ``left_ts``, or NULLs when no such row exists.
     ``tiebreak`` (default: ``right_ts``) resolves duplicate
     (key, right_ts) rows to the max-tiebreak row.
     """
@@ -96,13 +95,11 @@ def asof_join(
         r_aligned
     )
 
-    # strict=False: right (side 0) sorts before left (side 1) at equal
-    # ts, so an equal-ts right row is visible to the left row.
-    # strict=True: left sorts first, hiding equal-ts right rows.
-    side_order = F.col("_side").asc() if not strict else F.col("_side").desc()
+    # right (side 0) sorts before left (side 1) at equal ts, so an
+    # equal-ts right row is visible to the left row
     w = (
         Window.partitionBy(on)
-        .orderBy(F.col("_ts").asc(), side_order)
+        .orderBy(F.col("_ts").asc(), F.col("_side").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = unioned.withColumn(

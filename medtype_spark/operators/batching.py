@@ -54,12 +54,11 @@ WINDOW_SCHEMA = T.StructType([
 ])
 
 
-def assemble_window(text: str, start: int, end: int,
-                    context_len: int = CONTEXT_LEN) -> tuple[list[int], int, int] | None:
+def assemble_window(text: str, start: int, end: int) -> tuple[list[int], int, int] | None:
     """One window of at most ``MAX_LEN`` tokens, reference arithmetic
     (__init__.py:489-498 + dataloader.py:38-46 truncation; None when
     untruncatable)."""
-    half = context_len // 2
+    half = CONTEXT_LEN // 2
     mention = _tok_ids(text[start:end])
     prev = _tok_ids(text[:start])[-half:]
     nxt = _tok_ids(text[end:])[:half]

@@ -11,16 +11,13 @@ operators/blocking.block_pairs:
   JW).  Strings within a block are short surface forms, so the per-pair
   O(len^2) scan is cheap; batching amortizes serialization.
 - ``cosine_sim`` — pure JVM: zip_with + aggregate, no Python at all.
-
-``score_pairs`` combines them with the reference-style rounding
-(entity_linkers.py:44 rounds scores to 3 dp).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
@@ -237,27 +234,3 @@ def cosine_sim(a: Column, b: Column) -> Column:
     """Cosine similarity, 0.0 when either side is a zero vector."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
-
-
-def score_pairs(
-    pairs: DataFrame,
-    a_text: str = "a_mention",
-    b_text: str = "b_mention",
-    a_vec: str | None = None,
-    b_vec: str | None = None,
-    jw_weight: float = 0.5,
-) -> DataFrame:
-    """Blend string and embedding similarity into ``score``; round to
-    3 dp as the reference does for candidate scores
-    (entity_linkers.py:44)."""
-    jw = jaro_winkler_udf(F.col(a_text), F.col(b_text))
-    if a_vec is not None and b_vec is not None:
-        cos = cosine_sim(F.col(a_vec), F.col(b_vec))
-        blended = F.lit(jw_weight) * jw + F.lit(1.0 - jw_weight) * cos
-        # rows missing an embedding on either side fall back to pure JW
-        score = F.when(
-            F.col(a_vec).isNull() | F.col(b_vec).isNull(), jw
-        ).otherwise(blended)
-    else:
-        score = jw
-    return pairs.withColumn("score", F.round(score, 3))

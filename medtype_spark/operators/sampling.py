@@ -98,14 +98,14 @@ def stratified_take(
     )
 
 
-def hash_split(df: DataFrame, key: str, salt: str = "") -> DataFrame:
+def hash_split(df: DataFrame, key: str) -> DataFrame:
     """Assign every row a ``split`` label, train/val/test at
     80/10/10%, by hash-bucket range; test absorbs the rounding
     remainder.  Assignment is a pure function of the key — a document
     keeps its split across reruns and incremental loads, which is what
     prevents train/test leakage in a growing corpus.
     """
-    bucket = _bucket(F.col(key), salt)
+    bucket = _bucket(F.col(key), "")
     return df.withColumn(
         "split",
         F.when(bucket < F.lit(rate_to_threshold(0.8)), F.lit("train"))

@@ -13,10 +13,9 @@ the resumable ``plans.checkpoints.run_linkage_checkpointed``:
    overlays ``batched_type_predictions`` over the extracted text
    (``extract_pages``) onto the scan's mentions.
 2. ``form_edges``: distinct surface forms per block (the form *units*)
-   → skew-aware salted within-block pairs → Jaro-Winkler (optionally
-   blended with alias-embedding cosine) → edges at or above the
-   threshold whose predicted type sets agree (the MedType filter,
-   .../server/__init__.py:524-544).
+   → skew-aware salted within-block pairs → Jaro-Winkler → edges at
+   or above ``SCORE_THRESHOLD`` whose predicted type sets agree (the
+   MedType filter, .../server/__init__.py:524-544).
 3. ``form_clusters``: alternating-star connected components over the
    form graph, projected back onto mentions as (mention_key,
    entity_cluster); the pairwise-F1 eval vs gold (``evaluate_linkage``)
@@ -39,9 +38,12 @@ from medtype_spark.metrics.clustering import pairwise
 from medtype_spark.operators.blocking import block_pairs
 from medtype_spark.operators.cc import connected_components
 from medtype_spark.operators.mentions import fused_mention_scan, normalize_form_py
-from medtype_spark.operators.pairs import score_pairs
+from medtype_spark.operators.pairs import jaro_winkler_udf
 from medtype_spark.operators.typefilter import filter_candidates
 from medtype_spark.session import live_pandas_udf
+
+# Jaro-Winkler score (rounded to 3 dp) at or above which two forms link
+SCORE_THRESHOLD = 0.92
 
 
 @live_pandas_udf(StringType())
@@ -141,11 +143,8 @@ def form_units(mentions: DataFrame) -> DataFrame:
 
 def form_edges(
     mentions: DataFrame,
-    score_threshold: float = 0.92,
     hot_threshold: int = 10000,
     target_cell: int = 2000,
-    alias_embeddings: DataFrame | None = None,
-    jw_weight: float = 0.5,
     persisted: list | None = None,
     stats: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -156,49 +155,35 @@ def form_edges(
     not mention instances: the score is a pure function of the form and
     same-form mentions are trivially linked, so the within-block
     quadratic runs over the form *vocabulary* (Zipf — sublinear in
-    corpus size).  An edge needs score ≥ ``score_threshold`` and type
-    agreement: pairs whose predicted type sets are both non-empty and
-    disjoint are pruned (MedType's filter semantics: an empty
-    prediction never prunes, __init__.py:530-536).
-
-    ``alias_embeddings``: optional broadcast-sized dimension
-    (norm_form, embedding: array<double>) — when given, pair scores
-    blend Jaro-Winkler with alias-embedding cosine (the north star's
-    "Jaro-Winkler + alias-embedding pairwise scores within salted
-    blocks"); forms without an embedding fall back to pure JW.
-    ``jw_weight`` sets the blend.  ``persisted`` collects the frames
+    corpus size).  The score is Jaro-Winkler rounded to 3 dp, as the
+    reference rounds candidate scores (entity_linkers.py:44).  An edge
+    needs score ≥ ``SCORE_THRESHOLD`` and type agreement: pairs whose
+    predicted type sets are both non-empty and disjoint are pruned
+    (MedType's filter semantics: an empty prediction never prunes,
+    __init__.py:530-536).  ``persisted`` collects the frames
     ``block_pairs`` caches, for the caller to release; ``stats`` passes
     through to ``block_pairs`` (salted blocks and their largest cell
     count).
     """
     units = form_units(mentions)
-    extra = ["pred_type"]
-    a_vec = b_vec = None
-    if alias_embeddings is not None:
-        emb = alias_embeddings.select(
-            F.col("norm_form"), F.col("embedding").alias("alias_vec")
-        )
-        units = units.join(F.broadcast(emb), "norm_form", "left")
-        extra.append("alias_vec")
-        a_vec, b_vec = "a_alias_vec", "b_alias_vec"
-
     pairs = block_pairs(
         units,
         key_col="block_key",
         id_col="norm_form",
         hot_threshold=hot_threshold,
         target_cell=target_cell,
-        extra_cols=extra,
+        extra_cols=["pred_type"],
         persist_registry=persisted,
         stats=stats,
     )
-    scored = score_pairs(pairs, "a_norm_form", "b_norm_form", a_vec, b_vec, jw_weight)
+    score = F.round(jaro_winkler_udf(F.col("a_norm_form"), F.col("b_norm_form")), 3)
+    scored = pairs.withColumn("score", score)
     agree = (
         (F.size("a_pred_type") == 0)
         | (F.size("b_pred_type") == 0)
         | (F.size(F.array_intersect("a_pred_type", "b_pred_type")) > 0)
     )
-    edges = scored.where((F.col("score") >= F.lit(score_threshold)) & agree).select(
+    edges = scored.where((F.col("score") >= F.lit(SCORE_THRESHOLD)) & agree).select(
         F.col("a_norm_form").alias("src"), F.col("b_norm_form").alias("dst")
     )
     return units, edges
@@ -236,14 +221,11 @@ def run_linkage(
     pages: DataFrame,
     lexicon: pd.DataFrame,
     entity_types: DataFrame,
-    score_threshold: float = 0.92,
     hot_threshold: int = 10000,
     target_cell: int = 2000,
     cleanup: bool = False,
     type_scorer: str = "dict",
     with_candidate_filter: bool = False,
-    alias_embeddings: DataFrame | None = None,
-    jw_weight: float = 0.5,
     cc_small_graph_threshold: int = 1_000_000,
     matcher: str = "trie",
 ) -> dict:
@@ -256,8 +238,7 @@ def run_linkage(
     ``report["blocking"]`` is block_pairs' stats (``salted_blocks``,
     ``max_cells``) and ``report["cc"]`` connected_components' (which CC
     path ran, with its edge count or rounds).  ``type_scorer``/``matcher`` go to
-    ``scan_mentions``; ``score_threshold``, ``hot_threshold``,
-    ``target_cell``, ``alias_embeddings`` and ``jw_weight`` to
+    ``scan_mentions``; ``hot_threshold`` and ``target_cell`` to
     ``form_edges``; ``cc_small_graph_threshold`` to ``form_clusters``.
 
     ``with_candidate_filter`` adds the MedType candidate filter (J8):
@@ -284,8 +265,7 @@ def run_linkage(
     persisted: list[DataFrame] = [mentions]
     blocking_stats: dict = {}
     units, edges = form_edges(
-        mentions, score_threshold, hot_threshold, target_cell,
-        alias_embeddings, jw_weight, persisted, blocking_stats,
+        mentions, hot_threshold, target_cell, persisted, blocking_stats,
     )
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     persisted.append(edges)

@@ -67,7 +67,7 @@ class StageCheckpointer:
         ``build_fn()`` produces the DataFrame; ``upstream`` names the
         stages it consumes (their fingerprints are chained into this
         stage's manifest).  ``params`` are the caller's build parameters
-        (e.g. score_threshold) — folded into the fingerprint so a rerun
+        (e.g. hot_threshold) — folded into the fingerprint so a rerun
         with different settings NEVER resumes from stale parquet.
         """
         upstream = upstream or []
@@ -153,7 +153,6 @@ def run_linkage_checkpointed(
     lexicon,
     workdir: str,
     *,
-    score_threshold: float = 0.92,
     hot_threshold: int = 10000,
     target_cell: int = 2000,
     type_scorer: str = "dict",
@@ -176,9 +175,8 @@ def run_linkage_checkpointed(
     )
 
     params = {
-        "score_threshold": score_threshold, "hot_threshold": hot_threshold,
-        "target_cell": target_cell, "type_scorer": type_scorer,
-        "matcher": matcher,
+        "hot_threshold": hot_threshold, "target_cell": target_cell,
+        "type_scorer": type_scorer, "matcher": matcher,
     }
     ck = StageCheckpointer(spark, workdir)
 
@@ -191,9 +189,7 @@ def run_linkage_checkpointed(
     cached: list[DataFrame] = []
     edges = ck.stage(
         "020_edges",
-        lambda: form_edges(
-            mentions, score_threshold, hot_threshold, target_cell, persisted=cached
-        )[1],
+        lambda: form_edges(mentions, hot_threshold, target_cell, persisted=cached)[1],
         upstream=["010_mentions"], params=params,
     )
     for df in cached:

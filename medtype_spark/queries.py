@@ -613,7 +613,7 @@ def q24_cosine_topk(spark, sf_dir):
     queries = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = brute_force_topk(fan_out(emb), queries, k=5)
+    out = brute_force_topk(fan_out(emb), queries)
     return out.select("query_id", "rank", "vec_id")
 
 
@@ -1019,7 +1019,7 @@ def q44_lsh_candidates(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     sig = minhash_signatures_local(d, num_hashes=8)
-    return lsh_candidate_pairs(sig, bands=4)
+    return lsh_candidate_pairs(sig)
 
 
 def q45_filter_candidates(spark, sf_dir):
@@ -1206,7 +1206,7 @@ def q60_neardup_clusters(spark, sf_dir):
     from medtype_spark.dedup.neardup import near_dup_clusters
 
     d = _t(spark, sf_dir, "documents")
-    return near_dup_clusters(d, min_jaccard=0.8).select(
+    return near_dup_clusters(d).select(
         "doc_id", "neardup_group", "group_size"
     )
 
@@ -1223,7 +1223,7 @@ def q61_lsh_cosine_pairs(spark, sf_dir):
     )
     from medtype_spark.similarity.knn import lsh_cosine_pairs
 
-    return lsh_cosine_pairs(emb, dim=64, min_cosine=0.35, n_planes=6, n_tables=3).select(
+    return lsh_cosine_pairs(emb, dim=64, min_cosine=0.35, n_planes=6).select(
         "a", "b", _r6(F.col("cosine")).alias("cosine")
     )
 
@@ -1351,7 +1351,7 @@ def q64_conll_scan(spark, sf_dir):
     expected TSV."""
     from medtype_spark.sources.conll import read_conll_coref
 
-    return read_conll_coref(spark, os.path.join(FIXTURES, "conll", "*.conll"))
+    return read_conll_coref(spark, os.path.join(FIXTURES, "conll"))
 
 
 def q65_ceaf_fixture(spark, sf_dir):

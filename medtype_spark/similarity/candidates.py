@@ -42,7 +42,6 @@ def embedding_candidates(
     forms: DataFrame,
     lexicon: pd.DataFrame,
     k: int = 5,
-    min_cosine: float = 0.0,
 ) -> DataFrame:
     """Append top-k alias-embedding candidates per distinct form as
     ``emb_candidates``.
@@ -89,8 +88,6 @@ def embedding_candidates(
                 order = np.argsort(-r, kind="stable")
                 picked, seen = [], set()
                 for idx in order:
-                    if r[idx] < min_cosine:
-                        break
                     if eids[idx] in seen:  # best alias per entity
                         continue
                     seen.add(eids[idx])

@@ -46,8 +46,8 @@ from medtype_spark.functions.scoring import md5_bucket
 from medtype_spark.operators.pairs import cosine_sim, dot as dot_sim
 
 
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
-    """Exact top-k cosine neighbours for each query vector over
+def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-5 cosine neighbours for each query vector over
     (vec_id, embedding) frames.
 
     Returns (query_id, rank, vec_id, cosine).  Ties broken by vec_id
@@ -78,7 +78,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataF
         F.col("vec_id"),
         cos.alias("cosine"),
     )
-    return _top_k(scored, "cosine", k, ascending=False)
+    return _top_k(scored, "cosine", 5, ascending=False)
 
 
 def _top_k(scored: DataFrame, score: str, k: int, ascending: bool) -> DataFrame:
@@ -123,19 +123,19 @@ def _hyperplane_bits(vec_col, dim: int, n_planes: int, seed: int = 42):
     return F.concat(*bits)
 
 
+LSH_TABLES = 3
+
+
 def lsh_cosine_pairs(
     corpus: DataFrame,
     dim: int,
     min_cosine: float = 0.8,
     n_planes: int = 8,
-    n_tables: int = 3,
-    hot_threshold: int = 5000,
-    target_cell: int = 1000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS at corpus scale: bucketed
     self-join (never all-pairs).
 
-    Multi-table LSH over (vec_id, embedding): ``n_tables`` independent
+    Multi-table LSH over (vec_id, embedding): ``LSH_TABLES`` independent
     hyperplane sets (table ``t`` seeded ``42 + 1000 * t``), each an
     equi-join on its own bucket key; a pair is a candidate if ANY table
     collides (union + distinct), then exact cosine filters.  More
@@ -146,15 +146,15 @@ def lsh_cosine_pairs(
     population is corpus/2^n_planes, so within-bucket pairs grow with
     the SQUARE of corpus size): within-bucket pair generation goes
     through ``block_pairs`` with the (table, bucket) pair as the
-    blocking key: buckets larger than ``hot_threshold`` are salted onto
-    a 2-D cell grid (~``target_cell``-member cells), so the shuffle key
+    blocking key: buckets larger than 5000 vectors are salted onto a
+    2-D cell grid (~1000-member cells), so the shuffle key
     spreads a hot bucket across cells and no task sees a whole bucket —
     the exact mechanism (and property test) used for hot blocking keys.
     """
     from medtype_spark.operators.blocking import block_pairs
 
     per_table = []
-    for t in range(n_tables):
+    for t in range(LSH_TABLES):
         per_table.append(
             corpus.select(F.col("vec_id"), F.col("embedding")).withColumn(
                 "_bucket",
@@ -172,8 +172,8 @@ def lsh_cosine_pairs(
         bucketed,
         key_col="_bucket",
         id_col="vec_id",
-        hot_threshold=hot_threshold,
-        target_cell=target_cell,
+        hot_threshold=5000,
+        target_cell=1000,
         extra_cols=["embedding"],
     )
     cands = pairs.select(

@@ -17,7 +17,8 @@ Spark-first plan (no all-pairs join anywhere):
 * within-cell pairs through the salted 2-D grid
   (`operators/blocking.py:block_pairs` with the embedding carried as
   an extra column): quadratic work is bounded per CELL (≈ corpus /
-  n_centroids on average; hot cells split into ≤ target_cell² tiles),
+  n_centroids on average; cells over 10000 rows split into ≤ 2000²
+  tiles),
   never per corpus;
 * JVM-side cosine (`operators/pairs.py:cosine_sim` — zip_with +
   aggregate, no Python) filters edges at ``threshold``;
@@ -48,8 +49,6 @@ def semantic_dedup(
     centroids,
     threshold: float = 0.95,
     metric: str = "cosine",
-    hot_threshold: int = 10000,
-    target_cell: int = 2000,
 ) -> DataFrame:
     """Returns DataFrame(vec_id, cell, canonical_id, group_size,
     is_canonical) over a (vec_id, embedding) corpus: every input row
@@ -64,8 +63,6 @@ def semantic_dedup(
         assigned.select(F.col("sd_cell"), F.col("vec_id"), F.col("embedding")),
         key_col="sd_cell",
         id_col="vec_id",
-        hot_threshold=hot_threshold,
-        target_cell=target_cell,
         extra_cols=["embedding"],
     )
     score = (

@@ -4,7 +4,8 @@ A brat directory holds one ``<docid>.ann`` file per document with
 mention lines (``T<i>\\tTYPE START END\\tsurface``) and normalization
 lines (``N<i>\\tReference T<i> KB:id\\t...``).  The reference globs the
 directory and parses per file; here one ``spark.read.text`` over the
-glob scans every file partition-parallel, with ``input_file_name()``
+directory, filtered to ``*.ann`` names, scans every file
+partition-parallel, with ``input_file_name()``
 supplying the docid — no driver-side file loop, so a million-document
 brat corpus reads like any other distributed text source.
 
@@ -29,7 +30,7 @@ WP = "Wikipedia:"  # brat.py:14
 def read_brat_dir(spark: SparkSession, dir_path: str) -> DataFrame:
     """Annotation frame from a directory of brat ``.ann`` files."""
     lines = (
-        spark.read.text(f"{dir_path}/*.ann")
+        spark.read.option("pathGlobFilter", "*.ann").text(dir_path)
         .withColumn("_file", F.input_file_name())
         .withColumn(
             "docid",

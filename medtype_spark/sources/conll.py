@@ -74,10 +74,11 @@ def parse_conll_coref(text: str) -> list[tuple[str, int, int]]:
     return sorted(set(out))
 
 
-def read_conll_coref(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Mention frame (docid, cluster, start, end) from CoNLL files."""
+def read_conll_coref(spark: SparkSession, dir_path: str) -> DataFrame:
+    """Mention frame (docid, cluster, start, end) from a directory of
+    ``.conll`` files."""
     files = (
-        spark.read.text(path_glob, wholetext=True)
+        spark.read.option("pathGlobFilter", "*.conll").text(dir_path, wholetext=True)
         .withColumn("docid", F.input_file_name())
     )
 

@@ -66,15 +66,12 @@ def prepare_tac(
     spark: SparkSession,
     links_path: str,
     queries_path: str,
-    excluded_spans: DataFrame | None = None,
 ) -> DataFrame:
     """PrepareTac (tac.py:23-83): annotation frame from queries+links.
 
-    ``excluded_spans``: optional (docid, start, end) — queries whose
-    start OR end offset falls inside an excluded span are dropped
-    (tac.py:68-71, 108-116).  Candidate ids are left verbatim, which
-    is what the reference does without a redirect mapping
-    (tac.py:86-105).
+    Every query is kept (the reference's run without excluded spans,
+    tac.py:68-71), and candidate ids are left verbatim, which is what
+    the reference does without a redirect mapping (tac.py:86-105).
 
     Documented divergence: a query with no links raises ValueError in
     the reference (tac.py:72-73); here it yields an annotation with an
@@ -84,23 +81,6 @@ def prepare_tac(
     """
     queries = read_tac_queries(spark, queries_path)
     links = read_tac_links(spark, links_path)
-
-    if excluded_spans is not None:
-        ex = F.broadcast(
-            excluded_spans.select(
-                F.col("docid").alias("_xd"),
-                F.col("start").alias("_xs"),
-                F.col("end").alias("_xe"),
-            )
-        )
-        hit = (F.col("docid") == F.col("_xd")) & (
-            F.col("start").between(F.col("_xs"), F.col("_xe"))
-            | F.col("end").between(F.col("_xs"), F.col("_xe"))
-        )
-        queries = (
-            queries.join(ex, hit, "left_anti")
-        )
-
     cand = queries.join(links, "qid", "left")
 
     # grouped_queries (tac.py:156-158): deduplicate queries by span,

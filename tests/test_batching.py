@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from medtype_spark.operators.batching import (
     CLS,
+    CONTEXT_LEN,
     MAX_LEN,
     MEN_END,
     MEN_START,
@@ -33,17 +34,21 @@ def test_assemble_window_reference_arithmetic():
 
 def test_assemble_window_truncation():
     """dataloader.py:38-44: oversized windows truncate symmetrically."""
-    text = " ".join(f"w{i}" for i in range(200)) + " MENTION " + " ".join(
-        f"v{i}" for i in range(200)
-    )
-    start, end = text.index("MENTION"), text.index("MENTION") + len("MENTION")
-    # context_len=120 alone caps prev at 60 — no truncation path
-    toks, men_pos, tok_len = assemble_window(text, start, end)
-    assert tok_len <= MAX_LEN and men_pos == 61
-    # context_len=300 overflows max_len → dataloader.py:38-44 kicks in
-    toks, men_pos, tok_len = assemble_window(text, start, end, context_len=300)
+    def window(mention):
+        text = " ".join(f"w{i}" for i in range(200)) + f" {mention} " + " ".join(
+            f"v{i}" for i in range(200)
+        )
+        start = text.index(mention)
+        return assemble_window(text, start, start + len(mention))
+
+    # CONTEXT_LEN=120 alone caps prev at 60 — no truncation path
+    toks, men_pos, tok_len = window("MENTION")
+    assert CONTEXT_LEN // 2 + 1 == men_pos == 61
+    assert tok_len == 60 + 1 + 60 + 4
+    # a 10-token mention overflows max_len → dataloader.py:38-44 kicks in
+    toks, men_pos, tok_len = window(" ".join(["MENTION"] * 10))
     assert tok_len <= MAX_LEN
-    left_len = (MAX_LEN - 1 - 4) // 2  # mention is 1 token
+    left_len = (MAX_LEN - 10 - 4) // 2
     assert men_pos == left_len + 1
 
 

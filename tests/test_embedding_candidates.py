@@ -32,12 +32,3 @@ def test_typo_forms_retrieve_right_entity(spark):
         scores = [c["score"] for c in cands]
         assert scores == sorted(scores, reverse=True)
         assert len({c["eid"] for c in cands}) == len(cands)
-
-
-def test_min_cosine_cuts_tail(spark):
-    lex = build_lexicon(10)
-    df = spark.createDataFrame([("zzz qqq www",)], ["norm_form"])
-    loose = embedding_candidates(df, lex, k=5, min_cosine=0.0).collect()[0]
-    tight = embedding_candidates(df, lex, k=5, min_cosine=0.9).collect()[0]
-    assert len(loose["emb_candidates"]) == 5
-    assert len(tight["emb_candidates"]) == 0  # gibberish matches nothing well

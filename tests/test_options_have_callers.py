@@ -11,10 +11,15 @@ fails on each defaulted parameter that no same-named call sets, unless
 A call sets a parameter when it passes, by keyword or by position, a
 literal that is not equal to the default (both read with
 ``ast.literal_eval``) or any non-literal expression, or when it spreads
-``*args`` (positional parameters) or ``**kwargs`` (all parameters).
-Passing the default itself sets nothing.  Calls are matched by name
-only (``f(...)`` and ``obj.f(...)``), which over-counts when two
-functions share a name; the guard errs towards passing.
+``*args`` (positional parameters) or ``**kwargs``.  A ``**kwargs``
+spread sets only the keys of a workload's ``linkage`` and ``datagen``
+settings in ``perfbench/spec.json``: every spread outside the tests
+carries one of those dicts.  Passing the default itself sets nothing,
+and a call in ``tests/`` or ``perfbench/test_*.py`` sets nothing at
+all: a test exercises an option, it does not need it.  Calls are
+matched by name only (``f(...)`` and ``obj.f(...)``), which
+over-counts when two functions share a name; the guard errs towards
+passing.
 
 Run ``python tests/test_options_have_callers.py`` to list the unset
 parameters, each with the ``file:line`` of every call that passes it
@@ -23,6 +28,8 @@ its default.  No Spark is needed.
 from __future__ import annotations
 
 import ast
+import fnmatch
+import json
 import os
 import sys
 from functools import lru_cache
@@ -31,13 +38,15 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LIBRARY = "medtype_spark"
 SPEC = os.path.join(LIBRARY, "oracles.py")
 SKIP_DIRS = {".git", ".work", "__pycache__"}
+TEST_FILES = ("tests/*", "perfbench/test_*.py")
 
 _RUN_LINKAGE_MIRROR = (
     "mirrors a run_linkage setting that perfbench's workloads set, and "
     "feeds the stage fingerprints")
 ALLOWED = {
-    ("plans/checkpoints.py", "run_linkage_checkpointed", "score_threshold"):
-        "mirrors run_linkage's edge threshold, and feeds the stage fingerprints",
+    ("pipeline.py", "run_linkage", "with_candidate_filter"):
+        "the only reader of run_linkage's entity_types, which perfbench passes "
+        "to every run; goes when a benchmark change stops passing it",
     ("plans/checkpoints.py", "run_linkage_checkpointed", "hot_threshold"): _RUN_LINKAGE_MIRROR,
     ("plans/checkpoints.py", "run_linkage_checkpointed", "target_cell"): _RUN_LINKAGE_MIRROR,
     ("plans/checkpoints.py", "run_linkage_checkpointed", "type_scorer"): _RUN_LINKAGE_MIRROR,
@@ -47,6 +56,19 @@ ALLOWED = {
     ("evaluation/annotations.py", "write_annotation_tsv", "mode"):
         "deployment setting: append to or replace an existing output",
 }
+
+
+def spread_keys():
+    """The keys a ``**kwargs`` spread can carry: every workload's
+    ``linkage`` and ``datagen`` settings."""
+    with open(os.path.join(ROOT, "perfbench", "spec.json"), encoding="utf-8") as fh:
+        workloads = json.load(fh)["workloads"].values()
+    return frozenset(k for w in workloads for group in ("linkage", "datagen")
+                     for k in w.get(group, {}))
+
+
+def _is_test(rel):
+    return any(fnmatch.fnmatch(rel.replace(os.sep, "/"), p) for p in TEST_FILES)
 
 
 def _checkout_trees():
@@ -113,9 +135,12 @@ def library_options(trees):
 
 def call_sites(trees):
     """{callee name: [(file:line, positional args before any *args, has
-    *args, {keyword: arg}, has **kwargs)]}."""
+    *args, {keyword: arg}, has **kwargs)]} of every call outside the
+    tests."""
     sites = {}
     for rel, tree in trees.items():
+        if _is_test(rel):
+            continue
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
@@ -134,9 +159,10 @@ def call_sites(trees):
     return sites
 
 
-def unset_options(trees):
+def unset_options(trees, spread):
     """[(module, function, parameter, [file:line of each call that passes
-    the default])] of every defaulted parameter that no call sets."""
+    the default])] of every defaulted parameter that no call sets;
+    ``spread`` holds the parameters a ``**kwargs`` spread sets."""
     sites = call_sites(trees)
     unset = []
     for module, fn, param, index, default, is_method in library_options(trees):
@@ -146,7 +172,7 @@ def unset_options(trees):
             arg = kws.get(param)
             if arg is None and pos is not None and 0 <= pos < len(positional):
                 arg = positional[pos]
-            if dstar or (star and pos is not None and arg is None):
+            if (dstar and param in spread) or (star and pos is not None and arg is None):
                 is_set = True
             elif arg is not None:
                 if not _is_default(arg, default):
@@ -162,7 +188,8 @@ def unset_options(trees):
 
 @lru_cache(maxsize=1)
 def checkout_unset() -> tuple:
-    return tuple((m, f, p, tuple(w)) for m, f, p, w in unset_options(_checkout_trees()))
+    return tuple((m, f, p, tuple(w))
+                 for m, f, p, w in unset_options(_checkout_trees(), spread_keys()))
 
 
 def _unset_keys():
@@ -180,10 +207,10 @@ class K:
 """
 
 
-def _unset_given(caller):
+def _unset_given(caller, path="caller.py", spread=frozenset()):
     trees = {os.path.join(LIBRARY, "m.py"): ast.parse(_CANNED_LIBRARY),
-             "caller.py": ast.parse(caller)}
-    return {(f, p): where for _m, f, p, where in unset_options(trees)}
+             path: ast.parse(caller)}
+    return {(f, p): where for _m, f, p, where in unset_options(trees, spread)}
 
 
 def test_the_default_sets_nothing():
@@ -203,9 +230,31 @@ def test_a_different_literal_a_name_or_a_spread_sets():
     assert set(_unset_given("f(df, 4)\nK().g(k=6)")) == {("f", "b"), ("f", "c")}
     assert set(_unset_given("f(df, b=name, c=-1)")) == {("f", "a"), ("g", "k")}
     assert set(_unset_given("f(df, 3, c=x.y)")) == {("f", "a"), ("f", "b"), ("g", "k")}
-    # *args covers every positional parameter, **kwargs every parameter
+    # *args covers every positional parameter
     assert set(_unset_given("f(*args)\nK().g(*args)")) == {("f", "c")}
-    assert set(_unset_given("f(df, **kw)")) == {("g", "k")}
+
+
+def test_a_spread_sets_only_the_spec_keys():
+    every = {("f", "a"), ("f", "b"), ("f", "c"), ("g", "k")}
+    assert set(_unset_given("f(df, **kw)\nK().g(**kw)")) == every
+    got = _unset_given("f(df, **kw)\nK().g(**kw)", spread=frozenset({"a", "c"}))
+    assert set(got) == {("f", "b"), ("g", "k")}
+    # the checkout's spread keys are the workloads' linkage and datagen
+    # settings, run_linkage's and synth_pages' parameters
+    assert {"type_scorer", "matcher", "hot_threshold", "target_cell",
+            "cc_small_graph_threshold", "mentions_per_page"} <= spread_keys()
+
+
+def test_a_call_in_the_tests_sets_nothing():
+    every = {("f", "a"), ("f", "b"), ("f", "c"), ("g", "k")}
+    caller = "f(df, 4, b=name, c=-1)\nK().g(k=6)\nf(*args, **kw)"
+    assert set(_unset_given(caller)) == set()
+    for path in (os.path.join("tests", "test_m.py"), os.path.join("tests", "conftest.py"),
+                 os.path.join("perfbench", "test_smoke.py")):
+        got = _unset_given(caller, path, spread=frozenset({"a", "b", "c", "k"}))
+        assert set(got) == every, path
+    # a perfbench module that is not a test still calls
+    assert set(_unset_given(caller, os.path.join("perfbench", "run.py"))) == set()
 
 
 def test_every_defaulted_parameter_has_a_caller():

@@ -87,46 +87,31 @@ def test_flagship_f1(spark, corpus):
     assert result["report"]["blocking"] == {"salted_blocks": 0, "max_cells": 1}
 
 
-def test_alias_embedding_blend_links_dissimilar_strings(spark):
-    """Two aliases of one entity whose surface strings are too far for
-    JW alone must still link when their alias embeddings agree (the
-    north star's JW + alias-embedding blended pair score)."""
-    from medtype_spark.operators.pairs import jaro_winkler
+def test_candidate_filter_adds_filtered_candidates(spark, corpus):
+    """with_candidate_filter=True adds J8's ``filtered_candidates`` to
+    the scan's mentions, exactly as filter_candidates computes them
+    over the same scan, and leaves the clusters as they are."""
+    from medtype_spark.operators.typefilter import filter_candidates
+    from medtype_spark.pipeline import scan_mentions
 
-    import pandas as pd
+    pages, _, lex, etypes = corpus
 
-    a1, a2 = "corp9 alphaname", "corp9 zzguvwxyq"
-    jw = jaro_winkler(
-        "corp9 alphaname", "corp9 zzguvwxyq"
-    )
-    assert jw < 0.85  # JW alone is below the threshold we'll use
+    def run(**kw):
+        result = run_linkage(pages, lex, etypes, cleanup=True, **kw)
+        clusters = {tuple(r) for r in result["clusters"].collect()}
+        return result["mentions"], clusters
 
-    text = f"intro {a1} middle {a2} end"
-    html = f"<html><body><p>{text}</p></body></html>".encode()
-    pages = spark.createDataFrame(
-        [("u1", None, html, text, "en")],
-        "url:string, warc_ts:timestamp, html:binary, text:string, lang:string",
-    )
-    lex = pd.DataFrame(
-        [(a1, "E1", 1.0, "Anatomy"), (a2, "E1", 0.9, "Anatomy")],
-        columns=["alias", "eid", "score", "type"],
-    )
-    etypes = spark.createDataFrame([("E1", ["Anatomy"])], "eid:string, types:array<string>")
-    vec = [1.0, 0.0, 0.5]
-    emb = spark.createDataFrame(
-        [("corp9 alphaname", vec), ("corp9 zzguvwxyq", vec)],
-        "norm_form:string, embedding:array<double>",
-    )
+    def filtered(mentions):
+        rows = mentions.select(
+            "mention_key", F.to_json("filtered_candidates").alias("fc")).collect()
+        return {(r["mention_key"], r["fc"]) for r in rows}
 
-    def clusters_of(**kw):
-        r = run_linkage(pages, lex, etypes, score_threshold=0.85, **kw)
-        return {row["mention_key"]: row["entity_cluster"] for row in r["clusters"].collect()}
-
-    jw_only = clusters_of()
-    assert len(set(jw_only.values())) == 2  # JW alone keeps them apart
-
-    blended = clusters_of(alias_embeddings=emb, jw_weight=0.3)
-    assert len(set(blended.values())) == 1  # embedding agreement links
+    mentions, clusters = run(with_candidate_filter=True)
+    want = filtered(filter_candidates(scan_mentions(pages, lex), etypes))
+    assert filtered(mentions) == want
+    assert any(fc != "[]" for _, fc in want)
+    _, default_clusters = run()
+    assert clusters == default_clusters
 
 
 def test_non_ascii_alias_gets_its_type(spark):

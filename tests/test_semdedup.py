@@ -70,8 +70,7 @@ def dedup_result(spark):
     rows = _corpus()
     cents = md5_centroids(DIM, N_CELLS)
     df = spark.createDataFrame([Row(vec_id=v, embedding=e) for v, e in rows])
-    got = semantic_dedup(df, cents, threshold=0.99, target_cell=16,
-                         hot_threshold=64).collect()
+    got = semantic_dedup(df, cents, threshold=0.99).collect()
     return rows, cents, got
 
 

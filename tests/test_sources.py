@@ -1,4 +1,4 @@
-"""S6 TAC reader, S7 Brat reader, and the span-validation pass.
+"""S6 TAC reader, S7 Brat reader and S8 CoNLL reader.
 
 TAC golden round-trip mirrors the reference's own test
 (neleval/test.py:41-47): parsing examples/tac_{gold,system}.{xml,tab}
@@ -8,10 +8,8 @@ must reproduce examples/tac_*.combined.tsv exactly.
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from medtype_spark.evaluation.annotations import read_annotation_tsv
-from medtype_spark.evaluation.validation import classify_span_pairs, validate_spans
 from medtype_spark.sources.brat import read_brat_dir
 from medtype_spark.sources.tac import prepare_tac
 
@@ -41,22 +39,6 @@ def test_tac_prepare_golden(spark, which):
     assert _flat(got) == _flat(want)
 
 
-def test_tac_excluded_spans(spark):
-    excl = spark.createDataFrame(
-        [("bolt-eng-DF-200-192451-5799099", 2400, 2460)],
-        "docid:string, start:long, end:long",
-    )
-    got = prepare_tac(
-        spark,
-        os.path.join(FIXTURES, "tac_gold.tab"),
-        os.path.join(FIXTURES, "tac_gold.xml"),
-        excluded_spans=excl,
-    )
-    docids = {r["docid"] for r in got.collect()}
-    assert "bolt-eng-DF-200-192451-5799099" not in docids
-    assert got.count() == 9
-
-
 def test_brat_reader(spark, tmp_path):
     d = tmp_path / "brat"
     d.mkdir()
@@ -70,11 +52,14 @@ def test_brat_reader(spark, tmp_path):
     (d / "doc2.ann").write_text(
         "T1\tORG 0 5\tACME\n"  # mention with no normalization
     )
+    (d / "doc1.txt").write_text("T9\tPER 0 4\tnot an annotation file\n")
     out = read_brat_dir(spark, str(d))
     got = {
         (r["docid"], r["start"], r["end"]): [(c["eid"], c["score"], c["type"]) for c in r["candidates"]]
         for r in out.collect()
     }
+    # only .ann files are read: the brat text file beside them is not
+    assert set(got) == {("doc1", 10, 18), ("doc1", 25, 30), ("doc2", 0, 5)}
     # URL-unquote + Wikipedia: namespace strip (brat.py:100-110)
     assert got[("doc1", 10, 18)] == [("Barack Obama", 1.0, "PER")]
     # two normalizations, desc-eid deterministic order
@@ -122,7 +107,8 @@ def test_read_conll_coref_distributed(spark, tmp_path):
     d.mkdir()
     (d / "a.conll").write_text(CONLL_DOC)
     (d / "b.conll").write_text("w\tx\t(9)\n")
-    out = read_conll_coref(spark, str(d / "*.conll"))
+    (d / "notes.txt").write_text("w\tx\t(8)\n")  # not a .conll file: skipped
+    out = read_conll_coref(spark, str(d))
     got = {(r["docid"], r["cluster"], r["start"], r["end"]) for r in out.collect()}
     assert ("a.conll", "0", 1, 2) in got
     assert ("b.conll", "9", 1, 1) in got
@@ -130,45 +116,3 @@ def test_read_conll_coref_distributed(spark, tmp_path):
     m = conll_mentions(out)
     assert m.columns == ["mention", "cluster"]
     assert m.count() == 6
-
-
-SPANS = "docid:string, start:long, end:long"
-
-
-def _spans(spark):
-    return spark.createDataFrame(
-        [
-            ("d", 0, 5), ("d", 0, 5),      # duplicate
-            ("d", 10, 20), ("d", 12, 15),  # nested
-            ("d", 30, 40), ("d", 35, 45),  # crossing
-            ("d", 100, 110),               # clean
-            ("e", 0, 5),                   # same span, other doc: clean
-        ],
-        SPANS,
-    )
-
-
-def test_classify_span_pairs(spark):
-    got = {
-        (r["category"]): 0 for r in []
-    }
-    rows = classify_span_pairs(_spans(spark)).collect()
-    counts = {}
-    for r in rows:
-        counts[r["category"]] = counts.get(r["category"], 0) + 1
-    assert counts == {"duplicate": 1, "nested": 1, "crossing": 1}
-
-
-def test_validate_policy(spark):
-    spans = _spans(spark)
-    # default policy: all ignore — no action, empty issue frame
-    assert validate_spans(spans).count() == 0
-    # warn: emits a UserWarning per non-empty category
-    with pytest.warns(UserWarning, match="duplicate"):
-        validate_spans(spans, {"duplicate": "warn"})
-    # error: raises with the category named (document.py:54-58)
-    with pytest.raises(ValueError, match="crossing"):
-        validate_spans(spans, {"crossing": "error"})
-    # error on a clean category passes
-    clean = spark.createDataFrame([("d", 0, 5), ("d", 10, 15)], SPANS)
-    assert validate_spans(clean, {c: "error" for c in ("duplicate", "nested", "crossing")}).count() == 0

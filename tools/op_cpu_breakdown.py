@@ -202,7 +202,7 @@ def _action(workload, stage: str):
         return lambda: run_linkage(workload.pages, workload.lexicon, workload.etypes,
                                    cleanup=True, **kw)["clusters"].count()
     scan_kw = {k: kw[k] for k in ("type_scorer", "matcher") if k in kw}
-    edge_kw = {k: kw[k] for k in ("score_threshold", "hot_threshold", "target_cell") if k in kw}
+    edge_kw = {k: kw[k] for k in ("hot_threshold", "target_cell") if k in kw}
     mentions = scan_mentions(workload.pages, workload.lexicon, **scan_kw).persist(
         StorageLevel.MEMORY_AND_DISK)
     mentions.count()

@@ -14,22 +14,23 @@ self-join into a single-reducer quadratic bomb, so:
 2. members of a hot key get a deterministic salt cell in [0, s) with
    s = ceil(count / target), looked up in a literal map; every other
    key has one cell;
-3. pairs = within-cell pairs (one self-join on key and cell) + for hot
-   keys only, cross-cell pairs enumerated over the (i < j) cell grid —
-   every unordered intra-block pair is produced EXACTLY once
+3. one equi-join on the key names yields every pair.  With no hot
+   key it joins on the key alone: one self-join, no cell, no grid.
+   Otherwise each member is replicated onto the (i <= j) cell grid of
+   its block and the join is on (key, i, j): every unordered
+   intra-block pair, same-cell or cross-cell, is produced EXACTLY once
    (completeness is property-tested with a planted hot key in
-   tests/test_blocking.py).  With no hot key there is no cell and no
-   grid: cold blocks pair through one key self-join.
+   tests/test_blocking.py).
 
-Everything is built-in DataFrame ops — the joins shuffle on
-(key, salt) so no single task ever sees a whole hot block.
+Everything is built-in DataFrame ops — the join shuffles on
+(key, i, j) so no single task ever sees a whole hot block.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -54,11 +55,10 @@ def block_pairs(
     """
     extra_cols = extra_cols or []
     cols = [key_col, id_col, *extra_cols]
-    reserved = {"_cell", "_ncells", "_bsize"}
-    clash = reserved.intersection(cols)
+    clash = {"_gi", "_gj"}.intersection(cols)
     if clash:
-        # the salt grid overwrites these internally; a caller key named
-        # "_cell" silently degrades the block join to all-pairs
+        # the salt grid writes these; a caller column of the same name
+        # would be overwritten and the block join degrade
         raise ValueError(f"block_pairs reserved column name(s) in input: {clash}")
     # Consumed three times (hot-key aggregate + both join sides);
     # persist it so upstream stages (UDF scans, joins) run once.
@@ -78,82 +78,41 @@ def block_pairs(
         stats["salted_blocks"] = len(hot)
         stats["max_cells"] = max(hot.values(), default=1)
 
-    salted = base
-    if hot:
-        key_type = base.schema[key_col].dataType
-        cells = F.create_map(*[
-            x for k, n in hot.items() for x in (F.lit(k).cast(key_type), F.lit(n))
-        ])
-        salted = base.withColumn(
-            "_ncells", F.coalesce(cells[F.col(key_col)], F.lit(1))
-        ).withColumn(
-            "_cell", F.pmod(F.xxhash64(F.col(id_col)), F.col("_ncells")).cast("int")
-        )
-
     def side(prefix: str) -> DataFrame:
-        renames = [F.col(key_col)] + [
+        return base.select(F.col(key_col), *[
             F.col(c).alias(f"{prefix}_{c}") for c in [id_col, *extra_cols]
-        ]
-        if hot:
-            renames += [F.col("_cell").alias(f"{prefix}_cell"),
-                        F.col("_ncells").alias(f"{prefix}_ncells")]
-        return salted.select(*renames)
+        ])
 
     a, b = side("a"), side("b")
-    out_cols = [key_col] + [f"a_{c}" for c in [id_col, *extra_cols]] + [
-        f"b_{c}" for c in [id_col, *extra_cols]
-    ]
-
-    # Same-cell pairs: canonical id order within the cell.  Shuffle key
-    # is (key, cell) — a hot block spreads over its s cells.
-    on = [a[key_col] == b[key_col], F.col(f"a_{id_col}") < F.col(f"b_{id_col}")]
-    if hot:
-        on.append(F.col("a_cell") == F.col("b_cell"))
-    same = a.join(b, on=on).drop(b[key_col]).select(*out_cols)
+    a_id, b_id = F.col(f"a_{id_col}"), F.col(f"b_{id_col}")
     if not hot:
-        return same
+        return a.join(b, [key_col]).where(a_id < b_id)
 
-    # Cross-cell pairs via 2D grid replication: grid cell (i, j), i<j,
-    # receives replicas of cell i (as the a side) and cell j (as the b
-    # side), so the JOIN KEY is (key, i, j) — ~s²/2 keys of ~target²
-    # pairs each.  The previous scheme equi-joined on the bare key with
-    # a_cell < b_cell as a post-filter, which put a hot block's entire
-    # (1 - 1/s) cross-cell quadratic inside ONE join partition — the
-    # single-reducer bomb the salt exists to kill.  Replication factor
-    # per row is (s - 1), i.e. shuffle volume stays proportional to the
-    # pair output; cold blocks (s = 1) replicate nothing.
-    a_rep = (
-        a.where(F.col("a_cell") < F.col("a_ncells") - 1)
-        .withColumn(
-            "_gj",
-            F.explode(F.sequence(F.col("a_cell") + 1, F.col("a_ncells") - 1)),
-        )
-        .withColumnRenamed("a_cell", "_gi")
-        .drop("a_ncells")
-    )
-    b_rep = (
-        b.where(F.col("b_cell") > 0)
-        .withColumn("_gi", F.explode(F.sequence(F.lit(0), F.col("b_cell") - 1)))
-        .withColumnRenamed("b_cell", "_gj")
-        .drop("b_ncells")
-    )
-    cross = a_rep.join(b_rep, on=[a_rep[key_col] == b_rep[key_col],
-                                  a_rep["_gi"] == b_rep["_gi"],
-                                  a_rep["_gj"] == b_rep["_gj"]]).drop(
-        b_rep[key_col]
-    ).drop(b_rep["_gi"]).drop(b_rep["_gj"])
+    # A member of cell c of a block's s cells is the a side of grid
+    # cells (c, j >= c) and the b side of (i <= c, c), so the join on
+    # (key, i, j) meets a cross-cell pair once, at (min cell, max
+    # cell), and a same-cell pair once, at (c, c), where only a < b is
+    # kept.  Each member ships s + 1 rows over both sides, and a hot
+    # block spreads over s(s+1)/2 join keys of ~target² pairs each.
+    key_type = base.schema[key_col].dataType
+    cells = F.create_map(*[
+        x for k, n in hot.items() for x in (F.lit(k).cast(key_type), F.lit(n))
+    ])
+    n_cells = F.coalesce(cells[F.col(key_col)], F.lit(1))
 
-    # For cross-cell pairs enforce a<b by swapping where needed.
-    swap_needed = F.col(f"a_{id_col}") > F.col(f"b_{id_col}")
-    swapped_cols = [F.col(key_col)]
-    for c in [id_col, *extra_cols]:
-        swapped_cols.append(
-            F.when(swap_needed, F.col(f"b_{c}")).otherwise(F.col(f"a_{c}")).alias(f"a_{c}")
-        )
-    for c in [id_col, *extra_cols]:
-        swapped_cols.append(
-            F.when(swap_needed, F.col(f"a_{c}")).otherwise(F.col(f"b_{c}")).alias(f"b_{c}")
-        )
-    cross_part = cross.select(*swapped_cols).select(*out_cols)
+    def cell(id_: Column) -> Column:
+        return F.pmod(F.xxhash64(id_), n_cells).cast("int")
 
-    return same.union(cross_part)
+    a = a.withColumn("_gi", cell(a_id)).withColumn(
+        "_gj", F.explode(F.sequence(F.col("_gi"), n_cells - 1)))
+    b = b.withColumn("_gj", cell(b_id)).withColumn(
+        "_gi", F.explode(F.sequence(F.lit(0), F.col("_gj"))))
+    pairs = a.join(b, [key_col, "_gi", "_gj"]).where(
+        (F.col("_gi") < F.col("_gj")) | (a_id < b_id))
+
+    # A cross-cell pair comes in either id order: swap it into a < b.
+    swap = a_id > b_id
+    return pairs.select(key_col, *[
+        F.when(swap, F.col(f"{y}_{c}")).otherwise(F.col(f"{x}_{c}")).alias(f"{x}_{c}")
+        for x, y in (("a", "b"), ("b", "a")) for c in [id_col, *extra_cols]
+    ])

@@ -146,10 +146,10 @@ def lsh_cosine_pairs(
     population is corpus/2^n_planes, so within-bucket pairs grow with
     the SQUARE of corpus size): within-bucket pair generation goes
     through ``block_pairs`` with the (table, bucket) pair as the
-    blocking key: buckets larger than 5000 vectors are salted onto a
-    2-D cell grid (~1000-member cells), so the shuffle key
-    spreads a hot bucket across cells and no task sees a whole bucket —
-    the exact mechanism (and property test) used for hot blocking keys.
+    blocking key: a bucket larger than 5000 vectors is split into
+    ~1000-member cells and joined on (bucket, i, j) over its i <= j
+    cell grid, so no task sees a whole bucket — the exact mechanism
+    (and property test) used for hot blocking keys.
     """
     from medtype_spark.operators.blocking import block_pairs
 

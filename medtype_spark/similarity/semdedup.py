@@ -14,12 +14,12 @@ Spark-first plan (no all-pairs join anywhere):
   centroid matrix (`similarity/knn.py:ivf_assign`) — the same coarse
   quantizer the IVF/IVF-PQ ANN index uses, so the cluster model is
   shared infrastructure, not a second training job;
-* within-cell pairs through the salted 2-D grid
-  (`operators/blocking.py:block_pairs` with the embedding carried as
-  an extra column): quadratic work is bounded per CELL (≈ corpus /
-  n_centroids on average; cells over 10000 rows split into ≤ 2000²
-  tiles),
-  never per corpus;
+* within-cell pairs through `operators/blocking.py:block_pairs`
+  keyed on the IVF cell, with the embedding carried as an extra
+  column: quadratic work is bounded per CELL (≈ corpus / n_centroids
+  on average; a cell over 10000 rows is salted onto a grid of ≤ 2000²
+  tiles and joined on (cell, tile row, tile column)), never per
+  corpus;
 * JVM-side cosine (`operators/pairs.py:cosine_sim` — zip_with +
   aggregate, no Python) filters edges at ``threshold``;
 * connected components (`operators/cc.py`) close the near-dup
@@ -55,8 +55,6 @@ def semantic_dedup(
     labeled with its semantic-duplicate group.  Rows with
     ``is_canonical`` form the deduplicated corpus.
     """
-    # key column must NOT be named "_cell": block_pairs uses that name
-    # internally for its salt-grid cell and would overwrite the key
     assigned = ivf_assign(corpus, centroids, out_col="sd_cell", metric=metric)
 
     pairs = block_pairs(

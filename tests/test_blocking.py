@@ -6,7 +6,9 @@ plant a hot key and compare against the exact n*(n-1)/2 enumeration.
 """
 
 import itertools
+import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from medtype_spark.operators.blocking import block_pairs
@@ -37,18 +39,37 @@ def test_unsalted_small_blocks(spark):
     assert got == _expected_pairs(rows)
 
 
-def test_salted_hot_key_exact_cover(spark):
-    # hot key with 120 members, forced salting into ~12 cells
-    rows = [("hot", f"m{i:03d}") for i in range(120)] + [("cold", f"c{i}") for i in range(4)]
-    df = spark.createDataFrame(rows, ["block_key", "mention_key"])
+@pytest.mark.parametrize("n_hot, key, extra", [
+    (120, "hot", False),  # 120 = 12 * target_cell: the cell count is exact
+    (127, "hot", False),  # a ragged last cell
+    (95, 7, False),       # integer key: the cell map's keys are cast to it
+    (64, "hot", True),    # 7 cells, payloads swapped with their ids
+], ids=["exact_multiple", "ragged", "int_key", "extra_cols"])
+def test_salted_hot_key_exact_cover(spark, n_hot, key, extra):
+    # a hot key forced into ceil(n_hot / 10) salt cells, beside a cold one
+    cold = 3 if isinstance(key, int) else "cold"
+    rows = [(key, f"m{i:03d}") for i in range(n_hot)] + [(cold, f"c{i}") for i in range(4)]
+    schema = f"block_key {'int' if isinstance(key, int) else 'string'}, mention_key string"
+    extra_cols = None
+    if extra:
+        rows = [(k, m, f"p-{m}") for k, m in rows]
+        schema += ", payload string"
+        extra_cols = ["payload"]
+    df = spark.createDataFrame(rows, schema)
     stats = {}
-    out = block_pairs(df, hot_threshold=50, target_cell=10, stats=stats)
+    out = block_pairs(df, hot_threshold=50, target_cell=10, extra_cols=extra_cols,
+                      stats=stats)
     got = _got_pairs(out)
-    want = _expected_pairs(rows)
+    want = _expected_pairs([r[:2] for r in rows])
     assert got == want  # every unordered pair exactly once
     # and no duplicates at all
     assert out.count() == len(want)
-    assert stats == {"salted_blocks": 1, "max_cells": 12}
+    assert stats == {"salted_blocks": 1, "max_cells": math.ceil(n_hot / 10)}
+    if extra:
+        assert stats["max_cells"] > 2
+        for r in out.collect():
+            assert r["a_payload"] == f"p-{r['a_mention_key']}"
+            assert r["b_payload"] == f"p-{r['b_mention_key']}"
 
 
 def _plan_nodes(df):
@@ -69,6 +90,29 @@ def test_cold_blocks_pair_through_one_self_join(spark):
     assert "Generate" not in nodes, nodes
     assert _got_pairs(out) == _expected_pairs(rows)
     assert stats == {"salted_blocks": 0, "max_cells": 1}
+
+
+def test_salted_blocks_pair_through_one_join(spark):
+    """A hot key salts its block onto the (i <= j) cell grid, and one
+    join on (key, i, j) yields same-cell and cross-cell pairs alike:
+    no second join and no Union."""
+    rows = [("hot", f"m{i:03d}") for i in range(120)]
+    df = spark.createDataFrame(rows, ["block_key", "mention_key"])
+    stats = {}
+    out = block_pairs(df, hot_threshold=50, target_cell=10, stats=stats)
+    nodes = _plan_nodes(out)
+    assert nodes.count("Join") == 1, nodes
+    assert "Union" not in nodes, nodes
+    assert _got_pairs(out) == _expected_pairs(rows)
+    assert stats == {"salted_blocks": 1, "max_cells": 12}
+
+
+def test_reserved_key_name_is_rejected(spark):
+    """The grid columns would overwrite a caller column of the same
+    name, so block_pairs refuses it up front."""
+    df = spark.createDataFrame([("k", "a"), ("k", "b")], ["_gi", "mention_key"])
+    with pytest.raises(ValueError, match="_gi"):
+        block_pairs(df, key_col="_gi")
 
 
 def test_null_keys_pair_with_nothing(spark):
@@ -92,7 +136,7 @@ def test_null_keys_pair_with_nothing(spark):
 
 def test_salted_hot_key_pairs_are_distributed(spark):
     """The hot block's pairs must NOT all land in one shuffle partition:
-    the cross-cell join keys on (key, grid_i, grid_j), so with AQE
+    the join keys on (key, grid_i, grid_j), so with AQE
     coalescing disabled the pair rows should span many partitions."""
     rows = [("hot", f"m{i:03d}") for i in range(120)]
     df = spark.createDataFrame(rows, ["block_key", "mention_key"])
@@ -117,7 +161,7 @@ def test_salted_hot_key_pairs_are_distributed(spark):
             spark.conf.set(k, v)
     total = sum(r["n"] for r in per_part)
     assert total == 120 * 119 // 2
-    # 12 cells → 66 cross grid keys + 12 same-cell keys; no partition
+    # 12 cells → 78 grid keys (i <= j); no partition
     # may hold the whole block's quadratic
     assert len(per_part) > 4
     assert max(r["n"] for r in per_part) < 0.5 * total

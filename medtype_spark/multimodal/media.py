@@ -1,6 +1,6 @@
 """Multimodal columns: image/audio/video as opaque binary + typed
-metadata, with Arrow-batched decode / feature / resize / frame-sample
-operators.
+metadata, with Arrow-batched decode / feature operators and a
+metadata-only frame-sampling plan.
 
 Design for 100 TB: media payloads stay OPAQUE BINARY end-to-end —
 Spark shuffles/stores them without interpretation, metadata lives in a
@@ -10,12 +10,13 @@ per-payload computation is ``mapInPandas`` over bounded Arrow batches
 (``spark.sql.execution.arrow.maxRecordsPerBatch`` caps worker memory
 regardless of partition size).
 
-The actual codecs (PIL / libav) are NOT in this container, so the
-decode kernels are deterministic fakes behind ``_HAS_PIL``-style
-guards, clearly marked: they produce stable pseudo-content from the
-payload bytes so the Spark-side plumbing (schemas, batch shapes,
-partitioning, joins over features) is real and testable.  Swapping in
-a real codec changes ONLY the ``_decode_*_kernel`` bodies.
+No codec (PIL / libav) is a dependency, so the decode kernel
+``_fake_pixels`` is a deterministic fake, clearly marked: it produces
+stable pseudo-content from the payload bytes so the Spark-side
+plumbing (schemas, batch shapes, partitioning, joins over features) is
+real and testable.  Swapping in a real codec changes only that
+function's body.  There is no resize operator: no query or job
+transforms payloads.
 """
 
 from __future__ import annotations
@@ -28,13 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # real decoder if ever present in the image
-    import PIL.Image  # noqa: F401
-
-    _HAS_PIL = True
-except Exception:  # pragma: no cover
-    _HAS_PIL = False
 
 MEDIA_META = T.StructType([
     T.StructField("format", T.StringType()),
@@ -148,84 +142,6 @@ def decode_stats(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=schema)
-
-
-def _resize_kernel(payload: bytes, width: int, height: int) -> bytes:
-    """One payload → resized payload bytes.
-
-    With PIL present and a decodable image: real decode → resize →
-    PNG re-encode.  Otherwise (no codec in this container, or opaque
-    non-image bytes): deterministic stub — decode the md5 pseudo-signal
-    on a 64×64 grid, nearest-neighbour resample to (height, width),
-    quantize to uint8 raster bytes.  Either way the output is a REAL
-    height×width payload, so downstream code (and tests) exercise the
-    full decode→transform→re-encode shape; swapping in a codec changes
-    only the PIL branch."""
-    if _HAS_PIL:
-        try:
-            import io
-
-            img = PIL.Image.open(io.BytesIO(payload))
-            buf = io.BytesIO()
-            img.resize((width, height)).save(buf, format="PNG")
-            return buf.getvalue()
-        except Exception:
-            pass  # opaque/non-image bytes → stub resample below
-    src = _fake_pixels(payload, 4096).reshape(64, 64)
-    ys = np.minimum((np.arange(height) * 64) // max(height, 1), 63)
-    xs = np.minimum((np.arange(width) * 64) // max(width, 1), 63)
-    out = (src[np.ix_(ys, xs)] * 255.0).astype(np.uint8)
-    return out.tobytes()
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize image payloads (Arrow-batched) and update metadata.
-
-    Non-image rows pass through untouched; image rows get a real
-    height×width payload from ``_resize_kernel`` plus the resized
-    metadata, so dimension predicates stay pushdown-able."""
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            out = pdf.copy()
-            is_img = out["media_type"] == "image"
-            out.loc[is_img, "payload"] = [
-                _resize_kernel(bytes(p) if p is not None else b"", width, height)
-                for p in out.loc[is_img, "payload"]
-            ]
-            yield out
-
-    resized = media.mapInPandas(run, schema=media.schema)
-    return resized.withColumn(
-        "meta",
-        F.when(
-            F.col("media_type") == "image",
-            F.struct(
-                F.col("meta.format").alias("format"),
-                F.lit(width).cast("int").alias("width"),
-                F.lit(height).cast("int").alias("height"),
-                F.col("meta.channels").alias("channels"),
-                F.col("meta.sample_rate").alias("sample_rate"),
-                F.col("meta.n_frames").alias("n_frames"),
-            ),
-        ).otherwise(F.col("meta")),
-    )
-
-
-def resized_meta(media: DataFrame, width: int, height: int) -> DataFrame:
-    """The shuffle-free metadata half of resize: predicates on the new
-    dimensions stay pushdown-able; payload passes through opaque."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.format").alias("format"),
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            F.col("meta.channels").alias("channels"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.n_frames").alias("n_frames"),
-        ),
-    )
 
 
 def sample_frame_indices(media: DataFrame) -> DataFrame:

@@ -147,17 +147,6 @@ def length_sorted_batches(windows: DataFrame, batch_size: int = 32) -> DataFrame
     return flat.mapInPandas(make_batches, schema=BATCH_SCHEMA)
 
 
-def padding_waste(batches: DataFrame) -> DataFrame:
-    """Diagnostic: fraction of padded cells that are padding."""
-    return batches.select(
-        F.aggregate("tok_len", F.lit(0), lambda a, x: a + x).alias("_real"),
-        (F.size("tok_pad") * F.size(F.element_at("tok_pad", 1))).alias("_cells"),
-    ).agg(
-        (1 - F.sum("_real") / F.sum("_cells")).alias("padding_waste"),
-        F.count(F.lit(1)).alias("n_batches"),
-    )
-
-
 def _bag_features(pad, mask, n_feat: int) -> np.ndarray:
     """Mask-aware token-id bag counts for one padded batch: padded
     cells carry mask 0.0 so they contribute nothing — the property

@@ -59,17 +59,6 @@ def hash_sample_flag(key: Column, rate: float, salt: str = "") -> Column:
     return _bucket(key, salt) < F.lit(rate_to_threshold(rate))
 
 
-def hash_sample(df: DataFrame, key: str, rate: float) -> DataFrame:
-    """Keep rows whose md5 bucket of ``key`` is below the rate threshold.
-
-    Deterministic in the DATA (same rows kept regardless of
-    partitioning, ordering, cluster size, or engine).  A salted
-    ``hash_sample_flag`` decouples independent samples over the same
-    key space.
-    """
-    return df.where(hash_sample_flag(F.col(key), rate))
-
-
 def stratified_take(
     df: DataFrame,
     key: str,

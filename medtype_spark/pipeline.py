@@ -301,14 +301,3 @@ def evaluate_linkage(clusters: DataFrame, gold: DataFrame) -> DataFrame:
     )
     return pairwise(gold_clusters, pred_clusters)
 
-
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """Per-partition metrics table (rows per partition) — the batch
-    analogue of the reference's ServerStatistic
-    (.../server/__init__.py:605-673)."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .select(F.col("_pid").alias("partition_id"), "n_rows")
-    )

@@ -6,7 +6,8 @@ the trainer's --restore checkpoint loading
 (medtype-trainer/medtype.py:172-214) and the idempotent skip-if-output-
 exists checks (dump_linkers_output.py:12-13).
 
-Design (object-store friendly):
+Design (the workdir must be a driver-local directory: the stage data
+is written by Spark, but the manifests with ``os`` and ``open``):
 - each named stage writes its output DataFrame as parquet under
   ``<workdir>/<stage>/data`` and then atomically writes
   ``<workdir>/<stage>/_MANIFEST.json`` recording row count, schema,
@@ -17,7 +18,8 @@ Design (object-store friendly):
   so a killed job resumes at the first incomplete stage;
 - fingerprints chain (like a Merkle list), so changing an upstream
   stage invalidates everything downstream, never silently reusing
-  stale data.
+  stale data.  The first stage's input is not fingerprinted: a workdir
+  holds the run of one input.
 
 Parquet round-trips also truncate lineage exactly where
 ``localCheckpoint`` would, but survive driver loss.
@@ -147,19 +149,18 @@ class StageCheckpointer:
         return out
 
 
+# The settings every stage builds with: run_linkage's defaults, folded
+# into each stage's fingerprint so that output built with other
+# settings is never resumed.
+SETTINGS = {"type_scorer": "dict", "matcher": "trie",
+            "hot_threshold": 10000, "target_cell": 2000}
+
+
 def run_linkage_checkpointed(
-    spark: SparkSession,
-    pages: DataFrame,
-    lexicon,
-    workdir: str,
-    *,
-    hot_threshold: int = 10000,
-    target_cell: int = 2000,
-    type_scorer: str = "dict",
-    matcher: str = "trie",
+    spark: SparkSession, pages: DataFrame, lexicon, workdir: str
 ) -> DataFrame:
-    """Flagship pipeline split into resumable stages; same clusters as
-    ``pipeline.run_linkage`` with the same settings.
+    """Flagship pipeline split into resumable stages; the same clusters
+    as ``pipeline.run_linkage`` with its default settings.
 
     Stage graph: 010_mentions (``scan_mentions``) → 020_edges
     (``form_edges``) → 030_clusters (``form_clusters``).  Each stage
@@ -174,23 +175,23 @@ def run_linkage_checkpointed(
         scan_mentions,
     )
 
-    params = {
-        "hot_threshold": hot_threshold, "target_cell": target_cell,
-        "type_scorer": type_scorer, "matcher": matcher,
-    }
     ck = StageCheckpointer(spark, workdir)
 
     mentions = ck.stage(
         "010_mentions",
-        lambda: scan_mentions(pages, lexicon, type_scorer, matcher).drop("candidates"),
-        params=params,
+        lambda: scan_mentions(
+            pages, lexicon, SETTINGS["type_scorer"], SETTINGS["matcher"]
+        ).drop("candidates"),
+        params=SETTINGS,
     )
 
     cached: list[DataFrame] = []
     edges = ck.stage(
         "020_edges",
-        lambda: form_edges(mentions, hot_threshold, target_cell, persisted=cached)[1],
-        upstream=["010_mentions"], params=params,
+        lambda: form_edges(
+            mentions, SETTINGS["hot_threshold"], SETTINGS["target_cell"], persisted=cached
+        )[1],
+        upstream=["010_mentions"], params=SETTINGS,
     )
     for df in cached:
         df.unpersist()
@@ -198,5 +199,5 @@ def run_linkage_checkpointed(
     return ck.stage(
         "030_clusters",
         lambda: form_clusters(mentions, form_units(mentions), edges),
-        upstream=["010_mentions", "020_edges"], params=params,
+        upstream=["010_mentions", "020_edges"], params=SETTINGS,
     )

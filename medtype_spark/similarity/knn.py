@@ -18,8 +18,8 @@ generator (entity_linkers.py:25-46).  Four strategies:
 The three top-k searches share one contract.  The corpus is (vec_id,
 embedding) and the queries are (query_id, embedding).  Quantizers are
 arguments: ``md5_centroids`` / ``md5_pq_codebooks`` build the integer
-fixtures the DuckDB oracle re-derives, ``train_ivf_centroids`` /
-``train_pq_codebooks`` run k-means on a deterministic sample.  Each
+fixtures the DuckDB oracle re-derives, and a caller with a trained
+quantizer passes its arrays instead (this module trains none).  Each
 returns (query_id, rank, vec_id, <score>) with ranks 1..k per query,
 ordered by score then vec_id, self matches excluded.
 
@@ -190,52 +190,11 @@ def lsh_cosine_pairs(
 # ----------------------------------------------------------------------
 # IVF (inverted-file) ANN: a coarse quantizer + probe lists — the
 # second scale path next to hyperplane LSH.  The centroid model is
-# dimension-sized (n_centroids × dim), so it is built driver-side and
-# broadcast; corpus assignment is one Arrow-batched argmax pass; a
+# dimension-sized (n_centroids × dim), so it is passed in on the driver
+# and broadcast; corpus assignment is one Arrow-batched argmax pass; a
 # query touches only its nprobe nearest centroids' posting lists
 # (candidates ∝ nprobe/n_centroids of the corpus, never all of it).
 # ----------------------------------------------------------------------
-
-
-_SAMPLE_CAP = 20000
-
-
-def _stratified_sample(corpus: DataFrame) -> np.ndarray:
-    """About ``_SAMPLE_CAP`` embeddings, picked by vec_id hash (not
-    .sample(), whose row pick depends on partitioning)."""
-    stride = max(1, corpus.count() // _SAMPLE_CAP)
-    sample = (
-        corpus.where(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(stride)) == 0)
-        .select("embedding")
-        .toPandas()
-    )
-    return np.array([list(v) for v in sample["embedding"]], dtype=np.float64)
-
-
-def train_ivf_centroids(corpus: DataFrame, n_centroids: int) -> np.ndarray:
-    """Lloyd k-means (10 iterations, seed 42) on a DETERMINISTIC
-    driver-side sample of (vec_id, embedding).
-
-    The sample is id-hash-stratified (not .sample(), whose row pick
-    depends on partitioning), capped at ``_SAMPLE_CAP`` rows — the
-    centroid model is the broadcast-sized "index", like the alias
-    matrices.  Returns an (n_centroids, dim) numpy array, L2-normalized
-    rows (cosine IVF = spherical k-means).
-    """
-    x = _unit_rows(_stratified_sample(corpus))
-
-    rs = np.random.RandomState(42)
-    cents = x[rs.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
-    for _ in range(10):
-        sims = x @ cents.T
-        assign = sims.argmax(1)
-        for c in range(len(cents)):
-            members = x[assign == c]
-            if len(members):
-                v = members.mean(0)
-                nv = np.linalg.norm(v)
-                cents[c] = v / nv if nv > 0 else cents[c]
-    return cents
 
 
 def _unit_rows(x: np.ndarray) -> np.ndarray:
@@ -464,26 +423,3 @@ def ivf_pq_topk(
     scored = joined.select("query_id", "vec_id", adc.alias("adc"))
     return _top_k(scored, "adc", k, ascending=True)
 
-
-def train_pq_codebooks(corpus: DataFrame, m: int, k: int) -> np.ndarray:
-    """Per-subspace Lloyd k-means (10 iterations, seed 42) on the same
-    deterministic id-hash-stratified driver sample as
-    :func:`train_ivf_centroids` — the production PQ path (the md5
-    codebooks are the oracle fixture).  Returns (m, k, dim//m)."""
-    x = _stratified_sample(corpus)
-    d = x.shape[1] // m
-    rs = np.random.RandomState(42)
-    books = np.empty((m, k, d), dtype=np.float64)
-    for j in range(m):
-        sub = x[:, j * d : (j + 1) * d]
-        cents = sub[rs.choice(len(sub), size=min(k, len(sub)), replace=False)]
-        for _ in range(10):
-            assign = _sq_dists(sub, cents).argmin(1)
-            for c in range(len(cents)):
-                members = sub[assign == c]
-                if len(members):
-                    cents[c] = members.mean(0)
-        if len(cents) < k:  # degenerate tiny sample: pad by repetition
-            cents = np.vstack([cents] * (k // len(cents) + 1))[:k]
-        books[j] = cents
-    return books

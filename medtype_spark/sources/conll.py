@@ -94,11 +94,3 @@ def read_conll_coref(spark: SparkSession, dir_path: str) -> DataFrame:
 
     return files.mapInPandas(parse, schema=CONLL_SCHEMA)
 
-
-def conll_mentions(df: DataFrame) -> DataFrame:
-    """(mention, cluster) frame for the clustering metrics: a mention
-    is its (docid, start, end) span."""
-    return df.select(
-        F.concat_ws(":", "docid", "start", "end").alias("mention"),
-        F.col("cluster").alias("cluster"),
-    )

@@ -11,15 +11,13 @@ classic Iceberg partition transforms) so partition pruning and
 predicate pushdown behave identically.  Swapping in a real catalog
 changes only ``_iceberg_available``.
 
-``scan_report`` extracts PushedFilters / PartitionFilters / ReadSchema
-from the formatted plan — the evidence that a filter reaches the scan
-and a projection prunes columns, which the tests assert (a scan that
-reads all columns for a 2-column projection is wrong at 100 TB).
+The tests read PushedFilters / PartitionFilters / ReadSchema from the
+formatted plan of a scan of this table: the evidence that a filter
+reaches the scan and a projection prunes columns (a scan that reads
+all columns for a 2-column projection is wrong at 100 TB).
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,27 +50,3 @@ def read_pages_table(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.format("iceberg").load(path)
     return spark.read.parquet(path)
 
-
-def scan_report(df: DataFrame) -> dict:
-    """Parse the formatted physical plan's scan node: which filters
-    were pushed, which partition filters prune, which columns are
-    actually read."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    formatted = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    ) if hasattr(df._sc._jvm, "PythonSQLUtils") else None
-    text = formatted or plan
-
-    def grab(field):
-        m = re.search(rf"{field}: \[([^\]]*)\]", text)
-        return m.group(1).strip() if m else ""
-
-    return {
-        "pushed_filters": grab("PushedFilters"),
-        "partition_filters": grab("PartitionFilters"),
-        "read_schema": grab("ReadSchema") or (
-            re.search(r"ReadSchema: (\S+)", text).group(1)
-            if re.search(r"ReadSchema: (\S+)", text) else ""
-        ),
-        "plan": text,
-    }

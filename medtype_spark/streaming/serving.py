@@ -12,11 +12,13 @@ topology (medtype-as-service/server/medtype_serving/server/__init__.py):
 Spark-first restatement: an unbounded stream of (job_id, partial_id,
 payload) micro-batches; per-job stateful reassembly via watermarked
 aggregation; emit exactly when ``collected == declared total`` (the
-checksum rule).  ``foreachBatch`` is the PUB sink analogue.
+checksum rule).  ``foreachBatch`` is the PUB sink analogue: a caller
+applies ``reassemble_jobs`` to each micro-batch there.
 
 These are *plan builders* — they accept any streaming or batch
 DataFrame with the right columns so tests can drive them with a file /
-rate / memory source.
+rate / memory source.  The one stream this module runs itself is the
+watermark fixture of ``windowed_request_stats``.
 """
 
 from __future__ import annotations
@@ -100,24 +102,6 @@ def windowed_request_stats(events: DataFrame) -> DataFrame:
             "user_id", "n_requests",
             F.round("avg_msg_size", 6).alias("avg_msg_size"),
         )
-    )
-
-
-def streaming_reassembly_query(partial_stream: DataFrame, sink_fn,
-                               checkpoint_dir: str):
-    """Wire a partial stream into foreachBatch reassembly (PUB sink
-    analogue).  Caller supplies ``sink_fn(batch_df, batch_id)``; late
-    partials are handled by re-aggregating per micro-batch (the batch
-    analogue of the reference's pending-job dict :288,343-350)."""
-
-    def process(batch_df, batch_id):
-        complete = reassemble_jobs(batch_df)
-        sink_fn(complete, batch_id)
-
-    return (
-        partial_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
     )
 
 

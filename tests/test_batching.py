@@ -13,10 +13,17 @@ from medtype_spark.operators.batching import (
     assemble_token_windows,
     assemble_window,
     length_sorted_batches,
-    padding_waste,
     score_batches,
     _tok_ids,
 )
+
+
+def _padding_waste(batches):
+    """Fraction of the padded cells of ``batches`` that are padding."""
+    return batches.select(
+        F.aggregate("tok_len", F.lit(0), lambda a, x: a + x).alias("_real"),
+        (F.size("tok_pad") * F.size(F.element_at("tok_pad", 1))).alias("_cells"),
+    ).agg((1 - F.sum("_real") / F.sum("_cells")).alias("waste")).collect()[0]["waste"]
 
 
 def test_assemble_window_reference_arithmetic():
@@ -86,11 +93,11 @@ def test_sorted_batching_cuts_padding(spark):
         rows, "mention_key:string, text:string, start_offset:long, end_offset:long"
     ).coalesce(1)
     win = assemble_token_windows(df)
-    sorted_waste = padding_waste(length_sorted_batches(win, batch_size=16)).collect()[0]
+    sorted_waste = _padding_waste(length_sorted_batches(win, batch_size=16))
     # random arrival order mixes 5/10/80-token rows in every batch:
     # waste would be ~(1 - mean/max) ≈ 0.6; sorted batching only pays
     # at the few group-boundary batches
-    assert sorted_waste["padding_waste"] < 0.15
+    assert sorted_waste < 0.15
 
 
 def test_batched_scoring_padding_invariant(spark):

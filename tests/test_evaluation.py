@@ -132,47 +132,6 @@ def test_streaming_split_and_reassemble(spark):
     assert "j3" not in got  # checksum incomplete → held back
 
 
-def test_streaming_reassembly_executes(spark, tmp_path):
-    """Drive streaming_reassembly_query with a real micro-batch stream
-    (memory-source analogue via file source): partials written across
-    two files, reassembled inside foreachBatch, published to a sink."""
-    import json as _json
-    import time
-
-    from medtype_spark.streaming.serving import streaming_reassembly_query
-
-    src = tmp_path / "stream_in"
-    src.mkdir()
-    schema = "job_id string, partial_id int, results array<string>, n_partials int"
-
-    # batch 1: all of j1 (out of order) and half of j2
-    rows1 = [
-        {"job_id": "j1", "partial_id": 1, "results": ["c", "d"], "n_partials": 2},
-        {"job_id": "j1", "partial_id": 0, "results": ["a", "b"], "n_partials": 2},
-        {"job_id": "j2", "partial_id": 0, "results": ["x"], "n_partials": 2},
-    ]
-    (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in rows1))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    published: dict[str, list] = {}
-
-    def sink(batch_df, batch_id):
-        for r in batch_df.collect():
-            published[r["job_id"]] = list(r["results"])
-
-    q = streaming_reassembly_query(
-        stream, sink, str(tmp_path / "ckpt")
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-
-    assert published.get("j1") == ["a", "b", "c", "d"]  # order restored
-    assert "j2" not in published  # checksum incomplete → held back
-
-
 def test_windowed_request_stats_stream(spark, tmp_path):
     """Watermark + window agg on a real stream: on-time rows aggregate
     per window; a row later than the watermark is dropped."""

@@ -8,8 +8,6 @@ from medtype_spark.multimodal.media import (
     N_MEDIA_FEATURES,
     decode_stats,
     extract_media_features,
-    resize_images,
-    resized_meta,
     sample_frame_indices,
     synth_media,
 )
@@ -52,15 +50,6 @@ def test_decode_stats(spark):
         assert r["n_bytes"] > 0
 
 
-def test_resized_meta_columnar(spark):
-    m = synth_media(spark, _docs(spark))
-    out = resized_meta(m, 128, 96)
-    dims = out.select("meta.width", "meta.height").distinct().collect()
-    assert [(r["width"], r["height"]) for r in dims] == [(128, 96)]
-    # payload passes through untouched
-    assert out.schema["payload"].dataType.simpleString() == "binary"
-
-
 def test_frame_sampling_uniform(spark):
     m = synth_media(spark, _docs(spark, 40))
     rows = sample_frame_indices(m).collect()
@@ -69,27 +58,3 @@ def test_frame_sampling_uniform(spark):
         n = r["n_frames"]
         assert r["frame_indices"] == sorted(set(i * n // 4 for i in range(4)))
 
-
-def test_resize_images_real_payloads(spark):
-    from medtype_spark.multimodal.media import resize_images, synth_media
-
-    docs = spark.createDataFrame(
-        [(i, f"payload text {i}", "en", "s") for i in range(9)],
-        "doc_id:long, text:string, lang:string, source:string",
-    )
-    media = synth_media(spark, docs)
-    out = resize_images(media, 8, 6).collect()
-    by_id = {r["media_id"]: r for r in out}
-    for r in out:
-        if r["media_type"] == "image":
-            # real 6x8 uint8 raster payload + updated metadata
-            assert len(bytes(r["payload"])) == 8 * 6
-            assert (r["meta"]["width"], r["meta"]["height"]) == (8, 6)
-        else:
-            # non-images untouched
-            assert r["meta"]["width"] != 8 or r["meta"]["height"] != 6
-
-    # deterministic: same payload -> same resized bytes
-    again = {r["media_id"]: r for r in resize_images(media, 8, 6).collect()}
-    for mid, r in by_id.items():
-        assert bytes(again[mid]["payload"]) == bytes(r["payload"])

@@ -40,17 +40,10 @@ SPEC = os.path.join(LIBRARY, "oracles.py")
 SKIP_DIRS = {".git", ".work", "__pycache__"}
 TEST_FILES = ("tests/*", "perfbench/test_*.py")
 
-_RUN_LINKAGE_MIRROR = (
-    "mirrors a run_linkage setting that perfbench's workloads set, and "
-    "feeds the stage fingerprints")
 ALLOWED = {
     ("pipeline.py", "run_linkage", "with_candidate_filter"):
         "the only reader of run_linkage's entity_types, which perfbench passes "
         "to every run; goes when a benchmark change stops passing it",
-    ("plans/checkpoints.py", "run_linkage_checkpointed", "hot_threshold"): _RUN_LINKAGE_MIRROR,
-    ("plans/checkpoints.py", "run_linkage_checkpointed", "target_cell"): _RUN_LINKAGE_MIRROR,
-    ("plans/checkpoints.py", "run_linkage_checkpointed", "type_scorer"): _RUN_LINKAGE_MIRROR,
-    ("plans/checkpoints.py", "run_linkage_checkpointed", "matcher"): _RUN_LINKAGE_MIRROR,
     ("sources/pages_table.py", "write_pages_table", "mode"):
         "deployment setting: append to or replace an existing table",
     ("evaluation/annotations.py", "write_annotation_tsv", "mode"):

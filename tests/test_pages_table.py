@@ -1,14 +1,38 @@
 """Iceberg-layout pages table: partition pruning + predicate pushdown +
 column pruning actually reach the parquet scan."""
 
+import re
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from medtype_spark.datagen.pages import synth_pages
-from medtype_spark.sources.pages_table import (
-    read_pages_table,
-    scan_report,
-    write_pages_table,
-)
+from medtype_spark.sources.pages_table import read_pages_table, write_pages_table
+
+
+def scan_report(df: DataFrame) -> dict:
+    """Parse the formatted physical plan's scan node: which filters
+    were pushed, which partition filters prune, which columns are
+    actually read."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    formatted = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    ) if hasattr(df._sc._jvm, "PythonSQLUtils") else None
+    text = formatted or plan
+
+    def grab(field):
+        m = re.search(rf"{field}: \[([^\]]*)\]", text)
+        return m.group(1).strip() if m else ""
+
+    return {
+        "pushed_filters": grab("PushedFilters"),
+        "partition_filters": grab("PartitionFilters"),
+        "read_schema": grab("ReadSchema") or (
+            re.search(r"ReadSchema: (\S+)", text).group(1)
+            if re.search(r"ReadSchema: (\S+)", text) else ""
+        ),
+        "plan": text,
+    }
 
 
 def test_roundtrip_and_pushdown(spark, tmp_path):

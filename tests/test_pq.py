@@ -2,6 +2,7 @@
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,7 +11,6 @@ from medtype_spark.similarity.knn import (
     md5_centroids,
     md5_pq_codebooks,
     pq_encode,
-    train_pq_codebooks,
 )
 
 
@@ -102,7 +102,9 @@ def test_ivf_pq_matches_python_replay_integer_exact(spark):
 
 
 def test_trained_pq_recall_vs_exact(spark):
-    """Trained codebooks (per-subspace k-means) on clustered data.
+    """Codebooks in place of trained ones on clustered data: codebook
+    j holds subspace j of each of the 8 planted bases, repeated to fill
+    16 codes (a tie goes to the lower code, so no repeat is chosen).
 
     PQ's contract is COARSE-grain fidelity: within a tight cluster
     (noise σ=0.1 ≪ codeword spacing) every point quantizes to near-
@@ -127,7 +129,7 @@ def test_trained_pq_recall_vs_exact(spark):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     cents = md5_centroids(16, 8)
-    books = train_pq_codebooks(emb, m=8, k=16)
+    books = np.array([[b[j * 2 : (j + 1) * 2] for b in bases] * 2 for j in range(8)])
 
     got = ivf_pq_topk(emb, queries, cents, books, k=3, nprobe=8).collect()
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from medtype_spark.operators.asof import asof_join
 from medtype_spark.operators.sampling import (
     PREFIX_LEN,
-    hash_sample,
+    hash_sample_flag,
     hash_split,
     rate_to_threshold,
 )
@@ -37,8 +37,9 @@ def test_rate_to_threshold_edges():
 
 def test_hash_sample_layout_independent(spark):
     df = spark.range(0, 2000).withColumnRenamed("id", "k")
-    kept1 = {r.k for r in hash_sample(df, "k", 0.25).collect()}
-    kept2 = {r.k for r in hash_sample(df.repartition(7), "k", 0.25).collect()}
+    keep = hash_sample_flag(F.col("k"), 0.25)
+    kept1 = {r.k for r in df.where(keep).collect()}
+    kept2 = {r.k for r in df.repartition(7).where(keep).collect()}
     assert kept1 == kept2  # selection is a function of the data only
     # rate is approximately honored (binomial, n=2000, p=.25)
     assert 400 <= len(kept1) <= 600

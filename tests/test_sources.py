@@ -8,6 +8,7 @@ must reproduce examples/tac_*.combined.tsv exactly.
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from medtype_spark.evaluation.annotations import read_annotation_tsv
 from medtype_spark.sources.brat import read_brat_dir
@@ -101,7 +102,7 @@ def test_parse_conll_unbalanced_raises():
 
 
 def test_read_conll_coref_distributed(spark, tmp_path):
-    from medtype_spark.sources.conll import conll_mentions, read_conll_coref
+    from medtype_spark.sources.conll import read_conll_coref
 
     d = tmp_path / "conll"
     d.mkdir()
@@ -113,6 +114,8 @@ def test_read_conll_coref_distributed(spark, tmp_path):
     assert ("a.conll", "0", 1, 2) in got
     assert ("b.conll", "9", 1, 1) in got
     assert len(got) == 6
-    m = conll_mentions(out)
+    # (mention, cluster) for the clustering metrics: a mention is its
+    # (docid, start, end) span
+    m = out.select(F.concat_ws(":", "docid", "start", "end").alias("mention"), "cluster")
     assert m.columns == ["mention", "cluster"]
     assert m.count() == 6

@@ -2,18 +2,39 @@
 
 Ship via (from the checkout root):
   zip -r /tmp/medtype_spark.zip medtype_spark
-  spark-submit --master local[8] --py-files /tmp/medtype_spark.zip \
-      tools/submit_linkage_job.py --pages 1000 --entities 50 \
+  spark-submit --master local[8] --py-files /tmp/medtype_spark.zip \\
+      tools/submit_linkage_job.py --pages 1000 --entities 50 \\
       --output /tmp/linkage_out
 
 The north rule's deployment contract: the job depends only on the
 shipped zip (no repo-path imports on executors).
+
+The job runs the resumable flagship
+(``plans.checkpoints.run_linkage_checkpointed``) with ``--output`` as
+its workdir, a driver-local directory, and prints one JSON line of
+pairwise P/R/F against the planted gold.  ``--output`` then holds one
+directory per stage:
+
+  <output>/010_mentions/{data,_MANIFEST.json}   mention table
+  <output>/020_edges/{data,_MANIFEST.json}      form graph (src, dst)
+  <output>/030_clusters/{data,_MANIFEST.json}   (mention_key, entity_cluster)
+
+Each ``data`` is parquet; each ``_MANIFEST.json`` records the stage's
+row count, schema, per-partition row counts and fingerprint.  To
+resume a killed job, run the same command into the same ``--output``:
+every stage whose manifest committed is read back instead of
+recomputed.  A workdir holds the run of one input, so give a run with
+other ``--pages``/``--entities``/``--seed`` its own ``--output``.
+Without ``--output`` the stages go to a temporary directory that is
+removed at exit.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
+import tempfile
 
 
 def main():
@@ -21,29 +42,21 @@ def main():
     ap.add_argument("--pages", type=int, default=1000)
     ap.add_argument("--entities", type=int, default=50)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--output", default=None)
+    ap.add_argument("--output", default=None,
+                    help="driver-local workdir of the resumable stages")
     ap.add_argument("--pages-table", default=None,
-                    help="read the input from an Iceberg-layout pages "
-                         "table (sources/pages_table.py) instead of "
-                         "generating it; also writes one when --output "
-                         "is set")
+                    help="write the generated pages to an Iceberg-layout "
+                         "pages table (sources/pages_table.py) at this "
+                         "path and read the job's input back from it")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("linkage_job").getOrCreate()
 
-    from medtype_spark.datagen.pages import (
-        build_lexicon,
-        entity_types_df,
-        synth_pages,
-    )
-    from medtype_spark.pipeline import (
-        evaluate_linkage,
-        partition_metrics,
-        run_linkage,
-    )
-
+    from medtype_spark.datagen.pages import build_lexicon, synth_pages
+    from medtype_spark.pipeline import evaluate_linkage
+    from medtype_spark.plans.checkpoints import run_linkage_checkpointed
     from medtype_spark.sources.pages_table import (
         read_pages_table,
         write_pages_table,
@@ -61,20 +74,16 @@ def main():
             "url", "warc_ts", "html", "text", "lang"
         )
     lex = build_lexicon(args.entities)
-    etypes = entity_types_df(spark, args.entities)
-    result = run_linkage(pages, lex, etypes)
 
-    clusters = result["clusters"]
-    if args.output:
-        clusters.write.mode("overwrite").parquet(f"{args.output}/clusters.parquet")
-        partition_metrics(result["mentions"]).write.mode("overwrite").parquet(
-            f"{args.output}/partition_metrics.parquet"
-        )
-
-    row = evaluate_linkage(clusters, gold).collect()[0]
+    workdir = (contextlib.nullcontext(args.output) if args.output
+               else tempfile.TemporaryDirectory(prefix="linkage_job_"))
+    with workdir as wd:
+        clusters = run_linkage_checkpointed(spark, pages, lex, wd)
+        row = evaluate_linkage(clusters, gold).collect()[0]
+        n_cluster_rows = clusters.count()
     print(json.dumps({
         "n_pages": args.pages,
-        "n_cluster_rows": clusters.count(),
+        "n_cluster_rows": n_cluster_rows,
         "pairwise_precision": round(row["precision"], 6),
         "pairwise_recall": round(row["recall"], 6),
         "pairwise_f1": round(row["fscore"], 6),

@@ -54,6 +54,26 @@ def test_downstream_invalidation(spark, tmp_path):
     assert calls["b"] == 2
 
 
+def test_workdir_is_a_hadoop_path(spark, tmp_path):
+    """Manifests go through the Hadoop FileSystem, like the stage data:
+    a workdir URI resumes as a plain path does, and a manifest is one
+    plain JSON file."""
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return spark.range(6)
+
+    uri = "file://" + str(tmp_path)
+    StageCheckpointer(spark, uri).stage("010_a", build)
+    assert StageCheckpointer(spark, uri).stage("010_a", build).count() == 6
+    assert calls["n"] == 1
+    assert StageCheckpointer(spark, str(tmp_path)).completed_stages() == ["010_a"]
+    assert sorted(os.listdir(tmp_path / "010_a")) == ["_MANIFEST.json", "data"]
+    with open(tmp_path / "010_a" / "_MANIFEST.json") as fh:
+        assert json.load(fh)["rows"] == 6
+
+
 def test_params_change_invalidates(spark, tmp_path):
     """Re-running with different build params must NOT resume stale
     parquet (the fingerprint folds in a caller-supplied params dict)."""
@@ -113,6 +133,9 @@ def test_kill_and_restart_midway(spark, tmp_path):
     assert m["rows"] == 2 and len(m["partitions"]) >= 1
 
 
+STAGES = ("010_mentions", "020_edges", "030_clusters")
+
+
 def _flagship_fixture(spark):
     """(pages, gold, lexicon, entity_types) of an 80-page corpus."""
     from medtype_spark.datagen.pages import (
@@ -137,7 +160,7 @@ def test_checkpointed_flagship_resume(spark, tmp_path):
     assert row["fscore"] >= 0.99
 
     ck = StageCheckpointer(spark, wd)
-    assert ck.completed_stages() == ["010_mentions", "020_edges", "030_clusters"]
+    assert ck.completed_stages() == list(STAGES)
 
     # restart: everything resumes, same result
     clusters2 = run_linkage_checkpointed(spark, pages, lex, wd)
@@ -145,12 +168,21 @@ def test_checkpointed_flagship_resume(spark, tmp_path):
     c2 = {(r["mention_key"], r["entity_cluster"]) for r in clusters2.collect()}
     assert c1 == c2
 
+    # another input into the same workdir (40 pages after 80): the
+    # input digest in the first stage's fingerprint recomputes all three
+    from medtype_spark.datagen.pages import synth_pages
+
+    fps = {s: ck.fingerprint(s) for s in STAGES}
+    pages40, gold40 = synth_pages(spark, 40, n_entities=20, seed=11)
+    clusters3 = run_linkage_checkpointed(spark, pages40, lex, wd)
+    assert evaluate_linkage(clusters3, gold40).collect()[0]["fscore"] >= 0.99
+    assert all(ck.fingerprint(s) != fps[s] for s in STAGES)
+
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-STAGES = ("010_mentions", "020_edges", "030_clusters")
 
 
-def _submit_job(cwd, package_zip, output) -> str:
+def _submit_job(cwd, package_zip, output, pages=80) -> str:
     """The JSON line of one deployment run: spark-submit from ``cwd``,
     with only the zipped package on the path."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -158,7 +190,7 @@ def _submit_job(cwd, package_zip, output) -> str:
         [shutil.which("spark-submit"), "--master", "local[2]",
          "--conf", "spark.ui.enabled=false", "--py-files", package_zip,
          os.path.join(REPO, "tools", "submit_linkage_job.py"),
-         "--pages", "80", "--entities", "20", "--output", output],
+         "--pages", str(pages), "--entities", "20", "--output", output],
         cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
@@ -177,7 +209,8 @@ def test_deployment_job_resumes_every_stage(tmp_path):
     """The deployment entry runs the resumable flagship from the zipped
     package.  A second run into the same --output, as after a kill,
     reads every stage back: the same result, and no manifest rewritten
-    (``completed_at`` included)."""
+    (``completed_at`` included).  A run of another input into it
+    recomputes every stage instead."""
     package_zip = shutil.make_archive(
         str(tmp_path / "medtype_spark"), "zip", root_dir=REPO, base_dir="medtype_spark")
     output = str(tmp_path / "out")
@@ -189,6 +222,11 @@ def test_deployment_job_resumes_every_stage(tmp_path):
 
     assert _submit_job(str(tmp_path), package_zip, output) == first
     assert _manifests(output) == manifests
+
+    other = json.loads(_submit_job(str(tmp_path), package_zip, output, pages=40))
+    assert other["n_pages"] == 40 and other["pairwise_f1"] >= 0.99
+    rewritten = _manifests(output)
+    assert all(rewritten[s] != manifests[s] for s in STAGES)
 
 
 def _persistent_rdd_ids(spark) -> set:

@@ -9,11 +9,12 @@ Ship via (from the checkout root):
 The north rule's deployment contract: the job depends only on the
 shipped zip (no repo-path imports on executors).
 
-The job runs the resumable flagship
+With ``--output`` the job runs the resumable flagship
 (``plans.checkpoints.run_linkage_checkpointed``) with ``--output`` as
-its workdir, a driver-local directory, and prints one JSON line of
-pairwise P/R/F against the planted gold.  ``--output`` then holds one
-directory per stage:
+its workdir, any path Spark can write (a local directory under a local
+master; ``hdfs://``, ``s3a://`` and the like on a cluster).  It prints
+one JSON line of pairwise P/R/F against the planted gold.  ``--output``
+then holds one directory per stage:
 
   <output>/010_mentions/{data,_MANIFEST.json}   mention table
   <output>/020_edges/{data,_MANIFEST.json}      form graph (src, dst)
@@ -23,18 +24,17 @@ Each ``data`` is parquet; each ``_MANIFEST.json`` records the stage's
 row count, schema, per-partition row counts and fingerprint.  To
 resume a killed job, run the same command into the same ``--output``:
 every stage whose manifest committed is read back instead of
-recomputed.  A workdir holds the run of one input, so give a run with
-other ``--pages``/``--entities``/``--seed`` its own ``--output``.
-Without ``--output`` the stages go to a temporary directory that is
-removed at exit.
+recomputed.  The first stage's fingerprint carries a digest of the
+pages and the lexicon, so a run with other ``--pages``/``--entities``/
+``--seed`` into the same ``--output`` recomputes every stage.
+Without ``--output`` there is nothing to resume: the job runs
+``pipeline.run_linkage`` and writes nothing.
 """
 
 from __future__ import annotations
 
 import argparse
-import contextlib
 import json
-import tempfile
 
 
 def main():
@@ -43,7 +43,7 @@ def main():
     ap.add_argument("--entities", type=int, default=50)
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--output", default=None,
-                    help="driver-local workdir of the resumable stages")
+                    help="workdir of the resumable stages")
     ap.add_argument("--pages-table", default=None,
                     help="write the generated pages to an Iceberg-layout "
                          "pages table (sources/pages_table.py) at this "
@@ -54,8 +54,12 @@ def main():
 
     spark = SparkSession.builder.appName("linkage_job").getOrCreate()
 
-    from medtype_spark.datagen.pages import build_lexicon, synth_pages
-    from medtype_spark.pipeline import evaluate_linkage
+    from medtype_spark.datagen.pages import (
+        build_lexicon,
+        entity_types_df,
+        synth_pages,
+    )
+    from medtype_spark.pipeline import evaluate_linkage, run_linkage
     from medtype_spark.plans.checkpoints import run_linkage_checkpointed
     from medtype_spark.sources.pages_table import (
         read_pages_table,
@@ -75,15 +79,15 @@ def main():
         )
     lex = build_lexicon(args.entities)
 
-    workdir = (contextlib.nullcontext(args.output) if args.output
-               else tempfile.TemporaryDirectory(prefix="linkage_job_"))
-    with workdir as wd:
-        clusters = run_linkage_checkpointed(spark, pages, lex, wd)
-        row = evaluate_linkage(clusters, gold).collect()[0]
-        n_cluster_rows = clusters.count()
+    if args.output:
+        clusters = run_linkage_checkpointed(spark, pages, lex, args.output)
+    else:
+        clusters = run_linkage(
+            pages, lex, entity_types_df(spark, args.entities))["clusters"]
+    row = evaluate_linkage(clusters, gold).collect()[0]
     print(json.dumps({
         "n_pages": args.pages,
-        "n_cluster_rows": n_cluster_rows,
+        "n_cluster_rows": clusters.count(),
         "pairwise_precision": round(row["precision"], 6),
         "pairwise_recall": round(row["recall"], 6),
         "pairwise_f1": round(row["fscore"], 6),
